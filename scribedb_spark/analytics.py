@@ -23,7 +23,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from scribedb_spark.queries import d2, register
+from scribedb_spark.cache import session_cache
+from scribedb_spark.queries import corpus_deps, d2, register
 from scribedb_spark.sources import table
 
 
@@ -1793,7 +1794,11 @@ def _compaction_advisor_oracle() -> str:
     """
 
 
-@register("layout_compaction_advisor", oracle=_compaction_advisor_oracle())
+@register(
+    "layout_compaction_advisor",
+    oracle=_compaction_advisor_oracle(),
+    gate=corpus_deps(),
+)
 def layout_compaction_advisor(spark, sf_dir) -> DataFrame:
     """The FOURTH layout advisor (beside Z-order, bucketing and
     directory partitioning), deciding WHEN persist.compact_artifact
@@ -1825,20 +1830,6 @@ def layout_compaction_advisor(spark, sf_dir) -> DataFrame:
     decision is a session constant: served via cache.gate_decision
     with an empty dependency list (one fixture round trip per
     session, not one per panel read)."""
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "layout_compaction_advisor",
-        sf_dir,
-        deps=[],
-        compute=lambda: _compaction_advisor_compute(spark, sf_dir),
-    )
-
-
-def _compaction_advisor_compute(spark, sf_dir) -> DataFrame:
-    """layout_compaction_advisor's fixture census body (plan-pinned
-    via pipeline.GATE_COMPUTE)."""
     import os
     import shutil
     import tempfile
@@ -2183,7 +2174,11 @@ def _colfp_oracle() -> str:
     """
 
 
-@register("compare_col_fingerprint", oracle=_colfp_oracle())
+@register(
+    "compare_col_fingerprint",
+    oracle=_colfp_oracle(),
+    serve=corpus_deps("orders"),
+)
 def compare_col_fingerprint(spark, sf_dir) -> DataFrame:
     """Column-level fingerprint drill: WHICH column diverged. The
     row/chunk fingerprints (fp_unordered / fp_chunk_hashes /
@@ -2203,30 +2198,7 @@ def compare_col_fingerprint(spark, sf_dir) -> DataFrame:
     (map-side partials, one scalar row out); the unpivot + join touch
     |columns| rows. Against a remote side, the same per-column sums
     push down as one SQL aggregate (keyed_remote_hash's shape, one
-    round trip).
-
-    r15 optimization round: the |columns|-row report (a pure function
-    of the orders file) is a session-cached localCheckpoint — both
-    sides' aggregation passes run once per (session, orders
-    fingerprint) instead of per invocation (the compare_drill_rows
-    discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _DRILL_SERVE_CACHE,
-        spark,
-        ("col_fingerprint", sf_dir),
-        lambda: _col_fingerprint_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/orders.parquet"],
-    )
-
-
-def _col_fingerprint_compute(spark, sf_dir) -> DataFrame:
-    """compare_col_fingerprint's full BUILD plan (both sides' one-
-    pass column-fp aggregations + the unpivot join, no serve cache)
-    — the plan-shape tests' capture target and the serve cache's
-    builder."""
+    round trip)."""
     cols = list(_COLFP_CELLS)
     o = table(spark, "orders", sf_dir).select("o_orderkey", *cols)
     tgt = o.withColumn(
@@ -2323,7 +2295,11 @@ def _cell_drill_oracle() -> str:
     """
 
 
-@register("compare_cell_drill", oracle=_cell_drill_oracle())
+@register(
+    "compare_cell_drill",
+    oracle=_cell_drill_oracle(),
+    serve=corpus_deps("orders"),
+)
 def compare_cell_drill(spark, sf_dir) -> DataFrame:
     """The full drill MATRIX: (keyed chunk x column) fingerprints,
     reporting only the mismatched CELLS of the grid — fp_chunk_hashes
@@ -2337,29 +2313,7 @@ def compare_cell_drill(spark, sf_dir) -> DataFrame:
     groups x |cols| sums, map-side partials), a |grid|-row unpivot
     and join. In the mutation scenario only (chunk, o_orderstatus)
     and (chunk, o_totalprice) cells containing mutated keys
-    surface.
-
-    r15 optimization round: the mismatched-cell report (bounded by
-    the grid, a pure function of the orders file) is a session-cached
-    localCheckpoint — both sides' grid aggregations run once per
-    (session, orders fingerprint) instead of per invocation (the
-    compare_drill_rows discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _DRILL_SERVE_CACHE,
-        spark,
-        ("cell_drill", sf_dir),
-        lambda: _cell_drill_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/orders.parquet"],
-    )
-
-
-def _cell_drill_compute(spark, sf_dir) -> DataFrame:
-    """compare_cell_drill's full BUILD plan (both sides' grid
-    aggregations + the mismatch join, no serve cache) — the
-    plan-shape tests' capture target and the serve cache's builder."""
+    surface."""
     from scribedb_spark.canonical import keyed_chunk_id
 
     cols = list(_COLFP_CELLS)
@@ -2558,18 +2512,6 @@ def agg_mad_outliers(spark, sf_dir) -> DataFrame:
     )
 
 
-#: session cache for compare_cell_incremental's base grid — the
-#: in-session analog of the persisted 64-row artifact (same
-#: discipline as queries._MERKLE_CACHE)
-_CELL_GRID_CACHE: dict = {}
-
-#: session cache for the served drill-row diff — a pure function of
-#: the orders file whose rendered-base checkpoint + two chunk-fp
-#: aggregations + symmetric exceptAll every invocation re-ran (r15
-#: optimization round; deps= evicts on an orders rewrite).
-_DRILL_SERVE_CACHE: dict = {}
-
-
 def _cell_incr_oracle() -> str:
     chunk = (
         "CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))"
@@ -2662,12 +2604,9 @@ def compare_cell_incremental(spark, sf_dir) -> DataFrame:
     # the base grid is the PERSISTED artifact at 100 TB (64 rows) —
     # build it once per session (the merkle-cache discipline) so the
     # steady-state cost is the delta branches, as the docstring claims
-    from scribedb_spark.cache import session_cache
-
     base = session_cache(
-        _CELL_GRID_CACHE,
         spark,
-        (sf_dir,),
+        ("cell_grid", sf_dir),
         lambda: grid_terms(o, 1).localCheckpoint(),
         deps=[f"{sf_dir}/orders.parquet"],
     )
@@ -2736,7 +2675,11 @@ def _drill_rows_oracle() -> str:
     """
 
 
-@register("compare_drill_rows", oracle=_drill_rows_oracle())
+@register(
+    "compare_drill_rows",
+    oracle=_drill_rows_oracle(),
+    serve=corpus_deps("orders"),
+)
 def compare_drill_rows(spark, sf_dir) -> DataFrame:
     """The last mile of the drill cascade — after fp_merkle answers
     "which subtree", compare_cell_drill answers "which (chunk,
@@ -2758,31 +2701,7 @@ def compare_drill_rows(spark, sf_dir) -> DataFrame:
 
     Scale: two one-pass chunk-fp aggregations (map-side partials,
     16-row outputs), one broadcast semi join per side, exceptAll on
-    the hot subset only (output bounded by actual differing rows).
-
-    r15 optimization round: the diff-row frame (bounded by actual
-    differing rows, a pure function of the orders file) is a
-    session-cached localCheckpoint — the rendered-base checkpoint,
-    both fp passes and the symmetric exceptAll run once per (session,
-    orders fingerprint) instead of per invocation (the gate-decision
-    serving discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _DRILL_SERVE_CACHE,
-        spark,
-        ("drill_rows", sf_dir),
-        lambda: _drill_rows_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/orders.parquet"],
-    )
-
-
-def _drill_rows_compute(spark, sf_dir) -> DataFrame:
-    """compare_drill_rows' full BUILD plan (rendered-base checkpoint,
-    two chunk-fp aggregations, hot-chunk broadcast semi joins, the
-    symmetric exceptAll — no serve cache) — the plan-shape tests'
-    capture target and the serve cache's builder."""
+    the hot subset only (output bounded by actual differing rows)."""
     from scribedb_spark.canonical import keyed_chunk_id
 
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
@@ -3828,17 +3747,12 @@ def _iblt_adaptive(
 
 _IBLT_COLS = ["cents", "o_orderpriority", "o_orderstatus"]
 
-#: session cache for the rendered orders base + its base cell sketch
-_IBLT_BASE_CACHE: dict = {}
-
 
 def _iblt_orders_base(spark, sf_dir: str):
     """The rendered orders base alone, built once per session. Split
     from the cell sketch so consumers that DON'T need the in-session
     sketch (compare_iblt_persist serves the sketch from warehouse
     parquet) never pay the sketch-build checkpoint."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
             "long"
@@ -3855,7 +3769,6 @@ def _iblt_orders_base(spark, sf_dir: str):
         )
 
     return session_cache(
-        _IBLT_BASE_CACHE,
         spark,
         ("iblt_base_render", sf_dir),
         build,
@@ -3867,8 +3780,6 @@ def _iblt_orders_state(spark, sf_dir: str):
     """(rendered base, base cell sketch) for the orders table, built
     once per session: the persisted-sketch artifact the incremental
     key patches instead of rebuilding."""
-    from scribedb_spark.cache import session_cache
-
     base = _iblt_orders_base(spark, sf_dir)
 
     def build_cells():
@@ -3881,7 +3792,6 @@ def _iblt_orders_state(spark, sf_dir: str):
     # _IBLT_CELLS after warming this cache must never mix cell tables
     # from different index spaces (ADVICE r15)
     cells = session_cache(
-        _IBLT_BASE_CACHE,
         spark,
         ("iblt_base_cells", sf_dir, _IBLT_CELLS),
         build_cells,
@@ -3922,8 +3832,6 @@ def _iblt_tgt_cells(spark, sf_dir: str) -> DataFrame:
     test shrinking _IBLT_CELLS can never be served a stale-sized
     table; deps-fingerprinted on orders.parquet like the base
     render."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         return _iblt_cell_agg(
             _iblt_sketch(
@@ -3935,7 +3843,6 @@ def _iblt_tgt_cells(spark, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
     return session_cache(
-        _IBLT_BASE_CACHE,
         spark,
         ("iblt_tgt_cells", sf_dir, _IBLT_CELLS),
         build,
@@ -4145,6 +4052,7 @@ def freshness_decision(per: DataFrame) -> DataFrame:
                 THEN 'stale' ELSE 'fresh' END AS verdict
     FROM per CROSS JOIN t
     """,
+    gate=corpus_deps("events"),
 )
 def rollup_source_freshness(spark, sf_dir) -> DataFrame:
     """INGEST-FRESHNESS monitor: per event stream (event_type), the
@@ -4173,20 +4081,6 @@ def rollup_source_freshness(spark, sf_dir) -> DataFrame:
     localCheckpoint'd so the events scan runs once, not twice.
     Decision served via cache.gate_decision (fingerprint:
     events.parquet)."""
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "rollup_source_freshness",
-        sf_dir,
-        deps=[os.path.join(sf_dir, "events.parquet")],
-        compute=lambda: _source_freshness_compute(spark, sf_dir),
-    )
-
-
-def _source_freshness_compute(spark, sf_dir) -> DataFrame:
-    """rollup_source_freshness' measurement body (plan-pinned via
-    pipeline.GATE_COMPUTE)."""
     per = freshness_state(table(spark, "events", sf_dir)).localCheckpoint()
     return freshness_decision(per)
 
@@ -4216,6 +4110,7 @@ _GAP_DAY_US = 86_400_000_000
                 THEN 'gappy' ELSE 'continuous' END AS verdict
     FROM g GROUP BY event_type
     """,
+    gate=corpus_deps("events"),
 )
 def rollup_ingest_gaps(spark, sf_dir) -> DataFrame:
     """PER-STREAM OUTAGE census — the historical companion of
@@ -4241,20 +4136,6 @@ def rollup_ingest_gaps(spark, sf_dir) -> DataFrame:
     Exactness: integer epoch microseconds, (us, event_id) total
     order for equal timestamps, integer threshold counts. Decision
     served via cache.gate_decision (fingerprint: events.parquet)."""
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "rollup_ingest_gaps",
-        sf_dir,
-        deps=[os.path.join(sf_dir, "events.parquet")],
-        compute=lambda: _ingest_gaps_compute(spark, sf_dir),
-    )
-
-
-def _ingest_gaps_compute(spark, sf_dir) -> DataFrame:
-    """rollup_ingest_gaps' measurement body (plan-pinned via
-    pipeline.GATE_COMPUTE)."""
     e = table(spark, "events", sf_dir).select(
         "event_type",
         "event_id",

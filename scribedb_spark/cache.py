@@ -9,12 +9,16 @@ grid (analytics.compare_cell_incremental), trained ANN quantizers
 table or a served index; in-session the honest analog is building it
 exactly once per SparkSession and reusing it across invocations.
 
-``session_cache`` is the one shared discipline: entries are keyed by
-``(applicationId, *key_tail)`` and every lookup first EVICTS entries
-whose applicationId differs from the live session's — a stopped
-session's localCheckpoint'd DataFrames reference a dead SparkContext
-and must not outlive it (long-lived pytest runners and multi-session
-drivers would otherwise pin them forever).
+``session_cache`` is the one shared discipline over the one store:
+entries are keyed by ``(applicationId, tag, *rest)`` — the tag names
+the artifact family (a registry key for the frames
+``queries.register(serve=...)`` serves) — and every lookup first
+EVICTS entries whose applicationId differs from the live session's —
+a stopped session's localCheckpoint'd DataFrames reference a dead
+SparkContext and must not outlive it (long-lived pytest runners and
+multi-session drivers would otherwise pin them forever). Every build
+appends its tag to ``BUILD_EVENTS`` (the ``persist.BUILD_EVENTS``
+idiom), so callers count builds instead of patching builders.
 """
 
 from __future__ import annotations
@@ -22,24 +26,34 @@ from __future__ import annotations
 import os
 from typing import Any, Callable
 
+#: the one session store: (appId, tag, *rest) -> (deps fingerprint or
+#: None, built value)
+_STORE: dict = {}
+
+#: tag of every session_cache build, in build order
+BUILD_EVENTS: list = []
+
+#: tags whose store entries are gate decisions (clear_gate_decisions)
+_GATE_TAGS: set = set()
+
 
 def session_cache(
-    cache: dict,
     spark,
     key_tail: tuple,
     builder: Callable[[], Any],
     deps: list[str] | None = None,
 ) -> Any:
-    """Return ``cache[(appId, *key_tail)]``, building it on first use.
+    """Return the ``(appId, *key_tail)`` entry, building it on first use.
 
-    Evicts every entry belonging to a different applicationId before
-    the lookup, so at most one session's artifacts are ever held and
-    nothing from a stopped SparkContext is pinned.
+    ``key_tail[0]`` is the entry's tag. Evicts every entry belonging
+    to a different applicationId before the lookup, so at most one
+    session's artifacts are ever held and nothing from a stopped
+    SparkContext is pinned.
 
     ``deps`` (optional) lists the SOURCE FILES the built artifact is a
     pure function of (e.g. the corpus parquet a signature table reads).
-    When given, their stat fingerprint is folded into the cache key and
-    same-name entries with a DIFFERENT fingerprint are evicted — so an
+    When given, their stat fingerprint is stored with the entry and an
+    entry with a DIFFERENT fingerprint is evicted and rebuilt — so an
     in-session rewrite of the source invalidates the artifact instead
     of silently serving pre-mutation state (the honesty property
     ``gate_decision`` documents must hold TRANSITIVELY through the
@@ -47,32 +61,24 @@ def session_cache(
     one os.stat per dep file.
     """
     app = spark.sparkContext.applicationId
-    for stale in [k for k in cache if k[0] != app]:
-        cache.pop(stale, None)
+    for stale in [k for k in _STORE if k[0] != app]:
+        del _STORE[stale]
     key = (app,) + tuple(key_tail)
-    if deps is not None:
-        fp = deps_fingerprint(deps)
-        for old in [
-            k for k in cache if k[:-1] == key and k[-1] != fp
-        ]:
-            cache.pop(old, None)
-        key = key + (fp,)
-    if key not in cache:
-        cache[key] = builder()
-    return cache[key]
+    fp = None if deps is None else deps_fingerprint(deps)
+    hit = _STORE.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    _STORE.pop(key, None)
+    BUILD_EVENTS.append(key_tail[0])
+    value = builder()
+    _STORE[key] = (fp, value)
+    return value
 
 
-# ---------------------------------------------------------------------------
-# Gate-decision cache: the monitor -> act gates' one-pane serve layer
-# ---------------------------------------------------------------------------
-
-#: (appId, gate_key, sf_dir, deps_fingerprint) -> the gate's tiny
-#: decision frame, MATERIALIZED as a local DataFrame
-#: (spark.createDataFrame(rows, schema), held per applicationId) —
-#: populated the first time a gate runs, read by every later call
-#: (the gate key itself, rollup_gate_panel, streaming panes) within
-#: the same session
-_DECISION_ROWS: dict = {}
+def evict(tags) -> None:
+    """Drop every stored entry whose tag is in ``tags``."""
+    for k in [k for k in _STORE if k[1] in tags]:
+        del _STORE[k]
 
 
 def deps_fingerprint(paths: list[str]) -> tuple:
@@ -106,13 +112,15 @@ def gate_decision(
     of the gate's input files (corpus parquet + warehouse artifact
     dirs), so it is computed ONCE per distinct input fingerprint and
     every later call — in particular rollup_gate_panel, which reads
-    all nine — serves the collected rows back as a local frame. The
+    all nine — serves the collected rows back as a local frame (each
+    fingerprint keeps its own entry, tagged ``gate_key``). The
     retrain gates' act paths stay correct: an act rewrites warehouse
     artifacts, which changes the fingerprint, so the NEXT call
     re-measures the rebuilt index instead of serving the stale
     verdict (pinned by the degraded-index tests in
-    tests/test_similarity.py). Plan-shape tests pin the underlying
-    measurement plans via pipeline.GATE_COMPUTE, not this serve layer.
+    tests/test_similarity.py). ``queries.register(gate=...)`` wires a
+    key through here; plan-shape tests pin the underlying measurement
+    plans via ``REGISTRY[key].build``, not this serve layer.
     """
     fp = deps_fingerprint(deps)
 
@@ -123,13 +131,12 @@ def gate_decision(
         # the cached value is the ready-to-collect local relation
         return spark.createDataFrame(df.collect(), df.schema)
 
-    return session_cache(
-        _DECISION_ROWS, spark, (gate_key, sf_dir, fp), build
-    )
+    _GATE_TAGS.add(gate_key)
+    return session_cache(spark, (gate_key, sf_dir, fp), build)
 
 
 def clear_gate_decisions() -> None:
     """Drop every cached gate decision (tests that mutate gate inputs
     behind identical stat fingerprints — e.g. same-mtime rewrites —
     use this to force re-measurement)."""
-    _DECISION_ROWS.clear()
+    evict(_GATE_TAGS)

@@ -29,13 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from scribedb_spark.cache import session_cache
 from scribedb_spark.operators.dedup import (
     SQL_SHINGLES,
     SQL_SPAN_HASHES,
     min_tokens_filter,
     shingles3,
 )
-from scribedb_spark.queries import register
+from scribedb_spark.queries import corpus_deps, register
 from scribedb_spark.sources import table
 
 #: held-out "eval" split for decontamination: a fixed source list (in
@@ -810,11 +811,6 @@ SQL_BM25_SC = f"""
            FROM pts GROUP BY doc_id)"""
 
 
-#: session cache for the scored BM25 table — shared by text_bm25_topk
-#: and search_hybrid_rrf (cache.py discipline)
-_BM25_CACHE: dict = {}
-
-
 def bm25_scores(
     spark,
     sf_dir: str,
@@ -841,10 +837,7 @@ def bm25_scores(
     (bounded by a constant, not the corpus); scoring joins on
     doc_id/term with map-side partials. Two shuffles + one window —
     the same dataflow as text_tfidf_topterms."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _BM25_CACHE,
         spark,
         ("bm25", sf_dir, query_doc, n_terms),
         lambda: _bm25_scores_build(
@@ -1252,18 +1245,12 @@ def _lm_count_artifacts(spark, sf_dir):
 _LM_DELTA_MOD = 101
 _LM_DELTA_REM = 13
 
-#: session cache for the base-corpus LM count tables (cache.py
-#: discipline — keyed by applicationId, stale apps evicted)
-_LM_BASE_CACHE: dict = {}
-
 
 def lm_base_tables(spark, sf_dir: str):
     """(cb0, cp0): bigram/prefix count tables of the BASE corpus
     (documents outside the delta split), built once per session and
     checkpointed — the persisted LM every incremental batch patches
     against."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         d = table(spark, "documents", sf_dir).filter(
             (F.size(F.split(F.col("text"), " ")) >= 2)
@@ -1279,7 +1266,6 @@ def lm_base_tables(spark, sf_dir: str):
         return cb0, cp0
 
     return session_cache(
-        _LM_BASE_CACHE,
         spark,
         ("lm_base", sf_dir),
         build,
@@ -1399,7 +1385,11 @@ def _lm_drift_oracle() -> str:
     """
 
 
-@register("lm_drift_gate", oracle=_lm_drift_oracle())
+@register(
+    "lm_drift_gate",
+    oracle=_lm_drift_oracle(),
+    gate=corpus_deps("documents"),
+)
 def lm_drift_gate(spark, sf_dir) -> DataFrame:
     """MONITOR -> ACT for the LANGUAGE MODEL the quality filters score
     with — ann_retrain_gate's sibling at LM-index scope. An incoming
@@ -1437,22 +1427,6 @@ def lm_drift_gate(spark, sf_dir) -> DataFrame:
     scorer already shares. Mirrors the reference's verdict-driven
     exit (main.py:263-267) at model-lifecycle scope. Decision served
     via cache.gate_decision (fingerprint: documents.parquet)."""
-    import os
-
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "lm_drift_gate",
-        sf_dir,
-        deps=[os.path.join(sf_dir, "documents.parquet")],
-        compute=lambda: _lm_drift_compute(spark, sf_dir),
-    )
-
-
-def _lm_drift_compute(spark, sf_dir) -> DataFrame:
-    """lm_drift_gate's measurement body (plan-pinned via
-    pipeline.GATE_COMPUTE)."""
     thr = _LM_DRIFT_THRESHOLD_PPM
     cb0, cp0 = lm_base_tables(spark, sf_dir)
     batch = (
@@ -1549,7 +1523,11 @@ def _quality_drift_oracle() -> str:
     """
 
 
-@register("rollup_quality_drift", oracle=_quality_drift_oracle())
+@register(
+    "rollup_quality_drift",
+    oracle=_quality_drift_oracle(),
+    gate=corpus_deps("documents"),
+)
 def rollup_quality_drift(spark, sf_dir) -> DataFrame:
     """DISTRIBUTION-SHIFT monitor for the quality score — the third
     gate beside ann_retrain_gate (index recall) and lm_drift_gate
@@ -1588,22 +1566,6 @@ def rollup_quality_drift(spark, sf_dir) -> DataFrame:
     everything after — the cheapest possible standing monitor at
     100 TB. Decision served via cache.gate_decision (fingerprint:
     documents.parquet)."""
-    import os
-
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "rollup_quality_drift",
-        sf_dir,
-        deps=[os.path.join(sf_dir, "documents.parquet")],
-        compute=lambda: _quality_drift_compute(spark, sf_dir),
-    )
-
-
-def _quality_drift_compute(spark, sf_dir) -> DataFrame:
-    """rollup_quality_drift's measurement body (plan-pinned via
-    pipeline.GATE_COMPUTE)."""
     d = table(spark, "documents", sf_dir)
     # ONE corpus scan: the <=20-row (side, bin) histogram is
     # checkpointed and every downstream arm (both sides' ppm columns
@@ -2085,15 +2047,6 @@ _EVAL_OVERLAP_ORACLE = f"""
     """
 
 
-_BASE_POST_CACHE: dict = {}
-
-#: session cache for the served retrieval-drift frames (the one-row
-#: overlap table and the 3-row panel) — pure functions of the
-#: documents file whose scoring passes every invocation re-ran (r15
-#: optimization round; deps= evicts on a corpus rewrite).
-_EVAL_SERVE_CACHE: dict = {}
-
-
 def _base_corpus_postings(spark, sf_dir: str) -> tuple:
     """(postings, n_docs, total_tokens) of the BASE corpus (the
     non-delta slice), checkpointed once per session: the drift eval's
@@ -2101,8 +2054,6 @@ def _base_corpus_postings(spark, sf_dir: str) -> tuple:
     one per panel probe), and each scoring must read the pinned
     postings instead of re-exploding the corpus (the bm25_scores
     cache discipline applied to the base side)."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         d = table(spark, "documents", sf_dir).select("doc_id", "text")
         base = d.filter(F.col("doc_id") % _LM_DELTA_MOD != _LM_DELTA_REM)
@@ -2113,7 +2064,6 @@ def _base_corpus_postings(spark, sf_dir: str) -> tuple:
         return (post, int(n), int(t))
 
     return session_cache(
-        _BASE_POST_CACHE,
         spark,
         ("bm25_base_post", sf_dir),
         build,
@@ -2170,7 +2120,11 @@ def eval_overlap_row(top_base: DataFrame, top_full: DataFrame) -> DataFrame:
     )
 
 
-@register("search_eval_overlap", oracle=_EVAL_OVERLAP_ORACLE)
+@register(
+    "search_eval_overlap",
+    oracle=_EVAL_OVERLAP_ORACLE,
+    serve=corpus_deps("documents"),
+)
 def search_eval_overlap(spark, sf_dir) -> DataFrame:
     """RETRIEVAL-DRIFT monitor — the BM25 serving surface's analog of
     lm_drift_gate: when the crawl delta (the fixed split doc_id %
@@ -2197,28 +2151,7 @@ def search_eval_overlap(spark, sf_dir) -> DataFrame:
     cached score table that text_bm25_topk serves from); each top-k
     is a TakeOrdered, the drift join is 20x20 rows. The standing
     monitor costs one extra BM25 scan per snapshot — nothing is
-    quadratic, nothing exceeds k rows after the score stage.
-
-    r15 optimization round: the one-row drift table (a pure function
-    of the documents file) is a session-cached localCheckpoint — the
-    two scoring passes run once per (session, corpus fingerprint)
-    instead of per invocation (the gate-decision serving discipline;
-    plan tests pin the BUILD body via pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _EVAL_SERVE_CACHE,
-        spark,
-        ("eval_overlap", sf_dir),
-        lambda: _eval_overlap_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _eval_overlap_compute(spark, sf_dir) -> DataFrame:
-    """search_eval_overlap's full BUILD plan (both scoring passes +
-    the drift row, no serve cache) — the plan-shape tests' capture
-    target and the serve cache's builder."""
+    quadratic, nothing exceeds k rows after the score stage."""
     top_full = _bm25_top_ranks(bm25_scores(spark, sf_dir)).localCheckpoint()
     post, n, t = _base_corpus_postings(spark, sf_dir)
     top_base = _bm25_top_ranks(
@@ -2321,7 +2254,11 @@ def _eval_drift_row(spark, sf_dir: str, probe_doc: int) -> DataFrame:
     )
 
 
-@register("search_eval_panel", oracle=_EVAL_PANEL_ORACLE)
+@register(
+    "search_eval_panel",
+    oracle=_EVAL_PANEL_ORACLE,
+    serve=corpus_deps("documents"),
+)
 def search_eval_panel(spark, sf_dir) -> DataFrame:
     """The retrieval-drift PANEL — search_eval_overlap generalized
     from one probe query to a fixed panel ({3} deterministic probe
@@ -2342,28 +2279,7 @@ def search_eval_panel(spark, sf_dir) -> DataFrame:
     extra bounded scoring pass; everything after the score stage is
     k-bounded. At production P the probes share one exploded term
     scan (the df/avgdl stages are probe-independent); this panel
-    keeps the proven per-probe shape.
-
-    r15 optimization round: the 3-row panel (a pure function of the
-    documents file) is a session-cached localCheckpoint — the per-
-    probe scoring passes run once per (session, corpus fingerprint)
-    instead of per invocation (the gate-decision serving discipline;
-    plan tests pin the BUILD body via pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _EVAL_SERVE_CACHE,
-        spark,
-        ("eval_panel", sf_dir, tuple(_EVAL_PANEL_DOCS)),
-        lambda: _eval_panel_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _eval_panel_compute(spark, sf_dir) -> DataFrame:
-    """search_eval_panel's full BUILD plan (one drift row per probe,
-    no serve cache) — the plan-shape tests' capture target and the
-    serve cache's builder."""
+    keeps the proven per-probe shape."""
     frames = [
         _eval_drift_row(spark, sf_dir, q) for q in _EVAL_PANEL_DOCS
     ]

@@ -39,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from scribedb_spark.queries import register
+from scribedb_spark.cache import session_cache
+from scribedb_spark.queries import corpus_deps, register
 from scribedb_spark.sources import table
 
 #: minhash configuration: 16 hash functions in 4 bands of 4.
@@ -211,28 +212,11 @@ def band_signatures(d: DataFrame) -> DataFrame:
     return sig
 
 
-#: LSH pair-list index per (appId, sf_dir) — the near-dup PAIR LIST
-#: is the persisted artifact of a dedup pipeline (at 100 TB it ships
-#: as a table next to the corpus snapshot); seven downstream keys
-#: (components, survivor pick, soft-dedup weights, semantic cascade,
-#: triangle counting, link prediction, the full cascade) all consume
-#: it, so it builds once per session like the merkle trees
-_LSH_PAIRS_CACHE: dict = {}
-
-
-#: session cache for the checkpointed band-signature table — the
-#: scan+shingle+minhash stage shared by the pair index build,
-#: dedup_lsh_star and dedup_incremental
-_LSH_SIG_CACHE: dict = {}
-
-
 def band_signatures_cached(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (doc_id, band, s) signature table for the
     documents corpus (min-token-filtered), built once per session —
     the persisted-signature-index artifact every LSH consumer reads
     at 100 TB instead of re-mining shingles."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         d = (
             table(spark, "documents", sf_dir)
@@ -242,7 +226,6 @@ def band_signatures_cached(spark, sf_dir: str) -> DataFrame:
         return band_signatures(d).localCheckpoint()
 
     return session_cache(
-        _LSH_SIG_CACHE,
         spark,
         ("lsh_sigs", sf_dir),
         build,
@@ -284,8 +267,6 @@ def dedup_minhash_lsh(spark, sf_dir) -> DataFrame:
     (_rep_component_state / candidate_hit_flags) and never touch
     this list. Its SIZE stays linear in true pair volume — the
     graph consumers' own output grain."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         return (
             lsh_rep_pairs(spark, sf_dir)
@@ -294,7 +275,6 @@ def dedup_minhash_lsh(spark, sf_dir) -> DataFrame:
         )
 
     return session_cache(
-        _LSH_PAIRS_CACHE,
         spark,
         ("lsh_pairs", sf_dir),
         build,
@@ -556,13 +536,6 @@ def simhash_quarters(spark, sf_dir) -> DataFrame:
     ).select("doc_id", "simhash", F.col("b.q").alias("q"), F.col("b.qv").alias("qv"))
 
 
-#: session cache for the verified SimHash rep-pair table — the
-#: candidate/verify stage both simhash keys (and their best-of-k bench
-#: runs) share; build-once like _LSH_PAIRS_CACHE (r15 optimization:
-#: the quarter join + hamming verify re-ran per invocation)
-_SIMHASH_PAIRS_CACHE: dict = {}
-
-
 def _simhash_rep_pairs(spark, sf_dir) -> DataFrame:
     """Session-cached checkpoint of the verified SimHash rep pairs
     (:func:`_simhash_rep_pairs_compute`) — the dedup_minhash_lsh
@@ -570,10 +543,7 @@ def _simhash_rep_pairs(spark, sf_dir) -> DataFrame:
     the build-once artifact, consumers (member expansion, receipts)
     serve from it. deps= ties the entry to the corpus file, so an
     in-session rewrite invalidates it (the gate-honesty rule)."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _SIMHASH_PAIRS_CACHE,
         spark,
         ("simhash_rep_pairs", sf_dir),
         lambda: _simhash_rep_pairs_compute(spark, sf_dir).localCheckpoint(),
@@ -611,7 +581,19 @@ def _simhash_rep_pairs_compute(spark, sf_dir) -> DataFrame:
     )
 
 
-@register("dedup_simhash", oracle=_simhash_sql())
+def _simhash_member_compute(spark, sf_dir) -> DataFrame:
+    """dedup_simhash's full BUILD plan (quarter join + verify +
+    expansion, no pair cache) — what the plan-shape tests pin."""
+    return _simhash_expand(
+        text_rep_map(spark, sf_dir), _simhash_rep_pairs_compute(spark, sf_dir)
+    )
+
+
+@register(
+    "dedup_simhash",
+    oracle=_simhash_sql(),
+    build=_simhash_member_compute,
+)
 def dedup_simhash(spark, sf_dir) -> DataFrame:
     """SimHash near-dup: 16-bit signature (sign of per-bit weight
     sums over token hashes), ALL pairs at hamming distance <= 3.
@@ -639,14 +621,6 @@ def dedup_simhash(spark, sf_dir) -> DataFrame:
     re-running the quarter join per invocation."""
     return _simhash_expand(
         text_rep_map(spark, sf_dir), _simhash_rep_pairs(spark, sf_dir)
-    )
-
-
-def _simhash_member_compute(spark, sf_dir) -> DataFrame:
-    """dedup_simhash's full BUILD plan (quarter join + verify +
-    expansion, no pair cache) — what the plan-shape tests pin."""
-    return _simhash_expand(
-        text_rep_map(spark, sf_dir), _simhash_rep_pairs_compute(spark, sf_dir)
     )
 
 
@@ -704,7 +678,19 @@ _SIMHASH_RECEIPTS_ORACLE = f"""
     """
 
 
-@register("dedup_simhash_receipts", oracle=_SIMHASH_RECEIPTS_ORACLE)
+def _simhash_receipts_compute(spark, sf_dir) -> DataFrame:
+    """dedup_simhash_receipts' full BUILD plan (no pair cache) — the
+    plan-shape tests' capture target."""
+    return _simhash_receipt_rows(
+        text_rep_map(spark, sf_dir), _simhash_rep_pairs_compute(spark, sf_dir)
+    )
+
+
+@register(
+    "dedup_simhash_receipts",
+    oracle=_SIMHASH_RECEIPTS_ORACLE,
+    build=_simhash_receipts_compute,
+)
 def dedup_simhash_receipts(spark, sf_dir) -> DataFrame:
     """dedup_simhash's SCALE output shape: one CLUSTER RECEIPT per
     verified representative pair — (rep_id1, rep_id2, hamming,
@@ -733,14 +719,6 @@ def dedup_simhash_receipts(spark, sf_dir) -> DataFrame:
     the session cache shared with dedup_simhash (r15)."""
     return _simhash_receipt_rows(
         text_rep_map(spark, sf_dir), _simhash_rep_pairs(spark, sf_dir)
-    )
-
-
-def _simhash_receipts_compute(spark, sf_dir) -> DataFrame:
-    """dedup_simhash_receipts' full BUILD plan (no pair cache) — the
-    plan-shape tests' capture target."""
-    return _simhash_receipt_rows(
-        text_rep_map(spark, sf_dir), _simhash_rep_pairs_compute(spark, sf_dir)
     )
 
 
@@ -946,13 +924,6 @@ def _ngram_source_rep_state(d: DataFrame) -> tuple:
     return d.join(reps, "doc_id", "left_semi"), srmap
 
 
-#: session cache for the ngram family's verified rep-pair state —
-#: the PPJoin candidate/verify stage both ngram keys share (r15
-#: optimization: it re-ran per invocation; the _LSH_PAIRS_CACHE
-#: build-once discipline applied to this family)
-_NGRAM_PAIRS_CACHE: dict = {}
-
-
 def _ngram_docs(spark, sf_dir) -> DataFrame:
     return (
         table(spark, "documents", sf_dir)
@@ -974,14 +945,11 @@ def _ngram_rep_pair_state(spark, sf_dir) -> dict:
     own build; the verified rep-pair table checkpoints once here and
     serves every consumer (member expansion, receipts). deps= ties
     the entry to the corpus file (gate-honesty rule)."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         st = _ngram_state_build(spark, sf_dir)
         return {"srmap": st["srmap"], "rp": st["rp"].localCheckpoint()}
 
     return session_cache(
-        _NGRAM_PAIRS_CACHE,
         spark,
         ("ngram_rep_pairs", sf_dir),
         build,
@@ -989,7 +957,18 @@ def _ngram_rep_pair_state(spark, sf_dir) -> dict:
     )
 
 
-@register("dedup_ngram_jaccard", oracle=_NGRAM_ORACLE)
+def _ngram_jaccard_compute(spark, sf_dir) -> DataFrame:
+    """dedup_ngram_jaccard's full BUILD plan (PPJoin + verify +
+    expansion, no pair cache) — the plan-shape tests' capture
+    target."""
+    return _ngram_jaccard_expand(_ngram_state_build(spark, sf_dir))
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=_NGRAM_ORACLE,
+    build=_ngram_jaccard_compute,
+)
 def dedup_ngram_jaccard(spark, sf_dir) -> DataFrame:
     """Character-3-gram jaccard near-dup pairs (>= 0.9) within a
     source block — PPJoin-bounded candidates, exact verification
@@ -1017,13 +996,6 @@ def dedup_ngram_jaccard(spark, sf_dir) -> DataFrame:
     r15: the verified rep-pair table serves from the session cache
     (``_ngram_rep_pair_state``), shared with the receipt twin."""
     return _ngram_jaccard_expand(_ngram_rep_pair_state(spark, sf_dir))
-
-
-def _ngram_jaccard_compute(spark, sf_dir) -> DataFrame:
-    """dedup_ngram_jaccard's full BUILD plan (PPJoin + verify +
-    expansion, no pair cache) — the plan-shape tests' capture
-    target."""
-    return _ngram_jaccard_expand(_ngram_state_build(spark, sf_dir))
 
 
 def _ngram_jaccard_expand(st: dict) -> DataFrame:
@@ -1085,7 +1057,17 @@ _NGRAM_RECEIPTS_ORACLE = f"""
     """
 
 
-@register("dedup_ngram_receipts", oracle=_NGRAM_RECEIPTS_ORACLE)
+def _ngram_receipts_compute(spark, sf_dir) -> DataFrame:
+    """dedup_ngram_receipts' full BUILD plan (no pair cache) — the
+    plan-shape tests' capture target."""
+    return _ngram_receipt_rows(_ngram_state_build(spark, sf_dir))
+
+
+@register(
+    "dedup_ngram_receipts",
+    oracle=_NGRAM_RECEIPTS_ORACLE,
+    build=_ngram_receipts_compute,
+)
 def dedup_ngram_receipts(spark, sf_dir) -> DataFrame:
     """dedup_ngram_jaccard's SCALE output shape: one CLUSTER RECEIPT
     per verified source-scoped representative pair — (rep_id1,
@@ -1109,12 +1091,6 @@ def dedup_ngram_receipts(spark, sf_dir) -> DataFrame:
     duplication factor. The verified rep-pair table serves from the
     session cache shared with dedup_ngram_jaccard (r15)."""
     return _ngram_receipt_rows(_ngram_rep_pair_state(spark, sf_dir))
-
-
-def _ngram_receipts_compute(spark, sf_dir) -> DataFrame:
-    """dedup_ngram_receipts' full BUILD plan (no pair cache) — the
-    plan-shape tests' capture target."""
-    return _ngram_receipt_rows(_ngram_state_build(spark, sf_dir))
 
 
 def _ngram_receipt_rows(st: dict) -> DataFrame:
@@ -1235,14 +1211,6 @@ def _embedding_cosine_compute(spark, sf_dir) -> DataFrame:
     )
 
 
-#: session cache for the exact semantic-dedup state — the blocked
-#: cosine pair table and its connected-components labels, which
-#: dedup_embedding_cosine and dedup_semantic_clusters re-built per
-#: invocation (the CC star rounds are EAGER: every call paid their
-#: actions again; r15 optimization, the pair-table cache discipline)
-_SEMANTIC_STATE_CACHE: dict = {}
-
-
 def _semantic_state(spark, sf_dir) -> dict:
     """Session-cached {'pairs', 'comp'} checkpoints of the exact
     cosine pair kernel and its component labels. deps= ties the entry
@@ -1254,7 +1222,6 @@ def _semantic_state(spark, sf_dir) -> dict:
     the _ann twin above $SPARK_GRAFT_EXACT_PAIRWISE_MAX) cannot be
     bypassed by a warm cache; the count resolves from parquet footer
     metadata, one cheap job."""
-    from scribedb_spark.cache import session_cache
     from scribedb_spark.operators.similarity import guard_exact_pairwise
 
     guard_exact_pairwise(
@@ -1272,7 +1239,6 @@ def _semantic_state(spark, sf_dir) -> dict:
         return {"pairs": pairs, "comp": comp}
 
     return session_cache(
-        _SEMANTIC_STATE_CACHE,
         spark,
         ("semantic_state", sf_dir),
         build,
@@ -1288,6 +1254,7 @@ def _semantic_state(spark, sf_dir) -> dict:
     FROM v a JOIN v b ON a.vec_id < b.vec_id
     WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.42
     """,
+    build=_embedding_cosine_compute,
 )
 def dedup_embedding_cosine(spark, sf_dir) -> DataFrame:
     """Embedding near-dup pairs: cosine >= 0.42 over all pairs
@@ -1534,7 +1501,21 @@ _SEMANTIC_ORACLE = """
     """
 
 
-@register("dedup_semantic_clusters", oracle=_SEMANTIC_ORACLE)
+def _semantic_clusters_compute(spark, sf_dir) -> DataFrame:
+    """dedup_semantic_clusters' full BUILD plan (no state cache) —
+    the plan-shape tests' capture target."""
+    pairs = _embedding_cosine_compute(spark, sf_dir)
+    comp = connected_components(
+        pairs, id1="vec_id1", id2="vec_id2", out_id="vec_id"
+    )
+    return _semantic_ledger(spark, sf_dir, comp)
+
+
+@register(
+    "dedup_semantic_clusters",
+    oracle=_SEMANTIC_ORACLE,
+    build=_semantic_clusters_compute,
+)
 def dedup_semantic_clusters(spark, sf_dir) -> DataFrame:
     """SemDeDup-style semantic dedup ledger: embedding-cosine
     near-dup PAIRS (exact threshold 0.42, the blocked all-pairs
@@ -1572,16 +1553,6 @@ def _semantic_ledger(spark, sf_dir, comp: DataFrame) -> DataFrame:
         cluster.alias("cluster"),
         (cluster == F.col("vec_id")).cast("int").alias("keep"),
     )
-
-
-def _semantic_clusters_compute(spark, sf_dir) -> DataFrame:
-    """dedup_semantic_clusters' full BUILD plan (no state cache) —
-    the plan-shape tests' capture target."""
-    pairs = _embedding_cosine_compute(spark, sf_dir)
-    comp = connected_components(
-        pairs, id1="vec_id1", id2="vec_id2", out_id="vec_id"
-    )
-    return _semantic_ledger(spark, sf_dir, comp)
 
 
 #: cell-blocked semantic-dedup CTE chain through `comp` (component
@@ -1633,12 +1604,6 @@ def _semantic_ann_oracle() -> str:
     )
 
 
-#: session cache for the ANN semantic-dedup component labels — the
-#: cell-blocked candidate kernel + CC rounds dedup_semantic_ann and
-#: pipeline_semantic re-ran per invocation (r15 optimization)
-_SEMANTIC_ANN_CACHE: dict = {}
-
-
 def _semantic_ann_comp_compute(spark, sf_dir) -> DataFrame:
     """(vec_id, component) labels of the IVF-SQ cell-blocked cosine
     pair graph — the ANN ledger's BUILD body (cache builder and plan
@@ -1686,10 +1651,7 @@ def _semantic_ann_comp_compute(spark, sf_dir) -> DataFrame:
 def _semantic_ann_comp(spark, sf_dir) -> DataFrame:
     """Session-cached checkpoint of the ANN component labels —
     deps= ties the entry to the embeddings file."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _SEMANTIC_ANN_CACHE,
         spark,
         ("semantic_ann_comp", sf_dir),
         lambda: _semantic_ann_comp_compute(spark, sf_dir).localCheckpoint(),
@@ -1708,7 +1670,11 @@ def _register_semantic_ann():
     IVF-SQ CTEs, and dedup.py loads before similarity.py in
     load_extensions — resolve at import completion instead."""
 
-    @register("dedup_semantic_ann", oracle=_semantic_ann_oracle())
+    @register(
+        "dedup_semantic_ann",
+        oracle=_semantic_ann_oracle(),
+        build=_semantic_ann_compute,
+    )
     def dedup_semantic_ann(spark, sf_dir) -> DataFrame:
         """SemDeDup ledger with ANN candidate generation — the 100 TB
         twin of ``dedup_semantic_clusters``: candidates come from
@@ -1734,6 +1700,16 @@ def _register_semantic_ann():
         return _semantic_ledger(spark, sf_dir, _semantic_ann_comp(spark, sf_dir))
 
 
+def _lev_member_compute(spark, sf_dir) -> DataFrame:
+    """dedup_levenshtein's full BUILD plan (distance DP + expansion,
+    no distance cache) — the plan-shape tests' capture target."""
+    pm = lsh_rep_pairs(spark, sf_dir)
+    dist = _rep_head_distances_compute(spark, sf_dir)
+    return pm.join(dist, ["r1", "r2"]).select(
+        "doc_id1", "doc_id2", "edit_dist"
+    )
+
+
 @register(
     "dedup_levenshtein",
     oracle=f"""
@@ -1746,6 +1722,7 @@ def _register_semantic_ann():
     JOIN documents db ON db.doc_id = c.doc_id2
     WHERE levenshtein(substr(da.text, 1, 150), substr(db.text, 1, 150)) <= 60
     """,
+    build=_lev_member_compute,
 )
 def dedup_levenshtein(spark, sf_dir) -> DataFrame:
     """Edit-distance near-dup verification over LSH candidate pairs:
@@ -1783,29 +1760,11 @@ def dedup_levenshtein(spark, sf_dir) -> DataFrame:
     )
 
 
-def _lev_member_compute(spark, sf_dir) -> DataFrame:
-    """dedup_levenshtein's full BUILD plan (distance DP + expansion,
-    no distance cache) — the plan-shape tests' capture target."""
-    pm = lsh_rep_pairs(spark, sf_dir)
-    dist = _rep_head_distances_compute(spark, sf_dir)
-    return pm.join(dist, ["r1", "r2"]).select(
-        "doc_id1", "doc_id2", "edit_dist"
-    )
-
-
-#: session cache for the rep-pair head-distance table — the DP stage
-#: both levenshtein keys share (r15: it re-ran per invocation)
-_LEV_DIST_CACHE: dict = {}
-
-
 def _rep_head_distances(spark, sf_dir) -> DataFrame:
     """Session-cached checkpoint of the rep-pair head distances
     (:func:`_rep_head_distances_compute`) — build-once like the LSH
     pair index; deps= ties the entry to the corpus file."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _LEV_DIST_CACHE,
         spark,
         ("lev_head_dists", sf_dir),
         lambda: _rep_head_distances_compute(spark, sf_dir).localCheckpoint(),
@@ -1876,7 +1835,27 @@ _LEV_RECEIPTS_ORACLE = f"""
     """
 
 
-@register("dedup_levenshtein_receipts", oracle=_LEV_RECEIPTS_ORACLE)
+def _lev_receipts_compute(spark, sf_dir) -> DataFrame:
+    """dedup_levenshtein_receipts' full BUILD plan (no distance
+    cache) — the plan-shape tests' capture target."""
+    pm = lsh_rep_pairs(spark, sf_dir)
+    dist = _rep_head_distances_compute(spark, sf_dir)
+    cnt = pm.groupBy("r1", "r2").agg(
+        F.count(F.lit(1)).cast("long").alias("n_member_pairs")
+    )
+    return dist.join(cnt, ["r1", "r2"]).select(
+        F.col("r1").alias("rep_id1"),
+        F.col("r2").alias("rep_id2"),
+        "edit_dist",
+        "n_member_pairs",
+    )
+
+
+@register(
+    "dedup_levenshtein_receipts",
+    oracle=_LEV_RECEIPTS_ORACLE,
+    build=_lev_receipts_compute,
+)
 def dedup_levenshtein_receipts(spark, sf_dir) -> DataFrame:
     """dedup_levenshtein's SCALE output shape: one CLUSTER RECEIPT per
     verified representative pair — (rep_id1, rep_id2, edit_dist,
@@ -1903,22 +1882,6 @@ def dedup_levenshtein_receipts(spark, sf_dir) -> DataFrame:
     duplicated corpus shuffles ~rep-pair rows, not N^2 member rows."""
     pm = lsh_rep_pairs(spark, sf_dir)
     dist = _rep_head_distances(spark, sf_dir)
-    cnt = pm.groupBy("r1", "r2").agg(
-        F.count(F.lit(1)).cast("long").alias("n_member_pairs")
-    )
-    return dist.join(cnt, ["r1", "r2"]).select(
-        F.col("r1").alias("rep_id1"),
-        F.col("r2").alias("rep_id2"),
-        "edit_dist",
-        "n_member_pairs",
-    )
-
-
-def _lev_receipts_compute(spark, sf_dir) -> DataFrame:
-    """dedup_levenshtein_receipts' full BUILD plan (no distance
-    cache) — the plan-shape tests' capture target."""
-    pm = lsh_rep_pairs(spark, sf_dir)
-    dist = _rep_head_distances_compute(spark, sf_dir)
     cnt = pm.groupBy("r1", "r2").agg(
         F.count(F.lit(1)).cast("long").alias("n_member_pairs")
     )
@@ -2292,22 +2255,6 @@ _CONTAIN_ORACLE = _contain_oracle("WHERE a.doc_id % 20 = 0")
 _CONTAIN_CORPUS_ORACLE = _contain_oracle("")
 
 
-#: shared tokenize/explode/frequency stages per (appId, corpus) — the
-#: three containment keys (batch / corpus / salted) differ only in
-#: their candidate JOIN; the stages feeding it are byte-identical, so
-#: build them once per session (the merkle-cache discipline). At
-#: 100 TB the token index is a materialized artifact shared by every
-#: containment sweep over the same snapshot.
-_CONTAIN_STAGE_CACHE: dict = {}
-
-#: session cache for the VERIFIED rep-level containment scores — the
-#: candidate-join + intersection-count stage each containment variant
-#: re-ran per invocation (r15: the pair-table build-once discipline);
-#: keyed by the caller's cache_tag so the batch / corpus / salted
-#: variants each exercise their own candidate plan once per session
-_CONTAIN_SCORED_CACHE: dict = {}
-
-
 def containment_stages(docs: DataFrame):
     """The (g, ex) stage pair behind containment_best: per-doc
     distinct token arrays + sizes, and the exploded flat rows WITH
@@ -2422,10 +2369,7 @@ def containment_best(
     round-7 bench's two most expensive keys were exactly that
     double-compute)."""
     if spark is not None and cache_key is not None:
-        from scribedb_spark.cache import session_cache
-
         st = session_cache(
-            _CONTAIN_STAGE_CACHE,
             spark,
             ("contain_rep",) + cache_key,
             lambda: _containment_rep_state(docs),
@@ -2535,7 +2479,6 @@ def containment_best(
         # per-call. deps= ties the entry to the corpus file.
         scored_built = scored
         scored = session_cache(
-            _CONTAIN_SCORED_CACHE,
             spark,
             ("contain_scored", cache_tag) + cache_key,
             lambda: scored_built.localCheckpoint(),
@@ -2584,7 +2527,24 @@ def containment_best(
     ).filter(F.col("containment").isNotNull())
 
 
-@register("dedup_containment", oracle=_CONTAIN_ORACLE)
+def _containment_batch_compute(spark, sf_dir) -> DataFrame:
+    """dedup_containment's full BUILD plan (candidate join + verify,
+    no scored cache; the shared rep-state cache still serves) — the
+    plan-shape tests' capture target."""
+    d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
+    return containment_best(
+        d,
+        incoming=F.col("doc_id") % 20 == 0,
+        spark=spark,
+        cache_key=("documents", sf_dir),
+    )
+
+
+@register(
+    "dedup_containment",
+    oracle=_CONTAIN_ORACLE,
+    build=_containment_batch_compute,
+)
 def dedup_containment(spark, sf_dir) -> DataFrame:
     """ASYMMETRIC near-dup detection: token-set containment
     C(A in B) = |tok(A) & tok(B)| / |tok(A)| >= 0.9 within a source
@@ -2626,20 +2586,18 @@ def dedup_containment(spark, sf_dir) -> DataFrame:
     )
 
 
-def _containment_batch_compute(spark, sf_dir) -> DataFrame:
-    """dedup_containment's full BUILD plan (candidate join + verify,
-    no scored cache; the shared rep-state cache still serves) — the
-    plan-shape tests' capture target."""
+def _containment_corpus_compute(spark, sf_dir) -> DataFrame:
+    """dedup_containment_corpus' full BUILD plan (no scored cache) —
+    the plan-shape tests' capture target."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    return containment_best(
-        d,
-        incoming=F.col("doc_id") % 20 == 0,
-        spark=spark,
-        cache_key=("documents", sf_dir),
-    )
+    return containment_best(d, spark=spark, cache_key=("documents", sf_dir))
 
 
-@register("dedup_containment_corpus", oracle=_CONTAIN_CORPUS_ORACLE)
+@register(
+    "dedup_containment_corpus",
+    oracle=_CONTAIN_CORPUS_ORACLE,
+    build=_containment_corpus_compute,
+)
 def dedup_containment_corpus(spark, sf_dir) -> DataFrame:
     """Corpus-mode containment sweep: EVERY document reports its best
     container (not just an incoming batch) — the bootstrap form of
@@ -2663,14 +2621,20 @@ def dedup_containment_corpus(spark, sf_dir) -> DataFrame:
     )
 
 
-def _containment_corpus_compute(spark, sf_dir) -> DataFrame:
-    """dedup_containment_corpus' full BUILD plan (no scored cache) —
+def _containment_salted_compute(spark, sf_dir) -> DataFrame:
+    """dedup_containment_salted's full BUILD plan (no scored cache) —
     the plan-shape tests' capture target."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    return containment_best(d, spark=spark, cache_key=("documents", sf_dir))
+    return containment_best(
+        d, salt=_CONTAIN_SALT, spark=spark, cache_key=("documents", sf_dir)
+    )
 
 
-@register("dedup_containment_salted", oracle=_CONTAIN_CORPUS_ORACLE)
+@register(
+    "dedup_containment_salted",
+    oracle=_CONTAIN_CORPUS_ORACLE,
+    build=_containment_salted_compute,
+)
 def dedup_containment_salted(spark, sf_dir) -> DataFrame:
     """Skew-safe corpus-mode containment: same result as
     ``dedup_containment_corpus`` (same oracle — salting relocates
@@ -2693,7 +2657,7 @@ def dedup_containment_salted(spark, sf_dir) -> DataFrame:
     relocates candidate-join rows), so whichever key runs first pays
     the one candidate+verify build and the other serves it. The
     salted candidate plan stays pinned via the cache-free
-    _containment_salted_compute body (pipeline.plan_compute_fns) and
+    _containment_salted_compute body (the registry ``build``) and
     the hot-token equality fixture."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
     return containment_best(
@@ -2702,15 +2666,6 @@ def dedup_containment_salted(spark, sf_dir) -> DataFrame:
         spark=spark,
         cache_key=("documents", sf_dir),
         cache_tag="corpus",
-    )
-
-
-def _containment_salted_compute(spark, sf_dir) -> DataFrame:
-    """dedup_containment_salted's full BUILD plan (no scored cache) —
-    the plan-shape tests' capture target."""
-    d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    return containment_best(
-        d, salt=_CONTAIN_SALT, spark=spark, cache_key=("documents", sf_dir)
     )
 
 
@@ -2796,16 +2751,11 @@ def dedup_paragraph(spark, sf_dir) -> DataFrame:
     return _paragraph_report(rmap, fp, nd)
 
 
-_REP_PARA_CACHE: dict = {}
-
-
 def _rep_paragraph_fps(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (rep_id, para_idx, h) paragraph-fingerprint
     table over exact-text REPRESENTATIVES — base-corpus-sized at any
     duplication; shared by dedup_paragraph, the persisted boilerplate
     index build, and its serve path."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         rmap = text_rep_map_all(spark, sf_dir)
         reps = rmap.select(F.col("rep_id").alias("doc_id")).distinct()
@@ -2832,7 +2782,6 @@ def _rep_paragraph_fps(spark, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
     return session_cache(
-        _REP_PARA_CACHE,
         spark,
         ("rep_paras", sf_dir),
         build,
@@ -2983,21 +2932,12 @@ _SPAN_ORACLE = f"""
     """
 
 
-#: session cache for the checkpointed rep-grain span table — the
-#: substring index shared by dedup_span and text_decontaminate
-#: (cache.py discipline: (applicationId, ...) keys, stale-app
-#: eviction; superseded the member-grain `spans` cache in r15 — both
-#: consumers collapsed)
-_REP_SPAN_CACHE: dict = {}
-
-
 def rep_span_hashes_cached(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (rep_id, pos, h) span table over exact-text
     REPRESENTATIVES only — base-corpus-sized at any duplication
     factor; shared by the r15-collapsed dedup_span and
     text_decontaminate (span presence/counts are pure text functions,
     so per-rep span rows carry every member's)."""
-    from scribedb_spark.cache import session_cache
     from scribedb_spark.sources import table as _table
 
     def build():
@@ -3015,7 +2955,6 @@ def rep_span_hashes_cached(spark, sf_dir: str) -> DataFrame:
         )
 
     return session_cache(
-        _REP_SPAN_CACHE,
         spark,
         ("rep_spans", sf_dir),
         build,
@@ -3405,13 +3344,6 @@ def _recall_curve_from_labels(lab: DataFrame) -> DataFrame:
     )
 
 
-#: session cache for the sampled exact-Jaccard audit frame — the
-#: shared expensive stage of all three LSH audits (recall report,
-#: band tuner, retune gate) that every consumer re-joined per call
-#: (r15 optimization round; deps= evicts on a corpus rewrite).
-_AUDIT_SERVE_CACHE: dict = {}
-
-
 def sampled_rep_jaccards(spark, sf_dir: str) -> DataFrame:
     """The session-cached sampled exact-Jaccard audit frame (see
     :func:`_sampled_rep_jaccards_compute` for the semantics and the
@@ -3420,12 +3352,9 @@ def sampled_rep_jaccards(spark, sf_dir: str) -> DataFrame:
     dedup_minhash_band_tune and the retune gate's measurement —
     the sampled inverted-index join is the expensive stage all three
     audits read, and it is a pure function of the documents file
-    (r15 optimization round; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns on the consuming keys)."""
-    from scribedb_spark.cache import session_cache
-
+    (plan tests pin the consuming keys' cache-free registry
+    ``build`` bodies)."""
     return session_cache(
-        _AUDIT_SERVE_CACHE,
         spark,
         ("sampled_jac", sf_dir, _RECALL_SAMPLE_MOD, _RECALL_SAMPLE_REM),
         lambda: _sampled_rep_jaccards_compute(spark, sf_dir).localCheckpoint(),
@@ -3568,7 +3497,22 @@ def lsh_recall_report(pairs: DataFrame, tok: DataFrame) -> DataFrame:
     return _recall_curve_from_labels(lab)
 
 
-@register("dedup_recall_report", oracle=_recall_report_oracle())
+def _recall_report_compute(spark, sf_dir) -> DataFrame:
+    """dedup_recall_report's full BUILD plan (the sampled audit frame
+    rebuilt cache-free) — the plan-shape tests' capture target."""
+    lab = _sampled_rep_jaccards_compute(spark, sf_dir).filter(
+        F.col("j_ppm") >= _RECALL_MIN_J_PPM
+    ).select(
+        F.expr("j_ppm div 100000").alias("bucket"), "hit", "n_pairs"
+    )
+    return _recall_curve_from_labels(lab)
+
+
+@register(
+    "dedup_recall_report",
+    oracle=_recall_report_oracle(),
+    build=_recall_report_compute,
+)
 def dedup_recall_report(spark, sf_dir) -> DataFrame:
     """Dedup-index MONITORING — the near-dup lifecycle's analog of
     ``ann_recall_report`` (mine: dedup_minhash_lsh; maintain:
@@ -3601,20 +3545,8 @@ def dedup_recall_report(spark, sf_dir) -> DataFrame:
     r15 optimization round: the audit frame comes from the session-
     cached sampled_rep_jaccards (shared with the band tuner and the
     retune gate); only the <= 9-row curve aggregation runs per call.
-    Plan tests pin the cache-free BUILD body via
-    pipeline.plan_compute_fns."""
+    Plan tests pin the cache-free registry ``build`` body."""
     lab = sampled_rep_jaccards(spark, sf_dir).filter(
-        F.col("j_ppm") >= _RECALL_MIN_J_PPM
-    ).select(
-        F.expr("j_ppm div 100000").alias("bucket"), "hit", "n_pairs"
-    )
-    return _recall_curve_from_labels(lab)
-
-
-def _recall_report_compute(spark, sf_dir) -> DataFrame:
-    """dedup_recall_report's full BUILD plan (the sampled audit frame
-    rebuilt cache-free) — the plan-shape tests' capture target."""
-    lab = _sampled_rep_jaccards_compute(spark, sf_dir).filter(
         F.col("j_ppm") >= _RECALL_MIN_J_PPM
     ).select(
         F.expr("j_ppm div 100000").alias("bucket"), "hit", "n_pairs"
@@ -3690,7 +3622,21 @@ def _band_tune_oracle() -> str:
     """
 
 
-@register("dedup_minhash_band_tune", oracle=_band_tune_oracle())
+def _band_tune_compute(spark, sf_dir) -> DataFrame:
+    """dedup_minhash_band_tune's full BUILD plan (the sampled audit
+    frame rebuilt cache-free) — the plan-shape tests' capture
+    target."""
+    jac = _sampled_rep_jaccards_compute(spark, sf_dir).select(
+        "j_ppm", "n_pairs"
+    )
+    return band_tune_from_jaccards(spark, jac)
+
+
+@register(
+    "dedup_minhash_band_tune",
+    oracle=_band_tune_oracle(),
+    build=_band_tune_compute,
+)
 def dedup_minhash_band_tune(spark, sf_dir) -> DataFrame:
     """The ACTIONABLE half of recall monitoring: dedup_recall_report
     measures the deployed {4}x{4} band S-curve; this key evaluates the
@@ -3726,19 +3672,8 @@ def dedup_minhash_band_tune(spark, sf_dir) -> DataFrame:
     r15 optimization round: the audit frame comes from the session-
     cached sampled_rep_jaccards (shared with the recall report and
     the retune gate); only the 5-config reducer runs per call. Plan
-    tests pin the cache-free BUILD body via
-    pipeline.plan_compute_fns."""
+    tests pin the cache-free registry ``build`` body."""
     jac = sampled_rep_jaccards(spark, sf_dir).select("j_ppm", "n_pairs")
-    return band_tune_from_jaccards(spark, jac)
-
-
-def _band_tune_compute(spark, sf_dir) -> DataFrame:
-    """dedup_minhash_band_tune's full BUILD plan (the sampled audit
-    frame rebuilt cache-free) — the plan-shape tests' capture
-    target."""
-    jac = _sampled_rep_jaccards_compute(spark, sf_dir).select(
-        "j_ppm", "n_pairs"
-    )
     return band_tune_from_jaccards(spark, jac)
 
 
@@ -3972,8 +3907,6 @@ SQL_POS_SHINGLES = """
       WHERE i <= len(w) - 2
 """
 
-_REP_PAIRS_CACHE: dict = {}
-
 
 def exact_text_reps(d: DataFrame) -> DataFrame:
     """(doc_id, rep_id) — each document's EXACT-TEXT representative:
@@ -4000,10 +3933,6 @@ def exact_text_reps(d: DataFrame) -> DataFrame:
     return h.join(reps, ["h", "hl"]).select("doc_id", "rep_id")
 
 
-_TEXT_REP_CACHE: dict = {}
-_TEXT_REP_ALL_CACHE: dict = {}
-
-
 def text_rep_map_all(spark, sf_dir: str) -> DataFrame:
     """The UNFILTERED (doc_id, rep_id) exact-text rep map — every
     document, no min-token scope. For collapses of keys whose own
@@ -4018,7 +3947,6 @@ def text_rep_map_all(spark, sf_dir: str) -> DataFrame:
         return exact_text_reps(d).localCheckpoint()
 
     return session_cache(
-        _TEXT_REP_ALL_CACHE,
         spark,
         ("text_reps_all", sf_dir),
         build,
@@ -4042,7 +3970,6 @@ def text_rep_map(spark, sf_dir: str) -> DataFrame:
         return exact_text_reps(d).localCheckpoint()
 
     return session_cache(
-        _TEXT_REP_CACHE,
         spark,
         ("text_reps", sf_dir),
         build,
@@ -4124,7 +4051,6 @@ def _rep_pair_state(spark, sf_dir: str) -> dict:
         return {"rmap": rmap, "rp": rp}
 
     return session_cache(
-        _REP_PAIRS_CACHE,
         spark,
         ("substr_rep_state", sf_dir),
         build,
@@ -4170,9 +4096,6 @@ def lsh_rep_pairs(spark, sf_dir: str) -> DataFrame:
             "r2",
         )
     )
-
-
-_REP_COMP_CACHE: dict = {}
 
 
 def _rep_component_state(spark, sf_dir: str) -> dict:
@@ -4232,7 +4155,6 @@ def _rep_component_state(spark, sf_dir: str) -> dict:
         return {"rcomp": rcomp, "rsize": rsize}
 
     return session_cache(
-        _REP_COMP_CACHE,
         spark,
         ("rep_comp", sf_dir),
         build,
@@ -4533,7 +4455,11 @@ _RETUNE_GATE_ORACLE = f"""
     """
 
 
-@register("dedup_retune_gate", oracle=_RETUNE_GATE_ORACLE)
+@register(
+    "dedup_retune_gate",
+    oracle=_RETUNE_GATE_ORACLE,
+    gate=corpus_deps("documents"),
+)
 def dedup_retune_gate(spark, sf_dir) -> DataFrame:
     """MONITOR -> ACT for the DEDUP index — the near-dup lifecycle's
     analog of ann_retrain_gate (mine: dedup_minhash_lsh; maintain:
@@ -4561,28 +4487,12 @@ def dedup_retune_gate(spark, sf_dir) -> DataFrame:
     Scale: the audit is the SAMPLE-bounded exact pass the recall
     report already pays (~6% of PPJoin cost), the pair list is the
     session-cached index — a standing gate costs one sampled join
-    per corpus snapshot at 100 TB. Decision served via
-    cache.gate_decision (fingerprint: documents.parquet) — repeated
-    calls (rollup_gate_panel) reuse the measured row."""
-    import os
-
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "dedup_retune_gate",
-        sf_dir,
-        deps=[os.path.join(sf_dir, "documents.parquet")],
-        compute=lambda: _dedup_retune_compute(spark, sf_dir),
-    )
-
-
-def _dedup_retune_compute(spark, sf_dir) -> DataFrame:
-    """dedup_retune_gate's measurement body (plan-pinned via
-    pipeline.GATE_COMPUTE). The whole audit runs at REP grain
+    per corpus snapshot at 100 TB. The whole audit runs at REP grain
     (sampled_rep_jaccards): exact Jaccard over representative texts,
     candidacy from the rep pair set, member-pair counts by group
-    products — nothing member-pair-sized anywhere."""
+    products — nothing member-pair-sized anywhere. Decision served
+    via cache.gate_decision (fingerprint: documents.parquet) —
+    repeated calls (rollup_gate_panel) reuse the measured row."""
     lab = sampled_rep_jaccards(spark, sf_dir).filter(
         F.col("j_ppm") >= _GATE_MIN_J_PPM
     ).select("hit", "n_pairs")
@@ -4627,14 +4537,6 @@ _SPANS_ORACLE = f"""
     """
 
 
-#: session cache for the rep-grain maximal-span table — the anchored
-#: match + islands + pick chain all three act-half substring keys
-#: (spans / rewrite / rewrite_all, plus the receipts artifact build)
-#: re-ran per invocation (r15 optimization: the pair-table build-once
-#: discipline). deps= ties the entry to the corpus file.
-_SUBSTR_SPANS_CACHE: dict = {}
-
-
 def _rep_substring_spans_compute(spark, sf_dir) -> DataFrame:
     """The rep-grain span table BUILD plan: (r1, r2, run_tokens,
     a_start, b_start) — one deterministic maximal qualifying span per
@@ -4667,10 +4569,7 @@ def rep_substring_spans(spark, sf_dir) -> DataFrame:
     pure function of the corpus file, built once per (session,
     corpus fingerprint) and shared by spans / rewrite / rewrite_all /
     the receipts artifact. deps= evicts on a corpus rewrite."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _SUBSTR_SPANS_CACHE,
         spark,
         ("substr_rep_spans", sf_dir, _SUBSTR_RUN_TOKENS, _SUBSTR_STRIDE),
         lambda: _rep_substring_spans_compute(spark, sf_dir).localCheckpoint(),
@@ -4694,7 +4593,11 @@ def _substring_spans_compute(spark, sf_dir) -> DataFrame:
     return _spans_member(spark, sf_dir, _rep_substring_spans_compute(spark, sf_dir))
 
 
-@register("dedup_substring_spans", oracle=_SPANS_ORACLE)
+@register(
+    "dedup_substring_spans",
+    oracle=_SPANS_ORACLE,
+    build=_substring_spans_compute,
+)
 def dedup_substring_spans(spark, sf_dir) -> DataFrame:
     """WHERE the duplication lives: for every 'shared_run' pair of
     dedup_substring, the MAXIMAL shared run's coordinates —
@@ -4733,8 +4636,8 @@ def dedup_substring_spans(spark, sf_dir) -> DataFrame:
 
     r15: the rep span table serves from the session cache
     (``rep_substring_spans``), shared with rewrite / rewrite_all and
-    the receipts artifact build; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns."""
+    the receipts artifact build; plan tests pin the registry
+    ``build`` body."""
     return _spans_member(spark, sf_dir, rep_substring_spans(spark, sf_dir))
 
 
@@ -4793,7 +4696,20 @@ _REWRITE_ORACLE = f"""
     """
 
 
-@register("dedup_substring_rewrite", oracle=_REWRITE_ORACLE)
+def _substring_rewrite_compute(spark, sf_dir) -> DataFrame:
+    """dedup_substring_rewrite's full BUILD plan (span detection +
+    victim pick + corpus slice, no span cache) — the plan-shape
+    tests' capture target."""
+    return _rewrite_from_spans(
+        spark, sf_dir, _substring_spans_compute(spark, sf_dir)
+    )
+
+
+@register(
+    "dedup_substring_rewrite",
+    oracle=_REWRITE_ORACLE,
+    build=_substring_rewrite_compute,
+)
 def dedup_substring_rewrite(spark, sf_dir) -> DataFrame:
     """APPLY the surgical removal — the act half of the suffix-array
     dedup recipe (Lee et al. 2022 removes the duplicated SPAN, not
@@ -4829,15 +4745,6 @@ def dedup_substring_rewrite(spark, sf_dir) -> DataFrame:
     per-call."""
     return _rewrite_from_spans(
         spark, sf_dir, dedup_substring_spans(spark, sf_dir)
-    )
-
-
-def _substring_rewrite_compute(spark, sf_dir) -> DataFrame:
-    """dedup_substring_rewrite's full BUILD plan (span detection +
-    victim pick + corpus slice, no span cache) — the plan-shape
-    tests' capture target."""
-    return _rewrite_from_spans(
-        spark, sf_dir, _substring_spans_compute(spark, sf_dir)
     )
 
 
@@ -5006,7 +4913,20 @@ _REWRITE_ALL_ORACLE = (
 )
 
 
-@register("dedup_substring_rewrite_all", oracle=_REWRITE_ALL_ORACLE)
+def _substring_rewrite_all_compute(spark, sf_dir) -> DataFrame:
+    """dedup_substring_rewrite_all's full BUILD plan (span detection
+    + greedy picks + token rebuild, no span cache) — the plan-shape
+    tests' capture target."""
+    return _rewrite_all_from_spans(
+        spark, sf_dir, _substring_spans_compute(spark, sf_dir)
+    )
+
+
+@register(
+    "dedup_substring_rewrite_all",
+    oracle=_REWRITE_ALL_ORACLE,
+    build=_substring_rewrite_all_compute,
+)
 def dedup_substring_rewrite_all(spark, sf_dir) -> DataFrame:
     """The FULL multi-span rewrite receipt — the remaining depth of
     the suffix-array recipe (Lee et al. 2022 remove EVERY duplicated
@@ -5044,15 +4964,6 @@ def dedup_substring_rewrite_all(spark, sf_dir) -> DataFrame:
     per-call."""
     return _rewrite_all_from_spans(
         spark, sf_dir, dedup_substring_spans(spark, sf_dir)
-    )
-
-
-def _substring_rewrite_all_compute(spark, sf_dir) -> DataFrame:
-    """dedup_substring_rewrite_all's full BUILD plan (span detection
-    + greedy picks + token rebuild, no span cache) — the plan-shape
-    tests' capture target."""
-    return _rewrite_all_from_spans(
-        spark, sf_dir, _substring_spans_compute(spark, sf_dir)
     )
 
 
@@ -5426,7 +5337,11 @@ _SOURCE_BUDGET_ORACLE = f"""
     """
 
 
-@register("sample_source_budget", oracle=_SOURCE_BUDGET_ORACLE)
+@register(
+    "sample_source_budget",
+    oracle=_SOURCE_BUDGET_ORACLE,
+    gate=corpus_deps("documents"),
+)
 def sample_source_budget(spark, sf_dir) -> DataFrame:
     """PER-SOURCE sampling budget under count-deduplication — the act
     half of the inter-source census (rollup_source_overlap measures
@@ -5451,22 +5366,6 @@ def sample_source_budget(spark, sf_dir) -> DataFrame:
     corpus-sized shuffle (the weights join already carries source-
     sized strings only after the id join). Decision served via
     cache.gate_decision (fingerprint: documents.parquet)."""
-    import os
-
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "sample_source_budget",
-        sf_dir,
-        deps=[os.path.join(sf_dir, "documents.parquet")],
-        compute=lambda: _source_budget_compute(spark, sf_dir),
-    )
-
-
-def _source_budget_compute(spark, sf_dir) -> DataFrame:
-    """sample_source_budget's measurement body (plan-pinned via
-    pipeline.GATE_COMPUTE)."""
     w = sample_dedup_weights(spark, sf_dir).select("doc_id", "weight_ppm")
     src = table(spark, "documents", sf_dir).select("doc_id", "source")
     thr = _SOURCE_BUDGET_THRESHOLD_PPM

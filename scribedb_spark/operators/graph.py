@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from scribedb_spark.queries import register
+from scribedb_spark.cache import session_cache
+from scribedb_spark.queries import corpus_deps, register
 from scribedb_spark.sources import table
 
 #: damping in percent and the per-node base mass in micro-units:
@@ -98,6 +99,7 @@ def transition_graph(spark, sf_dir):
       FROM nodes n LEFT JOIN c3 ON n.node = c3.node)
     SELECT node AS event_type, r AS rank_micro FROM r3
     """,
+    serve=corpus_deps("events"),
 )
 def graph_pagerank(spark, sf_dir) -> DataFrame:
     """Weighted PageRank (damping 0.85, {N_ITER} iterations) over the
@@ -118,30 +120,7 @@ def graph_pagerank(spark, sf_dir) -> DataFrame:
     observed-transition count in general); each iteration is one
     edges-to-ranks join keyed on the source node plus a destination
     groupBy, exactly the shape a billion-node run partitions on, with
-    a checkpoint per iteration instead of this unrolled 3-step plan.
-
-    r15 optimization round: the final rank frame (|event_type| rows,
-    a pure function of the events file) is a session-cached
-    localCheckpoint — the edge/node checkpoints and 3 unrolled
-    iterations run once per (session, events fingerprint) instead of
-    per invocation (the _IVF_SERVE_CACHE discipline; plan tests pin
-    the BUILD body via pipeline.plan_compute_fns).
-    """
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _GRAPH_SERVE_CACHE,
-        spark,
-        ("pagerank", sf_dir, N_ITER),
-        lambda: _pagerank_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/events.parquet"],
-    )
-
-
-def _pagerank_compute(spark, sf_dir) -> DataFrame:
-    """graph_pagerank's full BUILD plan (transition-graph collapse +
-    3 unrolled integer iterations, no serve cache) — the plan-shape
-    tests' capture target and the serve cache's builder."""
+    a checkpoint per iteration instead of this unrolled 3-step plan."""
     eo, nodes = transition_graph(spark, sf_dir)
     # each unrolled iteration reuses the edge and node frames 1:1 —
     # checkpoint them so the raw-event subtree (window + two
@@ -172,14 +151,6 @@ def _pagerank_compute(spark, sf_dir) -> DataFrame:
     )
 
 
-#: session cache for the served pagerank frame — a pure function of
-#: the events file whose 3 unrolled iterations every invocation
-#: re-ran (r15 optimization round; deps= evicts on an events rewrite).
-_GRAPH_SERVE_CACHE: dict = {}
-
-_REP_GRAPH_CACHE: dict = {}
-
-
 def _rep_graph(spark, sf_dir):
     """(redges, gcount, selfr, rmap) — the CLIQUE-QUOTIENT view of
     the LSH candidate graph, built once per session (r14): exact-text
@@ -200,7 +171,6 @@ def _rep_graph(spark, sf_dir):
       without external edges — the group clique),
     - ``rmap``: (doc_id, rep_id) for the final expansion join.
     """
-    from scribedb_spark.cache import session_cache
     from scribedb_spark.operators.dedup import _rep_pair_state
 
     def build():
@@ -230,7 +200,6 @@ def _rep_graph(spark, sf_dir):
         return redges, gcount, selfr, st["rmap"]
 
     return session_cache(
-        _REP_GRAPH_CACHE,
         spark,
         ("rep_graph", sf_dir),
         build,
@@ -327,7 +296,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return pern.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-@register("graph_triangle_count", oracle=_triangle_oracle())
+@register(
+    "graph_triangle_count",
+    oracle=_triangle_oracle(),
+    serve=corpus_deps("documents"),
+)
 def graph_triangle_count(spark, sf_dir) -> DataFrame:
     """Per-node triangle counts over the near-dup candidate graph
     (dedup_minhash_lsh edges) — the local-clustering signal that
@@ -351,29 +324,7 @@ def graph_triangle_count(spark, sf_dir) -> DataFrame:
     pair list never materializes. The unchanged member-grain DuckDB
     oracle hash-proves the decomposition on every driver run; only
     groups with a positive count expand (matching the member plan's
-    triangle-participating output).
-
-    r15 optimization round: the per-doc count frame (a pure function
-    of the documents file) is a session-cached localCheckpoint — the
-    quotient joins and expansion run once per (session, corpus
-    fingerprint) instead of per invocation (the graph_pagerank
-    discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _GRAPH_SERVE_CACHE,
-        spark,
-        ("triangles", sf_dir),
-        lambda: _triangle_count_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _triangle_count_compute(spark, sf_dir) -> DataFrame:
-    """graph_triangle_count's full BUILD plan (quotient triangle join
-    + product transfers + expansion, no serve cache) — the plan-shape
-    tests' capture target and the serve cache's builder."""
+    triangle-participating output)."""
     redges, gcount, selfr, rmap = _rep_graph(spark, sf_dir)
     tri = _oriented_triangle_join(redges)
     ga = gcount.select(F.col("rep_id").alias("a"), F.col("c").alias("ca"))
@@ -704,7 +655,11 @@ def h_index_rounds(edges: DataFrame, n_rounds: int) -> DataFrame:
     )
 
 
-@register("graph_kcore", oracle=_kcore_oracle())
+@register(
+    "graph_kcore",
+    oracle=_kcore_oracle(),
+    serve=corpus_deps("documents"),
+)
 def graph_kcore(spark, sf_dir) -> DataFrame:
     """Coreness estimate of every node in the near-dup candidate
     graph via {3} rounds of the H-index iteration (Lu et al. 2016,
@@ -745,29 +700,7 @@ def graph_kcore(spark, sf_dir) -> DataFrame:
     ties collapsed into one weighted row. The member pair list never
     materializes; a megadup clique is one self-row (v, v, c-1). The
     unchanged member-grain oracle (per-neighbor row_number form)
-    hash-proves the weighted identity per driver run.
-
-    r15 optimization round: the per-doc coreness frame (a pure
-    function of the documents file) is a session-cached
-    localCheckpoint — the 3 weighted H-index rounds run once per
-    (session, corpus fingerprint) instead of per invocation (the
-    graph_pagerank discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _GRAPH_SERVE_CACHE,
-        spark,
-        ("kcore", sf_dir),
-        lambda: _kcore_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _kcore_compute(spark, sf_dir) -> DataFrame:
-    """graph_kcore's full BUILD plan (3 unrolled weighted H-index
-    rounds over the quotient + expansion, no serve cache) — the
-    plan-shape tests' capture target and the serve cache's builder."""
+    hash-proves the weighted identity per driver run."""
     redges, gcount, selfr, rmap = _rep_graph(spark, sf_dir)
     und = redges.select(
         F.col("doc_id1").alias("v"), F.col("doc_id2").alias("u")
@@ -895,7 +828,11 @@ def min_label_rounds(edges: DataFrame, n_rounds: int) -> DataFrame:
     )
 
 
-@register("graph_label_propagation", oracle=_label_prop_oracle())
+@register(
+    "graph_label_propagation",
+    oracle=_label_prop_oracle(),
+    serve=corpus_deps("documents"),
+)
 def graph_label_propagation(spark, sf_dir) -> DataFrame:
     """Community detection over the near-dup candidate graph via {3}
     rounds of SYNCHRONOUS min-label propagation (the GraphFrames/
@@ -931,30 +868,7 @@ def graph_label_propagation(spark, sf_dir) -> DataFrame:
     rounds over REP edges, lone cliques labeled by their rep, one
     expansion join — the member pair list never materializes, and
     community sizes are group-count sums. The unchanged member-grain
-    recursive oracle hash-proves the quotient argument per run.
-
-    r15 optimization round: the per-doc community frame (a pure
-    function of the documents file) is a session-cached
-    localCheckpoint — the min-label rounds and expansion run once per
-    (session, corpus fingerprint) instead of per invocation (the
-    graph_pagerank discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _GRAPH_SERVE_CACHE,
-        spark,
-        ("lpa", sf_dir, _LPA_ROUNDS),
-        lambda: _label_propagation_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _label_propagation_compute(spark, sf_dir) -> DataFrame:
-    """graph_label_propagation's full BUILD plan (3 synchronous
-    min-label rounds over rep edges + expansion, no serve cache) —
-    the plan-shape tests' capture target and the serve cache's
-    builder."""
+    recursive oracle hash-proves the quotient argument per run."""
     redges, gcount, selfr, rmap = _rep_graph(spark, sf_dir)
     rl = _min_label_core(redges, _LPA_ROUNDS)
     lone = selfr.join(

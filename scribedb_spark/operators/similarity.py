@@ -37,7 +37,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scribedb_spark.queries import register
+from scribedb_spark.cache import session_cache
+from scribedb_spark.queries import REGISTRY, corpus_deps, register
 from scribedb_spark.sources import table
 from scribedb_spark.functions.vector import (
     cosine,
@@ -202,7 +203,11 @@ def _lsh_oracle(dim: int = 64) -> str:
     """
 
 
-@register("ann_lsh_topk", oracle=_lsh_oracle())
+@register(
+    "ann_lsh_topk",
+    oracle=_lsh_oracle(),
+    serve=corpus_deps("embeddings"),
+)
 def ann_lsh_topk(spark, sf_dir) -> DataFrame:
     """ANN top-5 per query via sign-random-projection LSH.
 
@@ -216,29 +221,7 @@ def ann_lsh_topk(spark, sf_dir) -> DataFrame:
     exact binary fractions, so the DuckDB twin embeds them as
     literals and replicates bucketing + re-rank in SQL (_lsh_oracle);
     the numpy brute-force recall test remains as the structural
-    check.
-
-    r15 optimization round: the served top-5 frame (a pure function
-    of the embeddings file) is a session-cached localCheckpoint — the
-    bucketing matmul, candidate join and interpreted-fold rerank run
-    once per (session, embeddings fingerprint) instead of per
-    invocation (the _IVF_SERVE_CACHE discipline; plan tests pin the
-    BUILD body via pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _ANN_SERVE_CACHE,
-        spark,
-        ("lsh_topk", sf_dir, N_TABLES, N_PLANES),
-        lambda: _lsh_topk_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
-
-
-def _lsh_topk_compute(spark, sf_dir) -> DataFrame:
-    """ann_lsh_topk's full BUILD plan (bucketing + same-bucket join +
-    exact-cosine rerank + top-5 window, no serve cache) — the
-    plan-shape tests' capture target and the serve cache's builder."""
+    check."""
     e = table(spark, "embeddings", sf_dir)
     # derive dim from the data (one-row head, not a hard-coded 64 —
     # any other embedding width would fail or mis-project at the
@@ -689,24 +672,18 @@ def _int_lloyd_ctes(
         FROM samp) WHERE rn <= {k}),{train[:-1]}"""
 
 
-
 N_CELLS = 16
 N_PROBE = 4
 _IVF_SAMPLE = 2048
 _IVF_ITERS = 2    # integer Lloyd rounds (unrolled in the SQL oracle)
 
-#: trained quantizer artifacts (collected sample rows + integer-Lloyd
-#: codebooks) keyed by (appId, kind, sf_dir, params) — the "train
-#: once, serve many" lifecycle every real ANN deployment has: at
-#: 100 TB the quantizer is trained on a bounded sample ONCE and the
-#: serving path only ever assigns/probes against the frozen codebook.
-#: Round 7 retrained per invocation (the oracle-graduation tradeoff,
-#: ann_ivf 0.81->1.68 s in bench); the session cache restores the
-#: honest lifecycle without touching the oracle contract (same
-#: deterministic training, just not repeated).
-_ANN_TRAIN_CACHE: dict = {}
-
-#: every ACTUAL training run (sample collect + Lloyd) appends
+#: Trained quantizer artifacts (collected sample rows + integer-Lloyd
+#: codebooks) are session-cached per (kind, sf_dir, params) — the
+#: "train once, serve many" lifecycle every real ANN deployment has:
+#: at 100 TB the quantizer is trained on a bounded sample ONCE and
+#: the serving path only ever assigns/probes against the frozen
+#: codebook (same deterministic training as the oracle, not repeated).
+#: Every ACTUAL training run (sample collect + Lloyd) appends
 #: (kind, sf_dir) here so tests can assert a second same-session
 #: invocation performs zero training collects
 #: (tests/test_similarity.py::test_ann_train_once_per_session)
@@ -743,8 +720,6 @@ def _ivf_trained(spark, sf_dir, vq):
     import numpy as np
     import pandas as pd
 
-    from scribedb_spark.cache import session_cache
-
     def build():
         srows = vq.orderBy("vec_id").limit(_IVF_SAMPLE).collect()
         sample = np.array([r["q"] for r in srows], dtype=np.int64)
@@ -780,7 +755,6 @@ def _ivf_trained(spark, sf_dir, vq):
         return srows, books, assigned
 
     return session_cache(
-        _ANN_TRAIN_CACHE,
         spark,
         ("ivf", sf_dir, _IVF_SAMPLE, N_CELLS, _IVF_ITERS),
         build,
@@ -830,23 +804,11 @@ def _ivf_int_oracle(
     """.format(lloyd=_int_lloyd_ctes(1, k, iters, _IVF_SAMPLE))
 
 
-#: session cache for the served IVF top-5 frame and the exact-cosine
-#: baseline — both pure functions of the embeddings file that every
-#: invocation re-ranked from scratch (r15 optimization: the
-#: _mips_state/_mips_exact_topk discipline applied to the trained-IVF
-#: family). deps= fingerprints evict on an embeddings rewrite.
-_IVF_SERVE_CACHE: dict = {}
-
-#: session cache for the served top-5 frames of the REMAINING ANN
-#: serve keys (PQ / sign-LSH / seeded-SQ) — each a pure function of
-#: the embeddings file that every invocation re-ranked from scratch
-#: (r15 optimization: the _IVF_SERVE_CACHE discipline applied to the
-#: rest of the ANN family). deps= fingerprints evict on an
-#: embeddings rewrite.
-_ANN_SERVE_CACHE: dict = {}
-
-
-@register("ann_ivf_topk", oracle=_ivf_int_oracle())
+@register(
+    "ann_ivf_topk",
+    oracle=_ivf_int_oracle(),
+    serve=corpus_deps("embeddings"),
+)
 def ann_ivf_topk(spark, sf_dir) -> DataFrame:
     """ANN top-5 per query via a TRAINED IVF coarse quantizer (the
     standard billion-scale layout: FAISS-style cells, Spark-sized).
@@ -868,29 +830,7 @@ def ann_ivf_topk(spark, sf_dir) -> DataFrame:
     nearest cells by the same integer metric (ties -> smaller cell),
     candidates re-rank by exact float cosine (shared fold, ROUND 6 +
     id tie-breaks), top-5. Recall floor vs numpy brute force pinned
-    in tests/test_similarity.py.
-
-    r15: the served top-5 frame (|queries| x 5 rows, a pure function
-    of the embeddings file) is a session-cached localCheckpoint —
-    the interpreted-fold rerank over the probed cells runs once per
-    (session, embeddings fingerprint) instead of per invocation (the
-    _mips_state discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _IVF_SERVE_CACHE,
-        spark,
-        ("ivf_topk", sf_dir, _IVF_SAMPLE, N_CELLS, _IVF_ITERS),
-        lambda: _ivf_topk_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
-
-
-def _ivf_topk_compute(spark, sf_dir) -> DataFrame:
-    """ann_ivf_topk's full BUILD plan (probe + exact-cosine rerank +
-    top-5 window, no serve cache) — the plan-shape tests' capture
-    target and the cache builder's body."""
+    in tests/test_similarity.py."""
     scored = _ivf_scored(spark, sf_dir)
     from pyspark.sql import Window
 
@@ -1081,7 +1021,6 @@ def _append_base_index(spark, sf_dir):
     (the appended batch is excluded from the training sample) plus
     the base per-cell census — built once per session and persisted
     at 100 TB (the census is N_CELLS rows)."""
-    from scribedb_spark.cache import session_cache
     from scribedb_spark.functions.vector import quantize_int8
 
     import numpy as np
@@ -1113,7 +1052,6 @@ def _append_base_index(spark, sf_dir):
         return books, census
 
     return session_cache(
-        _ANN_TRAIN_CACHE,
         spark,
         ("append", sf_dir, _IVF_SAMPLE, N_CELLS, _IVF_ITERS),
         build,
@@ -1217,7 +1155,23 @@ def _recall_oracle() -> str:
     """
 
 
-@register("ann_recall_report", oracle=_recall_oracle())
+def _ivf_recall_compute(spark, sf_dir) -> DataFrame:
+    """ann_recall_report's full BUILD plan (served topk + exact
+    baseline both computed from scratch, no caches) — the plan-shape
+    tests' capture target."""
+    return _recall_report_for(
+        spark,
+        sf_dir,
+        REGISTRY["ann_ivf_topk"].build(spark, sf_dir).select("q_id", "c_id"),
+        exact=_ivf_exact_top5_compute(spark, sf_dir),
+    )
+
+
+@register(
+    "ann_recall_report",
+    oracle=_recall_oracle(),
+    build=_ivf_recall_compute,
+)
 def ann_recall_report(spark, sf_dir) -> DataFrame:
     """Index-quality MONITORING — the fourth stage of the ANN
     lifecycle this engine now covers end to end (train once:
@@ -1247,18 +1201,6 @@ def ann_recall_report(spark, sf_dir) -> DataFrame:
     (session, embeddings fingerprint)."""
     ann = ann_ivf_topk(spark, sf_dir).select("q_id", "c_id")
     return _recall_report_for(spark, sf_dir, ann)
-
-
-def _ivf_recall_compute(spark, sf_dir) -> DataFrame:
-    """ann_recall_report's full BUILD plan (served topk + exact
-    baseline both computed from scratch, no caches) — the plan-shape
-    tests' capture target."""
-    return _recall_report_for(
-        spark,
-        sf_dir,
-        _ivf_topk_compute(spark, sf_dir).select("q_id", "c_id"),
-        exact=_ivf_exact_top5_compute(spark, sf_dir),
-    )
 
 
 def _ivf_exact_top5_compute(spark, sf_dir) -> DataFrame:
@@ -1294,10 +1236,7 @@ def _ivf_exact_top5(spark, sf_dir) -> DataFrame:
     query — the baseline side of every IVF recall audit (the recall
     report and the retrain gate's measure passes share one build).
     deps= ties the entry to the embeddings file."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _IVF_SERVE_CACHE,
         spark,
         ("ivf_exact", sf_dir),
         lambda: _ivf_exact_top5_compute(spark, sf_dir).localCheckpoint(),
@@ -1342,6 +1281,19 @@ def _recall_report_for(
 _RETRAIN_THRESHOLD_PPM = 600_000
 
 
+def _index_deps(codebook: str, index: str):
+    """``gate=`` deps of a retrain gate: the embeddings file plus the
+    two warehouse slots it measures (an act rewrites them, so the
+    next read re-measures the rebuilt index)."""
+    from scribedb_spark.persist import artifact_path
+
+    return lambda sf_dir: [
+        os.path.join(sf_dir, "embeddings.parquet"),
+        artifact_path(codebook, sf_dir),
+        artifact_path(index, sf_dir),
+    ]
+
+
 def _retrain_gate_oracle() -> str:
     """DuckDB twin of ann_retrain_gate's decision row: mean recall of
     the from-scratch-trained index (which is what a fresh or healthy
@@ -1363,7 +1315,11 @@ def _retrain_gate_oracle() -> str:
     """
 
 
-@register("ann_retrain_gate", oracle=_retrain_gate_oracle())
+@register(
+    "ann_retrain_gate",
+    oracle=_retrain_gate_oracle(),
+    gate=_index_deps("ivf_codebook", "ivf_index"),
+)
 def ann_retrain_gate(spark, sf_dir) -> DataFrame:
     """MONITOR -> ACT: the deterministic retrain decision closing the
     ANN lifecycle loop (train -> serve -> append -> monitor -> THIS).
@@ -1399,25 +1355,6 @@ def ann_retrain_gate(spark, sf_dir) -> DataFrame:
     row; any warehouse mutation (including this gate's own act)
     changes the fingerprint and forces a fresh measurement, which is
     what keeps the degraded-index test's monitor->act loop honest."""
-    from scribedb_spark.cache import gate_decision
-    from scribedb_spark.persist import artifact_path
-
-    return gate_decision(
-        spark,
-        "ann_retrain_gate",
-        sf_dir,
-        deps=[
-            os.path.join(sf_dir, "embeddings.parquet"),
-            artifact_path("ivf_codebook", sf_dir),
-            artifact_path("ivf_index", sf_dir),
-        ],
-        compute=lambda: _ann_retrain_compute(spark, sf_dir),
-    )
-
-
-def _ann_retrain_compute(spark, sf_dir) -> DataFrame:
-    """ann_retrain_gate's measurement + act body (the plan the
-    plan-shape tests pin via pipeline.GATE_COMPUTE)."""
     import shutil
 
     from scribedb_spark.persist import artifact_path
@@ -1502,8 +1439,6 @@ def _pq_trained(spark, sf_dir, vq):
     import numpy as np
     import pandas as pd
 
-    from scribedb_spark.cache import session_cache
-
     def build():
         srows = (
             vq.select("vec_id", "q").orderBy("vec_id").limit(_PQ_SAMPLE).collect()
@@ -1515,7 +1450,6 @@ def _pq_trained(spark, sf_dir, vq):
         return srows, books, codes_df
 
     return session_cache(
-        _ANN_TRAIN_CACHE,
         spark,
         ("pq", sf_dir, _PQ_SAMPLE, PQ_M, PQ_K, _PQ_ITERS),
         build,
@@ -1648,7 +1582,7 @@ def _pq_oracle(
     """
 
 
-@register("ann_pq_topk", oracle=_pq_oracle())
+@register("ann_pq_topk", oracle=_pq_oracle(), serve=corpus_deps("embeddings"))
 def ann_pq_topk(spark, sf_dir) -> DataFrame:
     """ANN top-5 per query via product quantization with asymmetric
     distance (ADC) — the memory lever for billion-vector search: each
@@ -1676,31 +1610,7 @@ def ann_pq_topk(spark, sf_dir) -> DataFrame:
     ideal under the strict (adc, c_id) total order, and the rerank
     reuses the shared sequential-fold cosine with ROUND 6 + id
     tie-breaks. Recall floor vs numpy brute force pinned by
-    tests/test_similarity.py.
-
-    r15 optimization round: the served top-5 frame (|queries| x 5
-    rows, a pure function of the embeddings file) is a session-cached
-    localCheckpoint — the codes scan + shortlist merge + exact rerank
-    run once per (session, embeddings fingerprint) instead of per
-    invocation (the _IVF_SERVE_CACHE discipline; plan tests pin the
-    BUILD body via pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _ANN_SERVE_CACHE,
-        spark,
-        ("pq_topk", sf_dir, _PQ_SAMPLE, PQ_M, PQ_K, _PQ_ITERS),
-        lambda: _pq_topk_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
-
-
-def _pq_topk_compute(spark, sf_dir) -> DataFrame:
-    """ann_pq_topk's full BUILD plan (codes scan + shortlist window +
-    exact-cosine rerank, no serve cache; the trained codes table
-    itself stays train-once via _pq_trained, as in every ANN compute
-    body) — the plan-shape tests' capture target and the serve
-    cache's builder."""
+    tests/test_similarity.py."""
     v, vq = _pq_vq(spark, sf_dir)
     srows, books, codes_df = _pq_trained(spark, sf_dir, vq)
 
@@ -1873,8 +1783,6 @@ def _pq_append_base(spark, sf_dir):
     base codes, built once per session and checkpointed."""
     import numpy as np
 
-    from scribedb_spark.cache import session_cache
-
     def build():
         _v, vq = _pq_vq(spark, sf_dir)
         base = vq.filter(F.col("vec_id") % _APPEND_MOD != F.lit(_APPEND_REM))
@@ -1891,7 +1799,6 @@ def _pq_append_base(spark, sf_dir):
         return books, base_codes
 
     return session_cache(
-        _ANN_TRAIN_CACHE,
         spark,
         ("pq_append_base", sf_dir, _PQ_SAMPLE, PQ_M, PQ_K, _PQ_ITERS),
         build,
@@ -2022,7 +1929,6 @@ def ann_prefix_topk(spark, sf_dir) -> DataFrame:
     a mis-routed bucket."""
     from pyspark.sql import Window
 
-    from scribedb_spark.cache import session_cache
     from scribedb_spark.functions.vector import quantize_int8
 
     import numpy as np
@@ -2068,7 +1974,9 @@ def ann_prefix_topk(spark, sf_dir) -> DataFrame:
         return vq_, q_ids_, Qp_
 
     vq, q_ids, Qp = session_cache(
-        _ANN_TRAIN_CACHE, spark, ("prefix", sf_dir, _PREFIX_DIMS), build_index,
+        spark,
+        ("prefix", sf_dir, _PREFIX_DIMS),
+        build_index,
         deps=[f"{sf_dir}/embeddings.parquet"],
     )
     bc_q = spark.sparkContext.broadcast((q_ids, Qp))
@@ -2468,7 +2376,6 @@ def sq_ranked_ctes(cells_sql: str = str(_SQ_CELLS)) -> str:
 SQ_RANKED_CTES = sq_ranked_ctes(SQ_SCALED_CELLS_SQL)
 
 
-
 def _ivf_scored(spark, sf_dir) -> DataFrame:
     """ann_ivf_sq_topk's CANDIDATE stage — (q_id, c_id, score) for
     every vector in every query's probed cells, before the top-k
@@ -2553,6 +2460,7 @@ def _ivf_scored(spark, sf_dir) -> DataFrame:
       FROM rer)
     SELECT q_id, c_id, score, rk FROM r WHERE rk <= 5
     """,
+    serve=corpus_deps("embeddings"),
 )
 def ann_ivf_sq_topk(spark, sf_dir) -> DataFrame:
     """IVF cell-probe ANN with a SCALAR-QUANTIZED seeded coarse
@@ -2577,29 +2485,7 @@ def ann_ivf_sq_topk(spark, sf_dir) -> DataFrame:
 
     Exactness: quantization is element-wise (no sums); integer dots
     are order-free; rerank cosine uses the shared sequential-fold
-    ``cosine`` (engine-identical), ROUND 6 + id tie-breaks.
-
-    r15 optimization round: the served top-5 frame (a pure function
-    of the embeddings file) is a session-cached localCheckpoint — the
-    cell ranking, probe join and interpreted-fold rerank run once per
-    (session, embeddings fingerprint) instead of per invocation (the
-    _IVF_SERVE_CACHE discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _ANN_SERVE_CACHE,
-        spark,
-        ("ivf_sq_topk", sf_dir, _SQ_CELLS, _SQ_PROBE),
-        lambda: _ivf_sq_topk_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
-
-
-def _ivf_sq_topk_compute(spark, sf_dir) -> DataFrame:
-    """ann_ivf_sq_topk's full BUILD plan (seeded-cell ranking + probe
-    join + exact-cosine rerank + top-5 window, no serve cache) — the
-    plan-shape tests' capture target and the serve cache's builder."""
+    ``cosine`` (engine-identical), ROUND 6 + id tie-breaks."""
     from pyspark.sql import Window
 
     e = table(spark, "embeddings", sf_dir)
@@ -2743,44 +2629,26 @@ _KNN_ANN_ORACLE = f"""
     """.replace("{k}", str(_KNN_K))
 
 
-@register("vec_knn_graph_ann", oracle=_KNN_ANN_ORACLE)
+@register(
+    "vec_knn_graph_ann",
+    oracle=_KNN_ANN_ORACLE,
+    serve=corpus_deps("embeddings"),
+)
 def vec_knn_graph_ann(spark, sf_dir) -> DataFrame:
     """Approximate kNN graph (k=3) — the IVF-SQ-blocked twin of
-    ``vec_knn_graph``; see :func:`_knn_ann_compute` for the
-    algorithm, exactness and scale story.
-
-    r15 optimization round: the served per-vector frame (a pure
-    function of the embeddings file) is a session-cached
-    localCheckpoint — the assignment, per-cell numpy kernels and the
-    global top-k window run once per (session, embeddings
-    fingerprint) instead of per invocation (the ann_*_topk serve
-    discipline; plan tests pin the BUILD body via
-    pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _ANN_SERVE_CACHE,
-        spark,
-        ("knn_ann", sf_dir, _KNN_K),
-        lambda: _knn_ann_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
-
-
-def _knn_ann_compute(spark, sf_dir) -> DataFrame:
-    """vec_knn_graph_ann's full BUILD plan: candidate neighbors come
-    from cell co-residence (each vector in its top-{A} of
-    scaled_cells(n) seeded cells) instead of all pairs. Scoring runs
-    as ONE numpy matmul per cell inside ``applyInPandas`` — the same
-    vectorized kernel discipline as the exact graph (whose block-pair
-    kernel is the proven numpy/DuckDB agreement baseline), emitting
-    each source's per-cell candidates at or ABOVE the (k+8)-th raw
-    score — a threshold, not a fixed-count slice, so rounded-score
-    ties at the boundary can never be arbitrarily dropped; a global
-    window over ROUND(score, 6) with neighbor-id tiebreak picks the
-    final top-k. Output schema matches vec_knn_graph (vec_id,
-    ascending comma-joined neighbor ids); tests/test_similarity.py
-    pins edge recall against the exact graph.
+    ``vec_knn_graph``: candidate neighbors come from cell
+    co-residence (each vector in its top-{A} of scaled_cells(n)
+    seeded cells) instead of all pairs. Scoring runs as ONE numpy
+    matmul per cell inside ``applyInPandas`` — the same vectorized
+    kernel discipline as the exact graph (whose block-pair kernel is
+    the proven numpy/DuckDB agreement baseline), emitting each
+    source's per-cell candidates at or ABOVE the (k+8)-th raw score —
+    a threshold, not a fixed-count slice, so rounded-score ties at the
+    boundary can never be arbitrarily dropped; a global window over
+    ROUND(score, 6) with neighbor-id tiebreak picks the final top-k.
+    Output schema matches vec_knn_graph (vec_id, ascending
+    comma-joined neighbor ids); tests/test_similarity.py pins edge
+    recall against the exact graph.
 
     Scale: compute is sum(cell_size^2) matmuls, not n^2 — with
     scaled_cells keeping cells ~sqrt(n) that is ~A^2 * n^1.5; the
@@ -2788,8 +2656,7 @@ def _knn_ann_compute(spark, sf_dir) -> DataFrame:
     rows. A pair sharing several cells scores identically in each
     (same floats), so the duplicate drop is exact. Vectors whose
     true neighbors live in unshared cells are the recall loss,
-    bounded by the multi-assignment breadth.
-    """
+    bounded by the multi-assignment breadth."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window
@@ -3013,13 +2880,6 @@ def _mips_codes_and_assignment(spark, sf_dir):
     return d8, cent, asn
 
 
-#: session cache for the MIPS index state (codebook + cell-assigned
-#: vector table) — the build every MIPS key re-ran per invocation
-#: (r15 optimization: the _ivf_trained build-once discipline applied
-#: to the augmented-dimension family)
-_MIPS_STATE_CACHE: dict = {}
-
-
 def _mips_state(spark, sf_dir) -> dict:
     """Session-cached {'cent', 'asn'} checkpoints of
     :func:`_mips_codes_and_assignment` — built once per (session,
@@ -3027,8 +2887,6 @@ def _mips_state(spark, sf_dir) -> dict:
     report and the warehouse artifact builders. deps= ties the entry
     to the embeddings file (gate-honesty rule: an in-session rewrite
     forces re-assignment)."""
-    from scribedb_spark.cache import session_cache
-
     def build():
         _d8, cent, asn = _mips_codes_and_assignment(spark, sf_dir)
         return {
@@ -3037,7 +2895,6 @@ def _mips_state(spark, sf_dir) -> dict:
         }
 
     return session_cache(
-        _MIPS_STATE_CACHE,
         spark,
         ("mips_state", sf_dir),
         build,
@@ -3118,6 +2975,7 @@ def _mips_frame_from(spark, sf_dir, cent, asn) -> DataFrame:
     WITH {_mips_ann_ctes()}
     SELECT q_id, c_id, ip, rk FROM r WHERE rk <= {_MIPS_K}
     """,
+    build=_mips_topk_compute,
 )
 def ann_mips_topk(spark, sf_dir) -> DataFrame:
     """MAXIMUM-INNER-PRODUCT ANN — the scale twin of the exact
@@ -3178,6 +3036,7 @@ def ann_mips_topk(spark, sf_dir) -> DataFrame:
     FROM (SELECT DISTINCT q_id FROM ex) qs
     LEFT JOIN hits h USING (q_id)
     """,
+    build=_mips_recall_compute,
 )
 def ann_mips_recall_report(spark, sf_dir) -> DataFrame:
     """Recall@{5} of the augmented-dimension MIPS index against the
@@ -3201,21 +3060,11 @@ def ann_mips_recall_report(spark, sf_dir) -> DataFrame:
     )
 
 
-#: session cache for the exact MIPS top-{5} baseline (10 fixture
-#: queries x k rows) — a pure function of the embeddings file that
-#: the recall report and the retrain gate's audit re-ranked per call
-#: (r15 optimization)
-_MIPS_EXACT_CACHE: dict = {}
-
-
 def _mips_exact_topk(spark, sf_dir) -> DataFrame:
     """Session-cached exact inner-product top-{5} (q_id, c_id) per
     fixture query — the baseline side of every MIPS recall audit.
     deps= ties the entry to the embeddings file."""
-    from scribedb_spark.cache import session_cache
-
     return session_cache(
-        _MIPS_EXACT_CACHE,
         spark,
         ("mips_exact", sf_dir),
         lambda: _mips_exact_topk_compute(spark, sf_dir).localCheckpoint(),
@@ -3279,7 +3128,6 @@ def _mips_recall_for(
             ).alias("recall_ppm"),
         )
     )
-
 
 
 def _mips_persisted_artifacts(spark, sf_dir):
@@ -3406,7 +3254,6 @@ def ann_mips_persist(spark, sf_dir) -> DataFrame:
     return _mips_serve_from_artifacts(spark, codebook, index)
 
 
-
 def _mips_retrain_gate_oracle() -> str:
     """DuckDB twin of ann_mips_retrain_gate's decision row: mean
     recall of the from-scratch MIPS-ANN (what a fresh or healthy
@@ -3432,7 +3279,11 @@ def _mips_retrain_gate_oracle() -> str:
     """
 
 
-@register("ann_mips_retrain_gate", oracle=_mips_retrain_gate_oracle())
+@register(
+    "ann_mips_retrain_gate",
+    oracle=_mips_retrain_gate_oracle(),
+    gate=_index_deps("mips_codebook", "mips_index"),
+)
 def ann_mips_retrain_gate(spark, sf_dir) -> DataFrame:
     """MONITOR -> ACT for the persisted MIPS index — ann_retrain_gate's
     discipline applied to the warehouse slot ann_mips_persist added
@@ -3456,25 +3307,6 @@ def ann_mips_retrain_gate(spark, sf_dir) -> DataFrame:
     rewrites only the two MIPS slots, at most once per invocation.
     Decision served via cache.gate_decision (fingerprint: embeddings +
     the two MIPS slots) — see ann_retrain_gate."""
-    from scribedb_spark.cache import gate_decision
-    from scribedb_spark.persist import artifact_path
-
-    return gate_decision(
-        spark,
-        "ann_mips_retrain_gate",
-        sf_dir,
-        deps=[
-            os.path.join(sf_dir, "embeddings.parquet"),
-            artifact_path("mips_codebook", sf_dir),
-            artifact_path("mips_index", sf_dir),
-        ],
-        compute=lambda: _ann_mips_retrain_compute(spark, sf_dir),
-    )
-
-
-def _ann_mips_retrain_compute(spark, sf_dir) -> DataFrame:
-    """ann_mips_retrain_gate's measurement + act body (plan-pinned via
-    pipeline.GATE_COMPUTE)."""
     import shutil
 
     from scribedb_spark.persist import artifact_path
@@ -3522,7 +3354,6 @@ def _ann_mips_retrain_compute(spark, sf_dir) -> DataFrame:
 # its registration is deferred until this module exists (see
 # dedup._register_semantic_ann)
 from scribedb_spark.operators.dedup import _register_semantic_ann  # noqa: E402
-from scribedb_spark.queries import REGISTRY as _REG  # noqa: E402
 
-if "dedup_semantic_ann" not in _REG:
+if "dedup_semantic_ann" not in REGISTRY:
     _register_semantic_ann()

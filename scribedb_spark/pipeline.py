@@ -37,7 +37,7 @@ from scribedb_spark.functions.text import (
     sql_occ,
     ws_token_count,
 )
-from scribedb_spark.queries import register
+from scribedb_spark.queries import REGISTRY, corpus_deps, register
 from scribedb_spark.sources import table
 
 #: pipeline thresholds (chosen so each stage drops a real fraction of
@@ -307,7 +307,40 @@ def _pipeline_semantic_oracle() -> str:
     )
 
 
-@register("pipeline_semantic", oracle=_pipeline_semantic_oracle())
+def _semantic_token_ledger(spark, sf_dir, ledger_fn) -> DataFrame:
+    """curate() survivors joined to the keep side of the semantic
+    ledger ``ledger_fn`` returns, reduced to the per-source ledger."""
+    kept = curate(table(spark, "documents", sf_dir)).select(
+        "doc_id", "source", "n_tokens"
+    )
+    ledger = ledger_fn(spark, sf_dir)
+    keep_ids = ledger.filter(F.col("keep") == 1).select(
+        F.col("vec_id").alias("doc_id")
+    )
+    return (
+        kept.join(keep_ids, "doc_id")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+            F.min("doc_id").alias("first_doc"),
+        )
+    )
+
+
+def _pipeline_semantic_compute(spark, sf_dir) -> DataFrame:
+    """pipeline_semantic's full BUILD plan (the ANN ledger built from
+    scratch, no state cache) — the plan-shape tests' capture target."""
+    return _semantic_token_ledger(
+        spark, sf_dir, REGISTRY["dedup_semantic_ann"].build
+    )
+
+
+@register(
+    "pipeline_semantic",
+    oracle=_pipeline_semantic_oracle(),
+    build=_pipeline_semantic_compute,
+)
 def pipeline_semantic(spark, sf_dir) -> DataFrame:
     """Flagship composition #4: heuristic curation AND semantic dedup
     in one program — curate() survivors (marker + quality + exact
@@ -323,23 +356,8 @@ def pipeline_semantic(spark, sf_dir) -> DataFrame:
     joins by ID only — text and embeddings never meet in a shuffle.
     The keep-id join is AQE-sized; at 100 TB both sides are id
     columns."""
-    from scribedb_spark.queries import REGISTRY
-
-    kept = curate(table(spark, "documents", sf_dir)).select(
-        "doc_id", "source", "n_tokens"
-    )
-    ledger = REGISTRY["dedup_semantic_ann"].fn(spark, sf_dir)
-    keep_ids = ledger.filter(F.col("keep") == 1).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    return (
-        kept.join(keep_ids, "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.min("doc_id").alias("first_doc"),
-        )
+    return _semantic_token_ledger(
+        spark, sf_dir, REGISTRY["dedup_semantic_ann"].fn
     )
 
 
@@ -741,7 +759,11 @@ def _mix_curriculum_oracle() -> str:
     )
 
 
-@register("sample_mix_curriculum", oracle=_mix_curriculum_oracle())
+@register(
+    "sample_mix_curriculum",
+    oracle=_mix_curriculum_oracle(),
+    serve=corpus_deps("documents"),
+)
 def sample_mix_curriculum(spark, sf_dir) -> DataFrame:
     """The ORDERED training-mix schedule derived from
     rollup_domain_mix's allocation — the curriculum the shard writer
@@ -771,35 +793,7 @@ def sample_mix_curriculum(spark, sf_dir) -> DataFrame:
     (unchecked, the serve plan re-scanned the corpus 16 times for
     ~80 rows of schedule); a 1-row totals broadcast, a {4}-row phase
     grid, one sources-sized window. Output is |sources| x {4} rows of
-    metadata.
-
-    r15 optimization round: the schedule (|sources| x {4} rows, a
-    pure function of the documents file) is a session-cached
-    localCheckpoint — the domain-mix cascade and its checkpoint run
-    once per (session, corpus fingerprint) instead of per invocation
-    (the gate-decision serving discipline; plan tests pin the BUILD
-    body via pipeline.plan_compute_fns)."""
-    from scribedb_spark.cache import session_cache
-
-    return session_cache(
-        _CURRICULUM_SERVE_CACHE,
-        spark,
-        ("mix_curriculum", sf_dir, _CURRICULUM_PHASES),
-        lambda: _mix_curriculum_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-#: session cache for the served curriculum schedule — a pure function
-#: of the documents file whose domain-mix cascade every invocation
-#: re-ran (r15 optimization round; deps= evicts on a corpus rewrite).
-_CURRICULUM_SERVE_CACHE: dict = {}
-
-
-def _mix_curriculum_compute(spark, sf_dir) -> DataFrame:
-    """sample_mix_curriculum's full BUILD plan (domain-mix checkpoint
-    + annealing schedule, no serve cache) — the plan-shape tests'
-    capture target and the serve cache's builder."""
+    metadata."""
     mix = rollup_domain_mix(spark, sf_dir).localCheckpoint()
     tot = mix.agg(
         F.count(F.lit(1)).cast("long").alias("n_src"),
@@ -1386,7 +1380,6 @@ def _gate_panel_oracle() -> str:
     import scribedb_spark.operators.curation  # noqa: F401
     import scribedb_spark.operators.dedup  # noqa: F401
     import scribedb_spark.operators.similarity  # noqa: F401
-    from scribedb_spark.queries import REGISTRY
 
     specs = _panel_specs()
     parts = [
@@ -1396,7 +1389,58 @@ def _gate_panel_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@register("rollup_gate_panel", oracle=_gate_panel_oracle())
+def _panel_deps(sf_dir: str) -> list[str]:
+    """The union of every panel gate's input files: the corpus tables
+    the monitors read plus the four warehouse index slots the retrain
+    gates measure — the panel's own serve fingerprint."""
+    from scribedb_spark.persist import artifact_path
+
+    return [
+        os.path.join(sf_dir, "documents.parquet"),
+        os.path.join(sf_dir, "embeddings.parquet"),
+        os.path.join(sf_dir, "events.parquet"),
+        artifact_path("ivf_codebook", sf_dir),
+        artifact_path("ivf_index", sf_dir),
+        artifact_path("mips_codebook", sf_dir),
+        artifact_path("mips_index", sf_dir),
+    ]
+
+
+def _panel_frame(spark, sf_dir, gate_fns: dict) -> DataFrame:
+    """Assemble the panel from _GATE_PANEL_KEYS: per (label, key),
+    apply the label's spark reducer to gate_fns[key]'s frame and
+    union in panel order. Shared by the registered (decision-served)
+    panel and gate_panel_compute (the measurement-plan twin the plan
+    tests pin)."""
+    specs = _panel_specs()
+    parts = [
+        specs[label][1](gate_fns[key](spark, sf_dir))
+        for label, key in _GATE_PANEL_KEYS
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _gate_fns(attr: str) -> dict:
+    """key -> REGISTRY[key].<attr> for every panel gate."""
+    return {k: getattr(REGISTRY[k], attr) for _l, k in _GATE_PANEL_KEYS}
+
+
+def gate_panel_compute(spark, sf_dir) -> DataFrame:
+    """rollup_gate_panel assembled from the gates' MEASUREMENT bodies
+    (their registry ``build``, never the decision cache) — the plan
+    the invariance census pins across data scale."""
+    return _panel_frame(spark, sf_dir, _gate_fns("build"))
+
+
+@register(
+    "rollup_gate_panel",
+    oracle=_gate_panel_oracle(),
+    gate=_panel_deps,
+    build=gate_panel_compute,
+)
 def rollup_gate_panel(spark, sf_dir) -> DataFrame:
     """The OPERATOR'S ONE PANE: every monitor -> act decision in the
     engine as one census table — (gate, measured, threshold,
@@ -1432,235 +1476,12 @@ def rollup_gate_panel(spark, sf_dir) -> DataFrame:
     Scale: the panel adds ONLY the 9 one-row reductions on top of
     measurements the gates already pay (sample-bounded audits,
     warehouse-served recalls, metadata-sized censuses) — and since
-    every gate serves its decision through cache.gate_decision, a
-    panel read in a session whose gates already ran costs nine stat
-    fingerprints plus the tiny reductions, never a re-measurement —
-    the standing control-plane read an on-call operator wants at
-    100 TB."""
-    from scribedb_spark.cache import gate_decision
-
-    return gate_decision(
-        spark,
-        "rollup_gate_panel",
-        sf_dir,
-        deps=_panel_deps(sf_dir),
-        compute=lambda: _panel_frame_registered(spark, sf_dir),
-    )
-
-
-def _panel_deps(sf_dir: str) -> list[str]:
-    """The union of every panel gate's input files: the corpus tables
-    the monitors read plus the four warehouse index slots the retrain
-    gates measure — the panel's own serve fingerprint."""
-    from scribedb_spark.persist import artifact_path
-
-    return [
-        os.path.join(sf_dir, "documents.parquet"),
-        os.path.join(sf_dir, "embeddings.parquet"),
-        os.path.join(sf_dir, "events.parquet"),
-        artifact_path("ivf_codebook", sf_dir),
-        artifact_path("ivf_index", sf_dir),
-        artifact_path("mips_codebook", sf_dir),
-        artifact_path("mips_index", sf_dir),
-    ]
-
-
-def _panel_frame_registered(spark, sf_dir) -> DataFrame:
-    """The panel over the REGISTERED gate keys (each itself serving
-    through the decision cache)."""
-    from scribedb_spark.queries import REGISTRY
-
-    return _panel_frame(
-        spark, sf_dir, {k: REGISTRY[k].fn for _l, k in _GATE_PANEL_KEYS}
-    )
-
-
-def _panel_frame(spark, sf_dir, gate_fns: dict) -> DataFrame:
-    """Assemble the panel from _GATE_PANEL_KEYS: per (label, key),
-    apply the label's spark reducer to gate_fns[key]'s frame and
-    union in panel order. Shared by the registered (decision-served)
-    panel and gate_panel_compute (the measurement-plan twin the plan
-    tests pin)."""
-    specs = _panel_specs()
-    parts = [
-        specs[label][1](gate_fns[key](spark, sf_dir))
-        for label, key in _GATE_PANEL_KEYS
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def gate_compute_fns() -> dict:
-    """key -> underlying MEASUREMENT function for every gate in
-    _GATE_PANEL_KEYS (plus the panel itself): the frames whose plans
-    the plan-shape tests pin. The registered gate keys serve their
-    decisions through cache.gate_decision (a local one-row frame on a
-    warm cache), so plan assertions about pushdown/scan counts must
-    target these compute bodies instead."""
-    from scribedb_spark.analytics import (
-        _compaction_advisor_compute,
-        _ingest_gaps_compute,
-        _source_freshness_compute,
-    )
-    from scribedb_spark.operators.curation import (
-        _lm_drift_compute,
-        _quality_drift_compute,
-    )
-    from scribedb_spark.operators.dedup import (
-        _dedup_retune_compute,
-        _source_budget_compute,
-    )
-    from scribedb_spark.operators.similarity import (
-        _ann_mips_retrain_compute,
-        _ann_retrain_compute,
-    )
-
-    return {
-        "ann_retrain_gate": _ann_retrain_compute,
-        "ann_mips_retrain_gate": _ann_mips_retrain_compute,
-        "dedup_retune_gate": _dedup_retune_compute,
-        "lm_drift_gate": _lm_drift_compute,
-        "rollup_quality_drift": _quality_drift_compute,
-        "rollup_source_freshness": _source_freshness_compute,
-        "rollup_ingest_gaps": _ingest_gaps_compute,
-        "sample_source_budget": _source_budget_compute,
-        "layout_compaction_advisor": _compaction_advisor_compute,
-        "rollup_gate_panel": gate_panel_compute,
-    }
-
-
-def plan_compute_fns() -> dict:
-    """key -> underlying BUILD-plan body for every registry key whose
-    registered fn serves a session-cached artifact: the monitor gates
-    (decision frames via cache.gate_decision) plus the r15 pair-table
-    families (verified rep-pair / scored tables via the
-    _LSH_PAIRS_CACHE discipline). Plan-shape assertions and the plan
-    dumps must capture THESE bodies — the registered fns return
-    checkpoint scans on a warm cache."""
-    from scribedb_spark.operators.dedup import (
-        _band_tune_compute,
-        _containment_batch_compute,
-        _containment_corpus_compute,
-        _containment_salted_compute,
-        _embedding_cosine_compute,
-        _recall_report_compute,
-        _lev_member_compute,
-        _lev_receipts_compute,
-        _ngram_jaccard_compute,
-        _ngram_receipts_compute,
-        _semantic_ann_compute,
-        _semantic_clusters_compute,
-        _simhash_member_compute,
-        _simhash_receipts_compute,
-        _substring_rewrite_all_compute,
-        _substring_rewrite_compute,
-        _substring_spans_compute,
-    )
-
-    from scribedb_spark.operators.similarity import (
-        _ivf_recall_compute,
-        _ivf_sq_topk_compute,
-        _ivf_topk_compute,
-        _knn_ann_compute,
-        _lsh_topk_compute,
-        _mips_recall_compute,
-        _mips_topk_compute,
-        _pq_topk_compute,
-    )
-
-    from scribedb_spark.analytics import (
-        _cell_drill_compute,
-        _col_fingerprint_compute,
-        _drill_rows_compute,
-    )
-    from scribedb_spark.operators.curation import (
-        _eval_overlap_compute,
-        _eval_panel_compute,
-    )
-    from scribedb_spark.operators.graph import (
-        _kcore_compute,
-        _label_propagation_compute,
-        _pagerank_compute,
-        _triangle_count_compute,
-    )
-
-    fns = dict(gate_compute_fns())
-    fns.update(
-        {
-            "ann_ivf_topk": _ivf_topk_compute,
-            "ann_recall_report": _ivf_recall_compute,
-            "ann_mips_topk": _mips_topk_compute,
-            "ann_mips_recall_report": _mips_recall_compute,
-            "ann_pq_topk": _pq_topk_compute,
-            "ann_lsh_topk": _lsh_topk_compute,
-            "ann_ivf_sq_topk": _ivf_sq_topk_compute,
-            "vec_knn_graph_ann": _knn_ann_compute,
-            "graph_pagerank": _pagerank_compute,
-            "graph_kcore": _kcore_compute,
-            "graph_label_propagation": _label_propagation_compute,
-            "graph_triangle_count": _triangle_count_compute,
-            "compare_drill_rows": _drill_rows_compute,
-            "compare_cell_drill": _cell_drill_compute,
-            "compare_col_fingerprint": _col_fingerprint_compute,
-            "search_eval_overlap": _eval_overlap_compute,
-            "search_eval_panel": _eval_panel_compute,
-            "sample_mix_curriculum": _mix_curriculum_compute,
-            "dedup_recall_report": _recall_report_compute,
-            "dedup_minhash_band_tune": _band_tune_compute,
-            "dedup_containment": _containment_batch_compute,
-            "dedup_containment_corpus": _containment_corpus_compute,
-            "dedup_containment_salted": _containment_salted_compute,
-            "dedup_levenshtein": _lev_member_compute,
-            "dedup_levenshtein_receipts": _lev_receipts_compute,
-            "dedup_ngram_jaccard": _ngram_jaccard_compute,
-            "dedup_ngram_receipts": _ngram_receipts_compute,
-            "dedup_simhash": _simhash_member_compute,
-            "dedup_simhash_receipts": _simhash_receipts_compute,
-            "dedup_substring_spans": _substring_spans_compute,
-            "dedup_substring_rewrite": _substring_rewrite_compute,
-            "dedup_substring_rewrite_all": _substring_rewrite_all_compute,
-            "dedup_embedding_cosine": _embedding_cosine_compute,
-            "dedup_semantic_clusters": _semantic_clusters_compute,
-            "dedup_semantic_ann": _semantic_ann_compute,
-            "pipeline_semantic": _pipeline_semantic_compute,
-        }
-    )
-    return fns
-
-
-def _pipeline_semantic_compute(spark, sf_dir) -> DataFrame:
-    """pipeline_semantic's full BUILD plan (the ANN ledger built from
-    scratch, no state cache) — the plan-shape tests' capture target."""
-    from scribedb_spark.operators.dedup import _semantic_ann_compute
-
-    kept = curate(table(spark, "documents", sf_dir)).select(
-        "doc_id", "source", "n_tokens"
-    )
-    ledger = _semantic_ann_compute(spark, sf_dir)
-    keep_ids = ledger.filter(F.col("keep") == 1).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    return (
-        kept.join(keep_ids, "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.min("doc_id").alias("first_doc"),
-        )
-    )
-
-
-def gate_panel_compute(spark, sf_dir) -> DataFrame:
-    """rollup_gate_panel assembled from the gates' MEASUREMENT bodies
-    (never the decision cache) — the plan the invariance census pins
-    across data scale."""
-    fns = gate_compute_fns()
-    return _panel_frame(
-        spark, sf_dir, {k: fns[k] for _l, k in _GATE_PANEL_KEYS}
-    )
+    every gate serves its decision through cache.gate_decision (and
+    so does the panel itself), a panel read in a session whose gates
+    already ran costs nine stat fingerprints plus the tiny
+    reductions, never a re-measurement — the standing control-plane
+    read an on-call operator wants at 100 TB."""
+    return _panel_frame(spark, sf_dir, _gate_fns("fn"))
 
 
 def gate_panel_from_state(
@@ -1679,9 +1500,8 @@ def gate_panel_from_state(
     drain is pinned by the streaming test."""
     from scribedb_spark.analytics import freshness_decision
     from scribedb_spark.operators.curation import quality_drift_from_hist
-    from scribedb_spark.queries import REGISTRY
 
-    fns = {k: REGISTRY[k].fn for _l, k in _GATE_PANEL_KEYS}
+    fns = _gate_fns("fn")
     # the maintainers initialize holder.state = None and only set it
     # on the first non-empty micro-batch — polling the pane before any
     # rows arrive must fall back to the decision-served registry fn,

@@ -60,6 +60,7 @@ windows avoided except where the operator *is* a global order).
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -67,25 +68,85 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from scribedb_spark.cache import gate_decision, session_cache
 from scribedb_spark.sources import table
+
+QueryFn = Callable[[SparkSession, str], DataFrame]
+DepsFn = Callable[[str], list]
 
 
 @dataclass
 class QueryDef:
-    fn: Callable[[SparkSession, str], DataFrame]
+    fn: QueryFn
     oracle: str | None = None
     doc: str = ""
+    #: the BUILD plan body the plan tests and dumps capture (fn itself
+    #: unless fn serves a session-cached artifact)
+    build: QueryFn | None = None
+    gate: DepsFn | None = None
 
 
 REGISTRY: dict[str, QueryDef] = {}
 
 
-def register(key: str, oracle: str | None = None, doc: str = ""):
-    def deco(fn):
-        REGISTRY[key] = QueryDef(fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+def register(
+    key: str,
+    oracle: str | None = None,
+    doc: str = "",
+    *,
+    serve: DepsFn | None = None,
+    gate: DepsFn | None = None,
+    build: QueryFn | None = None,
+):
+    """Register the decorated body under ``key``.
+
+    ``serve=deps_fn`` makes the registered fn serve the body's frame
+    as a session-cached localCheckpoint keyed by (key, sf_dir,
+    fingerprint of ``deps_fn(sf_dir)``); ``gate=deps_fn`` serves the
+    body's decision rows through ``cache.gate_decision``. Either way
+    the decorator returns the served callable, so direct callers get
+    the cache too. ``build`` is the BUILD plan body for keys whose fn
+    reads shared family state (default: the decorated body).
+    """
+
+    def deco(body):
+        fn = body
+        if serve is not None:
+
+            @functools.wraps(body)
+            def fn(spark, sf_dir):
+                return session_cache(
+                    spark,
+                    (key, sf_dir),
+                    lambda: body(spark, sf_dir).localCheckpoint(),
+                    deps=serve(sf_dir),
+                )
+
+        elif gate is not None:
+
+            @functools.wraps(body)
+            def fn(spark, sf_dir):
+                measure = functools.partial(body, spark, sf_dir)
+                return gate_decision(spark, key, sf_dir, gate(sf_dir), measure)
+
+        REGISTRY[key] = QueryDef(
+            fn=fn,
+            oracle=oracle,
+            doc=doc or (body.__doc__ or ""),
+            build=build or body,
+            gate=gate,
+        )
         return fn
 
     return deco
+
+
+def corpus_deps(*tables: str) -> DepsFn:
+    """``serve=``/``gate=`` deps for a key that is a pure function of
+    the snapshot's ``<table>.parquet`` files."""
+    return lambda sf_dir: [
+        os.path.join(sf_dir, f"{t}.parquet") for t in tables
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -2872,25 +2933,21 @@ def q13_custdist(spark, sf_dir):
     return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-#: built merkle trees keyed by (spark app, sf_dir, side) — the
-#: in-session analog of persisting the levels next to a snapshot
-#: (merkle_levels' documented usage): the chunk-level checkpoint is
-#: built ONCE and shared by fp_merkle and compare_merkle_drill
-#: instead of re-checkpointing per invocation (which made their bench
-#: timings swing run to run on localCheckpoint I/O noise)
-_MERKLE_CACHE: dict = {}
-
 _MERKLE_COLS = ["o_orderkey", "o_orderstatus", "o_orderpriority"]
 
 
 def _merkle_levels_cached(spark, sf_dir, side, df_fn):
-    from scribedb_spark.cache import session_cache
+    """Built merkle trees keyed by (sf_dir, side) — the in-session
+    analog of persisting the levels next to a snapshot (merkle_levels'
+    documented usage): the chunk-level checkpoint is built ONCE and
+    shared by fp_merkle and compare_merkle_drill instead of
+    re-checkpointing per invocation (which made their bench timings
+    swing run to run on localCheckpoint I/O noise)."""
     from scribedb_spark.compare import merkle_levels
 
     return session_cache(
-        _MERKLE_CACHE,
         spark,
-        (sf_dir, side),
+        ("merkle", sf_dir, side),
         lambda: merkle_levels(df_fn(), _MERKLE_COLS, ["o_orderkey"]),
         deps=[f"{sf_dir}/orders.parquet"],
     )

@@ -162,13 +162,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.01"
     out = [HEADER]
-    # cache-served keys (gates, r15 pair-table families) dump their
-    # underlying BUILD plans (same routing as tests/test_plans.py::plan)
-    from scribedb_spark.pipeline import plan_compute_fns
-
-    compute = plan_compute_fns()
+    # cache-served keys (gates, served frames, family-state readers)
+    # dump their registry BUILD plans (same routing as
+    # tests/test_plans.py::plan)
     for key in KEYS:
-        df = (compute.get(key) or Q.REGISTRY[key].fn)(spark, sf)
+        df = Q.REGISTRY[key].build(spark, sf)
         p = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"

@@ -1,9 +1,10 @@
 """r15 optimization: the non-LSH pair families (ngram, simhash,
 levenshtein head distances, containment) serve their verified
-rep-pair / scored tables from the session cache — the
-_LSH_PAIRS_CACHE build-once discipline. These tests pin:
+rep-pair / scored tables from the session cache — the LSH pair-list
+build-once discipline. Builds are counted per tag through the
+cache.BUILD_EVENTS ledger. These tests pin:
 
-- build-once: one cache entry per family after both twins ran;
+- build-once: one build per family after both twins ran;
 - serve honesty: an in-session corpus REWRITE invalidates every
   family's cached pair state (deps= stat fingerprints), so the second
   read answers from the new corpus, never stale pairs (the
@@ -27,29 +28,38 @@ def spark():
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _ledger():
+    """tag -> builds since this call (cache.BUILD_EVENTS ledger)."""
+    from scribedb_spark import cache
+
+    before = len(cache.BUILD_EVENTS)
+    return lambda tag: cache.BUILD_EVENTS[before:].count(tag)
+
+
 def test_pair_family_caches_build_once_and_serve(spark):
+    from scribedb_spark import cache
     from scribedb_spark import queries as Q
-    from scribedb_spark.operators import dedup
 
     Q.load_extensions()
-    dedup._NGRAM_PAIRS_CACHE.clear()
-    dedup._SIMHASH_PAIRS_CACHE.clear()
-    dedup._LEV_DIST_CACHE.clear()
-    dedup._CONTAIN_SCORED_CACHE.clear()
+    cache.evict(
+        {"ngram_rep_pairs", "simhash_rep_pairs", "lev_head_dists",
+         "contain_scored"}
+    )
+    builds = _ledger()
 
     first = sorted(
         map(tuple, Q.REGISTRY["dedup_ngram_jaccard"].fn(spark, SF_DIR).collect())
     )
     Q.REGISTRY["dedup_ngram_receipts"].fn(spark, SF_DIR).count()
-    assert len(dedup._NGRAM_PAIRS_CACHE) == 1  # twins share one build
+    assert builds("ngram_rep_pairs") == 1  # twins share one build
 
     Q.REGISTRY["dedup_simhash"].fn(spark, SF_DIR).count()
     Q.REGISTRY["dedup_simhash_receipts"].fn(spark, SF_DIR).count()
-    assert len(dedup._SIMHASH_PAIRS_CACHE) == 1
+    assert builds("simhash_rep_pairs") == 1
 
     Q.REGISTRY["dedup_levenshtein"].fn(spark, SF_DIR).count()
     Q.REGISTRY["dedup_levenshtein_receipts"].fn(spark, SF_DIR).count()
-    assert len(dedup._LEV_DIST_CACHE) == 1
+    assert builds("lev_head_dists") == 1
 
     # corpus and salted hold the IDENTICAL scored table (same oracle;
     # the salt only relocates candidate-join rows), so they share one
@@ -57,7 +67,7 @@ def test_pair_family_caches_build_once_and_serve(spark):
     # incoming-restricted table stays tag-distinct
     Q.REGISTRY["dedup_containment_corpus"].fn(spark, SF_DIR).count()
     Q.REGISTRY["dedup_containment_salted"].fn(spark, SF_DIR).count()
-    assert len(dedup._CONTAIN_SCORED_CACHE) == 1
+    assert builds("contain_scored") == 1
 
     # warm serve is row-identical to the first (building) call
     second = sorted(
@@ -136,16 +146,12 @@ def test_pair_family_caches_invalidate_on_corpus_rewrite(
     assert all(r["containment"] == 1.0 for r in ct)
 
 
-def test_semantic_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_semantic_caches_build_once_and_invalidate(spark, tmp_path_factory):
     """r15: the exact and ANN semantic-dedup states serve from the
     session cache (pairs + CC built once for dedup_embedding_cosine /
     dedup_semantic_clusters / dedup_semantic_ann / pipeline_semantic);
     an embeddings rewrite evicts them (deps= stat fingerprint)."""
     import shutil
-
-    from scribedb_spark.operators import dedup as dd
 
     d = tmp_path_factory.mktemp("semcache")
     shutil.copy(
@@ -153,15 +159,7 @@ def test_semantic_caches_build_once_and_invalidate(
     )
     sfd = str(d)
 
-    dd._SEMANTIC_STATE_CACHE.clear()
-    dd._SEMANTIC_ANN_CACHE.clear()
-    builds = []
-    orig = dd._embedding_cosine_compute
-    monkeypatch.setattr(
-        dd,
-        "_embedding_cosine_compute",
-        lambda *a, **k: builds.append(1) or orig(*a, **k),
-    )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY
 
@@ -172,9 +170,10 @@ def test_semantic_caches_build_once_and_invalidate(
         )
     )
     REGISTRY["dedup_embedding_cosine"].fn(spark, sfd).count()
-    assert len(builds) == 1  # clusters + pairs keys shared one kernel run
+    # clusters + pairs keys shared one kernel run
+    assert builds("semantic_state") == 1
     REGISTRY["dedup_semantic_ann"].fn(spark, sfd).count()
-    assert len(dd._SEMANTIC_ANN_CACHE) == 1
+    assert builds("semantic_ann_comp") == 1
 
     # rewrite embeddings in place: half the corpus
     import duckdb
@@ -195,20 +194,16 @@ def test_semantic_caches_build_once_and_invalidate(
             REGISTRY["dedup_semantic_clusters"].fn(spark, sfd).collect(),
         )
     )
-    assert len(builds) == 2  # fingerprint change forced a rebuild
+    assert builds("semantic_state") == 2  # fingerprint change forced a rebuild
     assert second != first  # answered from the new corpus
 
 
-def test_ivf_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_ivf_serve_caches_build_once_and_invalidate(spark, tmp_path_factory):
     """r15: the served IVF top-5 and the exact-cosine baseline serve
     from the session cache (ann_ivf_topk / ann_recall_report share
     one rerank + one brute-force pass per session); an embeddings
     rewrite evicts both (deps= stat fingerprint)."""
     import shutil
-
-    from scribedb_spark.operators import similarity as sim
 
     d = tmp_path_factory.mktemp("ivfcache")
     shutil.copy(
@@ -216,20 +211,7 @@ def test_ivf_serve_caches_build_once_and_invalidate(
     )
     sfd = str(d)
 
-    sim._IVF_SERVE_CACHE.clear()
-    topk_builds, exact_builds = [], []
-    orig_topk = sim._ivf_topk_compute
-    orig_exact = sim._ivf_exact_top5_compute
-    monkeypatch.setattr(
-        sim,
-        "_ivf_topk_compute",
-        lambda *a, **k: topk_builds.append(1) or orig_topk(*a, **k),
-    )
-    monkeypatch.setattr(
-        sim,
-        "_ivf_exact_top5_compute",
-        lambda *a, **k: exact_builds.append(1) or orig_exact(*a, **k),
-    )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
@@ -239,8 +221,8 @@ def test_ivf_serve_caches_build_once_and_invalidate(
     )
     REGISTRY["ann_recall_report"].fn(spark, sfd).count()
     REGISTRY["ann_recall_report"].fn(spark, sfd).count()
-    assert len(topk_builds) == 1  # topk + recall shared one rerank
-    assert len(exact_builds) == 1  # both recall reads, one baseline
+    assert builds("ann_ivf_topk") == 1  # topk + recall shared one rerank
+    assert builds("ivf_exact") == 1  # both recall reads, one baseline
 
     # rewrite embeddings in place: half the corpus
     import duckdb
@@ -259,13 +241,13 @@ def test_ivf_serve_caches_build_once_and_invalidate(
         map(tuple, REGISTRY["ann_ivf_topk"].fn(spark, sfd).collect())
     )
     REGISTRY["ann_recall_report"].fn(spark, sfd).count()
-    assert len(topk_builds) == 2  # fingerprint change forced a rebuild
-    assert len(exact_builds) == 2
+    assert builds("ann_ivf_topk") == 2  # fingerprint change forced a rebuild
+    assert builds("ivf_exact") == 2
     assert second != first  # answered from the new corpus
 
 
 def test_substring_span_cache_builds_once_and_invalidates(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory
 ):
     """r15: the rep-grain maximal-span table serves from the session
     cache (spans / rewrite / rewrite_all share one anchored-match +
@@ -273,7 +255,7 @@ def test_substring_span_cache_builds_once_and_invalidates(
     fingerprint)."""
     import shutil
 
-    from scribedb_spark.operators import dedup as dd
+    from scribedb_spark import cache
 
     d = tmp_path_factory.mktemp("substrcache")
     shutil.copy(
@@ -281,14 +263,8 @@ def test_substring_span_cache_builds_once_and_invalidates(
     )
     sfd = str(d)
 
-    dd._SUBSTR_SPANS_CACHE.clear()
-    builds = []
-    orig = dd._rep_substring_spans_compute
-    monkeypatch.setattr(
-        dd,
-        "_rep_substring_spans_compute",
-        lambda *a, **k: builds.append(1) or orig(*a, **k),
-    )
+    cache.evict({"substr_rep_spans"})
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
@@ -296,8 +272,8 @@ def test_substring_span_cache_builds_once_and_invalidates(
     first = REGISTRY["dedup_substring_spans"].fn(spark, sfd).count()
     REGISTRY["dedup_substring_rewrite"].fn(spark, sfd).count()
     REGISTRY["dedup_substring_rewrite_all"].fn(spark, sfd).count()
-    assert len(builds) == 1  # all three keys shared one span build
-    assert len(dd._SUBSTR_SPANS_CACHE) == 1
+    assert builds("substr_rep_spans") == 1  # all three keys, one span build
+    assert sum(k[1] == "substr_rep_spans" for k in cache._STORE) == 1
 
     # rewrite the corpus in place: every doc now shares one long run
     # with doc 0 (a 24-token duplicated head), so the span table must
@@ -313,21 +289,17 @@ def test_substring_span_cache_builds_once_and_invalidates(
     ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
 
     second = REGISTRY["dedup_substring_spans"].fn(spark, sfd).count()
-    assert len(builds) == 2  # fingerprint change forced a rebuild
+    assert builds("substr_rep_spans") == 2  # fingerprint change: rebuild
     assert second != first  # answered from the new corpus
     assert second > 0
 
 
-def test_ann_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_ann_serve_caches_build_once_and_invalidate(spark, tmp_path_factory):
     """r15 optimization round: the PQ / sign-LSH / seeded-SQ served
     top-5 frames serve from the session cache (one build per key per
     session); an embeddings rewrite evicts all three (deps= stat
     fingerprint)."""
     import shutil
-
-    from scribedb_spark.operators import similarity as sim
 
     d = tmp_path_factory.mktemp("annservecache")
     shutil.copy(
@@ -335,36 +307,19 @@ def test_ann_serve_caches_build_once_and_invalidate(
     )
     sfd = str(d)
 
-    sim._ANN_SERVE_CACHE.clear()
-    builds = {"pq": [], "lsh": [], "sq": [], "knn": []}
-    for name, attr in (
-        ("pq", "_pq_topk_compute"),
-        ("lsh", "_lsh_topk_compute"),
-        ("sq", "_ivf_sq_topk_compute"),
-        ("knn", "_knn_ann_compute"),
-    ):
-        orig = getattr(sim, attr)
-        monkeypatch.setattr(
-            sim,
-            attr,
-            (lambda lst, o: lambda *a, **k: lst.append(1) or o(*a, **k))(
-                builds[name], orig
-            ),
-        )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
     load_extensions()
+    keys = (
+        "ann_pq_topk", "ann_lsh_topk", "ann_ivf_sq_topk", "vec_knn_graph_ann"
+    )
     firsts = {}
-    for key, name in (
-        ("ann_pq_topk", "pq"),
-        ("ann_lsh_topk", "lsh"),
-        ("ann_ivf_sq_topk", "sq"),
-        ("vec_knn_graph_ann", "knn"),
-    ):
+    for key in keys:
         firsts[key] = sorted(map(tuple, REGISTRY[key].fn(spark, sfd).collect()))
         REGISTRY[key].fn(spark, sfd).count()
-        assert len(builds[name]) == 1, key  # second call served the cache
+        assert builds(key) == 1, key  # second call served the cache
 
     # rewrite embeddings in place: half the corpus
     import duckdb
@@ -379,48 +334,26 @@ def test_ann_serve_caches_build_once_and_invalidate(
     con.execute(f"COPY sub TO '{d / 'embeddings.parquet'}' (FORMAT PARQUET)")
     con.close()
 
-    for key, name in (
-        ("ann_pq_topk", "pq"),
-        ("ann_lsh_topk", "lsh"),
-        ("ann_ivf_sq_topk", "sq"),
-        ("vec_knn_graph_ann", "knn"),
-    ):
+    for key in keys:
         second = sorted(map(tuple, REGISTRY[key].fn(spark, sfd).collect()))
-        assert len(builds[name]) == 2, key  # rewrite forced a rebuild
+        assert builds(key) == 2, key  # rewrite forced a rebuild
         assert second != firsts[key], key  # answered from the new corpus
 
 
 def test_pagerank_and_drill_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory
 ):
     """r15 optimization round: graph_pagerank's rank frame and
     compare_drill_rows' diff-row frame serve from the session cache;
     touching their source file (stat fingerprint) evicts them."""
     import shutil
 
-    from scribedb_spark import analytics as an
-    from scribedb_spark.operators import graph as gr
-
     d = tmp_path_factory.mktemp("servecache")
     shutil.copy("/root/testdata/sf0.001/events.parquet", d / "events.parquet")
     shutil.copy("/root/testdata/sf0.001/orders.parquet", d / "orders.parquet")
     sfd = str(d)
 
-    gr._GRAPH_SERVE_CACHE.clear()
-    an._DRILL_SERVE_CACHE.clear()
-    pr_builds, dr_builds = [], []
-    orig_pr = gr._pagerank_compute
-    orig_dr = an._drill_rows_compute
-    monkeypatch.setattr(
-        gr,
-        "_pagerank_compute",
-        lambda *a, **k: pr_builds.append(1) or orig_pr(*a, **k),
-    )
-    monkeypatch.setattr(
-        an,
-        "_drill_rows_compute",
-        lambda *a, **k: dr_builds.append(1) or orig_dr(*a, **k),
-    )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
@@ -431,8 +364,8 @@ def test_pagerank_and_drill_serve_caches_build_once_and_invalidate(
     REGISTRY["graph_pagerank"].fn(spark, sfd).count()
     first_dr = REGISTRY["compare_drill_rows"].fn(spark, sfd).count()
     REGISTRY["compare_drill_rows"].fn(spark, sfd).count()
-    assert len(pr_builds) == 1  # second calls served the cache
-    assert len(dr_builds) == 1
+    assert builds("graph_pagerank") == 1  # second calls served the cache
+    assert builds("compare_drill_rows") == 1
 
     # re-copy the sources: same bytes, new mtime -> new fingerprint
     shutil.copy("/root/testdata/sf0.001/events.parquet", d / "events.parquet")
@@ -442,21 +375,17 @@ def test_pagerank_and_drill_serve_caches_build_once_and_invalidate(
         map(tuple, REGISTRY["graph_pagerank"].fn(spark, sfd).collect())
     )
     second_dr = REGISTRY["compare_drill_rows"].fn(spark, sfd).count()
-    assert len(pr_builds) == 2  # fingerprint change forced a rebuild
-    assert len(dr_builds) == 2
+    assert builds("graph_pagerank") == 2  # fingerprint change: rebuild
+    assert builds("compare_drill_rows") == 2
     assert second_pr == first_pr  # identical bytes -> identical answer
     assert second_dr == first_dr
 
 
-def test_eval_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_eval_serve_caches_build_once_and_invalidate(spark, tmp_path_factory):
     """r15 optimization round: search_eval_overlap's drift row and
     search_eval_panel's 3-row pane serve from the session cache;
     touching the corpus file (stat fingerprint) evicts them."""
     import shutil
-
-    from scribedb_spark.operators import curation as cu
 
     d = tmp_path_factory.mktemp("evalservecache")
     shutil.copy(
@@ -464,20 +393,7 @@ def test_eval_serve_caches_build_once_and_invalidate(
     )
     sfd = str(d)
 
-    cu._EVAL_SERVE_CACHE.clear()
-    ov_builds, pn_builds = [], []
-    orig_ov = cu._eval_overlap_compute
-    orig_pn = cu._eval_panel_compute
-    monkeypatch.setattr(
-        cu,
-        "_eval_overlap_compute",
-        lambda *a, **k: ov_builds.append(1) or orig_ov(*a, **k),
-    )
-    monkeypatch.setattr(
-        cu,
-        "_eval_panel_compute",
-        lambda *a, **k: pn_builds.append(1) or orig_pn(*a, **k),
-    )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
@@ -490,8 +406,8 @@ def test_eval_serve_caches_build_once_and_invalidate(
         map(tuple, REGISTRY["search_eval_panel"].fn(spark, sfd).collect())
     )
     REGISTRY["search_eval_panel"].fn(spark, sfd).count()
-    assert len(ov_builds) == 1  # second calls served the cache
-    assert len(pn_builds) == 1
+    assert builds("search_eval_overlap") == 1  # second calls served the cache
+    assert builds("search_eval_panel") == 1
 
     # re-copy the corpus: same bytes, new mtime -> new fingerprint
     shutil.copy(
@@ -504,14 +420,14 @@ def test_eval_serve_caches_build_once_and_invalidate(
     second_pn = sorted(
         map(tuple, REGISTRY["search_eval_panel"].fn(spark, sfd).collect())
     )
-    assert len(ov_builds) == 2  # fingerprint change forced a rebuild
-    assert len(pn_builds) == 2
+    assert builds("search_eval_overlap") == 2  # fingerprint change: rebuild
+    assert builds("search_eval_panel") == 2
     assert second_ov == first_ov  # identical bytes -> identical answer
     assert second_pn == first_pn
 
 
 def test_audit_and_curriculum_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory
 ):
     """r15 optimization round: the sampled exact-Jaccard audit frame
     (shared by dedup_recall_report / dedup_minhash_band_tune / the
@@ -520,30 +436,13 @@ def test_audit_and_curriculum_serve_caches_build_once_and_invalidate(
     them."""
     import shutil
 
-    from scribedb_spark import pipeline as pl
-    from scribedb_spark.operators import dedup as dd
-
     d = tmp_path_factory.mktemp("auditservecache")
     shutil.copy(
         "/root/testdata/sf0.001/documents.parquet", d / "documents.parquet"
     )
     sfd = str(d)
 
-    dd._AUDIT_SERVE_CACHE.clear()
-    pl._CURRICULUM_SERVE_CACHE.clear()
-    jac_builds, cur_builds = [], []
-    orig_jac = dd._sampled_rep_jaccards_compute
-    orig_cur = pl._mix_curriculum_compute
-    monkeypatch.setattr(
-        dd,
-        "_sampled_rep_jaccards_compute",
-        lambda *a, **k: jac_builds.append(1) or orig_jac(*a, **k),
-    )
-    monkeypatch.setattr(
-        pl,
-        "_mix_curriculum_compute",
-        lambda *a, **k: cur_builds.append(1) or orig_cur(*a, **k),
-    )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
@@ -552,12 +451,12 @@ def test_audit_and_curriculum_serve_caches_build_once_and_invalidate(
         map(tuple, REGISTRY["dedup_recall_report"].fn(spark, sfd).collect())
     )
     REGISTRY["dedup_minhash_band_tune"].fn(spark, sfd).count()
-    assert len(jac_builds) == 1  # both audits shared one sampled join
+    assert builds("sampled_jac") == 1  # both audits shared one sampled join
     first_cu = sorted(
         map(tuple, REGISTRY["sample_mix_curriculum"].fn(spark, sfd).collect())
     )
     REGISTRY["sample_mix_curriculum"].fn(spark, sfd).count()
-    assert len(cur_builds) == 1  # second call served the cache
+    assert builds("sample_mix_curriculum") == 1  # second call served it
 
     # re-copy the corpus: same bytes, new mtime -> new fingerprint
     shutil.copy(
@@ -570,40 +469,25 @@ def test_audit_and_curriculum_serve_caches_build_once_and_invalidate(
     second_cu = sorted(
         map(tuple, REGISTRY["sample_mix_curriculum"].fn(spark, sfd).collect())
     )
-    assert len(jac_builds) == 2  # fingerprint change forced a rebuild
-    assert len(cur_builds) == 2
+    assert builds("sampled_jac") == 2  # fingerprint change forced a rebuild
+    assert builds("sample_mix_curriculum") == 2
     assert second_rc == first_rc  # identical bytes -> identical answer
     assert second_cu == first_cu
 
 
 def test_compare_drill_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory
 ):
     """r15 optimization round: compare_cell_drill's grid report and
     compare_col_fingerprint's column report serve from the session
     cache; touching the orders file (stat fingerprint) evicts them."""
     import shutil
 
-    from scribedb_spark import analytics as an
-
     d = tmp_path_factory.mktemp("drillservecache")
     shutil.copy("/root/testdata/sf0.001/orders.parquet", d / "orders.parquet")
     sfd = str(d)
 
-    an._DRILL_SERVE_CACHE.clear()
-    cd_builds, cf_builds = [], []
-    orig_cd = an._cell_drill_compute
-    orig_cf = an._col_fingerprint_compute
-    monkeypatch.setattr(
-        an,
-        "_cell_drill_compute",
-        lambda *a, **k: cd_builds.append(1) or orig_cd(*a, **k),
-    )
-    monkeypatch.setattr(
-        an,
-        "_col_fingerprint_compute",
-        lambda *a, **k: cf_builds.append(1) or orig_cf(*a, **k),
-    )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
@@ -619,8 +503,8 @@ def test_compare_drill_serve_caches_build_once_and_invalidate(
         )
     )
     REGISTRY["compare_col_fingerprint"].fn(spark, sfd).count()
-    assert len(cd_builds) == 1  # second calls served the cache
-    assert len(cf_builds) == 1
+    assert builds("compare_cell_drill") == 1  # second calls served the cache
+    assert builds("compare_col_fingerprint") == 1
 
     # re-copy the source: same bytes, new mtime -> new fingerprint
     shutil.copy("/root/testdata/sf0.001/orders.parquet", d / "orders.parquet")
@@ -634,21 +518,17 @@ def test_compare_drill_serve_caches_build_once_and_invalidate(
             REGISTRY["compare_col_fingerprint"].fn(spark, sfd).collect(),
         )
     )
-    assert len(cd_builds) == 2  # fingerprint change forced a rebuild
-    assert len(cf_builds) == 2
+    assert builds("compare_cell_drill") == 2  # fingerprint change: rebuild
+    assert builds("compare_col_fingerprint") == 2
     assert second_cd == first_cd  # identical bytes -> identical answer
     assert second_cf == first_cf
 
 
-def test_graph_serve_caches_build_once_and_invalidate(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_graph_serve_caches_build_once_and_invalidate(spark, tmp_path_factory):
     """r15 optimization round: the quotient-graph keys' per-doc
     frames (kcore / LPA / triangles) serve from the session cache;
     touching the corpus file (stat fingerprint) evicts them."""
     import shutil
-
-    from scribedb_spark.operators import graph as gr
 
     d = tmp_path_factory.mktemp("graphservecache")
     shutil.copy(
@@ -656,49 +536,28 @@ def test_graph_serve_caches_build_once_and_invalidate(
     )
     sfd = str(d)
 
-    gr._GRAPH_SERVE_CACHE.clear()
-    builds = {"kcore": [], "lpa": [], "tri": []}
-    for name, attr in (
-        ("kcore", "_kcore_compute"),
-        ("lpa", "_label_propagation_compute"),
-        ("tri", "_triangle_count_compute"),
-    ):
-        orig = getattr(gr, attr)
-        monkeypatch.setattr(
-            gr,
-            attr,
-            (lambda lst, o: lambda *a, **k: lst.append(1) or o(*a, **k))(
-                builds[name], orig
-            ),
-        )
+    builds = _ledger()
 
     from scribedb_spark.queries import REGISTRY, load_extensions
 
     load_extensions()
+    keys = ("graph_kcore", "graph_label_propagation", "graph_triangle_count")
     firsts = {}
-    for key, name in (
-        ("graph_kcore", "kcore"),
-        ("graph_label_propagation", "lpa"),
-        ("graph_triangle_count", "tri"),
-    ):
+    for key in keys:
         firsts[key] = sorted(
             map(tuple, REGISTRY[key].fn(spark, sfd).collect())
         )
         REGISTRY[key].fn(spark, sfd).count()
-        assert len(builds[name]) == 1, key  # second call served the cache
+        assert builds(key) == 1, key  # second call served the cache
 
     # re-copy the corpus: same bytes, new mtime -> new fingerprint
     shutil.copy(
         "/root/testdata/sf0.001/documents.parquet", d / "documents.parquet"
     )
 
-    for key, name in (
-        ("graph_kcore", "kcore"),
-        ("graph_label_propagation", "lpa"),
-        ("graph_triangle_count", "tri"),
-    ):
+    for key in keys:
         second = sorted(map(tuple, REGISTRY[key].fn(spark, sfd).collect()))
-        assert len(builds[name]) == 2, key  # rewrite forced a rebuild
+        assert builds(key) == 2, key  # rewrite forced a rebuild
         assert second == firsts[key], key  # identical bytes, same answer
 
 
@@ -713,17 +572,15 @@ def test_iblt_shared_target_cells_build_once_and_invalidate(
     orders.parquet rewrite evicts the cached sketches, so the second
     decode answers from the new corpus — a stale cell table would
     keep decoding the old (empty) diff."""
-    from scribedb_spark import analytics
+    from scribedb_spark import cache
     from scribedb_spark.queries import REGISTRY, load_extensions
 
     load_extensions()
-    analytics._IBLT_BASE_CACHE.clear()
+    cache.evict({"iblt_base_render", "iblt_base_cells", "iblt_tgt_cells"})
+    builds = _ledger()
     REGISTRY["compare_iblt_diff"].fn(spark, SF_DIR).count()
     REGISTRY["compare_iblt_incremental"].fn(spark, SF_DIR).count()
-    tgt_entries = [
-        k for k in analytics._IBLT_BASE_CACHE if k[1] == "iblt_tgt_cells"
-    ]
-    assert len(tgt_entries) == 1  # one target sketch serves both keys
+    assert builds("iblt_tgt_cells") == 1  # one target sketch serves both keys
 
     d = tmp_path_factory.mktemp("ibltcache")
     schema = (

@@ -22,14 +22,10 @@ def qmod():
 
 
 def plan(qmod, spark, sf_dir, key, mode="formatted"):
-    # cache-served keys (monitor gates' decision frames, the r15
-    # pair-table families) return checkpoint scans on a warm cache;
-    # plan assertions target the underlying BUILD bodies via
-    # pipeline.plan_compute_fns
-    from scribedb_spark.pipeline import plan_compute_fns
-
-    fn = plan_compute_fns().get(key) or qmod.REGISTRY[key].fn
-    df = fn(spark, sf_dir)
+    # cache-served keys (monitor gates' decision frames, served
+    # frames, family-state readers) return checkpoint scans on a warm
+    # cache; plan assertions target the registry BUILD bodies
+    df = qmod.REGISTRY[key].build(spark, sf_dir)
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     )
@@ -168,11 +164,8 @@ def test_similarity_verify_join_not_corpus_broadcast(qmod, spark, sf_dir):
     grows with corpus size, so a hinted broadcast OOMs at 100 TB).
     With no hints in the logical plan and auto-broadcast disabled,
     every join must degrade to SMJ — proving strategy is left to AQE."""
-    from scribedb_spark.pipeline import plan_compute_fns
-
-    compute = plan_compute_fns()
     for key in ("join_similarity", "dedup_ngram_jaccard"):
-        df = (compute.get(key) or qmod.REGISTRY[key].fn)(spark, sf_dir)
+        df = qmod.REGISTRY[key].build(spark, sf_dir)
         logical = df._jdf.queryExecution().logical().toString()
         assert "ResolvedHint" not in logical, key
         assert "UnresolvedHint" not in logical, key
@@ -322,10 +315,9 @@ for key in ("fp_chain", "dedup_ngram_jaccard", "join_similarity"):
 # the r15 pair-table session caches hold localCheckpoints ON PURPOSE
 # (build-once, evicted on input change); the hygiene property is that
 # blocks are reclaimable once dereferenced — evict, then drain
-from scribedb_spark.operators import dedup as _dd
-for c in (_dd._NGRAM_PAIRS_CACHE, _dd._SIMHASH_PAIRS_CACHE,
-          _dd._LEV_DIST_CACHE, _dd._CONTAIN_SCORED_CACHE):
-    c.clear()
+from scribedb_spark import cache as _cache
+_cache.evict({{"ngram_rep_pairs", "simhash_rep_pairs",
+              "lev_head_dists", "contain_scored"}})
 jmap = spark.sparkContext._jsc.getPersistentRDDs
 # 420 x 0.5 s: the ContextCleaner is ASYNC and slows arbitrarily when
 # the host is oversubscribed (another JVM shutting down, a parallel
@@ -1376,21 +1368,23 @@ def test_span_and_bm25_stages_shared_across_keys(qmod, spark, sf_dir):
     checkpoint; text_bm25_topk + search_hybrid_rrf read ONE cached
     scored table (the containment-stage / ANN train-once discipline —
     no shared stage is ever built twice in a session)."""
-    from scribedb_spark.operators import curation, dedup
+    from scribedb_spark import cache
 
-    dedup._REP_SPAN_CACHE.clear()
-    curation._BM25_CACHE.clear()
+    cache.evict({"rep_spans", "bm25"})
+    before = len(cache.BUILD_EVENTS)
     qmod.REGISTRY["dedup_span"].fn(spark, sf_dir).count()
     qmod.REGISTRY["text_decontaminate"].fn(spark, sf_dir).count()
-    assert len(dedup._REP_SPAN_CACHE) == 1
+    assert cache.BUILD_EVENTS[before:].count("rep_spans") == 1
     qmod.REGISTRY["text_bm25_topk"].fn(spark, sf_dir).count()
     qmod.REGISTRY["search_hybrid_rrf"].fn(spark, sf_dir).count()
-    assert len(curation._BM25_CACHE) == 1
-    dedup._LSH_SIG_CACHE.clear()
+    assert cache.BUILD_EVENTS[before:].count("bm25") == 1
+    cache.evict({"lsh_sigs"})
+    before = len(cache.BUILD_EVENTS)
     qmod.REGISTRY["dedup_lsh_star"].fn(spark, sf_dir).count()
     qmod.REGISTRY["dedup_incremental"].fn(spark, sf_dir).count()
     qmod.REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).count()
-    assert len(dedup._LSH_SIG_CACHE) == 1  # one signature build, 3 consumers
+    # one signature build, 3 consumers
+    assert cache.BUILD_EVENTS[before:].count("lsh_sigs") == 1
 
 
 def test_compare_iblt_diff_cell_bounded(qmod, spark, sf_dir):
@@ -1732,8 +1726,8 @@ def test_gate_panel_served_plan_reads_no_corpus(qmod, spark, sf_dir):
     """The REGISTERED panel on a warm decision cache must be pure
     serve: a local relation union, zero parquet scans, zero joins —
     if a gate silently stops caching, corpus scans reappear here.
-    (The measurement plans are pinned separately via
-    gate_compute_fns; this pins the serve path the operator actually
+    (The measurement plans are pinned separately via the registry
+    ``build`` bodies; this pins the serve path the operator actually
     polls.)"""
     fn = qmod.REGISTRY["rollup_gate_panel"].fn
     fn(spark, sf_dir).collect()  # warm every gate + the panel itself
@@ -1806,8 +1800,8 @@ _INVARIANCE_KEYS = [
     "dedup_substring_rewrite_all",
     "dedup_rewrite_persist",
     # round-13 additions: the #1 bench key's MEASUREMENT plan (the
-    # registered key serves cached decisions; gate_compute_fns routes
-    # the capture to the nine-gate compute union), and the
+    # registered key serves cached decisions; its registry build
+    # routes the capture to the nine-gate compute union), and the
     # levenshtein cluster receipt (rep-grain output shape)
     "rollup_gate_panel",
     "dedup_levenshtein_receipts",

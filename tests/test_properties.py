@@ -2116,9 +2116,9 @@ def test_gate_panel_healthy_fixed_point_retrains_nothing(spark, sf_dir):
     assert first == second
     # the re-read must be DECISION-SERVED, not re-measured: the panel
     # and every gate hold a cached local frame after the first read
-    from scribedb_spark.cache import _DECISION_ROWS
+    from scribedb_spark import cache
 
-    cached_keys = {k[1] for k in _DECISION_ROWS}
+    cached_keys = {k[1] for k in cache._STORE}
     assert "rollup_gate_panel" in cached_keys
     for _label, key in _GATE_PANEL_KEYS:
         assert key in cached_keys, f"{key} decision not cached"

@@ -408,15 +408,19 @@ def test_session_cache_evicts_stale_app_entries(spark):
     artifacts keyed to a stopped SparkContext's applicationId must be
     evicted on the next lookup (they pin dead localCheckpoint RDDs in
     long-lived processes otherwise)."""
-    from scribedb_spark.cache import session_cache
+    from scribedb_spark import cache
 
-    cache = {("app-dead", "x"): "stale", ("app-dead2", "y"): "stale"}
-    got = session_cache(cache, spark, ("mine",), lambda: "fresh")
+    cache._STORE[("app-dead", "x")] = (None, "stale")
+    cache._STORE[("app-dead2", "y")] = (None, "stale")
+    got = cache.session_cache(spark, ("mine",), lambda: "fresh")
     assert got == "fresh"
     app = spark.sparkContext.applicationId
-    assert set(cache) == {(app, "mine")}
+    assert ("app-dead", "x") not in cache._STORE
+    assert ("app-dead2", "y") not in cache._STORE
+    assert {k[0] for k in cache._STORE} == {app}
     # warm hit: builder not re-run
-    assert session_cache(cache, spark, ("mine",), lambda: "rebuilt") == "fresh"
+    assert cache.session_cache(spark, ("mine",), lambda: "rebuilt") == "fresh"
+    cache.evict({"mine"})
 
 
 def test_quantize_int8_zero_vector_cross_engine(spark):
@@ -585,9 +589,7 @@ def test_mips_numpy_assignment_matches_window_pick(spark, sf_dir):
     assert got == want
 
 
-def test_mips_state_cache_builds_once_and_invalidates(
-    spark, tmp_path, monkeypatch
-):
+def test_mips_state_cache_builds_once_and_invalidates(spark, tmp_path):
     """r15 optimization: the MIPS index state and the exact top-k
     baseline serve from session caches (one build shared by topk +
     recall report); an embeddings rewrite evicts both via the deps=
@@ -601,23 +603,20 @@ def test_mips_state_cache_builds_once_and_invalidates(
     shutil.copy("/root/testdata/sf0.001/embeddings.parquet", d / "embeddings.parquet")
     sfd = str(d)
 
-    S._MIPS_STATE_CACHE.clear()
-    S._MIPS_EXACT_CACHE.clear()
-    builds = []
-    orig = S._mips_codes_and_assignment
-    monkeypatch.setattr(
-        S,
-        "_mips_codes_and_assignment",
-        lambda *a, **k: builds.append(1) or orig(*a, **k),
-    )
+    from scribedb_spark import cache
+
+    before = len(cache.BUILD_EVENTS)
+
+    def builds(tag):
+        return cache.BUILD_EVENTS[before:].count(tag)
 
     S.ann_mips_topk(spark, sfd).count()
-    assert len(builds) == 1
+    assert builds("mips_state") == 1
     first = sorted(
         map(tuple, S.ann_mips_recall_report(spark, sfd).collect())
     )
-    assert len(builds) == 1  # recall report served the cached state
-    assert len(S._MIPS_EXACT_CACHE) == 1
+    assert builds("mips_state") == 1  # recall report served the cached state
+    assert builds("mips_exact") == 1
 
     # rewrite the embeddings file in place: half the corpus
     import duckdb
@@ -637,5 +636,5 @@ def test_mips_state_cache_builds_once_and_invalidates(
     second = sorted(
         map(tuple, S.ann_mips_recall_report(spark, sfd).collect())
     )
-    assert len(builds) == 2  # fingerprint change forced a rebuild
+    assert builds("mips_state") == 2  # fingerprint change forced a rebuild
     assert second != first  # answered from the new corpus
