@@ -306,7 +306,7 @@ def headline_line(
 
 
 def main() -> None:
-    from scribedb_spark.session import get_spark
+    from scribedb_spark.session import default_cpus, get_spark
     from scribedb_spark import queries as Q
 
     Q.load_extensions()
@@ -321,7 +321,7 @@ def main() -> None:
         df.count()
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}

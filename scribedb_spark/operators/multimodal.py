@@ -318,14 +318,6 @@ def multimodal_resize_bmp(spark, sf_dir) -> DataFrame:
     return blobs.mapInPandas(bmp_resize_batches, schema=BMP_RESIZE_SCHEMA)
 
 
-def sample_frames(df: DataFrame, blob_col: str = "blob", stride: int = 1000) -> DataFrame:
-    """Real video frame sampling — requires ffmpeg bindings, absent
-    here; same mapInPandas shape as fake_decode_batches."""
-    raise NotImplementedError(
-        "video frame sampling requires ffmpeg (not in this environment)"
-    )
-
-
 @register(
     "multimodal_features",
     oracle="""

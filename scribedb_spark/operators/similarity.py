@@ -133,24 +133,6 @@ def _hyperplanes(dim: int, tbl: int = 0) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket_expr(vec_col, planes: list[list[float]]):
-    """Bucket id = sign bits of the projections onto each hyperplane,
-    as a pure SQL expression. Kept as the no-Python alternative to the
-    numpy bucketing in ann_lsh_topk (use when Python workers are
-    undesirable); note higher-order functions run interpreted, so this
-    is ~5x slower per vector."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        proj = F.aggregate(
-            F.zip_with(vec_col, arr, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def _lsh_oracle(dim: int = 64) -> str:
     """DuckDB twin of ann_lsh_topk, planes embedded as literals.
 

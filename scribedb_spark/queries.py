@@ -1691,8 +1691,7 @@ def load_extensions() -> None:
         REGISTRY["dedup_near"] = REGISTRY["dedup_minhash_lsh"]
 
 
-#: SURVEY.md §2 contract keys — enumerated FIRST so a correctness
-#: driver that budgets its run always reaches them
+#: SURVEY.md §2 contract keys — enumerated first by queries() and oracle_sql()
 _CONTRACT_KEYS = (
     "q1_pricing_summary",
     "scan_parquet", "project_cols", "filter_pred", "proj_case_expr",
@@ -1718,394 +1717,14 @@ _PIPELINE_PREFIXES = (
 )
 
 
-def _driver_proven_keys() -> set[str]:
-    """Keys that already have a fully-green row (no err, rows+schema
-    and, where present, hash match) in ANY past round's
-    ``CORRECTNESS_r*.json`` at the repo root. Read-only and best-effort:
-    any parse problem just means "nothing proven yet"."""
-    import glob
-    import json
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proven: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for key, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-            ):
-                proven.add(key)
-    return proven
-
-
-def _driver_touched_keys() -> set[str]:
-    """Keys with ANY recorded row (even a rows-only / err row) in any
-    past round's ``CORRECTNESS_r*.json``. A no-oracle key can never
-    earn a fully-green row, so "touched" is its terminal state — used
-    to surface each such key exactly once (see _enumeration_order)."""
-    import glob
-    import json
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    touched: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            touched.update(k for k, r in rows.items() if isinstance(r, dict))
-    return touched
-
-
 def _enumeration_order() -> list[str]:
-    """Registry keys in driver-enumeration priority, SELF-ADVANCING so
-    the driver's ~50-row/round correctness budget spends itself almost
-    entirely on NEW proofs.
-
-    The judge credits the UNION of fully-green rows across every past
-    round's CORRECTNESS_r*.json — a key proven once stays proven, and
-    the sf0.01 local mirror (tests/test_queries_oracle.py) guards it
-    against regressions between rounds. Re-listing already-proven keys
-    at the front therefore wastes budget slots (rounds 1–4 re-proved
-    the 41 contract keys every round, leaving only ~9 slots for the
-    90+ key backlog — ~10 rounds of pure queue time). The order is:
-
-    1. UNPROVEN oracle-backed keys — no fully-green driver row in any
-       past CORRECTNESS_r*.json. Base priority within the group:
-       contract keys, then LLM-pipeline families, then registration
-       order; keys in ``_FRESH_KEYS`` (added the current round) join
-       the BACK of this queue so they never displace keys that have
-       been waiting since earlier rounds.
-    2. PROVEN keys, contract keys first — once the backlog drains this
-       degenerates to the original contract-first order and the driver
-       budget becomes a standing re-verification sweep.
-    3. UNPROVEN keys WITHOUT a DuckDB oracle (only
-       ``agg_approx_distinct`` — HLL/KLL sketches are genuinely
-       engine-specific; ``ann_pq_topk`` and ``ann_ivf_topk`` both
-       graduated to oracle-backed in round 7 via integer Lloyd
-       training): the driver's check for them is rows-only
-       (err="no_oracle"), they can never satisfy the fully-green bar,
-       so they must yield every budget slot or they would pin
-       themselves ahead of provable keys forever — EXCEPT that a
-       no-oracle key the driver has never recorded at all is surfaced
-       ONCE near the tail of the ~50-key budget (position ~45) to
-       collect its rows-only row; the moment any round records it,
-       it is "touched" and retires to the back permanently.
-
-    Ordering within each partition is stable, so runs are
-    deterministic given the same report files."""
-    seen: dict[str, None] = {}
-    for k in _CONTRACT_KEYS:
-        if k in REGISTRY:
-            seen[k] = None
-    for k in REGISTRY:
-        if k not in seen and k.startswith(_PIPELINE_PREFIXES):
-            seen[k] = None
-    for k in REGISTRY:
-        if k not in seen:
-            seen[k] = None
-    proven = _driver_proven_keys()
-
-    def group(k: str) -> int:
-        if k in proven:
-            return 1
-        return 0 if REGISTRY[k].oracle is not None else 2
-
-    order = sorted(
-        seen,
-        key=lambda k: (
-            group(k),
-            _FRESH_WAVES.get(k, 0) if group(k) == 0 else 0,
-        ),
-    )
-    # Surface each never-recorded no-oracle key exactly once, near the
-    # tail of the ~50-key budget, so the whole registry ends up
-    # driver-touched without spending a slot every round — but NEVER
-    # ahead of an unproven oracle-backed key (those earn real proofs;
-    # when the provable backlog exceeds the budget, the rows-only key
-    # simply waits for a later round).
-    touched = _driver_touched_keys()
-    untouched_no_oracle = [
-        k for k in order if group(k) == 2 and k not in touched
-    ]
-    if untouched_no_oracle:
-        for k in untouched_no_oracle:
-            order.remove(k)
-        n_unproven = sum(1 for k in order if group(k) == 0)
-        pos = max(n_unproven, min(45, len(order)))
-        order[pos:pos] = untouched_no_oracle
-    return order
-
-
-#: round in which each key was added AFTER that round's verdict queued
-#: its slate — within the unproven partition, later waves drain after
-#: earlier ones so a new key can never displace one that has been
-#: waiting since a previous round (see _enumeration_order docstring)
-_FRESH_WAVES: dict[str, int] = dict.fromkeys(
-    {
-        "dedup_incremental",
-        "dedup_semantic_clusters",
-        "vec_knn_graph",
-        "rollup_retention",
-        "rollup_funnel",
-        "text_ngram_coverage",
-        "join_interval_overlap",
-        "compare_sampled",
-        "pipeline_incremental",
-        # fourth wave (same round, after the above were queued)
-        "graph_pagerank",
-        "rollup_gapfill",
-        "rollup_path_ngrams",
-        "rollup_journey_pattern",
-        "agg_mode",
-        "agg_zscore_outliers",
-        "profile_key_skew",
-        "vec_l2_topk",
-        "join_asof_nearest",
-        "dedup_survivor_pick",
-        "compare_col_drift",
-        "window_running_distinct",
-        "fp_merkle",
-        "compare_merkle_drill",
-        "merge_upsert",
-        "scd2_history",
-        "sample_split_entity",
-        "ann_lsh_topk",
-        "rollup_pareto_abc",
-        # fifth wave (round 5)
-        "dedup_bloom_prefilter",
-        "dedup_url_canonical",
-        "text_tfidf_topterms",
-        "layout_zorder",
-        "join_temporal_dim",
-        "rollup_wau_sliding",
-        "fp_incremental_update",
-        "ann_ivf_sq_topk",
-        "rollup_cohort_ltv",
-        "rollup_trend_slope",
-    },
-    5,
-)
-#: sixth wave (round 6)
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "dedup_lsh_star",
-            "dedup_semantic_ann",
-            "vec_knn_graph_ann",
-            "rollup_dataset_card",
-            "stream_watermark_late",
-            "compare_col_fingerprint",
-            "dedup_containment",
-            "profile_pk_violations",
-            "pipeline_semantic",
-            "compare_cell_drill",
-            "agg_median_exact",
-            "rollup_activity_streaks",
-            "agg_distinct_bitmap",
-            "profile_fk_orphans",
-            "rollup_growth_wow",
-            "graph_triangle_count",
-            "multimodal_resize",
-            "stream_stateful_stats",
-            "setop_except_all",
-        },
-        6,
-    )
-)
-#: seventh wave (round 7) — ann_pq_topk is not new but its oracle is:
-#: freshly provable keys queue behind every earlier wave's backlog
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "ann_pq_topk",
-            "dedup_containment_corpus",
-            "dedup_containment_salted",
-            "agg_quantile_grid",
-            "ann_prefix_topk",
-            "layout_bucket_advisor",
-            "profile_vec_dims",
-            "rollup_decayed_popularity",
-            "compare_cell_incremental",
-            "pipeline_quality_gate",
-            "sample_dedup_weights",
-            "agg_mad_outliers",
-            "compare_drill_rows",
-            "ann_ivf_topk",
-            "stream_enrich_static",
-            "graph_common_neighbors",
-        },
-        7,
-    )
-)
-#: eighth wave (round 8) — the depth-round breadth slate: incremental
-#: ANN maintenance, paragraph-grain boilerplate dedup, top-k
-#: similarity retrieval
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "ann_index_append",
-            "dedup_paragraph",
-            "join_similarity_topk",
-            "pipeline_dedup_cascade",
-            "ann_recall_report",
-            "dedup_span",
-            "text_decontaminate",
-            "text_bm25_topk",
-            "search_hybrid_rrf",
-            "compare_iblt_diff",
-            "dedup_cluster_stats",
-            "compare_iblt_incremental",
-            "text_lm_score",
-            "sample_token_budget",
-            "graph_kcore",
-            "dedup_recall_report",
-            "text_lm_score_incremental",
-        },
-        8,
-    )
-)
-#: ninth wave (round 9) — the persist-and-reload index lifecycle plus
-#: the trained-filter / dataset-card breadth slate
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "dedup_index_persist",
-            "ann_index_persist",
-            "ann_pq_persist",
-            "lm_index_persist",
-            "bm25_index_persist",
-            "bm25_index_append",
-            "compare_iblt_persist",
-            "text_quality_classifier",
-            "rollup_domain_mix",
-            "sample_split_cluster",
-        },
-        9,
-    )
-)
-#: tenth wave (round 10) — warehouse operational loop (catalog over
-#: the sidecars, the monitor->act retrain gate) plus the breadth slate
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "rollup_artifact_catalog",
-            "ann_retrain_gate",
-            "dedup_minhash_band_tune",
-            "sample_mix_curriculum",
-            "compare_schema_drift",
-            "layout_partition_advisor",
-            "lm_drift_gate",
-            "rollup_quality_drift",
-            "ann_pq_append",
-            "profile_join_cardinality",
-            "vec_mips_topk",
-            "graph_label_propagation",
-        },
-        10,
-    )
-)
-#: eleventh wave (round 11) — the stale warehouse half (GC census),
-#: the MIPS ANN twin + its recall monitor, the compaction policy, and
-#: repeated-substring dedup over the LSH pair index
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "rollup_gc_census",
-            "ann_mips_topk",
-            "ann_mips_recall_report",
-            "layout_compaction_advisor",
-            "dedup_substring",
-        },
-        11,
-    )
-)
-#: wave 11b (round 11, session 2) — ingest freshness, the dedup
-#: retune gate (monitor -> act for the LSH index), and the
-#: surgical-removal span coordinates for repeated-substring dedup
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "rollup_source_freshness",
-            "dedup_retune_gate",
-            "dedup_substring_spans",
-            "dedup_substring_rewrite",
-            "rollup_source_overlap",
-            "search_eval_overlap",
-            "rollup_ingest_gaps",
-            "sample_source_budget",
-            "ann_mips_persist",
-            "search_eval_panel",
-            "ann_mips_retrain_gate",
-        },
-        11,
-    )
-)
-#: twelfth wave (round 12) — the full multi-span rewrite receipt, its
-#: warehouse slot, and the one-pane gate census
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "dedup_substring_rewrite_all",
-            "dedup_rewrite_persist",
-            "rollup_gate_panel",
-        },
-        12,
-    )
-)
-#: thirteenth wave (round 13) — the last unproven key gains its
-#: error-bound oracle (it re-enters the unproven queue with a NEW
-#: output shape), the levenshtein cluster-receipt scale path, and the
-#: streamed gate panel
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "agg_approx_distinct",
-            "dedup_levenshtein_receipts",
-        },
-        13,
-    )
-)
-#: fourteenth wave (round 14) — the quotient-graph receipt twin of
-#: the missed-duplicate link-prediction key
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "graph_common_neighbors_receipts",
-        },
-        14,
-    )
-)
-#: fifteenth wave (round 15) — the real in-container BMP decode path
-#: (r14 VERDICT item 7: env-gate removed for uncompressed 24-bit BMP)
-#: plus the rep-grain receipt twins of the two pair families the r15
-#: collapse left member-grain only at their OUTPUT stage
-_FRESH_WAVES.update(
-    dict.fromkeys(
-        {
-            "multimodal_decode_bmp",
-            "multimodal_resize_bmp",
-            "dedup_ngram_receipts",
-            "dedup_simhash_receipts",
-            "paragraph_index_persist",
-        },
-        15,
-    )
-)
-_FRESH_KEYS = frozenset(_FRESH_WAVES)
+    """Contract keys, then the pipeline families, then every other key,
+    each group in registration order."""
+    return list(dict.fromkeys([
+        *(k for k in _CONTRACT_KEYS if k in REGISTRY),
+        *(k for k in REGISTRY if k.startswith(_PIPELINE_PREFIXES)),
+        *REGISTRY,
+    ]))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

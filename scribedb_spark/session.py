@@ -24,6 +24,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else this host's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "scribedb-spark",
     master: str | None = None,
@@ -32,11 +37,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master``/``shuffle_partitions`` default from the
-    ``SPARK_GRAFT_CPUS`` env var (driver contract) so tests, bench and
-    the driver harness all share one code path.
+    ``master``/``shuffle_partitions`` default from :func:`default_cpus`
+    so tests, bench and the driver harness all share one code path.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 

@@ -48,9 +48,8 @@ spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as e
 
-# the WHOLE registry, not just this round's ~50-key budget: the
-# self-advancing enumeration rotates new keys into the budget each
-# round, so every key must already survive the driver's session.
+# the WHOLE registry, not just the driver's ~50-key budget: every
+# key must survive the driver's session.
 # This process owns a contiguous shard of the enumeration order.
 qs = e.queries()
 keys = list(qs)
@@ -106,3 +105,16 @@ def test_registry_runs_under_vanilla_session(sf_dir):
             )
     assert total_checked >= 131, total_checked
     assert not failures, "\n".join(failures)
+
+
+def test_default_cpus_follows_env_then_host(monkeypatch):
+    """local[N] and the shuffle partitions come from SPARK_GRAFT_CPUS
+    when it is set, else from the host's core count (never a fixed
+    number sized for another machine)."""
+    from scribedb_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 5)
+    assert session.default_cpus() == 5
