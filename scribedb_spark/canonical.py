@@ -37,12 +37,17 @@ Scale notes (100 TB design):
 - ``fp_unordered`` is one ``groupBy().agg(sum)`` — partial aggregation
   map-side, a single scalar crosses the shuffle per partition.
 - ``fp_chain`` avoids the single-partition global window: row numbers
-  come from ``global_row_number`` (range repartition + per-partition
-  local window + tiny driver-side offset table), then the sequential
-  fold runs *per chunk* via ``aggregate(sort_array(collect_list(...)))``
-  — JVM-side, no Python UDF. Chunk width bounds the per-group state;
-  for very wide chunks use ``subchunk_rows`` (two-level Merkle-style
-  fold with deterministic boundaries).
+  come from ``global_row_number`` (one range repartition, checkpointed
+  with a ``monotonically_increasing_id`` per row, one tiny driver-side
+  segment table, then a narrow projection — the rows shuffle once),
+  then the sequential fold runs *per chunk* via
+  ``aggregate(sort_array(collect_list(...)))`` — JVM-side, no Python
+  UDF. The fold stays sequential: the chain contract (each state
+  hashes the previous one) admits no partial combine. Chunk width
+  bounds the per-group state; for very wide chunks use
+  ``subchunk_rows`` (two-level Merkle-style fold with deterministic
+  boundaries). ``group_by`` numbers and folds several datasets in
+  the same pass (``compare.chunk_fingerprints`` tags both sides).
 """
 
 from __future__ import annotations
@@ -166,65 +171,84 @@ def fp_unordered(
     return hashed.agg(*aggs)
 
 
+def _segment_offset(mid: Column, segs: list[tuple[int, int]]) -> Column:
+    """Offset of the segment holding id ``mid``: ``segs`` is
+    ``(first id, offset)`` sorted by first id, and a row belongs to the
+    last segment starting at or before its id. A balanced CASE tree,
+    so each row makes log2(len(segs)) comparisons."""
+    if len(segs) == 1:
+        return F.lit(segs[0][1])
+    half = len(segs) // 2
+    return F.when(mid >= segs[half][0], _segment_offset(mid, segs[half:])).otherwise(
+        _segment_offset(mid, segs[:half])
+    )
+
+
 def global_row_number(
     df: DataFrame,
     sort_keys: list[str],
     out_col: str = "rn",
     num_partitions: int | None = None,
+    group_by: list[str] | None = None,
 ) -> DataFrame:
-    """1-based global row number over ``sort_keys`` WITHOUT the
-    single-partition ``Window.orderBy`` bottleneck.
+    """1-based row number over ``sort_keys`` WITHOUT the
+    single-partition ``Window.orderBy`` bottleneck — with ``group_by``,
+    ``row_number() OVER (PARTITION BY group_by ORDER BY sort_keys)``.
 
-    Classic scalable two-phase scheme:
-      1. range-repartition by the sort keys (sampled range boundaries
-         -> partitions are globally ordered),
-      2. per-partition local row_number (parallel window, partitioned
-         by ``spark_partition_id``),
-      3. per-partition counts -> driver (one tiny row per partition)
-         -> cumulative offsets broadcast back.
+    One range-partitioned pass:
+      1. range-repartition by (group_by, sort_keys) and sort within
+         partitions (sampled range boundaries -> partitions are
+         globally ordered), tag each row with
+         ``monotonically_increasing_id`` and localCheckpoint,
+      2. one tiny collect: per (partition, group) segment, its smallest
+         id and its row count; the segments of one group are told
+         apart by the group's smallest id (a Spark window over the
+         segments), never by comparing or sorting group values in
+         Python, which orders null and NaN differently from Spark,
+      3. a narrow projection: rn = id - (segment's smallest id) + 1 +
+         (the group's rows in earlier partitions). Rows of one segment
+         are consecutive within their partition, so their ids are too.
 
     The reference leans on server-side LIMIT/OFFSET for the same job
     (reference scribedb/postgres.py:84-88) — O(chunks) re-sorts; this
-    is one sort total.
+    is one sort total and no second shuffle of the rows.
 
-    Determinism requires ``sort_keys`` to uniquely order rows; rows
-    tying on every key get arbitrary (run-dependent) numbers. Callers
-    needing run-stable output append a content tiebreaker — fp_chain
-    appends its canonical ``__txt`` column.
+    Determinism requires ``sort_keys`` to uniquely order rows within a
+    group; rows tying on every key get arbitrary (run-dependent)
+    numbers. Callers needing run-stable output append a content
+    tiebreaker — fp_chain appends its canonical ``__txt`` column.
     """
-    sc = [F.col(k) for k in sort_keys]
+    groups = list(group_by or [])
+    order = [F.col(k) for k in groups + list(sort_keys)]
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *sc).sortWithinPartitions(*sc)
-    parted = parted.withColumn("__pid", F.spark_partition_id())
-    # localCheckpoint so the pid->count map and the local row numbers
-    # see the exact same partitioning (repartitionByRange SAMPLES its
-    # boundaries; a recompute could partition differently). Stronger
-    # than persist(): a persist'd block evicted under memory pressure
-    # would silently recompute-and-resample, and checkpoint blocks are
-    # reclaimed by the ContextCleaner when the plan is dropped instead
-    # of pinning cache across keys in a long-lived session.
-    parted = parted.localCheckpoint()
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    if not counts:  # empty input: create_map() with zero args is invalid
+    parted = df.repartitionByRange(n, *order).sortWithinPartitions(*order)
+    # localCheckpoint so the segment table and the ids see the exact
+    # same partitioning (repartitionByRange SAMPLES its boundaries; a
+    # recompute could partition differently). Stronger than persist():
+    # a persist'd block evicted under memory pressure would silently
+    # recompute-and-resample, and checkpoint blocks are reclaimed by
+    # the ContextCleaner when the plan is dropped instead of pinning
+    # cache across keys in a long-lived session.
+    parted = parted.withColumn("__mid", F.monotonically_increasing_id()).localCheckpoint()
+    # the id's upper 31 bits are the partition index
+    segs = parted.groupBy(F.shiftright("__mid", 33).alias("__pid"), *groups).agg(
+        F.min("__mid").alias("start"), F.count(F.lit(1)).alias("cnt")
+    )
+    if groups:
+        segs = segs.withColumn("group_start", F.min("start").over(Window.partitionBy(*groups)))
+    else:
+        segs = segs.withColumn("group_start", F.lit(0))
+    rows = sorted(segs.select("start", "cnt", "group_start").collect())
+    if not rows:
         return df.withColumn(out_col, F.lit(None).cast("long"))
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy("__pid").orderBy(*sc)
-    out = (
-        parted.withColumn("__local_rn", F.row_number().over(w))
-        .withColumn(out_col, (F.col("__local_rn") + off_map[F.col("__pid")]).cast("long"))
-        .drop("__pid", "__local_rn")
-    )
-    return out
+    seen: dict[int, int] = {}
+    offsets = []
+    for start, cnt, group_start in rows:
+        before = seen.get(group_start, 0)
+        offsets.append((start, before + 1 - start))
+        seen[group_start] = before + cnt
+    mid = F.col("__mid")
+    return parted.withColumn(out_col, mid + _segment_offset(mid, offsets)).drop("__mid")
 
 
 def _chain_fold(items: Column) -> Column:
@@ -245,6 +269,7 @@ def fp_chain(
     bucket_rows: int = 100_000,
     cols: list[str] | None = None,
     subchunk_rows: int | None = None,
+    group_by: list[str] | None = None,
 ) -> DataFrame:
     """F2: order-sensitive chunked fingerprint.
 
@@ -253,32 +278,38 @@ def fp_chain(
     (clean [i*b, (i+1)*b) windows; the reference's overlapping-window
     quirk, SURVEY.md §2.5, is intentionally not reproduced).
 
+    With ``group_by``, each group is chunked and chained on its own
+    (numbering restarts per group) and the output leads with the group
+    columns: ``*group_by, chunk_id, n_rows, fp``. ``cols`` should then
+    leave the group columns out of the hashed text.
+
     For chunks too wide to collect_list comfortably, pass
     ``subchunk_rows``: rows fold into sub-chunk hashes first, then the
     sub-chunk hashes fold (in order) into the chunk hash — a
     deterministic two-level Merkle fold (SURVEY.md §7 hard-part 1),
     bounding per-group state at max(subchunk_rows, bucket/subchunk).
     """
+    groups = list(group_by or [])
+    keys = list(dict.fromkeys(sort_keys))
     txt = canonical_row(df, cols)
-    # number only (sort_keys, __txt): global_row_number persists its
-    # range-partitioned input for determinism, and nothing downstream
-    # needs the original columns — at scale this shrinks the cached
-    # footprint to the canonical text instead of the full row width
-    slim = df.withColumn("__txt", txt).select(
-        *dict.fromkeys(sort_keys), "__txt"
-    )
+    # number only (groups, sort_keys, __txt): global_row_number
+    # persists its range-partitioned input for determinism, and nothing
+    # downstream needs the original columns — at scale this shrinks
+    # the cached footprint to the canonical text instead of the full
+    # row width
+    slim = df.withColumn("__txt", txt).select(*dict.fromkeys(groups + keys), "__txt")
     # __txt as final tiebreaker: rows tying on sort_keys are ordered
     # by content, so numbering — and therefore every chunk hash — is
     # reproducible under any parallelism even when sort_keys don't
     # uniquely order the dataset (ties with IDENTICAL text are
     # interchangeable: any order folds to the same chunk hashes)
-    numbered = global_row_number(slim, list(dict.fromkeys(sort_keys)) + ["__txt"])
+    numbered = global_row_number(slim, keys + ["__txt"], group_by=groups)
     numbered = numbered.withColumn(
         "chunk_id", ((F.col("rn") - 1) / F.lit(bucket_rows)).cast("long")
     )
 
     def fold(frame: DataFrame, key_cols: list[str]) -> DataFrame:
-        return frame.groupBy(*key_cols).agg(
+        return frame.groupBy(*groups, *key_cols).agg(
             F.sum(F.lit(1)).alias("n_rows"),
             _chain_fold(
                 F.array_sort(F.collect_list(F.struct(F.col("rn"), F.col("__txt").alias("txt"))))
@@ -289,13 +320,13 @@ def fp_chain(
         numbered = numbered.withColumn(
             "sub_id", ((F.col("rn") - 1) / F.lit(subchunk_rows)).cast("long")
         )
-        subs = numbered.groupBy("chunk_id", "sub_id").agg(
+        subs = numbered.groupBy(*groups, "chunk_id", "sub_id").agg(
             F.sum(F.lit(1)).alias("n_rows"),
             _chain_fold(
                 F.array_sort(F.collect_list(F.struct(F.col("rn"), F.col("__txt").alias("txt"))))
             ).alias("sub_fp"),
         )
-        return subs.groupBy("chunk_id").agg(
+        return subs.groupBy(*groups, "chunk_id").agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
             _chain_fold(
                 F.array_sort(

@@ -32,12 +32,24 @@ verdict scalars and an optionally row-capped diff sample.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass, field, replace
+from functools import cached_property
+from typing import Literal, get_args
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scribedb_spark.canonical import fp_chain, fp_unordered
+from scribedb_spark.canonical import (
+    _fp_term,
+    fp_chain,
+    fp_row_md5,
+    fp_unordered,
+    global_row_number,
+)
+
+#: chunk-report hash modes; anything else is rejected
+HashMode = Literal["unordered", "chained"]
 
 
 class SchemaMismatch(ValueError):
@@ -62,7 +74,7 @@ class CompareSpec:
     bucket_rows: int = 100_000
     #: 'unordered' (default, fully parallel) or 'chained'
     #: (reference-style order-sensitive chunk hashes).
-    hash_mode: str = "unordered"
+    hash_mode: HashMode = "unordered"
     #: reference set()-semantics compat (collapses duplicate rows).
     distinct: bool = False
     #: allow up to N differing rows before the verdict is 'different'
@@ -84,15 +96,26 @@ class CompareResult:
     #: {'src','tgt'} (reference prints 'src:'/'tgt:' labels,
     #: reference main.py:116-137).
     diff: DataFrame
-    #: chunk_id, src_fp, tgt_fp, status ('OK'/'NOK') — the reference's
-    #: per-chunk console report (reference main.py:229-247) as data.
-    chunk_status: DataFrame | None = None
     #: keyed classification (when spec.keys): key cols + 'change' in
     #: {'added','removed','changed'}.
     keyed_diff: DataFrame | None = None
     #: scalar keyed report (when spec.keys): key cols + 'change' +
     #: 'changed_cols' (comma-joined differing payload column names).
     changed_cols: DataFrame | None = None
+    #: builds ``chunk_status`` (set by ``compare(with_chunks=True)``)
+    _chunk_report: Callable[[], DataFrame] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    @cached_property
+    def chunk_status(self) -> DataFrame | None:
+        """chunk_id, src_fp, src_rows, tgt_fp, tgt_rows, status
+        ('OK'/'NOK') — the reference's per-chunk console report
+        (reference main.py:229-247) as data; None unless asked for.
+        Built on first read, not by ``compare()``: the verdict never
+        waits for the chunk numbering. Later reads return the same
+        frame."""
+        return self._chunk_report() if self._chunk_report else None
 
     def raise_on_diff(self) -> None:
         """Reference exit behavior (reference main.py:263-267)."""
@@ -364,6 +387,22 @@ def tolerance_diff(
     return j.select(*out_cols).filter(viol_any)
 
 
+def _check_chunk_spec(spec: CompareSpec, columns: list[str]) -> None:
+    """Reject a chunk-report spec the report cannot honour, before any
+    Spark job runs: an unknown ``hash_mode`` (a typo must not quietly
+    select another report), ``bucket_rows < 1``, or ``sort_keys`` that
+    are not columns of the source side."""
+    if spec.hash_mode not in get_args(HashMode):
+        raise ValueError(
+            f"hash_mode must be one of {get_args(HashMode)}, got {spec.hash_mode!r}"
+        )
+    if spec.bucket_rows < 1:
+        raise ValueError(f"bucket_rows must be at least 1, got {spec.bucket_rows!r}")
+    missing = [k for k in spec.sort_keys if k not in columns]
+    if missing:
+        raise ValueError(f"sort_keys {missing} are not columns of {columns}")
+
+
 def chunk_fingerprints(
     src: DataFrame,
     tgt: DataFrame,
@@ -371,43 +410,56 @@ def chunk_fingerprints(
 ) -> DataFrame:
     """Per-chunk fingerprint join — the reference's chunk loop
     (reference main.py:216-247) as one plan. Returns
-    ``chunk_id, src_fp, tgt_fp, src_rows, tgt_rows, status``."""
-    sort_keys = spec.sort_keys or src.columns
+    ``chunk_id, src_fp, src_rows, tgt_fp, tgt_rows, status``; a chunk
+    present on one side only has nulls for the other side.
+
+    Both sides are tagged, unioned and numbered in ONE pass
+    (``global_row_number(group_by=["__side"])``: one range sample, one
+    checkpoint, one segment collect), folded once per (side, chunk)
+    and pivoted to the ``src_*``/``tgt_*`` columns — the same report
+    as numbering each side on its own and joining the two full-outer
+    on ``chunk_id``."""
+    _check_chunk_spec(spec, src.columns)
+    cols = src.columns
+    sort_keys = spec.sort_keys or cols
+    tagged = src.withColumn("__side", F.lit("src")).unionByName(
+        tgt.toDF(*cols).withColumn("__side", F.lit("tgt"))
+    )
     if spec.hash_mode == "chained":
-        sfp = fp_chain(src, sort_keys, spec.bucket_rows)
-        tfp = fp_chain(tgt.toDF(*src.columns), sort_keys, spec.bucket_rows)
+        fps = fp_chain(tagged, sort_keys, spec.bucket_rows, cols=cols, group_by=["__side"])
     else:
-        from scribedb_spark.canonical import fp_row_md5, global_row_number
+        keys = list(dict.fromkeys(sort_keys))
+        hashed = fp_row_md5(tagged, cols).select("__side", *keys, "row_md5")
+        numbered = global_row_number(hashed, keys, group_by=["__side"])
+        fps = numbered.groupBy(
+            "__side", ((F.col("rn") - 1) / F.lit(spec.bucket_rows)).cast("long").alias("chunk_id")
+        ).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(_fp_term(F.col("row_md5"))).cast("decimal(38,0)").alias("fp"),
+        )
 
-        def chunked_unordered(df: DataFrame) -> DataFrame:
-            numbered = global_row_number(fp_row_md5(df), sort_keys)
-            numbered = numbered.withColumn(
-                "chunk_id", ((F.col("rn") - 1) / F.lit(spec.bucket_rows)).cast("long")
-            )
-            from scribedb_spark.canonical import _fp_term
+    def side(name: str, col: str) -> Column:
+        # one (side, chunk) row at most: max picks it, or null
+        return F.max(F.when(F.col("__side") == name, F.col(col)))
 
-            return numbered.groupBy("chunk_id").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(_fp_term(F.col("row_md5"))).cast("decimal(38,0)").alias("fp"),
-            )
-
-        sfp = chunked_unordered(src)
-        tfp = chunked_unordered(tgt.toDF(*src.columns))
-    s = sfp.select(
-        "chunk_id", F.col("fp").alias("src_fp"), F.col("n_rows").alias("src_rows")
+    return (
+        fps.groupBy("chunk_id")
+        .agg(
+            side("src", "fp").alias("src_fp"),
+            side("src", "n_rows").alias("src_rows"),
+            side("tgt", "fp").alias("tgt_fp"),
+            side("tgt", "n_rows").alias("tgt_rows"),
+        )
+        .withColumn(
+            "status",
+            F.when(
+                (F.col("src_fp") == F.col("tgt_fp"))
+                & (F.col("src_rows") == F.col("tgt_rows")),
+                F.lit("OK"),
+            ).otherwise(F.lit("NOK")),
+        )
+        .orderBy("chunk_id")
     )
-    t = tfp.select(
-        "chunk_id", F.col("fp").alias("tgt_fp"), F.col("n_rows").alias("tgt_rows")
-    )
-    j = s.join(t, "chunk_id", "full_outer")
-    return j.withColumn(
-        "status",
-        F.when(
-            (F.col("src_fp") == F.col("tgt_fp"))
-            & (F.col("src_rows") == F.col("tgt_rows")),
-            F.lit("OK"),
-        ).otherwise(F.lit("NOK")),
-    ).orderBy("chunk_id")
 
 
 def compare(
@@ -425,9 +477,15 @@ def compare(
     early-exit/lazy-materialization shape as the reference
     (reference main.py:228-239), but the "cheap check" is a full-data
     parallel hash instead of N sequential chunk round-trips.
+
+    ``with_chunks`` asks for the per-chunk report, ``chunk_status``.
+    It is built on its first read, so ``compare()`` returns without
+    running any chunk job; the spec's chunk fields are still checked
+    here, before any Spark job runs.
     """
     spec = spec or CompareSpec()
     check_schema(src, tgt, spec.strict_schema)
+    _check_chunk_spec(spec, src.columns)
 
     # both sides' fingerprints in ONE job: union with a side tag,
     # grouped aggregation — halves the scan/action count vs two
@@ -462,7 +520,8 @@ def compare(
         diff=diff.limit(spec.row_limit) if spec.row_limit else diff,
     )
     if with_chunks:
-        result.chunk_status = chunk_fingerprints(src, tgt, spec)
+        # a copy: the caller may reuse and change its spec before the read
+        result._chunk_report = lambda s=replace(spec): chunk_fingerprints(src, tgt, s)
     if spec.keys and not fast_equal:
         result.keyed_diff = keyed_diff(src, tgt, spec.keys)
         # keyed_diff already validated key uniqueness above

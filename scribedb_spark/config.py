@@ -26,6 +26,8 @@ from pydantic import BaseModel, Field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from scribedb_spark.compare import HashMode
+
 
 class ParquetSource(BaseModel):
     type: Literal["parquet"]
@@ -86,7 +88,7 @@ class CompareConfig(BaseModel):
     keys: list[str] = []
     sort_keys: list[str] = []
     bucket_rows: int = 100_000
-    hash_mode: str = "unordered"
+    hash_mode: HashMode = "unordered"
     distinct: bool = False
     #: the reference declared max_delta and never used it
     #: (reference main.py:153); here it works.
@@ -142,8 +144,9 @@ def run_compare_config(
 ):
     """Spec -> result (the reference's whole main(), reference
     main.py:155-267, minus construction-is-execution).
-    ``with_chunks`` also fills ``result.chunk_status`` (the per-chunk
-    OK/NOK report the CLI prints in hash mode)."""
+    ``with_chunks`` also asks for ``result.chunk_status`` (the
+    per-chunk OK/NOK report the CLI prints in hash mode), built on
+    first read."""
     from scribedb_spark.compare import CompareSpec, compare
 
     c = cfg.compare

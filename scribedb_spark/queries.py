@@ -1263,10 +1263,11 @@ def compare_fp_delta(spark, sf_dir):
 
     # the mutation keeps every key, so both sides share ONE chunk
     # numbering (one range sort + checkpoint); each side is then a
-    # cheap window+agg over the checkpointed frame. (Measured: fusing
-    # both fps into a single agg pass by materializing two canonical
-    # text columns per row is SLOWER than the second window — wide
-    # strings cost more than the sort.)
+    # narrow projection + agg over the checkpointed frame. (Measured
+    # while each side still ran a per-partition window: fusing both
+    # fps into a single agg pass by materializing two canonical text
+    # columns per row is SLOWER even than that — wide strings cost
+    # more than the sort.)
     nb = global_row_number(o, ["o_orderkey"])
     chunked = nb.withColumn("chunk_id", F.expr("(rn - 1) div 1000"))
 

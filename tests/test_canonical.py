@@ -94,6 +94,28 @@ def test_global_row_number(f3):
     assert sorted(r["rn"] for r in got) == list(range(1, 101))
 
 
+@pytest.mark.parametrize(
+    "g, values",
+    [("g", ["a", "b", None]), ("g", [0.5, float("nan"), None, -0.0, 0.0])],
+    ids=["string-with-null", "double-with-nan-null-signed-zero"],
+)
+def test_global_row_number_per_group_matches_window(spark, g, values):
+    """group_by numbers like row_number() OVER (PARTITION BY g ORDER BY
+    k), also with more partitions than groups (every group spans
+    partitions) and with the null / NaN / -0.0 groups Spark groups
+    differently from Python."""
+    from pyspark.sql import Window
+
+    rows = [(values[i % len(values)], (i * 7919) % 211) for i in range(211)]
+    df = spark.createDataFrame(rows, f"{g} {'string' if isinstance(values[0], str) else 'double'}, k int")
+    want = df.withColumn(
+        "rn", F.row_number().over(Window.partitionBy(g).orderBy("k"))
+    ).select("k", "rn")
+    got = global_row_number(df, ["k"], num_partitions=8, group_by=[g])
+    assert sorted(got.select("k", "rn").collect()) == sorted(want.collect())
+    assert got.columns == df.columns + ["rn"]
+
+
 def test_fp_chain_deterministic_and_order_sensitive(f3):
     chunks = fp_chain(f3, ["id"], bucket_rows=30).orderBy("chunk_id").collect()
     assert [r["chunk_id"] for r in chunks] == [0, 1, 2, 3]

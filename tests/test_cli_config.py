@@ -47,6 +47,17 @@ def test_malformed_shape(tmp_path):
         load_config(str(p))
 
 
+def test_unknown_hash_mode_rejected(tmp_path):
+    """A typo'd hash_mode must not quietly select the unordered
+    report."""
+    from pydantic import ValidationError
+
+    p = tmp_path / "bad.yaml"
+    p.write_text(GOOD_YAML.format(sf="/x") + "  hash_mode: chain\n")
+    with pytest.raises(ValidationError, match="hash_mode"):
+        load_config(str(p))
+
+
 def test_config_roundtrip_compare(spark, sf_dir, tmp_path):
     p = tmp_path / "cmp.yaml"
     p.write_text(GOOD_YAML.format(sf=sf_dir))

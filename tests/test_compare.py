@@ -123,6 +123,140 @@ def test_chunk_fingerprints_localize_diff(t_test):
     assert {r["chunk_id"]: r["status"] for r in cs2} == status
 
 
+def _per_side_chunk_report(src, tgt, spec):
+    """The chunk report as two per-side fingerprint frames joined
+    full-outer on chunk_id — the definition chunk_fingerprints must
+    reproduce."""
+    from scribedb_spark.canonical import (
+        _fp_term,
+        fp_chain,
+        fp_row_md5,
+        global_row_number,
+    )
+
+    sort_keys = spec.sort_keys or src.columns
+
+    def side(df):
+        if spec.hash_mode == "chained":
+            return fp_chain(df, sort_keys, spec.bucket_rows)
+        numbered = global_row_number(fp_row_md5(df), sort_keys)
+        return numbered.groupBy(
+            ((F.col("rn") - 1) / F.lit(spec.bucket_rows)).cast("long").alias("chunk_id")
+        ).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(_fp_term(F.col("row_md5"))).cast("decimal(38,0)").alias("fp"),
+        )
+
+    s = side(src).select(
+        "chunk_id", F.col("fp").alias("src_fp"), F.col("n_rows").alias("src_rows")
+    )
+    t = side(tgt.toDF(*src.columns)).select(
+        "chunk_id", F.col("fp").alias("tgt_fp"), F.col("n_rows").alias("tgt_rows")
+    )
+    return (
+        s.join(t, "chunk_id", "full_outer")
+        .withColumn(
+            "status",
+            F.when(
+                (F.col("src_fp") == F.col("tgt_fp"))
+                & (F.col("src_rows") == F.col("tgt_rows")),
+                F.lit("OK"),
+            ).otherwise(F.lit("NOK")),
+        )
+        .orderBy("chunk_id")
+    )
+
+
+@pytest.mark.parametrize("hash_mode", ["chained", "unordered"])
+def test_chunk_fingerprints_equal_per_side_definition(spark, hash_mode):
+    """One numbering pass over both sides gives the same report, column
+    for column, as numbering each side alone and joining: ties on the
+    sort key with different payloads, duplicate rows, null sort keys,
+    a bucket width that does not divide the row count, a chunk only
+    the target has, and an empty side. (Tie groups sit inside one
+    chunk: across a chunk boundary the unordered report's split of a
+    tie group is arbitrary on either definition.)"""
+    schema = "k int, v string, x double"
+    # sorted by k (nulls first), 7 rows per chunk: two null keys and a
+    # duplicated row in chunk 0, a three-way tie on k=5 in chunk 1
+    rows = [(None, "n1", 1.0), (None, "n2", None), (1, "a", 0.5), (2, "b", 0.25),
+            (3, "c", None), (4, "dup", 2.0), (4, "dup", 2.0),
+            (5, "t3", 1.5), (5, "t1", 1.5), (5, "t2", -1.0)]
+    rows += [(k, f"r{k}", k / 8) for k in range(6, 36)]
+    # checkpointed: every report below rescans both sides several
+    # times, and a frame built from a Python list would rerun its
+    # Python-side scan each time
+    src = spark.createDataFrame(rows, schema).localCheckpoint()
+    tgt_rows = [r if r[0] != 12 else (12, "changed", r[2]) for r in reversed(rows)]
+    tgt_rows += [(k, f"new{k}", None) for k in range(100, 104)]
+    tgt = spark.createDataFrame(tgt_rows, "kk int, vv string, xx double").localCheckpoint()
+    empty = src.limit(0)
+    spec = CompareSpec(sort_keys=["k"], bucket_rows=7, hash_mode=hash_mode)
+
+    reports = []
+    for a, b in ((src, tgt), (src, empty), (empty, tgt), (empty, empty)):
+        got = chunk_fingerprints(a, b, spec)
+        want = _per_side_chunk_report(a, b, spec)
+        assert got.dtypes == want.dtypes
+        reports.append(got.collect())
+        assert reports[-1] == want.collect()
+    statuses = [r["status"] for r in reports[0]]
+    # 40 vs 44 rows: chunk 2 holds k=12 (changed), chunk 5 the first
+    # extra rows, chunk 6 exists on the target only
+    assert statuses == ["OK", "OK", "NOK", "OK", "OK", "NOK", "NOK"]
+
+
+def test_compare_builds_chunk_report_on_first_read(spark, t_test):
+    """compare(with_chunks=True) runs exactly the verdict's jobs; the
+    chunk report's jobs run when chunk_status is first read, and a
+    second read returns the same frame without a job."""
+    sc = spark.sparkContext
+    spec = CompareSpec(sort_keys=["a"], bucket_rows=1000, hash_mode="chained")
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, plain = jobs_in("verdict-only", lambda: compare(t_test, t_test, spec))
+    res, with_chunks = jobs_in(
+        "verdict-with-chunks", lambda: compare(t_test, t_test, spec, with_chunks=True)
+    )
+    assert with_chunks == plain
+    cs, first = jobs_in("chunks-first-read", lambda: res.chunk_status)
+    assert first > 0
+    again, second = jobs_in("chunks-second-read", lambda: res.chunk_status)
+    assert again is cs and second == 0
+    assert {r["status"] for r in cs.collect()} == {"OK"}
+    assert compare(t_test, t_test, spec).chunk_status is None
+
+
+@pytest.mark.parametrize(
+    "bad, named",
+    [({"hash_mode": "chain"}, "'chain'"), ({"bucket_rows": 0}, "0"),
+     ({"sort_keys": ["a", "nope"]}, "'nope'")],
+)
+def test_bad_chunk_spec_rejected_before_any_job(spark, t_test, bad, named):
+    """A typo'd hash_mode must not quietly select the unordered
+    report; a bad width or sort key must not wait for the lazy report
+    to fail."""
+    sc = spark.sparkContext
+    spec = CompareSpec(**{"sort_keys": ["a"], "hash_mode": "chained", **bad})
+    group = f"bad-spec-{named}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=named):
+            compare(t_test, t_test, spec, with_chunks=True)
+        with pytest.raises(ValueError, match=named):
+            chunk_fingerprints(t_test, t_test, spec)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_symmetric_diff_column_name_independence(t_test):
     """Reference compares positionally; names may differ
     (reference main.py:157-168 checks arity only)."""

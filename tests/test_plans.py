@@ -414,19 +414,15 @@ def test_shard_assign_single_exchange(qmod, spark, sf_dir):
 def test_fp_chunk_hashes_no_global_window(qmod, spark, sf_dir):
     """fp_chunk_hashes: global row numbers come from range
     repartitioning (hidden behind the localCheckpoint lineage cut) +
-    per-partition windows — the visible plan must contain NO
-    partition-less window (which would be a single-reducer global
-    sort), only windows partitioned by __pid."""
-    import re
-
+    a narrow projection of the checkpointed monotonically_increasing_id
+    column __mid — the visible plan must contain NO window (a
+    partition-less one would be a single-reducer global sort, a
+    per-partition one a second shuffle of every row), and its one
+    Exchange is the chunk aggregate's."""
     p = plan(qmod, spark, sf_dir, "fp_chunk_hashes")
-    specs = re.findall(r"windowspecdefinition\(([^,]+),", p)
-    assert specs, "expected a window in the plan"
-    for first_arg in specs:
-        # a global window's first argument is the ORDER spec (contains
-        # ASC/DESC); a partitioned window's is the partition column
-        assert " ASC" not in first_arg and " DESC" not in first_arg, p
-    assert any("__pid" in s for s in specs)
+    assert "windowspecdefinition" not in p, p
+    assert "__mid" in p
+    assert p.count("Exchange (") == 1, p
 
 
 def test_runtime_bloom_filter_prunes_shuffle_join(spark, sf_dir):

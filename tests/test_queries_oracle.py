@@ -67,10 +67,17 @@ def get_keys():
     return sorted(k for k, v in Q.REGISTRY.items() if v.oracle)
 
 
+#: each key's output schema as test_query_matches_oracle built it, so
+#: the complex-type check reads it instead of building the key again
+_SCHEMAS: dict = {}
+
+
 @pytest.mark.parametrize("key", get_keys())
 def test_query_matches_oracle(spark, sf_dir, qmod, duck, key):
     qd = qmod.REGISTRY[key]
-    sdf = qd.fn(spark, sf_dir).toPandas()
+    df = qd.fn(spark, sf_dir)
+    _SCHEMAS[(key, sf_dir)] = df.schema
+    sdf = df.toPandas()
     odf = duck.execute(qd.oracle).df()
     assert len(sdf) == len(odf), f"{key}: row count {len(sdf)} != oracle {len(odf)}"
     scols, srows = _normalize(sdf)
@@ -93,8 +100,8 @@ def test_no_complex_typed_output_columns(spark, sf_dir, qmod):
 
     offenders = []
     for key, qd in qmod.REGISTRY.items():
-        df = qd.fn(spark, sf_dir)
-        for f in df.schema.fields:
+        schema = _SCHEMAS.get((key, sf_dir)) or qd.fn(spark, sf_dir).schema
+        for f in schema.fields:
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
                 offenders.append((key, f.name, f.dataType.simpleString()))
     assert not offenders, f"complex-typed output columns: {offenders}"
