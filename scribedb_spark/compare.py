@@ -6,7 +6,12 @@ on mismatch fetch rows and print the symmetric set difference -> raise
 if different. Re-expressed here as ONE declarative pipeline:
 
     spec -> schema check -> per-side fingerprints -> fingerprint join
-         -> (only if unequal) row-level diff via anti-joins -> result
+         -> (only if unequal) row-level diff -> result
+
+The row-level diff is one grouped shuffle either way: the symmetric
+diff groups the union of both sides on every column; with a key, the
+keyed classification groups it on the key and is kept once for the
+count, ``keyed_diff`` and ``changed_cols``.
 
 Differences by design (SURVEY.md §7):
 - No calibration: the reference times probe queries to pick a bucket
@@ -24,17 +29,18 @@ Differences by design (SURVEY.md §7):
   reference main.py:153) and ``row_limit`` (reference
   scribedb/base.py:15, also unused) actually work here.
 
-Scale: the diff path is join-shaped (exceptAll == hash aggregation on
-all columns; keyed diff == full-outer join on the key), so AQE/skew
-handling applies; nothing is collected to the driver except the
-verdict scalars and an optionally row-capped diff sample.
+Scale: the diff path is aggregation-shaped (exceptAll == hash
+aggregation on all columns; keyed diff == aggregation on the key), so
+AQE partition sizing applies; nothing is collected to the driver
+except the verdict scalars and an optionally row-capped diff sample.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
 from dataclasses import dataclass, field, replace
-from functools import cached_property
+from functools import cached_property, reduce
 from typing import Literal, get_args
 
 from pyspark.sql import Column, DataFrame
@@ -64,7 +70,7 @@ class CompareSpec:
     main.py:155-267, into spec + run)."""
 
     #: optional primary-key columns: enables added/removed/changed
-    #: classification via full-outer join (SURVEY.md J3).
+    #: classification, grouped on the key (SURVEY.md J3).
     keys: list[str] = field(default_factory=list)
     #: sort keys for ordered (chunked) fingerprints; defaults to all
     #: columns (the reference orders PG hashing by the whole row
@@ -173,73 +179,132 @@ def symmetric_diff(src: DataFrame, tgt: DataFrame, distinct: bool = False) -> Da
     ).select(*cols, "side")
 
 
+def _check_keys(keys: list[str], columns: list[str]) -> None:
+    """Reject keys the keyed diff cannot use, before any Spark job
+    runs: a key that is not a column of the source side, or keys that
+    cover every column (nothing is left to compare)."""
+    missing = [k for k in keys if k not in columns]
+    if missing:
+        raise ValueError(f"keys {missing} are not columns of {columns}")
+    if set(columns) <= set(keys):
+        raise ValueError(
+            f"keys {keys} must leave at least one payload column (every "
+            "column is a key — use setop/except for pure key-set "
+            "membership diffs)"
+        )
+
+
+def _require_unique(counts, keys: list[str], who: str) -> None:
+    """Raise when the largest per-side key count (``counts`` =
+    (src, tgt); None on an empty side) is above 1."""
+    for name, n in zip(("src", "tgt"), counts):
+        if (n or 0) > 1:
+            raise ValueError(
+                f"{who}: key {keys} is not unique on the {name} side"
+            )
+
+
+def _keyed_classes(src: DataFrame, tgt: DataFrame, keys: list[str]) -> DataFrame:
+    """Both sides classified by key in ONE shuffle: the sides are
+    tagged and unioned as ``(keys, __src | null, __tgt | null)`` and
+    grouped on the key. Per key it gives the row count on each side
+    (``__n_src``, ``__n_tgt``), each side's payload struct (null where
+    the key is absent), ``change`` ('added', 'removed', 'changed' or
+    null) and ``changed_cols`` (the comma-joined payload columns whose
+    values differ, null-safe; '' unless changed).
+
+    - Each side's structs sit in their own columns and the union fills
+      the other side's with a typed null, so ``__src`` and ``__tgt``
+      keep each side's own types; only the group key is widened.
+    - ``groupBy`` puts null keys in one group: key matching is
+      null-safe, like an ``eqNullSafe`` join. The group key is
+      normalised (-0.0 to 0.0, one NaN), so each side carries its own
+      key values and the output key is the source's, else the
+      target's.
+    - With a non-unique key a group stands for several rows; callers
+      check ``__n_src``/``__n_tgt`` before trusting the class.
+    """
+    cols = src.columns
+    payload = [c for c in cols if c not in keys]
+
+    def side(df: DataFrame, name: str) -> DataFrame:
+        return df.select(
+            *keys, F.struct(*keys).alias(f"__{name}_key"), F.struct(*payload).alias(f"__{name}")
+        )
+
+    grouped = (
+        side(src, "src")
+        .unionByName(side(tgt.toDF(*cols), "tgt"), allowMissingColumns=True)
+        .groupBy(*keys)
+        .agg(
+            # the key structs are never null on their own side, and a
+            # count of them reads only the key columns
+            F.count("__src_key").alias("__n_src"),
+            F.count("__tgt_key").alias("__n_tgt"),
+            *[
+                F.first(c, ignorenulls=True).alias(c)
+                for c in ("__src_key", "__tgt_key", "__src", "__tgt")
+            ],
+        )
+    )
+    differs = [~F.col("__src")[c].eqNullSafe(F.col("__tgt")[c]) for c in payload]
+    change = (
+        F.when(F.col("__n_src") == 0, F.lit("added"))
+        .when(F.col("__n_tgt") == 0, F.lit("removed"))
+        .when(reduce(operator.or_, differs), F.lit("changed"))
+    )
+    changed_cols = F.when(
+        change == "changed",
+        # concat_ws skips the NULLs that non-differing columns produce
+        F.concat_ws(",", *[F.when(d, F.lit(c)) for c, d in zip(payload, differs)]),
+    ).otherwise(F.lit(""))
+    return grouped.select(
+        *[F.coalesce(F.col("__src_key")[k], F.col("__tgt_key")[k]).alias(k) for k in keys],
+        "__n_src",
+        "__n_tgt",
+        "__src",
+        "__tgt",
+        change.alias("change"),
+        changed_cols.alias("changed_cols"),
+    )
+
+
+def _keyed_report(
+    src: DataFrame, tgt: DataFrame, keys: list[str], validate_keys: bool, who: str
+) -> DataFrame:
+    """The differing keys of ``_keyed_classes``; with
+    ``validate_keys``, first one job over both sides checks that the
+    key is unique on each."""
+    _check_keys(keys, src.columns)
+    classes = _keyed_classes(src, tgt, keys)
+    if validate_keys:
+        _require_unique(classes.agg(F.max("__n_src"), F.max("__n_tgt")).first(), keys, who)
+    return classes.filter(F.col("change").isNotNull())
+
+
 def keyed_diff(
     src: DataFrame, tgt: DataFrame, keys: list[str], *, validate_keys: bool = True
 ) -> DataFrame:
-    """J3: full-outer diff classification by primary key —
-    added (tgt only), removed (src only), changed (both, payload
-    differs). The reference can only pair rows visually in its diff
-    output (reference README.md:12-13); this makes the pairing a
-    first-class operator.
+    """J3: diff classification by primary key — added (tgt only),
+    removed (src only), changed (both, payload differs). Returns the
+    key columns, ``change`` and each side's payload struct (``__src``,
+    ``__tgt``; null on the absent side). The reference can only pair
+    rows visually in its diff output (reference README.md:12-13); this
+    makes the pairing a first-class operator.
 
-    A non-unique key makes the full-outer join cross-pair duplicates
-    and the classification meaningless, so keys are validated by
-    default (one cheap groupBy-count per side — partial aggregation,
-    tiny shuffle). Disable with ``validate_keys=False`` when the key
-    is known-unique (e.g. enforced upstream).
+    Plan: both sides tagged, unioned and grouped on the key — one
+    shuffle (``_keyed_classes``). A non-unique key would fold several
+    rows into one group and make the classification meaningless, so
+    keys are validated by default: one count-only aggregation over
+    both sides. Disable with ``validate_keys=False`` when the key is
+    known-unique (e.g. enforced upstream).
 
-    Key matching is NULL-SAFE: a null key on both sides pairs up
-    (groupBy already treats nulls as one group for the uniqueness
-    check), so identical rows with null keys don't surface as phantom
+    Key matching is NULL-SAFE: a null key on both sides pairs up, so
+    identical rows with null keys don't surface as phantom
     added+removed pairs the way a plain equi-join would report them.
     """
-    tgt = tgt.toDF(*src.columns)
-    if validate_keys:
-        for name, df in (("src", src), ("tgt", tgt)):
-            dup = (
-                df.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    f"keyed_diff: key {keys} is not unique on the {name} side; "
-                    "pass a unique key or validate_keys=False"
-                )
-    payload = [c for c in src.columns if c not in keys]
-    if not payload:
-        raise ValueError(
-            "keyed_diff: keys must leave at least one payload column "
-            "(every column is a key — use setop/except for pure key-set "
-            "membership diffs)"
-        )
-    s = src.select(
-        *[F.col(k).alias(f"__sk_{k}") for k in keys],
-        F.struct(*payload).alias("__src"),
-    )
-    t = tgt.select(
-        *[F.col(k).alias(f"__tk_{k}") for k in keys],
-        F.struct(*payload).alias("__tgt"),
-    )
-    cond = None
-    for k in keys:
-        eq = F.col(f"__sk_{k}").eqNullSafe(F.col(f"__tk_{k}"))
-        cond = eq if cond is None else cond & eq
-    j = s.join(t, on=cond, how="full_outer")
-    out_keys = [
-        F.coalesce(F.col(f"__sk_{k}"), F.col(f"__tk_{k}")).alias(k) for k in keys
-    ]
-    return (
-        j.withColumn(
-            "change",
-            F.when(F.col("__src").isNull(), F.lit("added"))
-            .when(F.col("__tgt").isNull(), F.lit("removed"))
-            .when(F.col("__src") != F.col("__tgt"), F.lit("changed")),
-        )
-        .filter(F.col("change").isNotNull())
-        .select(*out_keys, "change", "__src", "__tgt")
+    return _keyed_report(src, tgt, keys, validate_keys, "keyed_diff").select(
+        *keys, "change", "__src", "__tgt"
     )
 
 
@@ -254,75 +319,11 @@ def keyed_diff_cols(
     names the columns as data, and the flat schema (no structs) makes
     the report directly writable/hashable by any sink.
 
-    Same full-outer-join shape as keyed_diff: one shuffle on the key,
-    payload compared column-wise JVM-side; scales like the join.
+    Same grouped plan as keyed_diff (one shuffle on the key, payload
+    compared column-wise JVM-side) and the same key validation.
     """
-    tgt = tgt.toDF(*src.columns)
-    if validate_keys:
-        for name, df in (("src", src), ("tgt", tgt)):
-            dup = (
-                df.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-            )
-            if dup:
-                raise ValueError(
-                    f"keyed_diff_cols: key {keys} is not unique on the {name} "
-                    "side; pass a unique key or validate_keys=False"
-                )
-    payload = [c for c in src.columns if c not in keys]
-    if not payload:
-        raise ValueError(
-            "keyed_diff_cols: keys must leave at least one payload column "
-            "(every column is a key — use setop/except for pure key-set "
-            "membership diffs)"
-        )
-    s = src.select(
-        *[F.col(k).alias(f"__sk_{k}") for k in keys],
-        F.lit(True).alias("__in_src"),
-        *[F.col(c).alias(f"__s_{c}") for c in payload],
-    )
-    t = tgt.select(
-        *[F.col(k).alias(f"__tk_{k}") for k in keys],
-        F.lit(True).alias("__in_tgt"),
-        *[F.col(c).alias(f"__t_{c}") for c in payload],
-    )
-    # null-safe key join: null keys pair with null keys (see
-    # keyed_diff's docstring)
-    cond = None
-    for k in keys:
-        eq = F.col(f"__sk_{k}").eqNullSafe(F.col(f"__tk_{k}"))
-        cond = eq if cond is None else cond & eq
-    j = s.join(t, on=cond, how="full_outer").select(
-        *[
-            F.coalesce(F.col(f"__sk_{k}"), F.col(f"__tk_{k}")).alias(k)
-            for k in keys
-        ],
-        "__in_src",
-        "__in_tgt",
-        *[F.col(f"__s_{c}") for c in payload],
-        *[F.col(f"__t_{c}") for c in payload],
-    )
-    col_differs = [
-        ~F.col(f"__s_{c}").eqNullSafe(F.col(f"__t_{c}")) for c in payload
-    ]
-    any_differs = col_differs[0]
-    for d in col_differs[1:]:
-        any_differs = any_differs | d
-    change = (
-        F.when(F.col("__in_src").isNull(), F.lit("added"))
-        .when(F.col("__in_tgt").isNull(), F.lit("removed"))
-        .when(any_differs, F.lit("changed"))
-    )
-    changed_cols = F.when(
-        change == "changed",
-        # concat_ws skips the NULLs that non-differing columns produce
-        F.concat_ws(
-            ",", *[F.when(d, F.lit(c)) for c, d in zip(payload, col_differs)]
-        ),
-    ).otherwise(F.lit(""))
-    return (
-        j.withColumn("change", change)
-        .filter(F.col("change").isNotNull())
-        .select(*keys, "change", changed_cols.alias("changed_cols"))
+    return _keyed_report(src, tgt, keys, validate_keys, "keyed_diff_cols").select(
+        *keys, "change", "changed_cols"
     )
 
 
@@ -478,6 +479,14 @@ def compare(
     (reference main.py:228-239), but the "cheap check" is a full-data
     parallel hash instead of N sequential chunk round-trips.
 
+    With ``spec.keys`` the keys are checked before any Spark job, and
+    a failed fast path classifies both sides by key in one grouped
+    pass, kept as a local checkpoint: one small collect over it gives
+    the key-uniqueness check and ``diff_count`` (2·changed + removed +
+    added — the symmetric diff's size under a unique key), and
+    ``keyed_diff``/``changed_cols`` are projections of it. Without
+    keys ``diff_count`` counts the symmetric diff.
+
     ``with_chunks`` asks for the per-chunk report, ``chunk_status``.
     It is built on its first read, so ``compare()`` returns without
     running any chunk job; the spec's chunk fields are still checked
@@ -486,6 +495,8 @@ def compare(
     spec = spec or CompareSpec()
     check_schema(src, tgt, spec.strict_schema)
     _check_chunk_spec(spec, src.columns)
+    if spec.keys:
+        _check_keys(spec.keys, src.columns)
 
     # both sides' fingerprints in ONE job: union with a side tag,
     # grouped aggregation — halves the scan/action count vs two
@@ -506,9 +517,31 @@ def compare(
     fast_equal = (sfp["fp"] == tfp["fp"]) and (src_rows == tgt_rows)
 
     diff = symmetric_diff(src, tgt, spec.distinct)
+    keyed = None
     if fast_equal:
         diff_count = 0
         diff = diff.limit(0)
+    elif spec.keys:
+        # the differing keys have three readers (the count below,
+        # keyed_diff, changed_cols): classify once and keep the result
+        keyed = (
+            _keyed_classes(src, tgt, spec.keys)
+            .filter(
+                F.col("change").isNotNull()
+                | (F.col("__n_src") > 1)
+                | (F.col("__n_tgt") > 1)
+            )
+            .localCheckpoint()
+        )
+        st = keyed.agg(
+            F.max("__n_src"),
+            F.max("__n_tgt"),
+            *[F.count_if(F.col("change") == c).alias(c) for c in ("added", "removed", "changed")],
+        ).first()
+        _require_unique(st[:2], spec.keys, "compare")
+        # with a unique key a changed key is one surplus row per side,
+        # an added or removed key one row: the symmetric diff's size
+        diff_count = 2 * st["changed"] + st["removed"] + st["added"]
     else:
         diff_count = diff.count()
 
@@ -522,12 +555,9 @@ def compare(
     if with_chunks:
         # a copy: the caller may reuse and change its spec before the read
         result._chunk_report = lambda s=replace(spec): chunk_fingerprints(src, tgt, s)
-    if spec.keys and not fast_equal:
-        result.keyed_diff = keyed_diff(src, tgt, spec.keys)
-        # keyed_diff already validated key uniqueness above
-        result.changed_cols = keyed_diff_cols(
-            src, tgt, spec.keys, validate_keys=False
-        )
+    if keyed is not None:
+        result.keyed_diff = keyed.select(*spec.keys, "change", "__src", "__tgt")
+        result.changed_cols = keyed.select(*spec.keys, "change", "changed_cols")
     return result
 
 

@@ -29,6 +29,26 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
+#: where the host's memory size is read (Linux)
+MEMINFO = "/proc/meminfo"
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of this host's
+    memory (``MemTotal`` in :data:`MEMINFO`), between 1g and 16g: the
+    JVM shares the host with the Python workers and the page cache.
+    16g where the host's memory cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(MEMINFO) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, max(1024, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "scribedb-spark",
     master: str | None = None,
@@ -38,7 +58,8 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's defaults.
 
     ``master``/``shuffle_partitions`` default from :func:`default_cpus`
-    so tests, bench and the driver harness all share one code path.
+    and the driver heap from :func:`default_driver_memory`, so tests,
+    bench and the driver harness all share one code path.
     """
     cpus = default_cpus()
     master = master or f"local[{cpus}]"
@@ -62,7 +83,7 @@ def get_spark(
         # thousands of splits; at cluster scale this would be tuned to
         # HDFS/object-store block size (128-256 MB).
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # stage-progress bars interleave with stdout when the driver
         # captures a merged stream — they drowned the one-line bench

@@ -13,6 +13,7 @@ from scribedb_spark.compare import (
     chunk_fingerprints,
     compare,
     keyed_diff,
+    keyed_diff_cols,
     symmetric_diff,
 )
 
@@ -206,6 +207,16 @@ def test_chunk_fingerprints_equal_per_side_definition(spark, hash_mode):
     assert statuses == ["OK", "OK", "NOK", "OK", "OK", "NOK", "NOK"]
 
 
+def _jobs_in(sc, group, fn):
+    """(fn(), the number of Spark jobs it ran under job group ``group``)"""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_compare_builds_chunk_report_on_first_read(spark, t_test):
     """compare(with_chunks=True) runs exactly the verdict's jobs; the
     chunk report's jobs run when chunk_status is first read, and a
@@ -213,22 +224,14 @@ def test_compare_builds_chunk_report_on_first_read(spark, t_test):
     sc = spark.sparkContext
     spec = CompareSpec(sort_keys=["a"], bucket_rows=1000, hash_mode="chained")
 
-    def jobs_in(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    _, plain = jobs_in("verdict-only", lambda: compare(t_test, t_test, spec))
-    res, with_chunks = jobs_in(
-        "verdict-with-chunks", lambda: compare(t_test, t_test, spec, with_chunks=True)
+    _, plain = _jobs_in(sc, "verdict-only", lambda: compare(t_test, t_test, spec))
+    res, with_chunks = _jobs_in(
+        sc, "verdict-with-chunks", lambda: compare(t_test, t_test, spec, with_chunks=True)
     )
     assert with_chunks == plain
-    cs, first = jobs_in("chunks-first-read", lambda: res.chunk_status)
+    cs, first = _jobs_in(sc, "chunks-first-read", lambda: res.chunk_status)
     assert first > 0
-    again, second = jobs_in("chunks-second-read", lambda: res.chunk_status)
+    again, second = _jobs_in(sc, "chunks-second-read", lambda: res.chunk_status)
     assert again is cs and second == 0
     assert {r["status"] for r in cs.collect()} == {"OK"}
     assert compare(t_test, t_test, spec).chunk_status is None
@@ -492,3 +495,230 @@ def test_bucket_recommendation_null_when_no_power_fits(spark):
     assert set(rows) == {"huge", "ok"}
     assert rows["huge"]["rec_buckets"] is None
     assert rows["ok"]["rec_buckets"] == 2
+
+
+# ---------------------------------------------------------------------------
+# keyed classification: one grouped pass against the full-outer-join reference
+# ---------------------------------------------------------------------------
+
+
+def _join_keyed_diff(src, tgt, keys):
+    """Reference: keyed_diff as a null-safe full-outer join on the key
+    (the implementation the grouped pass replaced), without the key
+    check."""
+    tgt = tgt.toDF(*src.columns)
+    payload = [c for c in src.columns if c not in keys]
+    s = src.select(*[F.col(k).alias(f"__sk_{k}") for k in keys], F.struct(*payload).alias("__src"))
+    t = tgt.select(*[F.col(k).alias(f"__tk_{k}") for k in keys], F.struct(*payload).alias("__tgt"))
+    cond = None
+    for k in keys:
+        eq = F.col(f"__sk_{k}").eqNullSafe(F.col(f"__tk_{k}"))
+        cond = eq if cond is None else cond & eq
+    j = s.join(t, on=cond, how="full_outer")
+    out_keys = [F.coalesce(F.col(f"__sk_{k}"), F.col(f"__tk_{k}")).alias(k) for k in keys]
+    return (
+        j.withColumn(
+            "change",
+            F.when(F.col("__src").isNull(), F.lit("added"))
+            .when(F.col("__tgt").isNull(), F.lit("removed"))
+            .when(F.col("__src") != F.col("__tgt"), F.lit("changed")),
+        )
+        .filter(F.col("change").isNotNull())
+        .select(*out_keys, "change", "__src", "__tgt")
+    )
+
+
+def _join_keyed_diff_cols(src, tgt, keys):
+    """Reference: keyed_diff_cols as a null-safe full-outer join with
+    column-wise payload comparison, without the key check."""
+    tgt = tgt.toDF(*src.columns)
+    payload = [c for c in src.columns if c not in keys]
+    s = src.select(
+        *[F.col(k).alias(f"__sk_{k}") for k in keys],
+        F.lit(True).alias("__in_src"),
+        *[F.col(c).alias(f"__s_{c}") for c in payload],
+    )
+    t = tgt.select(
+        *[F.col(k).alias(f"__tk_{k}") for k in keys],
+        F.lit(True).alias("__in_tgt"),
+        *[F.col(c).alias(f"__t_{c}") for c in payload],
+    )
+    cond = None
+    for k in keys:
+        eq = F.col(f"__sk_{k}").eqNullSafe(F.col(f"__tk_{k}"))
+        cond = eq if cond is None else cond & eq
+    j = s.join(t, on=cond, how="full_outer")
+    differs = [~F.col(f"__s_{c}").eqNullSafe(F.col(f"__t_{c}")) for c in payload]
+    any_differs = differs[0]
+    for d in differs[1:]:
+        any_differs = any_differs | d
+    change = (
+        F.when(F.col("__in_src").isNull(), F.lit("added"))
+        .when(F.col("__in_tgt").isNull(), F.lit("removed"))
+        .when(any_differs, F.lit("changed"))
+    )
+    changed_cols = F.when(
+        change == "changed",
+        F.concat_ws(",", *[F.when(d, F.lit(c)) for c, d in zip(payload, differs)]),
+    ).otherwise(F.lit(""))
+    return (
+        j.select(
+            *[F.coalesce(F.col(f"__sk_{k}"), F.col(f"__tk_{k}")).alias(k) for k in keys],
+            change.alias("change"),
+            changed_cols.alias("changed_cols"),
+        )
+        .filter(F.col("change").isNotNull())
+    )
+
+
+def _values(spark, rows: str, cols: str):
+    """A driver-local frame from SQL VALUES: no Python worker job."""
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t({cols})")
+
+
+#: name -> (columns, src rows, tgt rows, keys, sides emptied)
+_KEYED_CASES = {
+    "null-keys": (
+        "k1, k2, v",
+        "(1, NULL, 'a'), (NULL, NULL, 'b'), (NULL, 2, 'c'), (3, 3, 'd')",
+        "(1, NULL, 'a'), (NULL, NULL, 'B'), (NULL, 2, 'c'), (NULL, 5, 'e')",
+        ["k1", "k2"],
+        (),
+    ),
+    "nan-and-signed-zero-keys": (
+        "k, x, v, w",
+        "(double('NaN'), double('NaN'), 1, double('NaN')),"
+        " (double('-0.0'), double('-0.0'), 2, double('-0.0')),"
+        " (0.0D, 1.0D, 3, 0.0D), (1.5D, 0.0D, 4, 0.0D)",
+        "(double('NaN'), double('NaN'), 1, double('NaN')), (0.0D, 0.0D, 20, 0.0D),"
+        " (double('-0.0'), 1.0D, 30, 0.0D), (double('-0.0'), 5.0D, 5, 0.0D)",
+        ["k", "x"],
+        (),
+    ),
+    "null-payloads": (
+        "k, v, w",
+        "(1, NULL, 'x'), (2, 1.0D, NULL), (3, NULL, NULL), (4, NULL, NULL)",
+        "(1, NULL, 'x'), (2, NULL, NULL), (3, 5.0D, NULL), (4, NULL, NULL)",
+        ["k"],
+        (),
+    ),
+    "int-vs-bigint": ("k, v", "(1, 1), (2, 2), (3, 3)", "(1L, 1L), (2L, 20L), (4L, 4L)", ["k"], ()),
+    "empty-src": ("k, v", "(1, 'a')", "(1, 'a'), (2, 'b')", ["k"], ("src",)),
+    "empty-tgt": ("k, v", "(1, 'a'), (2, 'b')", "(1, 'a')", ["k"], ("tgt",)),
+    "both-empty": ("k, v", "(1, 'a')", "(1, 'a')", ["k"], ("src", "tgt")),
+}
+
+
+def _case(spark, name):
+    cols, s_rows, t_rows, keys, emptied = _KEYED_CASES[name]
+    src, tgt = _values(spark, s_rows, cols), _values(spark, t_rows, cols)
+    src = src.limit(0) if "src" in emptied else src
+    tgt = tgt.limit(0) if "tgt" in emptied else tgt
+    return src, tgt, keys
+
+
+def _rows(df):
+    # repr keeps NaN equal to itself and -0.0 apart from 0.0
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.mark.parametrize("case", list(_KEYED_CASES))
+def test_keyed_diff_matches_full_outer_join(spark, case):
+    """keyed_diff, keyed_diff_cols and compare()'s keyed answers give
+    the full-outer join's rows and dtypes: null keys pair null-safely,
+    NaN and -0.0/0.0 keys match and keep each side's own key value, a
+    null payload is a value, an int side against a bigint side keeps
+    each side's own struct types, and empty sides classify as all
+    added, all removed or nothing."""
+    src, tgt, keys = _case(spark, case)
+    want = _join_keyed_diff(src, tgt, keys)
+    want_cols = _join_keyed_diff_cols(src, tgt, keys)
+    res = compare(src, tgt, CompareSpec(keys=keys))
+    assert res.equal == (not want.take(1))
+    got_pairs = [(keyed_diff(src, tgt, keys), want), (keyed_diff_cols(src, tgt, keys), want_cols)]
+    if not res.equal:
+        got_pairs += [(res.keyed_diff, want), (res.changed_cols, want_cols)]
+    for got, ref in got_pairs:
+        assert got.dtypes == ref.dtypes
+        assert _rows(got) == _rows(ref)
+
+
+@pytest.mark.parametrize("case", ["null-keys", "nan-and-signed-zero-keys", "int-vs-bigint"])
+@pytest.mark.parametrize("distinct, max_delta", [(False, 0), (True, 0), (False, 4)])
+def test_keyed_diff_count_is_symmetric_diff_size(spark, case, distinct, max_delta):
+    """With a unique key, compare()'s keyed diff_count (2·changed +
+    removed + added) is the size of the symmetric difference."""
+    src, tgt, keys = _case(spark, case)
+    res = compare(src, tgt, CompareSpec(keys=keys, distinct=distinct, max_delta=max_delta))
+    n = symmetric_diff(src, tgt, distinct).count()
+    assert res.diff_count == n > 0
+    assert res.equal == (n <= max_delta)
+
+
+@pytest.mark.parametrize("side", ["src", "tgt"])
+def test_keyed_duplicate_keys_raise(spark, side):
+    """A key repeated on either side raises, naming that side, from
+    compare() and from both keyed functions."""
+    uniq = _values(spark, "(1, 'a'), (2, 'b')", "k, v")
+    dup = _values(spark, "(1, 'a'), (2, 'b'), (2, 'c')", "k, v")
+    src, tgt = (dup, uniq) if side == "src" else (uniq, dup)
+    for run in (
+        lambda: compare(src, tgt, CompareSpec(keys=["k"])),
+        lambda: compare(src, tgt, CompareSpec(keys=["k"], distinct=True)),
+        lambda: keyed_diff(src, tgt, ["k"]),
+        lambda: keyed_diff_cols(src, tgt, ["k"]),
+    ):
+        with pytest.raises(ValueError, match=f"not unique on the {side} side"):
+            run()
+
+
+@pytest.mark.parametrize(
+    "keys, named", [(["a", "nope"], "'nope'"), (["a", "b", "c"], r"\['a', 'b', 'c'\]")]
+)
+@pytest.mark.parametrize("differs", [False, True])
+def test_bad_keys_rejected_before_any_job(spark, t_test, keys, named, differs):
+    """A key that is not a column, or keys covering every column, raise
+    a ValueError naming them before any Spark job — whether the data
+    is equal (the fast path would never read the key) or not."""
+    tgt = t_test.withColumn("b", F.col("b") + 1) if differs else t_test
+    sc = spark.sparkContext
+
+    def run():
+        with pytest.raises(ValueError, match=named):
+            compare(t_test, tgt, CompareSpec(keys=keys))
+        with pytest.raises(ValueError, match=named):
+            keyed_diff(t_test, tgt, keys)
+        with pytest.raises(ValueError, match=named):
+            keyed_diff_cols(t_test, tgt, keys)
+
+    _, jobs = _jobs_in(sc, f"bad-keys-{keys}-{differs}", run)
+    assert jobs == 0
+
+
+def test_keyed_compare_job_budget(spark, t_test, tmp_path):
+    """A keyed compare() of two differing frames runs at most six jobs
+    (fingerprints, the classification checkpoint, its counts), and
+    reading keyed_diff and changed_cols afterwards scans neither input
+    — both are projections of the checkpoint."""
+    sc = spark.sparkContext
+    t_test.write.parquet(str(tmp_path / "src"))
+    mutated = t_test.withColumn("b", F.when(F.col("a") % 500 == 0, F.lit(0)).otherwise(F.col("b")))
+    mutated.filter(F.col("a") != 7).write.parquet(str(tmp_path / "tgt"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    tgt = spark.read.parquet(str(tmp_path / "tgt"))
+    res, jobs = _jobs_in(sc, "keyed-compare", lambda: compare(src, tgt, CompareSpec(keys=["a"])))
+    assert jobs <= 6
+    assert res.diff_count == symmetric_diff(src, tgt).count() == 2 * 10 + 1
+    for df in (res.keyed_diff, res.changed_cols):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # the checkpoint's ExistingRDD is the only leaf
+        assert "FileScan" not in plan and "Exchange" not in plan, plan
+        assert plan.count("Scan ExistingRDD") == 1, plan
+    (kd, cc), read_jobs = _jobs_in(
+        sc, "keyed-read", lambda: (res.keyed_diff.collect(), res.changed_cols.collect())
+    )
+    assert read_jobs <= 2
+    assert {(r["a"], r["change"]) for r in kd} == {(7, "removed")} | {
+        (a, "changed") for a in range(500, 5001, 500)
+    }
+    assert {r["changed_cols"] for r in cc} == {"", "b"}

@@ -23,10 +23,14 @@ import subprocess
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
+from scribedb_spark.session import default_cpus
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: parallel vanilla sessions; 4 x local[8] fits the 32-core host
-N_SHARDS = int(os.environ.get("SPARK_GRAFT_SMOKE_SHARDS", "4"))
+#: parallel vanilla sessions and the cores of each; by default shards x
+#: cores stays within the host's cores (4 x local[1] on 4, 4 x local[8] on 32)
+N_SHARDS = int(os.environ.get("SPARK_GRAFT_SMOKE_SHARDS") or min(4, default_cpus()))
+SHARD_CORES = max(1, default_cpus() // N_SHARDS)
 SHARD_TIMEOUT = 480
 
 SMOKE = r"""
@@ -39,7 +43,7 @@ from pyspark.sql import SparkSession
 # driver's default, to prove table()'s read-time UTC pin holds)
 spark = (
     SparkSession.builder.appName("driver-mirror-%(shard)d")
-    .master("local[8]")
+    .master("local[%(cores)d]")
     .config("spark.sql.session.timeZone", "America/New_York")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
@@ -75,6 +79,7 @@ def _run_shard(shard: int, sf_dir: str) -> subprocess.CompletedProcess:
         "sf": sf_dir,
         "shard": shard,
         "n_shards": N_SHARDS,
+        "cores": SHARD_CORES,
     }
     return subprocess.run(
         [sys.executable, "-c", code],
@@ -118,3 +123,21 @@ def test_default_cpus_follows_env_then_host(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     monkeypatch.setattr(session.os, "cpu_count", lambda: 5)
     assert session.default_cpus() == 5
+
+
+def test_default_driver_memory_follows_env_then_host(monkeypatch, tmp_path):
+    """The driver heap comes from SPARK_GRAFT_DRIVER_MEM when it is set,
+    else half of the host's MemTotal, kept between 1g and 16g (never a
+    fixed heap larger than the host)."""
+    from scribedb_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session.default_driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    info = tmp_path / "meminfo"
+    monkeypatch.setattr(session, "MEMINFO", str(info))
+    for total_kb, want in ((16456384, "8035m"), (268435456, "16384m"), (1048576, "1024m")):
+        info.write_text(f"MemFree:  1000 kB\nMemTotal:       {total_kb} kB\n")
+        assert session.default_driver_memory() == want
+    info.unlink()
+    assert session.default_driver_memory() == "16g"
