@@ -355,7 +355,17 @@ def lsh_star_pairs(sig: DataFrame) -> DataFrame:
     before one tiny record per bucket shuffles; then a 1:n equi-join
     of signatures to roots — linear output, AQE-skew-splittable.
     Nothing in the plan is quadratic in bucket size.
+
+    Null doc_ids are dropped ONCE, before ``sig`` forks into the roots
+    arm and the join arm. Otherwise the join's ``doc_id != root``
+    condition lets Spark infer ``isnotnull(doc_id)`` and push it into
+    the join arm's scan only; the two arms then differ, their
+    exchanges cannot be reused, and a lazily built ``sig`` (shingle ->
+    md5 -> minhash) runs twice. With the filter first both arms are
+    one plan and the second reads a ``ReusedExchange``. The output is
+    unchanged: a null doc_id never reached it.
     """
+    sig = sig.filter(F.col("doc_id").isNotNull())
     roots = sig.groupBy("band", "s").agg(F.min("doc_id").alias("root"))
     return (
         sig.join(roots, on=["band", "s"])
@@ -1212,8 +1222,9 @@ def _embedding_cosine_compute(spark, sf_dir) -> DataFrame:
 
 
 def _semantic_state(spark, sf_dir) -> dict:
-    """Session-cached {'pairs', 'comp'} checkpoints of the exact
-    cosine pair kernel and its component labels. deps= ties the entry
+    """Session-cached {'pairs', 'comp'} of the exact cosine pair
+    kernel (checkpointed) and its component labels (a projection of
+    connected_components' checkpoint). deps= ties the entry
     to the embeddings file (gate-honesty rule: an in-session rewrite
     forces the kernel and the star rounds to re-run).
 
@@ -1233,9 +1244,10 @@ def _semantic_state(spark, sf_dir) -> dict:
 
     def build():
         pairs = _embedding_cosine_compute(spark, sf_dir).localCheckpoint()
+        # already a projection of connected_components' checkpoint
         comp = connected_components(
             pairs, id1="vec_id1", id2="vec_id2", out_id="vec_id"
-        ).localCheckpoint()
+        )
         return {"pairs": pairs, "comp": comp}
 
     return session_cache(
@@ -1278,6 +1290,11 @@ _COMPONENTS_ORACLE = f"""
     """
 
 
+# Large/small-star rounds after the contraction; proven O(log^2 n),
+# observed 0-7.
+MAX_STAR_ROUNDS = 30
+
+
 def connected_components(
     pairs: DataFrame,
     id1: str = "doc_id1",
@@ -1286,9 +1303,11 @@ def connected_components(
 ) -> DataFrame:
     """Distributed connected components over an undirected edge list
     — the shared grouping engine behind ``dedup_components`` (minhash
-    pair graph) and ``dedup_semantic_clusters`` (embedding-cosine
-    pair graph). Returns (out_id, component) for every node that
-    appears in an edge; component = min reachable node id.
+    pair graph), the semantic cluster and ANN keys (embedding pair
+    graphs) and the rep-grain component states. Returns (out_id,
+    component) for every node that appears in an edge to another
+    node; component = min reachable node id. A node whose only edges
+    are self-loops is not in the output.
 
     Two phases. (1) Partition-local contraction: each task runs a
     min-root union-find over its slice of the edge list (mapInPandas,
@@ -1301,10 +1320,19 @@ def connected_components(
     contraction typically 2-3 — each distributed round is a groupBy +
     join, so halving rounds halves shuffles. Plain min-label
     propagation needs O(diameter) rounds and its long-chain tail was
-    measured 10x slower on the sf0.1 graph. Converged state is a star
-    forest: every node points directly at its component min.
-    ``localCheckpoint`` truncates lineage between rounds; fixpoint =
-    unchanged (checksum, count) of the edge set.
+    measured 10x slower on the sf0.1 graph.
+
+    Convergence and output come from ONE grouped pass over the edge
+    set per round: union (u, parent=v, child=1) with (v, null, 0),
+    group on the node and keep its parent count, its smallest parent
+    and whether it is a parent; ``localCheckpoint`` that per-node
+    table. The edges (all v < u) are the final star forest iff no
+    node has two parents and no parent has a parent itself — one
+    filter + ``isEmpty`` on the checkpoint — and the answer is then
+    the projection (node, coalesce(parent, node)) of the same
+    checkpoint. Convergence is checked after the contraction and
+    after each of at most ``MAX_STAR_ROUNDS`` rounds; if it never
+    holds, this raises rather than return partial components.
     """
     pairs = pairs.select(
         F.col(id1).alias("doc_id1"), F.col(id2).alias("doc_id2")
@@ -1339,31 +1367,46 @@ def connected_components(
         .localCheckpoint()  # the pair computation runs once
     )
 
+    def node_table(e):
+        # per node: parents (edges out), smallest parent, is a parent
+        return (
+            e.select(
+                F.col("u").alias("node"),
+                F.col("v").alias("parent"),
+                F.lit(1).alias("child"),
+            )
+            .unionAll(
+                e.select(
+                    F.col("v").alias("node"),
+                    F.lit(None).cast("long").alias("parent"),
+                    F.lit(0).alias("child"),
+                )
+            )
+            .groupBy("node")
+            .agg(
+                F.count("parent").alias("n_parents"),
+                F.min("parent").alias("parent"),
+                (F.min("child") == 0).alias("is_parent"),
+            )
+            .localCheckpoint()
+        )
+
     def star_min(sym):
         # m(u) = min(neighborhood(u) incl u); u is the group key so
         # first(u) is exact
         return sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
 
-    def is_star_forest(e):
-        # Exact convergence test: every edge already has v < u, so e
-        # is the final answer iff (a) no node has two parents and
-        # (b) no edge target is itself re-pointed (no u->v->w chain).
-        # Two limit-1 probes on a tiny edge set — far cheaper than
-        # running a confirming star round to see the checksum repeat.
-        multi = (
-            e.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-        )
-        chain = e.alias("a").join(
-            e.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi"
-        )
-        return multi.isEmpty() and chain.isEmpty()
-
-    converged = False
-    for _ in range(31):  # proven O(log^2 n); observed 0-7 after contraction
-        if is_star_forest(e):
-            converged = True
+    for rnd in range(MAX_STAR_ROUNDS + 1):
+        nodes = node_table(e)
+        if nodes.filter(
+            (F.col("n_parents") > 1)
+            | ((F.col("n_parents") > 0) & F.col("is_parent"))
+        ).isEmpty():
+            return nodes.select(
+                F.col("node").alias(out_id),
+                F.coalesce("parent", "node").alias("component"),
+            )
+        if rnd == MAX_STAR_ROUNDS:
             break
         sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = star_min(sym)
@@ -1389,19 +1432,14 @@ def connected_components(
             .distinct()
         )
         e = small.localCheckpoint()
-    if not converged:
-        # partially merged components are silently WRONG groups —
-        # never hand them back as if final
-        raise RuntimeError(
-            "dedup_components: large/small-star did not reach its edge-set "
-            "fixpoint within 30 rounds (O(log^2 n) bound implies a bug or "
-            "pathological graph); refusing to return partial components"
-        )
-    comp = e.select(F.col("u").alias(out_id), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias(out_id)).subtract(
-        e.select(F.col("u").alias(out_id))
+    # partially merged components are silently WRONG groups — never
+    # hand them back as if final
+    raise RuntimeError(
+        f"connected_components (out_id={out_id!r}): large/small-star did "
+        f"not reach a star forest within {MAX_STAR_ROUNDS} rounds "
+        "(O(log^2 n) bound implies a bug or pathological graph); "
+        "refusing to return partial components"
     )
-    return comp.unionAll(roots.withColumn("component", F.col(out_id)))
 
 
 @register("dedup_components", oracle=_COMPONENTS_ORACLE)
@@ -1649,12 +1687,13 @@ def _semantic_ann_comp_compute(spark, sf_dir) -> DataFrame:
 
 
 def _semantic_ann_comp(spark, sf_dir) -> DataFrame:
-    """Session-cached checkpoint of the ANN component labels —
-    deps= ties the entry to the embeddings file."""
+    """Session-cached ANN component labels (a projection of
+    connected_components' checkpoint) — deps= ties the entry to the
+    embeddings file."""
     return session_cache(
         spark,
         ("semantic_ann_comp", sf_dir),
-        lambda: _semantic_ann_comp_compute(spark, sf_dir).localCheckpoint(),
+        lambda: _semantic_ann_comp_compute(spark, sf_dir),
         deps=[f"{sf_dir}/embeddings.parquet"],
     )
 

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import _jobs_in
 from pyspark.sql import functions as F
 
 from scribedb_spark.compare import (
@@ -205,16 +206,6 @@ def test_chunk_fingerprints_equal_per_side_definition(spark, hash_mode):
     # 40 vs 44 rows: chunk 2 holds k=12 (changed), chunk 5 the first
     # extra rows, chunk 6 exists on the target only
     assert statuses == ["OK", "OK", "NOK", "OK", "OK", "NOK", "NOK"]
-
-
-def _jobs_in(sc, group, fn):
-    """(fn(), the number of Spark jobs it ran under job group ``group``)"""
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_compare_builds_chunk_report_on_first_read(spark, t_test):

@@ -893,8 +893,10 @@ def test_lsh_star_partial_min_no_self_join(qmod, spark, sf_dir):
     size; the star's root join output is linear)."""
     p = plan(qmod, spark, sf_dir, "dedup_lsh_star")
     assert "partial_min(doc_id" in p
-    # exactly one join (sig -> bucket roots); the signature stage is
-    # checkpointed so it is computed once, not once per join branch
+    # exactly one join (sig -> bucket roots); both arms read the
+    # session-cached signature checkpoint (on a lazy sig the join arm
+    # reuses the roots arm's exchange instead: test_skew.py's
+    # test_lsh_star_reads_lazy_signatures_once)
     # tree + per-node detail => one join node appears twice
     assert p.count("HashJoin") + p.count("SortMergeJoin") == 2
     assert "Scan parquet" not in p  # both branches read the checkpoint

@@ -124,6 +124,49 @@ def test_lsh_star_components_equal_clique_components(hot_band_sig):
     assert comp_map(star) == comp_map(clique)
 
 
+def _reference_lsh_star_pairs(sig):
+    """The earlier lsh_star_pairs: ``sig`` forks into the roots arm and
+    the join arm unfiltered."""
+    roots = sig.groupBy("band", "s").agg(F.min("doc_id").alias("root"))
+    return (
+        sig.join(roots, on=["band", "s"])
+        .filter(F.col("doc_id") != F.col("root"))
+        .select(F.col("root").alias("doc_id1"), F.col("doc_id").alias("doc_id2"))
+        .distinct()
+    )
+
+
+def test_lsh_star_reads_lazy_signatures_once(spark, hot_band_sig):
+    """On a lazily built signature frame the shingle -> minhash stage
+    runs once: the executed plan has one shingling Generate, or else a
+    ReusedExchange. Rows equal the earlier formulation, also with a
+    null doc_id (a copy of doc 0's text) and on the hot-band table."""
+    import pyarrow as pa
+
+    from scribedb_spark.operators.dedup import band_signatures, lsh_star_pairs
+
+    words = [f"w{i}" for i in range(40)]
+    texts = [" ".join(words[i : i + 12]) for i in range(0, 28, 2)]
+    texts += [t.replace("w20", "x") for t in texts[:6]]  # near copies
+    ids = list(range(len(texts))) + [None]
+    docs = spark.createDataFrame(
+        pa.table(
+            {"doc_id": ids, "text": texts + [texts[0]]},
+            schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())]),
+        )
+    )
+    star = lsh_star_pairs(band_signatures(docs))
+    rows = sorted(star.collect())
+    final = star._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    shingling = [ln for ln in final.splitlines() if "Generate" in ln and "regexp_extract_all" in ln]
+    assert len(shingling) == 1 or "ReusedExchange" in final, final
+    assert rows and rows == sorted(_reference_lsh_star_pairs(band_signatures(docs)).collect())
+    hot = hot_band_sig.localCheckpoint()  # one scan of the list-built rows
+    assert sorted(lsh_star_pairs(hot).collect()) == sorted(
+        _reference_lsh_star_pairs(hot).collect()
+    )
+
+
 def test_containment_salted_equals_unsalted_on_hot_token(spark):
     """dedup_containment_salted: salting the candidate join's token
     key must relocate rows, never drop them — equality pinned on a
