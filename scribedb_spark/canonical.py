@@ -17,10 +17,12 @@ engine-independent spec:
 ``canonical_row``   ``(c1,c2,...)`` rendering of a full row.
 ``fp_row_md5``      per-row MD5 of the canonical text (ref F1).
 ``fp_unordered``    commutative dataset fingerprint — SUM of a 60-bit
-                    integer slice of each row's MD5. Fully parallel
+                    integer slice of each row's MD5 (the default, any
+                    engine can reproduce it), or with
+                    ``algo='xxhash64'`` of a hash of the row's typed
+                    values (the ``compare()`` verdict). Fully parallel
                     (map-side partial aggregation, no order
-                    dependency); this is the engine's default equality
-                    check and scales to any row count via
+                    dependency) and scales to any row count via
                     DECIMAL(38,0) accumulation (2^60 * 10^12 rows ~
                     2^100 < 10^38).
 ``fp_chain``        the reference's order-sensitive chained MD5
@@ -32,6 +34,13 @@ engine-independent spec:
                     latent bug (reference scribedb/oracle.py:77-81) —
                     chunks here are defined by global row number, so
                     the result is reproducible under any parallelism.
+
+The canonical text is lossy on purpose — doubles print to 6 decimals,
+timestamps to the second, as the reference renders them — so the text
+fingerprints (``fp_row_md5``, ``fp_chain`` and the md5 ``fp_unordered``)
+can match for rows whose values differ. The verdict and the diffs of
+``compare`` compare exact typed values instead: a pair whose verdict
+is "different" can still get an all-``OK`` chunk report.
 
 Scale notes (100 TB design):
 - ``fp_unordered`` is one ``groupBy().agg(sum)`` — partial aggregation
@@ -133,6 +142,24 @@ def _fp_term(row_md5: Column) -> Column:
     return F.conv(F.substring(row_md5, 1, 15), 16, 10).cast("decimal(38,0)")
 
 
+def _typed_values(df: DataFrame, cols: list[str] | None = None) -> list[Column]:
+    """The columns a row's typed hash reads: one null flag per column,
+    then the values. Spark's hash skips a null value, so without the
+    flags (null, 5) and (5, null) would hash alike. Its double and
+    float hashes already map -0.0 to 0.0 and every NaN to one value,
+    as ``groupBy`` does. Array, struct and map values hash as their
+    ``canonical_cell`` text: Spark cannot hash a map, and a nested
+    null would again be skipped."""
+    cols = cols or df.columns
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    nested = (T.ArrayType, T.MapType, T.StructType)
+    values = [
+        canonical_cell(F.col(c), fields[c]) if isinstance(fields[c], nested) else F.col(c)
+        for c in cols
+    ]
+    return [F.isnull(c) for c in cols] + values
+
+
 def fp_unordered(
     df: DataFrame,
     cols: list[str] | None = None,
@@ -147,13 +174,16 @@ def fp_unordered(
     safe — unlike the reference's chained hash, whose Oracle Merge is
     order-unsafe (reference scribedb/oracle.py:77-81).
 
-    ``algo``: 'md5' (default — 60-bit slice of the row MD5,
-    reproducible in any engine for cross-system checks) or 'xxhash64'
-    (Spark-native, ~5x faster; right choice when both sides are
-    computed by this engine, e.g. the compare() fast path).
+    ``algo``: 'md5' (default — 60-bit slice of the MD5 of the
+    canonical row text, reproducible in any engine for cross-system
+    checks) or 'xxhash64' (Spark-native, for when both sides are
+    computed by this engine, e.g. the compare() fast path). The
+    xxhash64 term hashes the typed values, not the lossy text: two
+    rows get the same term when a ``groupBy`` on every column would
+    put them in one group, so it agrees with the symmetric diff.
     """
     if algo == "xxhash64":
-        term = F.xxhash64(canonical_row(df, cols)).cast("decimal(38,0)")
+        term = F.xxhash64(*_typed_values(df, cols)).cast("decimal(38,0)")
         aggs = [
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(term).alias("fp"),

@@ -894,8 +894,9 @@ def fp_row_md5_q(spark, sf_dir):
 )
 def fp_unordered_q(spark, sf_dir):
     """F3: commutative dataset fingerprint over lineitem key columns
-    (the engine's default equality check — order-insensitive, fully
-    parallel, one scalar per side). The engine keeps the fingerprint
+    (the md5 form any engine can reproduce; compare()'s verdict uses
+    the typed xxhash64 form — both order-insensitive, fully parallel,
+    one scalar per side). The engine keeps the fingerprint
     as DECIMAL(38,0); this checkable key surfaces it as DOUBLE because
     DuckDB's pandas bridge degrades wide decimals to float anyway —
     the exact decimal converts to the same nearest double on both

@@ -3,13 +3,20 @@
 
 from __future__ import annotations
 
+import re
+import threading
+from hashlib import md5
+
 import pytest
 from conftest import _jobs_in
 from pyspark.sql import functions as F
 
+from scribedb_spark.canonical import fp_unordered
 from scribedb_spark.compare import (
     fingerprint_delta,
+    CompareResult,
     CompareSpec,
+    _keyed_classes,
     SchemaMismatch,
     chunk_fingerprints,
     compare,
@@ -687,10 +694,10 @@ def test_bad_keys_rejected_before_any_job(spark, t_test, keys, named, differs):
 
 
 def test_keyed_compare_job_budget(spark, t_test, tmp_path):
-    """A keyed compare() of two differing frames runs at most six jobs
-    (fingerprints, the classification checkpoint, its counts), and
-    reading keyed_diff and changed_cols afterwards scans neither input
-    — both are projections of the checkpoint."""
+    """A keyed compare() of two differing frames runs at most four jobs
+    (fingerprints, and the classification checkpoint, which observes
+    its own counts), and reading keyed_diff and changed_cols afterwards
+    scans neither input — both are projections of the checkpoint."""
     sc = spark.sparkContext
     t_test.write.parquet(str(tmp_path / "src"))
     mutated = t_test.withColumn("b", F.when(F.col("a") % 500 == 0, F.lit(0)).otherwise(F.col("b")))
@@ -698,7 +705,7 @@ def test_keyed_compare_job_budget(spark, t_test, tmp_path):
     src = spark.read.parquet(str(tmp_path / "src"))
     tgt = spark.read.parquet(str(tmp_path / "tgt"))
     res, jobs = _jobs_in(sc, "keyed-compare", lambda: compare(src, tgt, CompareSpec(keys=["a"])))
-    assert jobs <= 6
+    assert jobs <= 4
     assert res.diff_count == symmetric_diff(src, tgt).count() == 2 * 10 + 1
     for df in (res.keyed_diff, res.changed_cols):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -713,3 +720,181 @@ def test_keyed_compare_job_budget(spark, t_test, tmp_path):
         (a, "changed") for a in range(500, 5001, 500)
     }
     assert {r["changed_cols"] for r in cc} == {"", "b"}
+
+
+def _operators(plan: str) -> list[str]:
+    """Operator names of a plan tree string, top down."""
+    return [
+        re.match(r"[\s:+\-]*(?:\*\(\d+\) )?(\w+)", line).group(1)
+        for line in plan.splitlines()
+        if line.strip()
+    ]
+
+
+def test_keyed_classes_sort_once(spark, t_test, tmp_path):
+    """The keyed classification sorts every row once: its plan has one
+    Exchange, on the key, and one Sort above it, with both halves of
+    the sort aggregate above the Exchange — not a partial aggregate
+    sorting the rows before the exchange and a final one re-sorting
+    them after it."""
+    t_test.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    tgt = src.withColumn("b", F.col("b") + 1)
+    plan = _keyed_classes(src, tgt, ["a"])._jdf.queryExecution().executedPlan().toString()
+    ops = _operators(plan)
+    assert ops.count("Sort") == 1 and ops.count("Exchange") == 1, plan
+    below = ops[ops.index("Exchange") :]
+    assert not [op for op in below if "Aggregate" in op], plan
+    assert "Sort" not in below, plan
+
+
+# ---------------------------------------------------------------------------
+# the verdict agrees with the symmetric diff
+# ---------------------------------------------------------------------------
+
+#: name -> (columns, src rows, tgt rows); the key column is k
+_VERDICT_CASES = {
+    "doubles-past-6-decimals": (
+        "k, x", "(1, 0.1234561D), (2, 1.0D)", "(1, 0.1234564D), (2, 1.0D)",
+    ),
+    "sub-second-timestamps": (
+        "k, ts",
+        "(1, timestamp'2024-01-01 00:00:00.100'), (2, timestamp'2024-01-01 00:00:01')",
+        "(1, timestamp'2024-01-01 00:00:00.900'), (2, timestamp'2024-01-01 00:00:01')",
+    ),
+    "null-swapped-between-ints": (
+        "k, a, b", "(1, NULL, 5), (2, 1, 1)", "(1, 5, NULL), (2, 1, 1)",
+    ),
+    "signed-zero-and-nan": (
+        "k, x, y",
+        "(1, double('-0.0'), double('NaN')), (2, 0.0D, 1.0D)",
+        "(1, 0.0D, double('NaN')), (2, double('-0.0'), 1.0D)",
+    ),
+    "int-vs-bigint-equal": ("k, v", "(1, 1), (2, 2)", "(1L, 1L), (2L, 2L)"),
+    "int-vs-bigint-changed": ("k, v", "(1, 1), (2, 2)", "(1L, 1L), (2L, 20L)"),
+    "decimal-vs-double-equal": ("k, v", "(1, 1.50), (2, 2.25)", "(1, 1.5D), (2, 2.25D)"),
+    "decimal-vs-double-changed": ("k, v", "(1, 1.50), (2, 2.25)", "(1, 1.5D), (2, 2.26D)"),
+    "array-and-struct-equal": (
+        "k, arr, st",
+        "(1, array(1, NULL), named_struct('p', 1, 'q', 'a'))",
+        "(1, array(1, NULL), named_struct('p', 1, 'q', 'a'))",
+    ),
+    "array-changed": (
+        "k, arr, st",
+        "(1, array(1, NULL), named_struct('p', 1, 'q', 'a'))",
+        "(1, array(NULL, 1), named_struct('p', 1, 'q', 'a'))",
+    ),
+    "struct-changed": (
+        "k, arr, st",
+        "(1, array(1, NULL), named_struct('p', 1, 'q', 'a'))",
+        "(1, array(1, NULL), named_struct('p', 1, 'q', 'b'))",
+    ),
+}
+
+
+@pytest.mark.parametrize("keys", [[], ["k"]], ids=["keyless", "keyed"])
+@pytest.mark.parametrize("case", list(_VERDICT_CASES))
+def test_verdict_agrees_with_symmetric_diff(spark, case, keys):
+    """compare()'s verdict is the symmetric diff's: equal exactly when
+    the diff has no rows, and diff_count is its size. The verdict hashes
+    typed values, so doubles past 6 decimals and sub-second timestamps
+    count, a null moved to another column counts, -0.0/0.0 and NaN are
+    equal, and an int or decimal side compares by value with a bigint or
+    double one; array and struct columns hash as their canonical text."""
+    cols, s_rows, t_rows = _VERDICT_CASES[case]
+    src, tgt = _values(spark, s_rows, cols), _values(spark, t_rows, cols)
+    res = compare(src, tgt, CompareSpec(keys=keys))
+    n = symmetric_diff(src, tgt).count()
+    assert res.equal == (n == 0)
+    assert res.diff_count == n
+    assert res.equal == case.endswith(("equal", "signed-zero-and-nan"))
+
+
+@pytest.mark.parametrize("keys", [[], ["k"]], ids=["keyless", "keyed"])
+def test_map_column_verdict(spark, keys):
+    """Map columns hash as their canonical text (Spark cannot hash or
+    group a map): an identical map column is equal on the fast path,
+    and a changed one changes the fingerprint."""
+    cols = "k, m"
+    same = _values(spark, "(1, map('a', 1.5D)), (2, map('b', NULL))", cols)
+    changed = _values(spark, "(1, map('a', 1.5D)), (2, map('b', 0.0D))", cols)
+    res = compare(same, _values(spark, "(2, map('b', NULL)), (1, map('a', 1.5D))", cols),
+                  CompareSpec(keys=keys))
+    assert res.equal and res.diff_count == 0
+
+    def fp(df):
+        return fp_unordered(df, algo="xxhash64").first()["fp"]
+
+    assert fp(same) != fp(changed)
+
+
+def test_fp_unordered_md5_unchanged(spark):
+    """The md5 fingerprint hashes the canonical text: 6-decimal
+    doubles, second-precision timestamps and the NULL marker, so it
+    cannot tell these rows apart while the typed xxhash64 one can."""
+    cols = "k, x, ts"
+    a = _values(spark, "(1, 0.1234561D, timestamp'2024-01-01 00:00:00.100')", cols)
+    b = _values(spark, "(1, 0.1234564D, timestamp'2024-01-01 00:00:00.900')", cols)
+    text = [fp_unordered(df).first() for df in (a, b)]
+    assert text[0] == text[1]
+    assert text[0]["fp"] == int(md5(b"(1,0.123456,2024-01-01 00:00:00)").hexdigest()[:15], 16)
+    xx = [fp_unordered(df, algo="xxhash64").first() for df in (a, b)]
+    assert xx[0]["fp"] != xx[1]["fp"]
+
+
+# ---------------------------------------------------------------------------
+# counted inside the checkpoint job; diff built on first read
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("side", ["src", "tgt"])
+def test_keyed_drift_with_one_side_empty_returns(spark, side):
+    """The observed counts arrive with the checkpoint job even when one
+    side has no rows: compare() returns instead of waiting on them."""
+    full = _values(spark, "(1, 'a'), (2, 'b')", "k, v")
+    src, tgt = (full.limit(0), full) if side == "src" else (full, full.limit(0))
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(res=compare(src, tgt, CompareSpec(keys=["k"]))), daemon=True
+    )
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "compare() did not return"
+    res = out["res"]
+    assert not res.equal and res.diff_count == 2
+    change = "added" if side == "src" else "removed"
+    assert {(r["k"], r["change"]) for r in res.keyed_diff.collect()} == {(1, change), (2, change)}
+
+
+@pytest.mark.parametrize("path", ["equal", "keyed", "keyless"])
+@pytest.mark.parametrize("row_limit", [0, 5, 50])
+def test_diff_is_capped_symmetric_diff(spark, t_test, path, row_limit):
+    """res.diff is symmetric_diff(...).limit(row_limit) on every path
+    (no cap at 0), built on its first read; later reads return the same
+    frame."""
+    tgt = t_test if path == "equal" else t_test.withColumn(
+        "b", F.when(F.col("a") % 500 == 0, F.lit(0)).otherwise(F.col("b"))
+    )
+    keys = ["a"] if path == "keyed" else []
+    res = compare(t_test, tgt, CompareSpec(keys=keys, row_limit=row_limit))
+    assert res.equal == (path == "equal")
+    full = _rows(symmetric_diff(t_test, tgt))
+    got = _rows(res.diff)
+    assert res.diff.dtypes == symmetric_diff(t_test, tgt).dtypes
+    if row_limit and row_limit < len(full):
+        assert len(got) == row_limit and set(got) <= set(full)
+    else:
+        assert got == full
+    assert res.diff is res.diff
+
+
+def test_compare_result_accepts_a_diff(spark, t_test):
+    """A CompareResult built by hand keeps the diff it is given,
+    positionally or by name, and a later assignment replaces it."""
+    a, b = t_test.limit(1), t_test.limit(2)
+    assert CompareResult(False, 1, 2, 1, a).diff is a
+    res = CompareResult(equal=False, src_rows=1, tgt_rows=2, diff_count=1, diff=a)
+    assert res.diff is a
+    res.diff = b
+    assert res.diff is b
+    assert CompareResult(True, 0, 0, 0).diff is None
