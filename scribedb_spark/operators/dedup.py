@@ -708,7 +708,7 @@ def dedup_simhash_receipts(spark, sf_dir) -> DataFrame:
     (the levenshtein-receipts discipline, r13). The r15 collapse made
     the quarter-bucket candidate/verify stages rep-corpus-sized, but
     dedup_simhash's OUTPUT still pays the duplication inflation by
-    contract (SCALE_SMOKE_r15: its 256x wall is counting a 9.47
+    contract (at the 256x scale smoke its wall is counting a 9.47
     billion-member-pair expansion). The receipt is what a dedup
     ledger actually consumes: which distinct-content pairs are
     near-dups and how many concrete document pairs each verdict
@@ -3410,7 +3410,7 @@ def _sampled_rep_jaccards_compute(spark, sf_dir: str) -> DataFrame:
     EXACT side: the 256x octave filled the host disk inside the
     member-grain sampled-postings join (sample and postings both
     inflate N-fold on identical text, so the co-occurrence join pays
-    ~N^2 — SCALE_SMOKE_r14's honest boundary row), while every
+    ~N^2 — the 256x scale smoke's boundary row), while every
     quantity the audits aggregate is a pure function of the two
     TEXTS times a member COUNT:
 
@@ -3578,8 +3578,7 @@ def dedup_recall_report(spark, sf_dir) -> DataFrame:
     rep pair set, and member-pair counts transfer as per-group count
     products — the member pair list never materializes for the
     audit, and no stage inflates with exact duplication (the
-    member-grain plan filled host disk at 256x, SCALE_SMOKE_r14's
-    boundary row). Output is <= 9 decile rows.
+    member-grain plan filled host disk at the 256x scale smoke). Output is <= 9 decile rows.
 
     r15 optimization round: the audit frame comes from the session-
     cached sampled_rep_jaccards (shared with the band tuner and the
@@ -4024,7 +4023,7 @@ def _rep_pair_state(spark, sf_dir: str) -> dict:
     still MATERIALIZED the member-pair LSH list first (the band
     self-join over all documents) — at the 256x duplicated-union
     octave a single hot band bucket's quadratic pair expansion OOMs
-    one task's heap (SCALE_SMOKE_r13 boundary record). Here the band
+    one task's heap (the r13 256x scale smoke's boundary row). Here the band
     join runs over REPRESENTATIVE signatures only, so bucket sizes —
     and the whole candidate stage — stay base-corpus-sized at ANY
     duplication factor; member pairs are derived lazily (see
@@ -4663,8 +4662,8 @@ def dedup_substring_spans(spark, sf_dir) -> DataFrame:
     the driver hash-check proves both reductions exact on every run.
 
     Scale: the r11 64x duplicated-union octave killed this key in the
-    match-volume shuffle (SPILL out of host disk, SCALE_SMOKE_r11 —
-    4895x pair inflation times full per-pair match volume). Now the
+    match-volume shuffle (SPILL out of host disk at the 64x scale
+    smoke — 4895x pair inflation times full per-pair match volume). Now the
     match stage pays (a) stage-1 anchored volume = raw rep-pair
     volume / {18}, then (b) matched positions on qualifying-run
     diagonals only — both over the base-sized rep-pair set. The pick
@@ -4773,7 +4772,7 @@ def dedup_substring_rewrite(spark, sf_dir) -> DataFrame:
     contained victim hashes the empty string on both engines).
 
     Scale: span detection is pair-attributed (1396x pairs -> 3.4x
-    wall measured at 16x, SCALE_SMOKE_r11); the rewrite itself joins
+    wall measured at the 16x scale smoke); the rewrite itself joins
     the <=1-row-per-victim span table back to the corpus on doc_id —
     one hash join keyed by the primary key, then per-row slicing
     inside codegen. At 100 TB the receipt table is the shuffle-cheap

@@ -7,13 +7,28 @@ dataset restricted to the batch's key range; per-batch verdicts
 accumulate in a driver-side list (tests) or a sink table (production).
 This is the streaming analog of the reference's chunk loop
 (reference main.py:216-247): a chunk == a micro-batch.
+
+Every sink here runs through one function, ``maintain(stream_df,
+state, fold, query_name)``. Its state is a namespace built per call
+(``types.SimpleNamespace``; ``stream_compare`` keeps its
+``StreamDiffResult``), and ``maintain`` pins each micro-batch once
+(``localCheckpoint``: the source view is transient), skips empty
+batches, and hands the rest to ``fold(state, rows, batch_id)``.
+foreachBatch is at-least-once — a restart re-delivers a batch_id — so
+``maintain`` skips any batch_id at or below the last one it folded
+(``state.last_batch_id``, Spark's foreachBatch dedupe recipe). The
+per-batch function is ``state.commit_batch(batch_df, batch_id)`` on
+every holder, so a replay can be driven without a stream.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from scribedb_spark.compare import CompareSpec, compare
 
@@ -25,6 +40,60 @@ class StreamDiffResult:
     @property
     def total_diff(self) -> int:
         return sum(b["diff_count"] for b in self.batches)
+
+
+def maintain(stream_df: DataFrame, state, fold, query_name: str) -> tuple:
+    """Start an ``availableNow`` foreachBatch query over ``stream_df``
+    that folds every non-empty micro-batch into ``state`` with
+    ``fold(state, rows, batch_id)``, where ``rows`` is the batch
+    pinned once by ``localCheckpoint``. A batch_id at or below the
+    last one folded is a replay and is skipped, so a re-delivered
+    batch never folds twice. Sets ``state.last_batch_id`` and
+    ``state.commit_batch`` (the per-batch function) and returns
+    (query, state)."""
+    state.last_batch_id = -1
+
+    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= state.last_batch_id:
+            return
+        rows = batch_df.localCheckpoint()  # pin: the source view is transient
+        if rows.take(1):  # an empty batch folds nothing
+            fold(state, rows, batch_id)
+            state.last_batch_id = batch_id
+
+    state.commit_batch = commit_batch
+    w = stream_df.writeStream.foreachBatch(commit_batch).queryName(query_name)
+    return w.trigger(availableNow=True).start(), state
+
+
+def _union(parts: list) -> DataFrame:
+    """Lazy union of same-schema frames (each already pinned)."""
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _refold(state, patch: DataFrame, keys: list, *aggs) -> DataFrame:
+    """Fold ``patch`` into ``state`` (None before the first batch):
+    union, re-aggregate on ``keys`` with ``aggs``, and checkpoint so
+    the lineage stays flat across batches."""
+    u = patch if state is None else state.unionByName(patch)
+    return u.groupBy(*keys).agg(*aggs).localCheckpoint()
+
+
+def _reject_seen(seen, rows: DataFrame, who: str, what: str) -> DataFrame:
+    """LOUD replay guard for states that are exact only under
+    at-most-once ingestion of disjoint doc_ids: raise if any doc_id of
+    ``rows`` was already ingested (fail the query, never corrupt the
+    state), else return the ``seen`` doc_ids grown by the batch's."""
+    ids = rows.select("doc_id")
+    if seen is not None:
+        dup = ids.join(seen, "doc_id").take(1)
+        if dup:
+            raise ValueError(
+                f"{who}: batch replays already-ingested doc_id "
+                f"{dup[0]['doc_id']} — {what}"
+            )
+    # disjoint from ``seen`` now, so a plain union stays a set of ids
+    return (ids if seen is None else seen.unionByName(ids)).localCheckpoint()
 
 
 def stream_compare(
@@ -43,15 +112,12 @@ def stream_compare(
     prunes; with a partitioned reference, partition pruning applies).
     """
     spec = spec or CompareSpec()
-    acc = StreamDiffResult()
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(acc, rows: DataFrame, batch_id: int) -> None:
         ref_slice = reference_df.join(
-            batch_df.select(*keys).distinct(), on=keys, how="left_semi"
+            rows.select(*keys).distinct(), on=keys, how="left_semi"
         )
-        res = compare(ref_slice, batch_df.select(*reference_df.columns), spec)
+        res = compare(ref_slice, rows.select(*reference_df.columns), spec)
         acc.batches.append(
             {
                 "batch_id": batch_id,
@@ -62,13 +128,7 @@ def stream_compare(
             }
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, acc
+    return maintain(stream_df, StreamDiffResult(), fold, query_name)
 
 
 def stream_fp_maintain(
@@ -96,27 +156,13 @@ def stream_fp_maintain(
     """
     from scribedb_spark.canonical import fp_delta_update
 
-    class _Holder:
-        fps = base_fps.localCheckpoint()
-
-    holder = _Holder()
-    empty = stream_df.sparkSession.createDataFrame([], stream_df.schema)
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
-        holder.fps = fp_delta_update(
-            holder.fps, empty, rows, key, cols, n_chunks
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
+        s.fps = fp_delta_update(
+            s.fps, rows.limit(0), rows, key, cols, n_chunks
         ).localCheckpoint()
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, holder
+    state = SimpleNamespace(fps=base_fps.localCheckpoint())
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_iblt_maintain(
@@ -147,25 +193,12 @@ def stream_iblt_maintain(
         _iblt_sketch,
     )
 
-    class _Holder:
-        cells = base_cells.localCheckpoint()
-
-    holder = _Holder()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
         patch = _iblt_cell_agg(_iblt_sketch(rows, 1, key_col, value_cols))
-        holder.cells = _iblt_merge(holder.cells, patch).localCheckpoint()
+        s.cells = _iblt_merge(s.cells, patch).localCheckpoint()
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, holder
+    state = SimpleNamespace(cells=base_cells.localCheckpoint())
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_lm_maintain(
@@ -188,47 +221,22 @@ def stream_lm_maintain(
     Returns (query, holder) where ``holder.cb`` / ``holder.cp`` are
     the maintained tables (localCheckpoint'd per batch — flat
     lineage)."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.operators.curation import lm_bigrams
 
-    class _Holder:
-        cb = base_cb.localCheckpoint()
-        cp = base_cp.localCheckpoint()
-
-    holder = _Holder()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.filter(
-            F.size(F.split(F.col("text"), " ")) >= 2
-        ).localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
-        bg = lm_bigrams(rows)
-        holder.cb = (
-            holder.cb.unionByName(
-                bg.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
-            )
-            .groupBy("bg")
-            .agg(F.sum("cb").alias("cb"))
-            .localCheckpoint()
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
+        bg = lm_bigrams(rows.filter(F.size(F.split(F.col("text"), " ")) >= 2))
+        one = F.lit(1).cast("long")
+        s.cb = _refold(
+            s.cb, bg.select("bg", one.alias("cb")), ["bg"], F.sum("cb").alias("cb")
         )
-        holder.cp = (
-            holder.cp.unionByName(
-                bg.groupBy("t1").agg(F.count(F.lit(1)).alias("cp"))
-            )
-            .groupBy("t1")
-            .agg(F.sum("cp").alias("cp"))
-            .localCheckpoint()
+        s.cp = _refold(
+            s.cp, bg.select("t1", one.alias("cp")), ["t1"], F.sum("cp").alias("cp")
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    state = SimpleNamespace(
+        cb=base_cb.localCheckpoint(), cp=base_cp.localCheckpoint()
     )
-    return q, holder
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_postings_persist(
@@ -254,15 +262,16 @@ def stream_postings_persist(
     before the checkpoint commit, or a restart mid-batch, re-delivers
     the same batch_id), so a bare ``mode('append')`` would land the
     batch's (doc_id, term, tf) rows twice and permanently double-count
-    dl/df/tf in every downstream BM25 score. Each batch is instead
-    staged to an underscore-prefixed scratch dir (invisible to parquet
-    readers) and its part files are then renamed into the artifact
-    under DETERMINISTIC per-batch names (``batch-<id>-<k>.parquet``),
-    after deleting whatever a previous attempt of the SAME batch_id
-    left behind — a replay rewrites its own files instead of
-    duplicating them. (Posix rename semantics; an object-store
-    deployment swaps this step for the table format's commit
-    protocol.)
+    dl/df/tf in every downstream BM25 score. ``maintain`` skips a
+    batch_id this query already committed; across a restart (a fresh
+    holder) each batch is instead staged to an underscore-prefixed
+    scratch dir (invisible to parquet readers) and its part files are
+    then renamed into the artifact under DETERMINISTIC per-batch names
+    (``batch-<id>-<k>.parquet``), after deleting whatever a previous
+    attempt of the SAME batch_id left behind — a replay rewrites its
+    own files instead of duplicating them. (Posix rename semantics; an
+    object-store deployment swaps this step for the table format's
+    commit protocol.)
 
     The artifact's meta sidecar (persist.py) is untouched: its source
     fingerprint describes the BASE build inputs; once a stream owns
@@ -277,18 +286,7 @@ def stream_postings_persist(
     import os
     import shutil
 
-    from pyspark.sql import functions as F
-
-    class _Holder:
-        pass
-
-    holder = _Holder()
-    holder.dest = dest
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
         stage = os.path.join(dest, f"_stage_batch_{batch_id}")
         (
             rows.select(
@@ -308,15 +306,7 @@ def stream_postings_persist(
             )
         shutil.rmtree(stage, ignore_errors=True)
 
-    holder.commit_batch = per_batch
-
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, holder
+    return maintain(stream_df, SimpleNamespace(dest=dest), fold, query_name)
 
 
 def stream_quality_maintain(
@@ -341,37 +331,17 @@ def stream_quality_maintain(
     ``base_hist`` is the base side's (is_batch=False, bin, c) rows.
     Returns (query, holder) where ``holder.h`` is the maintained
     <=20-row histogram (localCheckpoint'd per batch — flat lineage)."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.operators.curation import (
         quality_bin_hist,
         quality_bins,
     )
 
-    class _Holder:
-        h = base_hist.localCheckpoint()
-
-    holder = _Holder()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
         patch = quality_bin_hist(quality_bins(rows, is_batch=F.lit(True)))
-        holder.h = (
-            holder.h.unionByName(patch)
-            .groupBy("is_batch", "bin")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
+        s.h = _refold(s.h, patch, ["is_batch", "bin"], F.sum("c").alias("c"))
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, holder
+    state = SimpleNamespace(h=base_hist.localCheckpoint())
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_freshness_maintain(
@@ -393,41 +363,18 @@ def stream_freshness_maintain(
     Returns (query, holder) where ``holder.state`` is the maintained
     per-type table (<= #event_types rows, localCheckpoint'd per batch
     — flat lineage)."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.analytics import freshness_state
 
-    class _Holder:
-        state = None
-
-    holder = _Holder()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
-        patch = freshness_state(rows)
-        cur = holder.state
-        if cur is None:
-            holder.state = patch.localCheckpoint()
-            return
-        holder.state = (
-            cur.unionByName(patch)
-            .groupBy("event_type")
-            .agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.max("last_seen_us").cast("long").alias("last_seen_us"),
-            )
-            .localCheckpoint()
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
+        s.state = _refold(
+            s.state,
+            freshness_state(rows),
+            ["event_type"],
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.max("last_seen_us").cast("long").alias("last_seen_us"),
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, holder
+    return maintain(stream_df, SimpleNamespace(state=None), fold, query_name)
 
 
 def stream_source_overlap_maintain(
@@ -442,8 +389,8 @@ def stream_source_overlap_maintain(
       every document seen (the incrementally-maintained LSH index a
       production pipeline keeps beside the corpus). It is a LAZY
       UNION of per-batch localCheckpoint'd frames: each batch pins
-      only its OWN signatures (O(|batch|) checkpoint work — r11
-      ADVICE: re-checkpointing the accumulated index every batch is
+      only its OWN signatures (O(|batch|) checkpoint work —
+      re-checkpointing the accumulated index every batch would be
       quadratic in total documents streamed) and the union plan just
       scans the already-pinned blocks when the next batch joins
       against it,
@@ -462,52 +409,32 @@ def stream_source_overlap_maintain(
     band-bucket join against the index — the same incremental shape
     dedup_incremental proves; the count tables are |sources|^2-
     bounded."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.operators.dedup import band_signatures
 
-    class _Holder:
-        def __init__(self) -> None:
-            # instance state in __init__ (r14 ADVICE: a class-level
-            # mutable default list would be shared across maintainers)
-            self.sig = None  # (doc_id, band, s, source) — lazy union
-            self.cnt = None  # (source_a, source_b, n_pairs)
-            self.ds = None   # (source, n_docs)
-            self._sig_parts: list = []  # per-batch checkpointed frames
+    def side(sig: DataFrame, id_col: str, src_col: str) -> DataFrame:
+        return sig.select(
+            F.col("doc_id").alias(id_col), "band", "s",
+            F.col("source").alias(src_col),
+        )
 
-    holder = _Holder()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
         bsig = (
             band_signatures(rows.select("doc_id", "text"))
             .join(rows.select("doc_id", "source"), "doc_id")
             .localCheckpoint()
         )
-        # new x old (the maintained index) + new x new (within-batch)
-        a = bsig.select(
-            F.col("doc_id").alias("id_a"), "band", "s",
-            F.col("source").alias("sa"),
-        )
-        arms = []
-        if holder.sig is not None:
-            old = holder.sig.select(
-                F.col("doc_id").alias("id_b"), "band", "s",
-                F.col("source").alias("sb"),
+        # new x new (within-batch) + new x old (the maintained index)
+        a = side(bsig, "id_a", "sa")
+        arms = [
+            a.join(side(bsig, "id_b", "sb"), ["band", "s"]).filter(
+                F.col("id_a") < F.col("id_b")
             )
-            arms.append(a.join(old, ["band", "s"]))
-        b = bsig.select(
-            F.col("doc_id").alias("id_b"), "band", "s",
-            F.col("source").alias("sb"),
-        )
-        arms.append(a.join(b, ["band", "s"]).filter(F.col("id_a") < F.col("id_b")))
-        matched = arms[0]
-        for arm in arms[1:]:
-            matched = matched.unionByName(arm)
+        ]
+        if s.sig is not None:
+            arms.append(a.join(side(s.sig, "id_b", "sb"), ["band", "s"]))
         new_pairs = (
-            matched.select(
+            _union(arms)
+            .select(
                 F.least("id_a", "id_b").alias("doc_id1"),
                 F.greatest("id_a", "id_b").alias("doc_id2"),
                 F.least("sa", "sb").alias("source_a"),
@@ -515,45 +442,26 @@ def stream_source_overlap_maintain(
             )
             .distinct()  # a pair can share several bands
         )
-        patch_cnt = new_pairs.groupBy("source_a", "source_b").agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs")
+        one = F.lit(1).cast("long")
+        s.cnt = _refold(
+            s.cnt,
+            new_pairs.select("source_a", "source_b", one.alias("n_pairs")),
+            ["source_a", "source_b"],
+            F.sum("n_pairs").alias("n_pairs"),
         )
-        patch_ds = rows.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs")
+        s.ds = _refold(
+            s.ds,
+            rows.select("source", one.alias("n_docs")),
+            ["source"],
+            F.sum("n_docs").alias("n_docs"),
         )
-        # append the batch's already-checkpointed signatures and
-        # rebuild the lazy union — no re-checkpoint of the
-        # accumulated index (O(|batch|) per batch, not O(total))
-        first = holder.sig is None
-        holder._sig_parts.append(bsig)
-        u = holder._sig_parts[0]
-        for part in holder._sig_parts[1:]:
-            u = u.unionByName(part)
-        holder.sig = u
-        if first:
-            holder.cnt = patch_cnt.localCheckpoint()
-            holder.ds = patch_ds.localCheckpoint()
-            return
-        holder.cnt = (
-            holder.cnt.unionByName(patch_cnt)
-            .groupBy("source_a", "source_b")
-            .agg(F.sum("n_pairs").cast("long").alias("n_pairs"))
-            .localCheckpoint()
-        )
-        holder.ds = (
-            holder.ds.unionByName(patch_ds)
-            .groupBy("source")
-            .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-            .localCheckpoint()
-        )
+        # append the batch's already-checkpointed signatures — no
+        # re-checkpoint of the accumulated index (O(|batch|) per batch)
+        s._sig_parts.append(bsig)
+        s.sig = _union(s._sig_parts)
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, holder
+    state = SimpleNamespace(sig=None, cnt=None, ds=None, _sig_parts=[])
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_components_maintain(
@@ -591,61 +499,25 @@ def stream_components_maintain(
     ROW-EQUALS the batch dedup_cluster_stats over the same corpus,
     whose own DuckDB oracle is the naive member-pair recursive CTE
     (pinned by the streaming drain test)."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.operators.dedup import (
         band_signatures,
+        cluster_stats_from_group_state,
         min_tokens_filter,
     )
 
-    class _Holder:
-        def __init__(self) -> None:
-            # instance state in __init__ (r14 ADVICE: a class-level
-            # mutable default list would be shared across maintainers)
-            self.grp = None   # (h, hl, rep_id, n)
-            self.gsig = None  # (h, hl, band, s) — lazy union of parts
-            self.n_total = 0
-            self._sig_parts: list = []
-            self._seen = None  # (doc_id) — replay-guard state
-
-        def stats(self) -> DataFrame:
-            from scribedb_spark.operators.dedup import (
-                cluster_stats_from_group_state,
-            )
-
-            return cluster_stats_from_group_state(
-                self.grp, self.gsig, self.n_total
-            )
-
-    holder = _Holder()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        n = rows.count()
-        if n == 0:
-            return
-        # LOUD replay guard (same discipline as
-        # stream_search_eval_maintain): the (min, sum) group fold and
-        # n_total are exact ONLY under at-most-once ingestion — a
-        # replayed batch would silently inflate member counts, the
-        # singleton row and every cluster size. Fail the query, never
-        # corrupt the state.
-        if holder._seen is not None:
-            dup = rows.select("doc_id").join(holder._seen, "doc_id").take(1)
-            if dup:
-                raise ValueError(
-                    "stream_components_maintain: batch replays already-"
-                    f"ingested doc_id {dup[0]['doc_id']} — group-count "
-                    "state requires at-most-once ingestion of disjoint "
-                    "doc_ids"
-                )
-            holder._seen = (
-                holder._seen.unionByName(rows.select("doc_id"))
-                .localCheckpoint()
-            )
-        else:
-            holder._seen = rows.select("doc_id").localCheckpoint()
-        holder.n_total += n
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
+        # the (min, sum) group fold and n_total are exact ONLY under
+        # at-most-once ingestion — a repeated doc would silently
+        # inflate member counts, the singleton row and every cluster
+        # size
+        s._seen = _reject_seen(
+            s._seen,
+            rows,
+            "stream_components_maintain",
+            "group-count state requires at-most-once ingestion of "
+            "disjoint doc_ids",
+        )
+        s.n_total += rows.count()
         docs = rows.filter(min_tokens_filter()).select(
             "doc_id",
             "text",
@@ -656,22 +528,16 @@ def stream_components_maintain(
             F.min("doc_id").alias("rep_id"),
             F.count(F.lit(1)).cast("long").alias("n"),
         )
-        if holder.grp is None:
-            new_groups = patch
-            holder.grp = patch.localCheckpoint()
-        else:
-            new_groups = patch.join(
-                holder.grp.select("h", "hl"), ["h", "hl"], "left_anti"
-            )
-            holder.grp = (
-                holder.grp.unionByName(patch)
-                .groupBy("h", "hl")
-                .agg(
-                    F.min("rep_id").alias("rep_id"),
-                    F.sum("n").cast("long").alias("n"),
-                )
-                .localCheckpoint()
-            )
+        new_groups = patch if s.grp is None else patch.join(
+            s.grp.select("h", "hl"), ["h", "hl"], "left_anti"
+        )
+        s.grp = _refold(
+            s.grp,
+            patch,
+            ["h", "hl"],
+            F.min("rep_id").alias("rep_id"),
+            F.sum("n").cast("long").alias("n"),
+        )
         # sign each NOVEL text once: one exemplar member per new group
         # (agg min-struct — doc_id is unique, text never compares)
         ex = (
@@ -691,25 +557,21 @@ def stream_components_maintain(
                 F.col("b.t").alias("text"),
             )
         )
-        bsig = (
+        s._sig_parts.append(
             band_signatures(ex.select("doc_id", "text"))
             .join(ex.select("doc_id", "h", "hl"), "doc_id")
             .select("h", "hl", "band", "s")
             .localCheckpoint()
         )
-        holder._sig_parts.append(bsig)
-        u = holder._sig_parts[0]
-        for part in holder._sig_parts[1:]:
-            u = u.unionByName(part)
-        holder.gsig = u
+        s.gsig = _union(s._sig_parts)
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    state = SimpleNamespace(
+        grp=None, gsig=None, n_total=0, _sig_parts=[], _seen=None
     )
-    return q, holder
+    state.stats = lambda: cluster_stats_from_group_state(
+        state.grp, state.gsig, state.n_total
+    )
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_search_eval_maintain(
@@ -747,8 +609,6 @@ def stream_search_eval_maintain(
     once (BM25's df/avgdl are global — no monitor can rank from less
     than the postings), which is exactly the one-postings-scan cost
     the persisted-index serve path pays, never a corpus re-tokenize."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.operators.curation import (
         _BM25_N_TERMS,
         _BM25_QUERY_DOC,
@@ -758,87 +618,57 @@ def stream_search_eval_maintain(
         eval_overlap_row,
     )
 
-    class _Holder:
-        pass
-
-    holder = _Holder()
-    base = base_docs.select("doc_id", "text").localCheckpoint()
-    n0, t0 = base.select(
-        F.count(F.lit(1)), F.sum(F.size(F.split("text", " ")))
-    ).first()
-    holder.n_docs = int(n0)
-    holder.total_tokens = int(t0)
-    base_post = bm25_postings_from(base).localCheckpoint()
-    holder._parts = [base_post]
-    holder.top_base = _bm25_top_ranks(
-        bm25_scores_from_postings(
-            base_post,
-            holder.n_docs,
-            holder.total_tokens,
-            _BM25_QUERY_DOC,
-            _BM25_N_TERMS,
-        )
-    ).localCheckpoint()
-
-    def drift_row() -> DataFrame:
-        u = holder._parts[0]
-        for part in holder._parts[1:]:
-            u = u.unionByName(part)
-        sc = bm25_scores_from_postings(
-            u,
-            holder.n_docs,
-            holder.total_tokens,
-            _BM25_QUERY_DOC,
-            _BM25_N_TERMS,
-        )
-        return eval_overlap_row(holder.top_base, _bm25_top_ranks(sc))
-
-    holder.drift_row = drift_row
-    holder.row = drift_row()  # pre-ingest: full == base
-    # replay guard state: every doc_id accumulated so far (doc_id-only
-    # rows — tiny beside the postings)
-    holder._seen = base.select("doc_id").distinct().localCheckpoint()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
-        # LOUD replay guard: the postings append is an exact merge
-        # ONLY under at-most-once ingestion of whole disjoint docs —
-        # a replayed or duplicated batch would silently double-count
-        # tf/df/n_docs/total_tokens. Same discipline as --mode iblt's
-        # input validation: fail the query, never corrupt the state.
-        dup = (
-            rows.select("doc_id")
-            .join(holder._seen, "doc_id")
-            .take(1)
-        )
-        if dup:
-            raise ValueError(
-                "stream_search_eval_maintain: batch replays already-"
-                f"ingested doc_id {dup[0]['doc_id']} — postings state "
-                "requires at-most-once ingestion of disjoint doc_ids"
-            )
-        n, t = rows.select(
+    def sizes(d: DataFrame) -> tuple:
+        n, t = d.select(
             F.count(F.lit(1)), F.sum(F.size(F.split("text", " ")))
         ).first()
-        holder.n_docs += int(n)
-        holder.total_tokens += int(t)
-        holder._parts.append(bm25_postings_from(rows).localCheckpoint())
-        holder._seen = (
-            holder._seen.unionByName(rows.select("doc_id").distinct())
-            .distinct()
-            .localCheckpoint()
-        )
-        holder.row = drift_row()
+        return int(n), int(t)
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    def top_ranks(postings: DataFrame) -> DataFrame:
+        return _bm25_top_ranks(
+            bm25_scores_from_postings(
+                postings,
+                state.n_docs,
+                state.total_tokens,
+                _BM25_QUERY_DOC,
+                _BM25_N_TERMS,
+            )
+        )
+
+    base = base_docs.select("doc_id", "text").localCheckpoint()
+    n0, t0 = sizes(base)
+    state = SimpleNamespace(
+        n_docs=n0,
+        total_tokens=t0,
+        _parts=[bm25_postings_from(base).localCheckpoint()],
+        # replay guard state: every doc_id accumulated so far (doc_id-
+        # only rows — tiny beside the postings)
+        _seen=base.select("doc_id").distinct().localCheckpoint(),
     )
-    return q, holder
+    state.top_base = top_ranks(state._parts[0]).localCheckpoint()
+    state.drift_row = lambda: eval_overlap_row(
+        state.top_base, top_ranks(_union(state._parts))
+    )
+    state.row = state.drift_row()  # pre-ingest: full == base
+
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
+        # the postings append is an exact merge ONLY under at-most-once
+        # ingestion of whole disjoint docs — a repeated doc would
+        # silently double-count tf/df/n_docs/total_tokens
+        s._seen = _reject_seen(
+            s._seen,
+            rows,
+            "stream_search_eval_maintain",
+            "postings state requires at-most-once ingestion of disjoint "
+            "doc_ids",
+        )
+        n, t = sizes(rows)
+        s.n_docs += n
+        s.total_tokens += t
+        s._parts.append(bm25_postings_from(rows).localCheckpoint())
+        s.row = s.drift_row()
+
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_decontaminate_maintain(
@@ -859,9 +689,10 @@ def stream_decontaminate_maintain(
       codebook retrain),
     - ``holder._parts`` — lazy union of per-batch FLAGGED-doc report
       frames (contamination-sized, the batch key's own output bound),
+      seeded with the empty report of an empty slice,
     - ``holder._seen`` — doc_id replay guard (the search-eval
-      discipline: a replayed batch would duplicate report rows —
-      fail the query loudly, never corrupt the state).
+      discipline: a repeated doc would duplicate report rows — fail
+      the query loudly, never corrupt the state).
 
     Exactness: a doc's (n_spans, n_hit_spans, verdict) is a pure
     function of its own text and the fixed benchmark set, so the
@@ -874,54 +705,13 @@ def stream_decontaminate_maintain(
     against the benchmark-sized hash set (AQE broadcasts it when
     small); nothing corpus-sized is ever rescanned or re-checkpointed.
     ``holder.report()`` assembles the accumulated report lazily."""
-    from pyspark.sql import functions as F
-
     from scribedb_spark.operators.curation import _DECON_QUARANTINE
     from scribedb_spark.operators.dedup import span_hashes
 
-    class _Holder:
-        def __init__(self, bench: DataFrame):
-            self.bench = bench
-            self._parts: list = []
-            self._seen = None
-
-        def report(self) -> DataFrame:
-            if not self._parts:
-                return self.bench.sparkSession.createDataFrame(
-                    [],
-                    "doc_id long, n_spans long, n_hit_spans long, "
-                    "hit_ratio double, verdict string",
-                )
-            u = self._parts[0]
-            for part in self._parts[1:]:
-                u = u.unionByName(part)
-            return u
-
-    bg = (
-        span_hashes(bench_docs.select("doc_id", "text"))
-        .select("h")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-        .localCheckpoint()
-    )
-    holder = _Holder(bg)
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.localCheckpoint()  # pin: the source view is transient
-        if not rows.take(1):
-            return
-        ids = rows.select("doc_id").distinct()
-        if holder._seen is not None:
-            dup = ids.join(holder._seen, "doc_id").take(1)
-            if dup:
-                raise ValueError(
-                    "stream_decontaminate_maintain: batch replays "
-                    f"already-ingested doc_id {dup[0]['doc_id']} — the "
-                    "report union requires at-most-once ingestion"
-                )
+    def report_of(docs: DataFrame) -> DataFrame:
         per = (
-            span_hashes(rows.select("doc_id", "text"))
-            .join(holder.bench, "h", "left")
+            span_hashes(docs.select("doc_id", "text"))
+            .join(state.bench, "h", "left")
             .groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_spans"),
@@ -932,7 +722,7 @@ def stream_decontaminate_maintain(
             .filter(F.col("n_hit_spans") > 0)
         )
         ratio = F.col("n_hit_spans") / F.col("n_spans")
-        part = per.select(
+        return per.select(
             "doc_id",
             "n_spans",
             "n_hit_spans",
@@ -940,21 +730,29 @@ def stream_decontaminate_maintain(
             F.when(ratio >= _DECON_QUARANTINE, "quarantine")
             .otherwise("review")
             .alias("verdict"),
-        ).localCheckpoint()
-        holder._parts.append(part)
-        holder._seen = (
-            ids
-            if holder._seen is None
-            else holder._seen.unionByName(ids).distinct()
-        ).localCheckpoint()
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    state = SimpleNamespace(
+        bench=span_hashes(bench_docs.select("doc_id", "text"))
+        .select("h")
+        .distinct()
+        .withColumn("hit", F.lit(1))
+        .localCheckpoint(),
+        _seen=None,
     )
-    return q, holder
+    state._parts = [report_of(bench_docs.limit(0))]
+    state.report = lambda: _union(state._parts)
+
+    def fold(s, rows: DataFrame, batch_id: int) -> None:
+        s._seen = _reject_seen(
+            s._seen,
+            rows,
+            "stream_decontaminate_maintain",
+            "the report union requires at-most-once ingestion",
+        )
+        s._parts.append(report_of(rows).localCheckpoint())
+
+    return maintain(stream_df, state, fold, query_name)
 
 
 def stream_gate_panel_maintain(
@@ -984,8 +782,9 @@ def stream_gate_panel_maintain(
     artifacts (their lifecycle is build events, not row streams), and
     compaction/budget are metadata censuses.
 
-    Returns ((quality_query, freshness_query), holder)."""
-
+    Returns ((quality_query, freshness_query), holder), where
+    ``holder.quality`` / ``holder.freshness`` are the two maintainers'
+    holders."""
     q1, qh = stream_quality_maintain(
         doc_stream, base_hist, query_name=f"{query_prefix}_quality"
     )
@@ -993,13 +792,9 @@ def stream_gate_panel_maintain(
         event_stream, query_name=f"{query_prefix}_freshness"
     )
 
-    class _Holder:
-        quality = qh
-        freshness = fh
+    def panel(spark, sf_dir) -> DataFrame:
+        from scribedb_spark.pipeline import gate_panel_from_state
 
-        def panel(self, spark, sf_dir) -> DataFrame:
-            from scribedb_spark.pipeline import gate_panel_from_state
+        return gate_panel_from_state(spark, sf_dir, qh.h, fh.state)
 
-            return gate_panel_from_state(spark, sf_dir, qh.h, fh.state)
-
-    return (q1, q2), _Holder()
+    return (q1, q2), SimpleNamespace(quality=qh, freshness=fh, panel=panel)

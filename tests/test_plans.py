@@ -1757,7 +1757,7 @@ def test_quality_drift_single_scan_then_metadata_only(qmod, spark, sf_dir):
 # 100x" check, made literal)
 # ---------------------------------------------------------------------------
 
-#: the most expensive bench keys (BENCH_DETAIL_r09 top-20) — exactly
+#: the most expensive bench keys (the sf0.1 bench's top-20) — exactly
 #: the plans where a data-size-dependent shape change would hurt most
 _INVARIANCE_KEYS = [
     "dedup_ngram_jaccard",

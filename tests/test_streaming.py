@@ -952,3 +952,209 @@ def test_stream_decontaminate_maintain_rejects_replayed_batch(
     with pytest.raises(StreamingQueryException, match="replays"):
         q.awaitTermination(180)
         raise AssertionError("replayed batch was ingested silently")
+
+
+def _snap(*frames):
+    """A state snapshot: each frame collected as a sorted row list."""
+    return [sorted(map(tuple, f.collect()), key=repr) for f in frames]
+
+
+def _replay_docs(spark, sf_dir):
+    return (
+        table(spark, "documents", sf_dir)
+        .select("doc_id", "text", "source")
+        .orderBy("doc_id")
+        .limit(40)
+        .localCheckpoint()
+    )
+
+
+def _replay_compare(spark, sf_dir, tmp, empty):
+    ev = table(spark, "events", sf_dir)
+    q, h = stream_compare(
+        empty(ev.schema), ev, keys=["event_id"], query_name="replay_compare"
+    )
+    return [q], [(h, ev.limit(20), lambda: [dict(b) for b in h.batches])]
+
+
+def _replay_fp(spark, sf_dir, tmp, empty):
+    from scribedb_spark.canonical import fp_keyed_chunks
+    from scribedb_spark.streaming.diff import stream_fp_maintain
+
+    cols = ["event_id", "event_type", "user_id"]
+    ev = table(spark, "events", sf_dir).select(*cols)
+    base = fp_keyed_chunks(ev.limit(0), "event_id", cols, n_chunks=16)
+    q, h = stream_fp_maintain(
+        empty(ev.schema), base, "event_id", cols, n_chunks=16,
+        query_name="replay_fp",
+    )
+    return [q], [(h, ev.limit(20), lambda: _snap(h.fps))]
+
+
+def _replay_iblt(spark, sf_dir, tmp, empty):
+    from scribedb_spark.analytics import _iblt_cell_agg, _iblt_sketch
+    from scribedb_spark.streaming.diff import stream_iblt_maintain
+
+    cols = ["event_type", "user_id"]
+    ev = table(spark, "events", sf_dir).select("event_id", *cols)
+    base = _iblt_cell_agg(_iblt_sketch(ev.limit(0), 1, "event_id", cols))
+    q, h = stream_iblt_maintain(
+        empty(ev.schema), base, "event_id", cols, query_name="replay_iblt"
+    )
+    return [q], [(h, ev.limit(20), lambda: _snap(h.cells))]
+
+
+def _replay_lm(spark, sf_dir, tmp, empty):
+    from scribedb_spark.operators.curation import lm_bigrams
+    from scribedb_spark.streaming.diff import stream_lm_maintain
+
+    docs = _replay_docs(spark, sf_dir).select("doc_id", "text")
+    bg0 = lm_bigrams(docs.filter(F.col("doc_id") % 3 == 0))
+    q, h = stream_lm_maintain(
+        empty(docs.schema),
+        bg0.groupBy("bg").agg(F.count(F.lit(1)).alias("cb")),
+        bg0.groupBy("t1").agg(F.count(F.lit(1)).alias("cp")),
+        query_name="replay_lm",
+    )
+    batch = docs.filter(F.col("doc_id") % 3 != 0)
+    return [q], [(h, batch, lambda: _snap(h.cb, h.cp))]
+
+
+def _replay_postings(spark, sf_dir, tmp, empty):
+    from scribedb_spark.streaming.diff import stream_postings_persist
+
+    docs = _replay_docs(spark, sf_dir).select("doc_id", "text")
+    q, h = stream_postings_persist(
+        empty(docs.schema), str(tmp / "postings"), query_name="replay_postings"
+    )
+    return [q], [(h, docs, lambda: _snap(spark.read.parquet(h.dest)))]
+
+
+def _replay_quality(spark, sf_dir, tmp, empty):
+    from scribedb_spark.operators.curation import quality_bin_hist, quality_bins
+    from scribedb_spark.streaming.diff import stream_quality_maintain
+
+    docs = _replay_docs(spark, sf_dir)
+    base = quality_bin_hist(quality_bins(docs, is_batch=F.lit(False)))
+    q, h = stream_quality_maintain(
+        empty(docs.schema), base, query_name="replay_quality"
+    )
+    return [q], [(h, docs, lambda: _snap(h.h))]
+
+
+def _replay_freshness(spark, sf_dir, tmp, empty):
+    from scribedb_spark.streaming.diff import stream_freshness_maintain
+
+    ev = table(spark, "events", sf_dir)
+    q, h = stream_freshness_maintain(
+        empty(ev.schema), query_name="replay_freshness"
+    )
+    return [q], [(h, ev.limit(50), lambda: _snap(h.state))]
+
+
+def _replay_source_overlap(spark, sf_dir, tmp, empty):
+    from scribedb_spark.streaming.diff import stream_source_overlap_maintain
+
+    docs = _replay_docs(spark, sf_dir)
+    q, h = stream_source_overlap_maintain(
+        empty(docs.schema), query_name="replay_source_overlap"
+    )
+    return [q], [(h, docs, lambda: _snap(h.sig, h.cnt, h.ds))]
+
+
+def _replay_components(spark, sf_dir, tmp, empty):
+    from scribedb_spark.streaming.diff import stream_components_maintain
+
+    docs = _replay_docs(spark, sf_dir).select("doc_id", "text")
+    q, h = stream_components_maintain(
+        empty(docs.schema), query_name="replay_components"
+    )
+
+    def snap():
+        return [h.n_total] + _snap(h.grp, h.gsig, h.stats())
+
+    return [q], [(h, docs, snap)]
+
+
+def _replay_search_eval(spark, sf_dir, tmp, empty):
+    from scribedb_spark.streaming.diff import stream_search_eval_maintain
+
+    docs = _replay_docs(spark, sf_dir).select("doc_id", "text")
+    q, h = stream_search_eval_maintain(
+        empty(docs.schema),
+        docs.filter(F.col("doc_id") % 3 == 0),
+        query_name="replay_search_eval",
+    )
+
+    def snap():
+        return [h.n_docs, h.total_tokens] + _snap(h.row)
+
+    return [q], [(h, docs.filter(F.col("doc_id") % 3 != 0), snap)]
+
+
+def _replay_decontaminate(spark, sf_dir, tmp, empty):
+    from scribedb_spark.streaming.diff import stream_decontaminate_maintain
+
+    docs = _replay_docs(spark, sf_dir).select("doc_id", "text")
+    q, h = stream_decontaminate_maintain(
+        empty(docs.schema), docs.limit(5), query_name="replay_decontaminate"
+    )
+    return [q], [(h, docs, lambda: _snap(h.report()))]
+
+
+def _replay_gate_panel(spark, sf_dir, tmp, empty):
+    from scribedb_spark.operators.curation import quality_bin_hist, quality_bins
+    from scribedb_spark.streaming.diff import stream_gate_panel_maintain
+
+    docs = _replay_docs(spark, sf_dir)
+    ev = table(spark, "events", sf_dir)
+    base = quality_bin_hist(quality_bins(docs, is_batch=F.lit(False)))
+    qs, h = stream_gate_panel_maintain(
+        empty(docs.schema), base, empty(ev.schema),
+        query_prefix="replay_gate_panel",
+    )
+    return list(qs), [
+        (h.quality, docs, lambda: _snap(h.quality.h)),
+        (h.freshness, ev.limit(50), lambda: _snap(h.freshness.state)),
+    ]
+
+
+_REPLAY_SINKS = {
+    "compare": _replay_compare,
+    "fp": _replay_fp,
+    "iblt": _replay_iblt,
+    "lm": _replay_lm,
+    "postings": _replay_postings,
+    "quality": _replay_quality,
+    "freshness": _replay_freshness,
+    "source_overlap": _replay_source_overlap,
+    "components": _replay_components,
+    "search_eval": _replay_search_eval,
+    "decontaminate": _replay_decontaminate,
+    "gate_panel": _replay_gate_panel,
+}
+
+
+@pytest.mark.parametrize("sink", list(_REPLAY_SINKS))
+def test_stream_sink_skips_replayed_batch_id(spark, sf_dir, tmp_path, sink):
+    """foreachBatch is at-least-once: a restart re-delivers the same
+    batch_id. Every sink (both of the gate panel's) drains an empty
+    stream, then commits one batch by hand; committing it again under
+    the SAME batch_id must leave the state exactly as one fold left
+    it. A repeated doc under a NEW batch_id is a different case: the
+    doc_id-guarded sinks still reject it (the *_rejects_replayed_batch
+    tests)."""
+    import tempfile
+
+    def empty(schema):
+        d = tempfile.mkdtemp(dir=tmp_path)
+        return spark.readStream.schema(schema).parquet(d)
+
+    queries, holders = _REPLAY_SINKS[sink](spark, sf_dir, tmp_path, empty)
+    for q in queries:
+        q.awaitTermination(120)
+    for holder, batch, snap in holders:
+        holder.commit_batch(batch, 10**6)
+        once = snap()
+        holder.commit_batch(batch, 10**6)
+        assert snap() == once
