@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scribedb_spark.cache import session_cache
-from scribedb_spark.queries import corpus_deps, d2, register
+from scribedb_spark.queries import corpus_deps, d2, register, served
 from scribedb_spark.sources import table
 
 
@@ -2608,7 +2608,7 @@ def compare_cell_incremental(spark, sf_dir) -> DataFrame:
         spark,
         ("cell_grid", sf_dir),
         lambda: grid_terms(o, 1).localCheckpoint(),
-        deps=[f"{sf_dir}/orders.parquet"],
+        deps=corpus_deps("orders")(sf_dir),
     )
     delta_keys = F.col("o_orderkey") % 2000 == 0
     old_rows = o.filter(delta_keys)
@@ -3482,7 +3482,7 @@ def compare_iblt_diff(spark, sf_dir) -> DataFrame:
                 _iblt_cell_agg(
                     _iblt_sketch(removed, -1, "o_orderkey", _IBLT_COLS)
                 ),
-                _iblt_tgt_cells(spark, sf_dir),
+                _iblt_tgt_cells(spark, sf_dir, _IBLT_CELLS),
             ),
             "o_orderkey",
             None,
@@ -3748,31 +3748,36 @@ def _iblt_adaptive(
 _IBLT_COLS = ["cents", "o_orderpriority", "o_orderstatus"]
 
 
+@served("iblt_base_render", corpus_deps("orders"))
 def _iblt_orders_base(spark, sf_dir: str):
     """The rendered orders base alone, built once per session. Split
     from the cell sketch so consumers that DON'T need the in-session
     sketch (compare_iblt_persist serves the sketch from warehouse
     parquet) never pay the sketch-build checkpoint."""
-    def build():
-        cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-            "long"
-        )
-        return (
-            table(spark, "orders", sf_dir)
-            .select(
-                "o_orderkey",
-                cents.alias("cents"),
-                "o_orderpriority",
-                "o_orderstatus",
-            )
-            .localCheckpoint()
-        )
+    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    return table(spark, "orders", sf_dir).select(
+        "o_orderkey",
+        cents.alias("cents"),
+        "o_orderpriority",
+        "o_orderstatus",
+    )
 
-    return session_cache(
-        spark,
-        ("iblt_base_render", sf_dir),
-        build,
-        deps=[f"{sf_dir}/orders.parquet"],
+
+@served("iblt_base_cells", corpus_deps("orders"))
+def _iblt_base_cells(spark, sf_dir: str, cells: int):
+    """The base cell sketch (sign +1), built once per session per cell
+    budget. Callers pass the live _IBLT_CELLS: the base and target
+    tables are MERGED cell-wise, so a session that shrinks the budget
+    after warming this cache must never mix cell tables from
+    different index spaces (ADVICE r15)."""
+    return _iblt_cell_agg(
+        _iblt_sketch(
+            _iblt_orders_base(spark, sf_dir),
+            1,
+            "o_orderkey",
+            _IBLT_COLS,
+            cells,
+        )
     )
 
 
@@ -3780,24 +3785,10 @@ def _iblt_orders_state(spark, sf_dir: str):
     """(rendered base, base cell sketch) for the orders table, built
     once per session: the persisted-sketch artifact the incremental
     key patches instead of rebuilding."""
-    base = _iblt_orders_base(spark, sf_dir)
-
-    def build_cells():
-        return _iblt_cell_agg(
-            _iblt_sketch(base, 1, "o_orderkey", _IBLT_COLS)
-        ).localCheckpoint()
-
-    # keyed on the live cell budget like _iblt_tgt_cells: the two
-    # tables are MERGED cell-wise, so a session that shrinks
-    # _IBLT_CELLS after warming this cache must never mix cell tables
-    # from different index spaces (ADVICE r15)
-    cells = session_cache(
-        spark,
-        ("iblt_base_cells", sf_dir, _IBLT_CELLS),
-        build_cells,
-        deps=[f"{sf_dir}/orders.parquet"],
+    return (
+        _iblt_orders_base(spark, sf_dir),
+        _iblt_base_cells(spark, sf_dir, _IBLT_CELLS),
     )
-    return base, cells
 
 
 def _iblt_tgt_fixture(base: DataFrame) -> DataFrame:
@@ -3822,31 +3813,24 @@ def _iblt_tgt_fixture(base: DataFrame) -> DataFrame:
     )
 
 
-def _iblt_tgt_cells(spark, sf_dir: str) -> DataFrame:
+@served("iblt_tgt_cells", corpus_deps("orders"))
+def _iblt_tgt_cells(spark, sf_dir: str, cells: int) -> DataFrame:
     """The target-side cell sketch (sign -1, fixed budget), built
     once per session: the target fixture is byte-identical across
     compare_iblt_diff / _incremental / _persist, so each key merging
     this cached table against its own source-side cells is exactly
     the per-key re-sketch it used to pay (cell aggregation is a pure
-    function of the fixture). Keyed on the live cell budget so a
-    test shrinking _IBLT_CELLS can never be served a stale-sized
-    table; deps-fingerprinted on orders.parquet like the base
-    render."""
-    def build():
-        return _iblt_cell_agg(
-            _iblt_sketch(
-                _iblt_tgt_fixture(_iblt_orders_base(spark, sf_dir)),
-                -1,
-                "o_orderkey",
-                _IBLT_COLS,
-            )
-        ).localCheckpoint()
-
-    return session_cache(
-        spark,
-        ("iblt_tgt_cells", sf_dir, _IBLT_CELLS),
-        build,
-        deps=[f"{sf_dir}/orders.parquet"],
+    function of the fixture). Callers pass the live _IBLT_CELLS, so
+    a test shrinking the budget can never be served a stale-sized
+    table."""
+    return _iblt_cell_agg(
+        _iblt_sketch(
+            _iblt_tgt_fixture(_iblt_orders_base(spark, sf_dir)),
+            -1,
+            "o_orderkey",
+            _IBLT_COLS,
+            cells,
+        )
     )
 
 
@@ -3940,7 +3924,9 @@ def _iblt_incremental_cells(spark, sf_dir: str, state=None) -> DataFrame:
     src1_cells = _iblt_merge(base_cells, patch)
     # the target side is the SHARED session-cached cell sketch (one
     # fingerprint pass per session, all three IBLT keys)
-    return _iblt_merge(src1_cells, _iblt_tgt_cells(spark, sf_dir))
+    return _iblt_merge(
+        src1_cells, _iblt_tgt_cells(spark, sf_dir, _IBLT_CELLS)
+    )
 
 
 @register("compare_iblt_persist", oracle=_iblt_incr_oracle())

@@ -19,6 +19,14 @@ SparkContext and must not outlive it (long-lived pytest runners and
 multi-session drivers would otherwise pin them forever). Every build
 appends its tag to ``BUILD_EVENTS`` (the ``persist.BUILD_EVENTS``
 idiom), so callers count builds instead of patching builders.
+
+Library code reaches the store through ``queries.served(tag, deps)``:
+the decorator turns a build body ``f(spark, sf_dir, *args)`` into
+the served artifact keyed (tag, sf_dir, *args), tied to its source
+files, and keeps the uncached body as ``.build``. Beyond it only
+``gate_decision`` below and the two closures over a caller's frame
+in ``dedup.containment_best`` and
+``analytics.compare_cell_incremental`` call ``session_cache``.
 """
 
 from __future__ import annotations
@@ -126,10 +134,11 @@ def gate_decision(
 
     def build():
         df = compute()
-        # materialize AND keep the local frame: rebuilding a
-        # createDataFrame per read costs ~0.3 s of session RPC, so
-        # the cached value is the ready-to-collect local relation
-        return spark.createDataFrame(df.collect(), df.schema)
+        # materialize AND keep the local frame: rebuilding one per
+        # read costs session RPC, so the cached value is the
+        # ready-to-collect LocalTableScan. Arrow carries the rows
+        # (no Python-worker task, unlike a Row-list createDataFrame)
+        return spark.createDataFrame(df.toArrow(), df.schema)
 
     _GATE_TAGS.add(gate_key)
     return session_cache(spark, (gate_key, sf_dir, fp), build)

@@ -29,14 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from scribedb_spark.cache import session_cache
 from scribedb_spark.operators.dedup import (
     SQL_SHINGLES,
     SQL_SPAN_HASHES,
     min_tokens_filter,
     shingles3,
 )
-from scribedb_spark.queries import corpus_deps, register
+from scribedb_spark.queries import corpus_deps, register, served
 from scribedb_spark.sources import table
 
 #: held-out "eval" split for decontamination: a fixed source list (in
@@ -811,6 +810,7 @@ SQL_BM25_SC = f"""
            FROM pts GROUP BY doc_id)"""
 
 
+@served("bm25", corpus_deps("documents"))
 def bm25_scores(
     spark,
     sf_dir: str,
@@ -837,19 +837,6 @@ def bm25_scores(
     (bounded by a constant, not the corpus); scoring joins on
     doc_id/term with map-side partials. Two shuffles + one window —
     the same dataflow as text_tfidf_topterms."""
-    return session_cache(
-        spark,
-        ("bm25", sf_dir, query_doc, n_terms),
-        lambda: _bm25_scores_build(
-            spark, sf_dir, query_doc, n_terms
-        ).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _bm25_scores_build(
-    spark, sf_dir: str, query_doc: int, n_terms: int
-) -> DataFrame:
     d = table(spark, "documents", sf_dir).select("doc_id", "text")
     return bm25_scores_from(d, query_doc, n_terms)
 
@@ -1246,31 +1233,24 @@ _LM_DELTA_MOD = 101
 _LM_DELTA_REM = 13
 
 
+@served("lm_base", corpus_deps("documents"))
 def lm_base_tables(spark, sf_dir: str):
     """(cb0, cp0): bigram/prefix count tables of the BASE corpus
     (documents outside the delta split), built once per session and
     checkpointed — the persisted LM every incremental batch patches
     against."""
-    def build():
-        d = table(spark, "documents", sf_dir).filter(
-            (F.size(F.split(F.col("text"), " ")) >= 2)
-            & (F.col("doc_id") % _LM_DELTA_MOD != _LM_DELTA_REM)
-        )
-        bg = lm_bigrams(d)
-        cb0 = bg.groupBy("bg").agg(
-            F.count(F.lit(1)).alias("cb")
-        ).localCheckpoint()
-        cp0 = bg.groupBy("t1").agg(
-            F.count(F.lit(1)).alias("cp")
-        ).localCheckpoint()
-        return cb0, cp0
-
-    return session_cache(
-        spark,
-        ("lm_base", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    d = table(spark, "documents", sf_dir).filter(
+        (F.size(F.split(F.col("text"), " ")) >= 2)
+        & (F.col("doc_id") % _LM_DELTA_MOD != _LM_DELTA_REM)
     )
+    bg = lm_bigrams(d)
+    cb0 = bg.groupBy("bg").agg(
+        F.count(F.lit(1)).alias("cb")
+    ).localCheckpoint()
+    cp0 = bg.groupBy("t1").agg(
+        F.count(F.lit(1)).alias("cp")
+    ).localCheckpoint()
+    return cb0, cp0
 
 
 @register(
@@ -2047,6 +2027,7 @@ _EVAL_OVERLAP_ORACLE = f"""
     """
 
 
+@served("bm25_base_post", corpus_deps("documents"))
 def _base_corpus_postings(spark, sf_dir: str) -> tuple:
     """(postings, n_docs, total_tokens) of the BASE corpus (the
     non-delta slice), checkpointed once per session: the drift eval's
@@ -2054,21 +2035,13 @@ def _base_corpus_postings(spark, sf_dir: str) -> tuple:
     one per panel probe), and each scoring must read the pinned
     postings instead of re-exploding the corpus (the bm25_scores
     cache discipline applied to the base side)."""
-    def build():
-        d = table(spark, "documents", sf_dir).select("doc_id", "text")
-        base = d.filter(F.col("doc_id") % _LM_DELTA_MOD != _LM_DELTA_REM)
-        post = bm25_postings_from(base).localCheckpoint()
-        n, t = base.select(
-            F.count(F.lit(1)), F.sum(F.size(F.split("text", " ")))
-        ).first()
-        return (post, int(n), int(t))
-
-    return session_cache(
-        spark,
-        ("bm25_base_post", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
+    d = table(spark, "documents", sf_dir).select("doc_id", "text")
+    base = d.filter(F.col("doc_id") % _LM_DELTA_MOD != _LM_DELTA_REM)
+    post = bm25_postings_from(base).localCheckpoint()
+    n, t = base.select(
+        F.count(F.lit(1)), F.sum(F.size(F.split("text", " ")))
+    ).first()
+    return (post, int(n), int(t))
 
 
 def _bm25_top_ranks(sc: DataFrame) -> DataFrame:

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from scribedb_spark.cache import session_cache
-from scribedb_spark.queries import corpus_deps, register
+from scribedb_spark.queries import corpus_deps, register, served
 from scribedb_spark.sources import table
 
 #: minhash configuration: 16 hash functions in 4 bands of 4.
@@ -212,25 +212,24 @@ def band_signatures(d: DataFrame) -> DataFrame:
     return sig
 
 
+@served("lsh_sigs", corpus_deps("documents"))
 def band_signatures_cached(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (doc_id, band, s) signature table for the
     documents corpus (min-token-filtered), built once per session —
     the persisted-signature-index artifact every LSH consumer reads
     at 100 TB instead of re-mining shingles."""
-    def build():
-        d = (
-            table(spark, "documents", sf_dir)
-            .select("doc_id", "text")
-            .filter(min_tokens_filter())
-        )
-        return band_signatures(d).localCheckpoint()
-
-    return session_cache(
-        spark,
-        ("lsh_sigs", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    d = (
+        table(spark, "documents", sf_dir)
+        .select("doc_id", "text")
+        .filter(min_tokens_filter())
     )
+    return band_signatures(d)
+
+
+@served("lsh_pairs", corpus_deps("documents"))
+def _lsh_pairs(spark, sf_dir) -> DataFrame:
+    """The checkpointed member pair list dedup_minhash_lsh serves."""
+    return lsh_rep_pairs(spark, sf_dir).select("doc_id1", "doc_id2")
 
 
 @register("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
@@ -267,19 +266,7 @@ def dedup_minhash_lsh(spark, sf_dir) -> DataFrame:
     (_rep_component_state / candidate_hit_flags) and never touch
     this list. Its SIZE stays linear in true pair volume — the
     graph consumers' own output grain."""
-    def build():
-        return (
-            lsh_rep_pairs(spark, sf_dir)
-            .select("doc_id1", "doc_id2")
-            .localCheckpoint()
-        )
-
-    return session_cache(
-        spark,
-        ("lsh_pairs", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
+    return _lsh_pairs(spark, sf_dir)
 
 
 @register("dedup_index_persist", oracle=_MINHASH_ORACLE)
@@ -546,27 +533,15 @@ def simhash_quarters(spark, sf_dir) -> DataFrame:
     ).select("doc_id", "simhash", F.col("b.q").alias("q"), F.col("b.qv").alias("qv"))
 
 
+@served("simhash_rep_pairs", corpus_deps("documents"))
 def _simhash_rep_pairs(spark, sf_dir) -> DataFrame:
-    """Session-cached checkpoint of the verified SimHash rep pairs
-    (:func:`_simhash_rep_pairs_compute`) — the dedup_minhash_lsh
-    pair-index discipline applied to this family: the pair table is
-    the build-once artifact, consumers (member expansion, receipts)
-    serve from it. deps= ties the entry to the corpus file, so an
-    in-session rewrite invalidates it (the gate-honesty rule)."""
-    return session_cache(
-        spark,
-        ("simhash_rep_pairs", sf_dir),
-        lambda: _simhash_rep_pairs_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _simhash_rep_pairs_compute(spark, sf_dir) -> DataFrame:
     """(r1 < r2, hamming <= 3) — the verified SimHash pairs over
     exact-text REPRESENTATIVES only: the pigeonhole quarter-bucket
     join of ``dedup_simhash``, factored so the member-enumerating key
     and the rep-grain receipt key share one candidate/verify stage.
-    Base-corpus-sized at any exact-duplication factor."""
+    Base-corpus-sized at any exact-duplication factor. The pair table
+    is the family's build-once artifact (the dedup_minhash_lsh
+    pair-index discipline)."""
     rmap = text_rep_map(spark, sf_dir)
     reps = rmap.select(F.col("rep_id").alias("doc_id")).distinct()
     quarters = simhash_quarters(spark, sf_dir).join(
@@ -595,7 +570,7 @@ def _simhash_member_compute(spark, sf_dir) -> DataFrame:
     """dedup_simhash's full BUILD plan (quarter join + verify +
     expansion, no pair cache) — what the plan-shape tests pin."""
     return _simhash_expand(
-        text_rep_map(spark, sf_dir), _simhash_rep_pairs_compute(spark, sf_dir)
+        text_rep_map(spark, sf_dir), _simhash_rep_pairs.build(spark, sf_dir)
     )
 
 
@@ -692,7 +667,7 @@ def _simhash_receipts_compute(spark, sf_dir) -> DataFrame:
     """dedup_simhash_receipts' full BUILD plan (no pair cache) — the
     plan-shape tests' capture target."""
     return _simhash_receipt_rows(
-        text_rep_map(spark, sf_dir), _simhash_rep_pairs_compute(spark, sf_dir)
+        text_rep_map(spark, sf_dir), _simhash_rep_pairs.build(spark, sf_dir)
     )
 
 
@@ -950,21 +925,13 @@ def _ngram_state_build(spark, sf_dir) -> dict:
     return {"srmap": srmap, "rp": _ngram_ppjoin_pairs(d_reps)}
 
 
+@served("ngram_rep_pairs", corpus_deps("documents"))
 def _ngram_rep_pair_state(spark, sf_dir) -> dict:
     """Session-cached ngram rep state: srmap is checkpointed by its
     own build; the verified rep-pair table checkpoints once here and
-    serves every consumer (member expansion, receipts). deps= ties
-    the entry to the corpus file (gate-honesty rule)."""
-    def build():
-        st = _ngram_state_build(spark, sf_dir)
-        return {"srmap": st["srmap"], "rp": st["rp"].localCheckpoint()}
-
-    return session_cache(
-        spark,
-        ("ngram_rep_pairs", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
+    serves every consumer (member expansion, receipts)."""
+    st = _ngram_state_build(spark, sf_dir)
+    return {"srmap": st["srmap"], "rp": st["rp"].localCheckpoint()}
 
 
 def _ngram_jaccard_compute(spark, sf_dir) -> DataFrame:
@@ -1221,12 +1188,20 @@ def _embedding_cosine_compute(spark, sf_dir) -> DataFrame:
     )
 
 
+@served("semantic_state", corpus_deps("embeddings"))
+def _semantic_built(spark, sf_dir) -> dict:
+    """{'pairs', 'comp'}: the exact cosine pair kernel (checkpointed)
+    and its component labels (already a projection of
+    connected_components' checkpoint)."""
+    pairs = _embedding_cosine_compute(spark, sf_dir).localCheckpoint()
+    comp = connected_components(
+        pairs, id1="vec_id1", id2="vec_id2", out_id="vec_id"
+    )
+    return {"pairs": pairs, "comp": comp}
+
+
 def _semantic_state(spark, sf_dir) -> dict:
-    """Session-cached {'pairs', 'comp'} of the exact cosine pair
-    kernel (checkpointed) and its component labels (a projection of
-    connected_components' checkpoint). deps= ties the entry
-    to the embeddings file (gate-honesty rule: an in-session rewrite
-    forces the kernel and the star rounds to re-run).
+    """The served exact semantic state (:func:`_semantic_built`).
 
     The exact-pairwise guard is re-checked on EVERY call — warm or
     cold — so the corpus-scale refusal contract (point the caller at
@@ -1241,21 +1216,7 @@ def _semantic_state(spark, sf_dir) -> dict:
         "dedup_semantic_ann's cell-blocked candidate stage for the pair "
         "list (or vec_knn_graph_ann for per-vector top-k edges)",
     )
-
-    def build():
-        pairs = _embedding_cosine_compute(spark, sf_dir).localCheckpoint()
-        # already a projection of connected_components' checkpoint
-        comp = connected_components(
-            pairs, id1="vec_id1", id2="vec_id2", out_id="vec_id"
-        )
-        return {"pairs": pairs, "comp": comp}
-
-    return session_cache(
-        spark,
-        ("semantic_state", sf_dir),
-        build,
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
+    return _semantic_built(spark, sf_dir)
 
 
 @register(
@@ -1642,10 +1603,12 @@ def _semantic_ann_oracle() -> str:
     )
 
 
-def _semantic_ann_comp_compute(spark, sf_dir) -> DataFrame:
-    """(vec_id, component) labels of the IVF-SQ cell-blocked cosine
-    pair graph — the ANN ledger's BUILD body (cache builder and plan
-    capture target)."""
+@served("semantic_ann_comp", corpus_deps("embeddings"))
+def _semantic_ann_comp(spark, sf_dir) -> dict:
+    """{'comp': (vec_id, component)} labels of the IVF-SQ cell-blocked
+    cosine pair graph — the ANN ledger's shared state. A dict, so the
+    served labels stay the projection of connected_components'
+    checkpoint instead of being pinned a second time."""
     import numpy as np
     import pandas as pd
 
@@ -1683,25 +1646,19 @@ def _semantic_ann_comp_compute(spark, sf_dir) -> DataFrame:
         .applyInPandas(cell_pair_kernel, schema="id1 long, id2 long")
         .distinct()
     )
-    return connected_components(pairs, id1="id1", id2="id2", out_id="vec_id")
-
-
-def _semantic_ann_comp(spark, sf_dir) -> DataFrame:
-    """Session-cached ANN component labels (a projection of
-    connected_components' checkpoint) — deps= ties the entry to the
-    embeddings file."""
-    return session_cache(
-        spark,
-        ("semantic_ann_comp", sf_dir),
-        lambda: _semantic_ann_comp_compute(spark, sf_dir),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
+    return {
+        "comp": connected_components(
+            pairs, id1="id1", id2="id2", out_id="vec_id"
+        )
+    }
 
 
 def _semantic_ann_compute(spark, sf_dir) -> DataFrame:
     """dedup_semantic_ann's full BUILD plan (no state cache) — the
     plan-shape tests' capture target."""
-    return _semantic_ledger(spark, sf_dir, _semantic_ann_comp_compute(spark, sf_dir))
+    return _semantic_ledger(
+        spark, sf_dir, _semantic_ann_comp.build(spark, sf_dir)["comp"]
+    )
 
 
 def _register_semantic_ann():
@@ -1735,15 +1692,17 @@ def _register_semantic_ann():
         on the verified pair graph; the corpus-sized final join
         carries ids only (plan-asserted, like the exact twin). The
         component labels serve from the session cache (r15) —
-        :func:`_semantic_ann_comp_compute` is the build body."""
-        return _semantic_ledger(spark, sf_dir, _semantic_ann_comp(spark, sf_dir))
+        :func:`_semantic_ann_comp` is the shared state."""
+        return _semantic_ledger(
+            spark, sf_dir, _semantic_ann_comp(spark, sf_dir)["comp"]
+        )
 
 
 def _lev_member_compute(spark, sf_dir) -> DataFrame:
     """dedup_levenshtein's full BUILD plan (distance DP + expansion,
     no distance cache) — the plan-shape tests' capture target."""
     pm = lsh_rep_pairs(spark, sf_dir)
-    dist = _rep_head_distances_compute(spark, sf_dir)
+    dist = _rep_head_distances.build(spark, sf_dir)
     return pm.join(dist, ["r1", "r2"]).select(
         "doc_id1", "doc_id2", "edit_dist"
     )
@@ -1799,22 +1758,12 @@ def dedup_levenshtein(spark, sf_dir) -> DataFrame:
     )
 
 
+@served("lev_head_dists", corpus_deps("documents"))
 def _rep_head_distances(spark, sf_dir) -> DataFrame:
-    """Session-cached checkpoint of the rep-pair head distances
-    (:func:`_rep_head_distances_compute`) — build-once like the LSH
-    pair index; deps= ties the entry to the corpus file."""
-    return session_cache(
-        spark,
-        ("lev_head_dists", sf_dir),
-        lambda: _rep_head_distances_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _rep_head_distances_compute(spark, sf_dir) -> DataFrame:
     """(r1, r2, edit_dist <= 60) — ONE 150-char-prefix levenshtein per
     oriented representative pair (the DP volume both levenshtein keys
-    pay; member fanout never reaches it)."""
+    pay; member fanout never reaches it), built once like the LSH
+    pair index."""
     heads = table(spark, "documents", sf_dir).select(
         "doc_id", F.substring("text", 1, 150).alias("head")
     )
@@ -1878,7 +1827,7 @@ def _lev_receipts_compute(spark, sf_dir) -> DataFrame:
     """dedup_levenshtein_receipts' full BUILD plan (no distance
     cache) — the plan-shape tests' capture target."""
     pm = lsh_rep_pairs(spark, sf_dir)
-    dist = _rep_head_distances_compute(spark, sf_dir)
+    dist = _rep_head_distances.build(spark, sf_dir)
     cnt = pm.groupBy("r1", "r2").agg(
         F.count(F.lit(1)).cast("long").alias("n_member_pairs")
     )
@@ -2363,8 +2312,7 @@ def containment_best(
     docs: DataFrame,
     incoming=None,
     salt: int | None = None,
-    spark=None,
-    cache_key: tuple | None = None,
+    sf_dir: str | None = None,
     return_candidates: bool = False,
     cache_tag: str | None = None,
 ):
@@ -2400,26 +2348,21 @@ def containment_best(
     oracle and the hypothesis property tests (which generate
     duplicate texts) hash-prove the collapse.
 
-    When ``spark`` and ``cache_key`` are given, the rep state (group
-    map + rep-restricted token stages) comes from the per-session
-    cache — identical for every containment variant over the same
-    corpus, so the three registry keys share one build instead of
-    recomputing the tokenize/explode/frequency pipeline each (the
-    round-7 bench's two most expensive keys were exactly that
-    double-compute)."""
-    if spark is not None and cache_key is not None:
+    When ``sf_dir`` is given (``docs`` is then that snapshot's
+    documents table), the rep state (group map + rep-restricted token
+    stages) comes from the per-session cache — identical for every
+    containment variant over the same corpus, so the three registry
+    keys share one build instead of recomputing the
+    tokenize/explode/frequency pipeline each (the round-7 bench's two
+    most expensive keys were exactly that double-compute). Both
+    containment entries are tied to the documents file, like every
+    ``queries.served`` artifact."""
+    if sf_dir is not None:
         st = session_cache(
-            spark,
-            ("contain_rep",) + cache_key,
+            docs.sparkSession,
+            ("contain_rep", sf_dir),
             lambda: _containment_rep_state(docs),
-            # cache_key is (table_name, sf_dir) for every registry
-            # caller: tie the cached stages to the corpus file so an
-            # in-session rewrite invalidates them
-            deps=(
-                [f"{cache_key[-1]}/{cache_key[0]}.parquet"]
-                if len(cache_key) == 2
-                else None
-            ),
+            deps=corpus_deps("documents")(sf_dir),
         )
     else:
         st = _containment_rep_state(docs)
@@ -2509,23 +2452,19 @@ def containment_best(
         .filter(c >= _CONTAIN_T)
         .select("doc_id1", "doc_id2", F.round(c, 6).alias("containment"))
     )
-    if spark is not None and cache_key is not None and cache_tag is not None:
+    if sf_dir is not None and cache_tag is not None:
         # r15: the verified rep-level score table is the variant's
         # build-once artifact (candidate join + intersection count —
         # the expensive half); checkpoint it once per session under
         # the caller's tag so each variant's candidate plan still
         # runs once, and the cheap best-pick/expansion below stays
-        # per-call. deps= ties the entry to the corpus file.
+        # per-call.
         scored_built = scored
         scored = session_cache(
-            spark,
-            ("contain_scored", cache_tag) + cache_key,
+            docs.sparkSession,
+            ("contain_scored", cache_tag, sf_dir),
             lambda: scored_built.localCheckpoint(),
-            deps=(
-                [f"{cache_key[-1]}/{cache_key[0]}.parquet"]
-                if len(cache_key) == 2
-                else None
-            ),
+            deps=corpus_deps("documents")(sf_dir),
         )
     # per-group best EXTERNAL container: max rounded score, min rep id
     # among argmax groups (min member of an argmax group IS its rep) —
@@ -2572,10 +2511,7 @@ def _containment_batch_compute(spark, sf_dir) -> DataFrame:
     plan-shape tests' capture target."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
     return containment_best(
-        d,
-        incoming=F.col("doc_id") % 20 == 0,
-        spark=spark,
-        cache_key=("documents", sf_dir),
+        d, incoming=F.col("doc_id") % 20 == 0, sf_dir=sf_dir
     )
 
 
@@ -2619,8 +2555,7 @@ def dedup_containment(spark, sf_dir) -> DataFrame:
     return containment_best(
         d,
         incoming=F.col("doc_id") % 20 == 0,
-        spark=spark,
-        cache_key=("documents", sf_dir),
+        sf_dir=sf_dir,
         cache_tag="batch20",
     )
 
@@ -2629,7 +2564,7 @@ def _containment_corpus_compute(spark, sf_dir) -> DataFrame:
     """dedup_containment_corpus' full BUILD plan (no scored cache) —
     the plan-shape tests' capture target."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    return containment_best(d, spark=spark, cache_key=("documents", sf_dir))
+    return containment_best(d, sf_dir=sf_dir)
 
 
 @register(
@@ -2652,21 +2587,14 @@ def dedup_containment_corpus(spark, sf_dir) -> DataFrame:
     batch form, same code path). The per-doc best-container window
     keys on doc_id1 (uniform)."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    return containment_best(
-        d,
-        spark=spark,
-        cache_key=("documents", sf_dir),
-        cache_tag="corpus",
-    )
+    return containment_best(d, sf_dir=sf_dir, cache_tag="corpus")
 
 
 def _containment_salted_compute(spark, sf_dir) -> DataFrame:
     """dedup_containment_salted's full BUILD plan (no scored cache) —
     the plan-shape tests' capture target."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    return containment_best(
-        d, salt=_CONTAIN_SALT, spark=spark, cache_key=("documents", sf_dir)
-    )
+    return containment_best(d, salt=_CONTAIN_SALT, sf_dir=sf_dir)
 
 
 @register(
@@ -2700,11 +2628,7 @@ def dedup_containment_salted(spark, sf_dir) -> DataFrame:
     the hot-token equality fixture."""
     d = table(spark, "documents", sf_dir).select("doc_id", "source", "text")
     return containment_best(
-        d,
-        salt=_CONTAIN_SALT,
-        spark=spark,
-        cache_key=("documents", sf_dir),
-        cache_tag="corpus",
+        d, salt=_CONTAIN_SALT, sf_dir=sf_dir, cache_tag="corpus"
     )
 
 
@@ -2790,41 +2714,30 @@ def dedup_paragraph(spark, sf_dir) -> DataFrame:
     return _paragraph_report(rmap, fp, nd)
 
 
+@served("rep_paras", corpus_deps("documents"))
 def _rep_paragraph_fps(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (rep_id, para_idx, h) paragraph-fingerprint
     table over exact-text REPRESENTATIVES — base-corpus-sized at any
     duplication; shared by dedup_paragraph, the persisted boilerplate
     index build, and its serve path."""
-    def build():
-        rmap = text_rep_map_all(spark, sf_dir)
-        reps = rmap.select(F.col("rep_id").alias("doc_id")).distinct()
-        d = table(spark, "documents", sf_dir).join(
-            reps, "doc_id", "left_semi"
+    rmap = text_rep_map_all(spark, sf_dir)
+    reps = rmap.select(F.col("rep_id").alias("doc_id")).distinct()
+    d = table(spark, "documents", sf_dir).join(reps, "doc_id", "left_semi")
+    toks = F.split("text", " ")
+    idx = F.explode(
+        F.sequence(
+            F.lit(0),
+            F.floor((F.size(toks) - 1) / _PARA_TOKENS).cast("int"),
         )
-        toks = F.split("text", " ")
-        idx = F.explode(
-            F.sequence(
-                F.lit(0),
-                F.floor((F.size(toks) - 1) / _PARA_TOKENS).cast("int"),
-            )
-        )
-        w = d.select(
-            F.col("doc_id").alias("rep_id"),
-            toks.alias("w"),
-            idx.alias("para_idx"),
-        )
-        seg = F.slice(
-            "w", F.col("para_idx") * _PARA_TOKENS + 1, _PARA_TOKENS
-        )
-        return w.select(
-            "rep_id", "para_idx", F.md5(F.array_join(seg, " ")).alias("h")
-        ).localCheckpoint()
-
-    return session_cache(
-        spark,
-        ("rep_paras", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    )
+    w = d.select(
+        F.col("doc_id").alias("rep_id"),
+        toks.alias("w"),
+        idx.alias("para_idx"),
+    )
+    seg = F.slice("w", F.col("para_idx") * _PARA_TOKENS + 1, _PARA_TOKENS)
+    return w.select(
+        "rep_id", "para_idx", F.md5(F.array_join(seg, " ")).alias("h")
     )
 
 
@@ -2971,34 +2884,21 @@ _SPAN_ORACLE = f"""
     """
 
 
+@served("rep_spans", corpus_deps("documents"))
 def rep_span_hashes_cached(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (rep_id, pos, h) span table over exact-text
     REPRESENTATIVES only — base-corpus-sized at any duplication
     factor; shared by the r15-collapsed dedup_span and
     text_decontaminate (span presence/counts are pure text functions,
     so per-rep span rows carry every member's)."""
-    from scribedb_spark.sources import table as _table
-
-    def build():
-        rmap = text_rep_map_all(spark, sf_dir)
-        reps = rmap.select(F.col("rep_id").alias("doc_id")).distinct()
-        d = (
-            _table(spark, "documents", sf_dir)
-            .select("doc_id", "text")
-            .join(reps, "doc_id", "left_semi")
-        )
-        return (
-            span_hashes(d)
-            .withColumnRenamed("doc_id", "rep_id")
-            .localCheckpoint()
-        )
-
-    return session_cache(
-        spark,
-        ("rep_spans", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    rmap = text_rep_map_all(spark, sf_dir)
+    reps = rmap.select(F.col("rep_id").alias("doc_id")).distinct()
+    d = (
+        table(spark, "documents", sf_dir)
+        .select("doc_id", "text")
+        .join(reps, "doc_id", "left_semi")
     )
+    return span_hashes(d).withColumnRenamed("doc_id", "rep_id")
 
 
 def span_hashes(d: DataFrame, k: int = _SPAN_TOKENS) -> DataFrame:
@@ -3383,25 +3283,8 @@ def _recall_curve_from_labels(lab: DataFrame) -> DataFrame:
     )
 
 
+@served("sampled_jac", corpus_deps("documents"))
 def sampled_rep_jaccards(spark, sf_dir: str) -> DataFrame:
-    """The session-cached sampled exact-Jaccard audit frame (see
-    :func:`_sampled_rep_jaccards_compute` for the semantics and the
-    rep-grain collapse argument): built once per (session, corpus
-    fingerprint) and shared by dedup_recall_report,
-    dedup_minhash_band_tune and the retune gate's measurement —
-    the sampled inverted-index join is the expensive stage all three
-    audits read, and it is a pure function of the documents file
-    (plan tests pin the consuming keys' cache-free registry
-    ``build`` bodies)."""
-    return session_cache(
-        spark,
-        ("sampled_jac", sf_dir, _RECALL_SAMPLE_MOD, _RECALL_SAMPLE_REM),
-        lambda: _sampled_rep_jaccards_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
-def _sampled_rep_jaccards_compute(spark, sf_dir: str) -> DataFrame:
     """(j_ppm, n_pairs, hit) — the sampled exact-Jaccard audit frame
     at REP grain: one row per co-occurring pair of exact-text GROUPS
     (plus one self row per sampled group of >= 2), carrying the
@@ -3431,6 +3314,12 @@ def _sampled_rep_jaccards_compute(spark, sf_dir: str) -> DataFrame:
     the retune gate and the band tuner hash-prove the collapse on
     every driver run. (Weighted masses stay inside int64 through
     ~256x; a 1024x octave would need the tuner's p_ppm mass split.)
+
+    Built once per (session, corpus fingerprint) and shared by
+    dedup_recall_report, dedup_minhash_band_tune and the retune
+    gate's measurement — the sampled inverted-index join is the
+    expensive stage all three audits read (plan tests pin the
+    consuming keys' cache-free registry ``build`` bodies).
     """
     st = _rep_pair_state(spark, sf_dir)
     sampled = (
@@ -3539,7 +3428,7 @@ def lsh_recall_report(pairs: DataFrame, tok: DataFrame) -> DataFrame:
 def _recall_report_compute(spark, sf_dir) -> DataFrame:
     """dedup_recall_report's full BUILD plan (the sampled audit frame
     rebuilt cache-free) — the plan-shape tests' capture target."""
-    lab = _sampled_rep_jaccards_compute(spark, sf_dir).filter(
+    lab = sampled_rep_jaccards.build(spark, sf_dir).filter(
         F.col("j_ppm") >= _RECALL_MIN_J_PPM
     ).select(
         F.expr("j_ppm div 100000").alias("bucket"), "hit", "n_pairs"
@@ -3664,7 +3553,7 @@ def _band_tune_compute(spark, sf_dir) -> DataFrame:
     """dedup_minhash_band_tune's full BUILD plan (the sampled audit
     frame rebuilt cache-free) — the plan-shape tests' capture
     target."""
-    jac = _sampled_rep_jaccards_compute(spark, sf_dir).select(
+    jac = sampled_rep_jaccards.build(spark, sf_dir).select(
         "j_ppm", "n_pairs"
     )
     return band_tune_from_jaccards(spark, jac)
@@ -3971,6 +3860,7 @@ def exact_text_reps(d: DataFrame) -> DataFrame:
     return h.join(reps, ["h", "hl"]).select("doc_id", "rep_id")
 
 
+@served("text_reps_all", corpus_deps("documents"))
 def text_rep_map_all(spark, sf_dir: str) -> DataFrame:
     """The UNFILTERED (doc_id, rep_id) exact-text rep map — every
     document, no min-token scope. For collapses of keys whose own
@@ -3978,43 +3868,25 @@ def text_rep_map_all(spark, sf_dir: str) -> DataFrame:
     (dedup_paragraph emits a row for every document; dedup_span's
     >= 8-token scope applies inside its span stage). Checkpointed
     once per session like text_rep_map."""
-    from ..cache import session_cache
-
-    def build():
-        d = table(spark, "documents", sf_dir).select("doc_id", "text")
-        return exact_text_reps(d).localCheckpoint()
-
-    return session_cache(
-        spark,
-        ("text_reps_all", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
+    d = table(spark, "documents", sf_dir).select("doc_id", "text")
+    return exact_text_reps(d)
 
 
+@served("text_reps", corpus_deps("documents"))
 def text_rep_map(spark, sf_dir: str) -> DataFrame:
     """The checkpointed (doc_id, rep_id) exact-text rep map, built
     once per session — shared by the LSH rep state and the collapses
     that need ONLY the map (dedup_simhash), so a map-only consumer
     never triggers the band-signature build as a side effect."""
-    from ..cache import session_cache
-
-    def build():
-        d = (
-            table(spark, "documents", sf_dir)
-            .select("doc_id", "text")
-            .filter(min_tokens_filter())
-        )
-        return exact_text_reps(d).localCheckpoint()
-
-    return session_cache(
-        spark,
-        ("text_reps", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    d = (
+        table(spark, "documents", sf_dir)
+        .select("doc_id", "text")
+        .filter(min_tokens_filter())
     )
+    return exact_text_reps(d)
 
 
+@served("substr_rep_state", corpus_deps("documents"))
 def _rep_pair_state(spark, sf_dir: str) -> dict:
     """{'rmap': (doc_id, rep_id), 'rp': oriented (r1, r2)} — the two
     SMALL checkpointed pieces every rep-collapsed key derives from,
@@ -4039,61 +3911,51 @@ def _rep_pair_state(spark, sf_dir: str) -> dict:
     X) < max(doc_id in Y) — derivable from per-group id ranges, no
     member enumeration. The unchanged member-grain DuckDB oracles
     hash-prove all of this on every driver run."""
-    from ..cache import session_cache
-
-    def build():
-        rmap = text_rep_map(spark, sf_dir)
-        stats = rmap.groupBy("rep_id").agg(
-            F.min("doc_id").alias("mn"),
-            F.max("doc_id").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        reps = rmap.select(
-            F.col("rep_id").alias("doc_id")
-        ).distinct()
-        sig = band_signatures_cached(spark, sf_dir).join(
-            reps, "doc_id", "left_semi"
-        )
-        a = sig.select(F.col("doc_id").alias("ra"), "band", "s")
-        b = sig.select(F.col("doc_id").alias("rb"), "band", "s")
-        u = (
-            a.join(b, ["band", "s"])
-            .filter(F.col("ra") < F.col("rb"))
-            .select("ra", "rb")
-            .distinct()
-        )
-        # orientation (ra, rb): ALWAYS present — rep_id is its group's
-        # min doc_id (exact_text_reps uses F.min), so min(members of
-        # ra's group) = ra < rb <= max(members of rb's group) holds for
-        # every band-join row unconditionally. (If rep selection ever
-        # stops being group-min, reinstate the a_mn < b_mx filter.)
-        # The reverse orientation (rb, ra) needs some member of rb's
-        # group below some member of ra's group: b_mn < a_mx.
-        sa = stats.select(
-            F.col("rep_id").alias("ra"), F.col("mx").alias("a_mx")
-        )
-        sb = stats.select(
-            F.col("rep_id").alias("rb"), F.col("mn").alias("b_mn")
-        )
-        o1 = u.select(F.col("ra").alias("r1"), F.col("rb").alias("r2"))
-        o2 = (
-            u.join(sa, "ra")
-            .join(sb, "rb")
-            .filter(F.col("b_mn") < F.col("a_mx"))
-            .select(F.col("rb").alias("r1"), F.col("ra").alias("r2"))
-        )
-        selfp = stats.filter(F.col("n") >= 2).select(
-            F.col("rep_id").alias("r1"), F.col("rep_id").alias("r2")
-        )
-        rp = o1.unionByName(o2).unionByName(selfp).localCheckpoint()
-        return {"rmap": rmap, "rp": rp}
-
-    return session_cache(
-        spark,
-        ("substr_rep_state", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    rmap = text_rep_map(spark, sf_dir)
+    stats = rmap.groupBy("rep_id").agg(
+        F.min("doc_id").alias("mn"),
+        F.max("doc_id").alias("mx"),
+        F.count(F.lit(1)).alias("n"),
     )
+    reps = rmap.select(
+        F.col("rep_id").alias("doc_id")
+    ).distinct()
+    sig = band_signatures_cached(spark, sf_dir).join(
+        reps, "doc_id", "left_semi"
+    )
+    a = sig.select(F.col("doc_id").alias("ra"), "band", "s")
+    b = sig.select(F.col("doc_id").alias("rb"), "band", "s")
+    u = (
+        a.join(b, ["band", "s"])
+        .filter(F.col("ra") < F.col("rb"))
+        .select("ra", "rb")
+        .distinct()
+    )
+    # orientation (ra, rb): ALWAYS present — rep_id is its group's
+    # min doc_id (exact_text_reps uses F.min), so min(members of
+    # ra's group) = ra < rb <= max(members of rb's group) holds for
+    # every band-join row unconditionally. (If rep selection ever
+    # stops being group-min, reinstate the a_mn < b_mx filter.)
+    # The reverse orientation (rb, ra) needs some member of rb's
+    # group below some member of ra's group: b_mn < a_mx.
+    sa = stats.select(
+        F.col("rep_id").alias("ra"), F.col("mx").alias("a_mx")
+    )
+    sb = stats.select(
+        F.col("rep_id").alias("rb"), F.col("mn").alias("b_mn")
+    )
+    o1 = u.select(F.col("ra").alias("r1"), F.col("rb").alias("r2"))
+    o2 = (
+        u.join(sa, "ra")
+        .join(sb, "rb")
+        .filter(F.col("b_mn") < F.col("a_mx"))
+        .select(F.col("rb").alias("r1"), F.col("ra").alias("r2"))
+    )
+    selfp = stats.filter(F.col("n") >= 2).select(
+        F.col("rep_id").alias("r1"), F.col("rep_id").alias("r2")
+    )
+    rp = o1.unionByName(o2).unionByName(selfp).localCheckpoint()
+    return {"rmap": rmap, "rp": rp}
 
 
 def oriented_rep_pairs(spark, sf_dir: str) -> DataFrame:
@@ -4136,6 +3998,7 @@ def lsh_rep_pairs(spark, sf_dir: str) -> DataFrame:
     )
 
 
+@served("rep_comp", corpus_deps("documents"))
 def _rep_component_state(spark, sf_dir: str) -> dict:
     """{'rcomp': (rep_id, component), 'rsize': (component,
     cluster_size)} — connected components of the LSH candidate graph
@@ -4161,43 +4024,33 @@ def _rep_component_state(spark, sf_dir: str) -> dict:
     level downstream — r13 verdict #1). The unchanged member-grain
     DuckDB oracles of every consumer hash-prove the collapse exact
     on every driver run."""
-    from ..cache import session_cache
-
-    def build():
-        st = _rep_pair_state(spark, sf_dir)
-        edges = st["rp"].filter(F.col("r1") != F.col("r2"))
-        rc = connected_components(
-            edges, id1="r1", id2="r2", out_id="rep_id"
-        )
-        # groups of >= 2 members are in the member pair graph even
-        # with no external rep edge (the group is a clique): each
-        # such rep not already labeled is its own component
-        selfr = (
-            st["rp"]
-            .filter(F.col("r1") == F.col("r2"))
-            .select(F.col("r1").alias("rep_id"))
-        )
-        lone = selfr.join(rc, "rep_id", "left_anti").select(
-            "rep_id", F.col("rep_id").alias("component")
-        )
-        rcomp = rc.unionByName(lone).localCheckpoint()
-        gn = st["rmap"].groupBy("rep_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        rsize = (
-            rcomp.join(gn, "rep_id")
-            .groupBy("component")
-            .agg(F.sum("n").cast("long").alias("cluster_size"))
-            .localCheckpoint()
-        )
-        return {"rcomp": rcomp, "rsize": rsize}
-
-    return session_cache(
-        spark,
-        ("rep_comp", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+    st = _rep_pair_state(spark, sf_dir)
+    edges = st["rp"].filter(F.col("r1") != F.col("r2"))
+    rc = connected_components(
+        edges, id1="r1", id2="r2", out_id="rep_id"
     )
+    # groups of >= 2 members are in the member pair graph even
+    # with no external rep edge (the group is a clique): each
+    # such rep not already labeled is its own component
+    selfr = (
+        st["rp"]
+        .filter(F.col("r1") == F.col("r2"))
+        .select(F.col("r1").alias("rep_id"))
+    )
+    lone = selfr.join(rc, "rep_id", "left_anti").select(
+        "rep_id", F.col("rep_id").alias("component")
+    )
+    rcomp = rc.unionByName(lone).localCheckpoint()
+    gn = st["rmap"].groupBy("rep_id").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    rsize = (
+        rcomp.join(gn, "rep_id")
+        .groupBy("component")
+        .agg(F.sum("n").cast("long").alias("cluster_size"))
+        .localCheckpoint()
+    )
+    return {"rcomp": rcomp, "rsize": rsize}
 
 
 def member_components(spark, sf_dir: str) -> DataFrame:
@@ -4575,12 +4428,14 @@ _SPANS_ORACLE = f"""
     """
 
 
-def _rep_substring_spans_compute(spark, sf_dir) -> DataFrame:
-    """The rep-grain span table BUILD plan: (r1, r2, run_tokens,
-    a_start, b_start) — one deterministic maximal qualifying span per
+@served("substr_rep_spans", corpus_deps("documents"))
+def rep_substring_spans(spark, sf_dir) -> DataFrame:
+    """The rep-grain span table: (r1, r2, run_tokens, a_start,
+    b_start) — one deterministic maximal qualifying span per
     representative pair, from the strided-anchor two-stage match.
-    Uncached (the cache builder's body and, via the *_compute
-    wrappers, the plan-shape capture target)."""
+    A pure function of the corpus file, built once per (session,
+    corpus fingerprint) and shared by spans / rewrite / rewrite_all /
+    the receipts artifact."""
     m = substring_anchored_matches(spark, sf_dir)
     runs = _substring_runs(m)
     qual = runs.filter(F.col("run_len") + 2 >= _SUBSTR_RUN_TOKENS)
@@ -4602,19 +4457,6 @@ def _rep_substring_spans_compute(spark, sf_dir) -> DataFrame:
     )
 
 
-def rep_substring_spans(spark, sf_dir) -> DataFrame:
-    """Session-cached localCheckpoint of the rep-grain span table — a
-    pure function of the corpus file, built once per (session,
-    corpus fingerprint) and shared by spans / rewrite / rewrite_all /
-    the receipts artifact. deps= evicts on a corpus rewrite."""
-    return session_cache(
-        spark,
-        ("substr_rep_spans", sf_dir, _SUBSTR_RUN_TOKENS, _SUBSTR_STRIDE),
-        lambda: _rep_substring_spans_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/documents.parquet"],
-    )
-
-
 def _spans_member(spark, sf_dir, rep_spans: DataFrame) -> DataFrame:
     """Member-pair expansion of the rep span table — the one hash
     join against the <=1-row-per-rep-pair span table."""
@@ -4628,7 +4470,7 @@ def _substring_spans_compute(spark, sf_dir) -> DataFrame:
     """dedup_substring_spans' full BUILD plan (anchored match + picks
     + member transfer, no span cache) — the plan-shape tests' capture
     target."""
-    return _spans_member(spark, sf_dir, _rep_substring_spans_compute(spark, sf_dir))
+    return _spans_member(spark, sf_dir, rep_substring_spans.build(spark, sf_dir))
 
 
 @register(

@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from scribedb_spark.cache import session_cache
-from scribedb_spark.queries import corpus_deps, register
+from scribedb_spark.queries import corpus_deps, register, served
 from scribedb_spark.sources import table
 
 #: damping in percent and the per-node base mass in micro-units:
@@ -151,6 +150,7 @@ def graph_pagerank(spark, sf_dir) -> DataFrame:
     )
 
 
+@served("rep_graph", corpus_deps("documents"))
 def _rep_graph(spark, sf_dir):
     """(redges, gcount, selfr, rmap) — the CLIQUE-QUOTIENT view of
     the LSH candidate graph, built once per session (r14): exact-text
@@ -173,38 +173,30 @@ def _rep_graph(spark, sf_dir):
     """
     from scribedb_spark.operators.dedup import _rep_pair_state
 
-    def build():
-        st = _rep_pair_state(spark, sf_dir)
-        redges = (
-            st["rp"]
-            .filter(F.col("r1") != F.col("r2"))
-            .select(
-                F.least("r1", "r2").alias("doc_id1"),
-                F.greatest("r1", "r2").alias("doc_id2"),
-            )
-            .distinct()
-            .localCheckpoint()
+    st = _rep_pair_state(spark, sf_dir)
+    redges = (
+        st["rp"]
+        .filter(F.col("r1") != F.col("r2"))
+        .select(
+            F.least("r1", "r2").alias("doc_id1"),
+            F.greatest("r1", "r2").alias("doc_id2"),
         )
-        gcount = (
-            st["rmap"]
-            .groupBy("rep_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .localCheckpoint()
-        )
-        selfr = (
-            st["rp"]
-            .filter(F.col("r1") == F.col("r2"))
-            .select(F.col("r1").alias("rep_id"))
-            .localCheckpoint()
-        )
-        return redges, gcount, selfr, st["rmap"]
-
-    return session_cache(
-        spark,
-        ("rep_graph", sf_dir),
-        build,
-        deps=[f"{sf_dir}/documents.parquet"],
+        .distinct()
+        .localCheckpoint()
     )
+    gcount = (
+        st["rmap"]
+        .groupBy("rep_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .localCheckpoint()
+    )
+    selfr = (
+        st["rp"]
+        .filter(F.col("r1") == F.col("r2"))
+        .select(F.col("r1").alias("rep_id"))
+        .localCheckpoint()
+    )
+    return redges, gcount, selfr, st["rmap"]
 
 
 def _triangle_oracle() -> str:

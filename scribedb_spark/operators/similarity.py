@@ -37,8 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scribedb_spark.cache import session_cache
-from scribedb_spark.queries import REGISTRY, corpus_deps, register
+from scribedb_spark.queries import REGISTRY, corpus_deps, register, served
 from scribedb_spark.sources import table
 from scribedb_spark.functions.vector import (
     cosine,
@@ -691,7 +690,8 @@ def _ivf_vq(spark, sf_dir) -> DataFrame:
     )
 
 
-def _ivf_trained(spark, sf_dir, vq):
+@served("ivf", corpus_deps("embeddings"))
+def _ivf_trained(spark, sf_dir):
     """IVF index artifacts — built once per (session, sf_dir): collect
     the vec_id-sorted driver sample (bounded: _IVF_SAMPLE rows), run
     full-dim integer Lloyd (m=1), then assign EVERY vector its
@@ -702,46 +702,39 @@ def _ivf_trained(spark, sf_dir, vq):
     import numpy as np
     import pandas as pd
 
-    def build():
-        srows = vq.orderBy("vec_id").limit(_IVF_SAMPLE).collect()
-        sample = np.array([r["q"] for r in srows], dtype=np.int64)
-        books = _pq_codebooks_int(sample, m=1, k=N_CELLS, iters=_IVF_ITERS)[0]
-        bc = spark.sparkContext.broadcast(books)
+    vq = _ivf_vq(spark, sf_dir)
+    srows = vq.orderBy("vec_id").limit(_IVF_SAMPLE).collect()
+    sample = np.array([r["q"] for r in srows], dtype=np.int64)
+    books = _pq_codebooks_int(sample, m=1, k=N_CELLS, iters=_IVF_ITERS)[0]
+    bc = spark.sparkContext.broadcast(books)
 
-        def assign_batches(batches):
-            C = bc.value  # (cells, 64) int64
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-                d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "e": pdf["e"],
-                        # argmin first-occurrence == smallest cell on
-                        # ties, matching the oracle's (d2 ASC, cell
-                        # ASC) row_number order
-                        "cell": d2.argmin(axis=1).astype(np.int32),
-                    }
-                )
-
-        assigned = (
-            vq.select("vec_id", "e", "q")
-            .mapInPandas(
-                assign_batches, schema="vec_id long, e array<double>, cell int"
+    def assign_batches(batches):
+        C = bc.value  # (cells, 64) int64
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+            d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "e": pdf["e"],
+                    # argmin first-occurrence == smallest cell on
+                    # ties, matching the oracle's (d2 ASC, cell
+                    # ASC) row_number order
+                    "cell": d2.argmin(axis=1).astype(np.int32),
+                }
             )
-            .localCheckpoint()
-        )
-        TRAIN_EVENTS.append(("ivf", sf_dir))
-        return srows, books, assigned
 
-    return session_cache(
-        spark,
-        ("ivf", sf_dir, _IVF_SAMPLE, N_CELLS, _IVF_ITERS),
-        build,
-        deps=[f"{sf_dir}/embeddings.parquet"],
+    assigned = (
+        vq.select("vec_id", "e", "q")
+        .mapInPandas(
+            assign_batches, schema="vec_id long, e array<double>, cell int"
+        )
+        .localCheckpoint()
     )
+    TRAIN_EVENTS.append(("ivf", sf_dir))
+    return srows, books, assigned
 
 
 def _ivf_int_oracle(
@@ -864,7 +857,7 @@ def _ivf_persisted_artifacts(spark, sf_dir):
     src = [f"{sf_dir}/embeddings.parquet"]
 
     def build_codebook():
-        _s, books, _a = _ivf_trained(spark, sf_dir, _ivf_vq(spark, sf_dir))
+        _s, books, _a = _ivf_trained(spark, sf_dir)
         rows = [
             (int(c), [int(x) for x in books[c]]) for c in range(len(books))
         ]
@@ -877,7 +870,7 @@ def _ivf_persisted_artifacts(spark, sf_dir):
 
     def build_index():
         vq = _ivf_vq(spark, sf_dir)
-        _s, _b, assigned = _ivf_trained(spark, sf_dir, vq)
+        _s, _b, assigned = _ivf_trained(spark, sf_dir)
         return assigned.join(vq.select("vec_id", "q"), "vec_id").select(
             "vec_id", "e", "q", "cell"
         )
@@ -998,6 +991,7 @@ def _append_assign(vq, books, spark):
     )
 
 
+@served("append", corpus_deps("embeddings"))
 def _append_base_index(spark, sf_dir):
     """The FROZEN index: codebook trained on the base corpus only
     (the appended batch is excluded from the training sample) plus
@@ -1007,38 +1001,30 @@ def _append_base_index(spark, sf_dir):
 
     import numpy as np
 
-    def build():
-        e = table(spark, "embeddings", sf_dir)
-        max_abs = F.array_max(F.transform(F.col("e"), F.abs))
-        vq = e.select(
-            "vec_id", to_double_array("embedding").alias("e")
-        ).select(
-            "vec_id",
-            F.transform(
-                quantize_int8(F.col("e"), max_abs), lambda x: x.cast("long")
-            ).alias("q"),
-        )
-        base = vq.filter(
-            F.col("vec_id") % _APPEND_MOD != F.lit(_APPEND_REM)
-        )
-        srows = base.orderBy("vec_id").limit(_IVF_SAMPLE).collect()
-        sample = np.array([r["q"] for r in srows], dtype=np.int64)
-        books = _pq_codebooks_int(sample, m=1, k=N_CELLS, iters=_IVF_ITERS)[0]
-        census = (
-            _append_assign(base, books, spark)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n_base"))
-            .localCheckpoint()
-        )
-        TRAIN_EVENTS.append(("append", sf_dir))
-        return books, census
-
-    return session_cache(
-        spark,
-        ("append", sf_dir, _IVF_SAMPLE, N_CELLS, _IVF_ITERS),
-        build,
-        deps=[f"{sf_dir}/embeddings.parquet"],
+    e = table(spark, "embeddings", sf_dir)
+    max_abs = F.array_max(F.transform(F.col("e"), F.abs))
+    vq = e.select(
+        "vec_id", to_double_array("embedding").alias("e")
+    ).select(
+        "vec_id",
+        F.transform(
+            quantize_int8(F.col("e"), max_abs), lambda x: x.cast("long")
+        ).alias("q"),
     )
+    base = vq.filter(
+        F.col("vec_id") % _APPEND_MOD != F.lit(_APPEND_REM)
+    )
+    srows = base.orderBy("vec_id").limit(_IVF_SAMPLE).collect()
+    sample = np.array([r["q"] for r in srows], dtype=np.int64)
+    books = _pq_codebooks_int(sample, m=1, k=N_CELLS, iters=_IVF_ITERS)[0]
+    census = (
+        _append_assign(base, books, spark)
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_base"))
+        .localCheckpoint()
+    )
+    TRAIN_EVENTS.append(("append", sf_dir))
+    return books, census
 
 
 @register("ann_index_append", oracle=_append_oracle())
@@ -1145,7 +1131,7 @@ def _ivf_recall_compute(spark, sf_dir) -> DataFrame:
         spark,
         sf_dir,
         REGISTRY["ann_ivf_topk"].build(spark, sf_dir).select("q_id", "c_id"),
-        exact=_ivf_exact_top5_compute(spark, sf_dir),
+        exact=_ivf_exact_top5.build(spark, sf_dir),
     )
 
 
@@ -1185,8 +1171,11 @@ def ann_recall_report(spark, sf_dir) -> DataFrame:
     return _recall_report_for(spark, sf_dir, ann)
 
 
-def _ivf_exact_top5_compute(spark, sf_dir) -> DataFrame:
-    """The exact-baseline BUILD plan: brute-force (q_id, c_id) top-5
+@served("ivf_exact", corpus_deps("embeddings"))
+def _ivf_exact_top5(spark, sf_dir) -> DataFrame:
+    """Exact cosine top-5 (q_id, c_id) per fixture query — the
+    baseline side of every IVF recall audit (the recall report and
+    the retrain gate's measure passes share one build): brute force
     by the shared fold cosine (ROUND 6 + id tie-breaks) — bounded, 10
     broadcast queries x corpus, one window."""
     from pyspark.sql import Window
@@ -1210,19 +1199,6 @@ def _ivf_exact_top5_compute(spark, sf_dir) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 5)
         .select("q_id", "c_id")
-    )
-
-
-def _ivf_exact_top5(spark, sf_dir) -> DataFrame:
-    """Session-cached exact cosine top-5 (q_id, c_id) per fixture
-    query — the baseline side of every IVF recall audit (the recall
-    report and the retrain gate's measure passes share one build).
-    deps= ties the entry to the embeddings file."""
-    return session_cache(
-        spark,
-        ("ivf_exact", sf_dir),
-        lambda: _ivf_exact_top5_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
     )
 
 
@@ -1410,7 +1386,8 @@ def _pq_vq(spark, sf_dir):
     return v, vq
 
 
-def _pq_trained(spark, sf_dir, vq):
+@served("pq", corpus_deps("embeddings"))
+def _pq_trained(spark, sf_dir):
     """PQ index artifacts — built once per (session, sf_dir): collect
     the vec_id-sorted (vec_id, q) sample, run per-subspace integer
     Lloyd, then ENCODE every vector to its 8 4-bit codes and
@@ -1419,24 +1396,16 @@ def _pq_trained(spark, sf_dir, vq):
     parquet. Returns (sample_rows, codebook tensor, codes_df). Same
     train-once discipline as :func:`_ivf_trained`."""
     import numpy as np
-    import pandas as pd
 
-    def build():
-        srows = (
-            vq.select("vec_id", "q").orderBy("vec_id").limit(_PQ_SAMPLE).collect()
-        )
-        sample = np.array([r["q"] for r in srows], dtype=np.int64)
-        books = _pq_codebooks_int(sample)
-        codes_df = _pq_encode(spark, vq, books).localCheckpoint()
-        TRAIN_EVENTS.append(("pq", sf_dir))
-        return srows, books, codes_df
-
-    return session_cache(
-        spark,
-        ("pq", sf_dir, _PQ_SAMPLE, PQ_M, PQ_K, _PQ_ITERS),
-        build,
-        deps=[f"{sf_dir}/embeddings.parquet"],
+    _v, vq = _pq_vq(spark, sf_dir)
+    srows = (
+        vq.select("vec_id", "q").orderBy("vec_id").limit(_PQ_SAMPLE).collect()
     )
+    sample = np.array([r["q"] for r in srows], dtype=np.int64)
+    books = _pq_codebooks_int(sample)
+    codes_df = _pq_encode(spark, vq, books).localCheckpoint()
+    TRAIN_EVENTS.append(("pq", sf_dir))
+    return srows, books, codes_df
 
 
 def _pq_encode(spark, vq_df, books):
@@ -1593,8 +1562,8 @@ def ann_pq_topk(spark, sf_dir) -> DataFrame:
     reuses the shared sequential-fold cosine with ROUND 6 + id
     tie-breaks. Recall floor vs numpy brute force pinned by
     tests/test_similarity.py."""
-    v, vq = _pq_vq(spark, sf_dir)
-    srows, books, codes_df = _pq_trained(spark, sf_dir, vq)
+    v, _vq = _pq_vq(spark, sf_dir)
+    srows, books, codes_df = _pq_trained(spark, sf_dir)
 
     # queries sit inside the vec_id-sorted sample (vec_id < 10), so
     # their integer ADC tables need no second collect
@@ -1691,8 +1660,7 @@ def _pq_persisted_artifacts(spark, sf_dir):
     src = [f"{sf_dir}/embeddings.parquet"]
 
     def build_codebook():
-        _v, vq = _pq_vq(spark, sf_dir)
-        _s, books, _c = _pq_trained(spark, sf_dir, vq)
+        _s, books, _c = _pq_trained(spark, sf_dir)
         rows = [
             (j, c, [int(x) for x in books[j][c]])
             for j in range(books.shape[0])
@@ -1703,8 +1671,7 @@ def _pq_persisted_artifacts(spark, sf_dir):
         ).coalesce(1)  # 128 rows -> one file, not 32 (see ivf_codebook)
 
     def build_codes():
-        _v, vq = _pq_vq(spark, sf_dir)
-        _s, _b, codes_df = _pq_trained(spark, sf_dir, vq)
+        _s, _b, codes_df = _pq_trained(spark, sf_dir)
         return codes_df
 
     cb = persisted_artifact(
@@ -1757,6 +1724,7 @@ def ann_pq_persist(spark, sf_dir) -> DataFrame:
     return _pq_serve(spark, v, books, qrows, codes)
 
 
+@served("pq_append_base", corpus_deps("embeddings"))
 def _pq_append_base(spark, sf_dir):
     """(books, base_codes): PQ codebook trained on the BASE slice's
     vec_id-sorted sample only (vec_id % {10} != {7} — the appended
@@ -1765,27 +1733,19 @@ def _pq_append_base(spark, sf_dir):
     base codes, built once per session and checkpointed."""
     import numpy as np
 
-    def build():
-        _v, vq = _pq_vq(spark, sf_dir)
-        base = vq.filter(F.col("vec_id") % _APPEND_MOD != F.lit(_APPEND_REM))
-        srows = (
-            base.select("vec_id", "q")
-            .orderBy("vec_id")
-            .limit(_PQ_SAMPLE)
-            .collect()
-        )
-        sample = np.array([r["q"] for r in srows], dtype=np.int64)
-        books = _pq_codebooks_int(sample)
-        base_codes = _pq_encode(spark, base, books).localCheckpoint()
-        TRAIN_EVENTS.append(("pq_append_base", sf_dir))
-        return books, base_codes
-
-    return session_cache(
-        spark,
-        ("pq_append_base", sf_dir, _PQ_SAMPLE, PQ_M, PQ_K, _PQ_ITERS),
-        build,
-        deps=[f"{sf_dir}/embeddings.parquet"],
+    _v, vq = _pq_vq(spark, sf_dir)
+    base = vq.filter(F.col("vec_id") % _APPEND_MOD != F.lit(_APPEND_REM))
+    srows = (
+        base.select("vec_id", "q")
+        .orderBy("vec_id")
+        .limit(_PQ_SAMPLE)
+        .collect()
     )
+    sample = np.array([r["q"] for r in srows], dtype=np.int64)
+    books = _pq_codebooks_int(sample)
+    base_codes = _pq_encode(spark, base, books).localCheckpoint()
+    TRAIN_EVENTS.append(("pq_append_base", sf_dir))
+    return books, base_codes
 
 
 @register(
@@ -1842,6 +1802,54 @@ def ann_pq_append(spark, sf_dir) -> DataFrame:
 
 _PREFIX_DIMS = 16
 _PREFIX_SHORTLIST = 32
+
+
+@served("prefix", corpus_deps("embeddings"))
+def _prefix_index(spark, sf_dir):
+    """(index, q_ids, Qp): ann_prefix_topk's prefix-code index — every
+    vector's first _PREFIX_DIMS int8 codes, checkpointed — plus the 10
+    query ids and prefix codes, built once per session."""
+    from scribedb_spark.functions.vector import quantize_int8
+
+    import numpy as np
+
+    # the prefix-code index is a stored artifact at scale; the
+    # checkpoint materializes it once (per session, via the same
+    # cache discipline as the trained quantizers) so the
+    # shortlist, the query table and the rerank all read the
+    # index, not the parquet (without it this plan scanned
+    # embeddings 8x)
+    e = table(spark, "embeddings", sf_dir)
+    max_abs = F.array_max(F.transform(F.col("e"), F.abs))
+    vq = (
+        e.select("vec_id", to_double_array("embedding").alias("e"))
+        .select(
+            "vec_id",
+            "e",
+            F.slice(
+                F.transform(
+                    quantize_int8(F.col("e"), max_abs),
+                    lambda x: x.cast("long"),
+                ),
+                1,
+                _PREFIX_DIMS,
+            ).alias("pq"),
+        )
+        .localCheckpoint()
+    )
+    # 10 bounded query rows collect once; scoring is ONE int64
+    # numpy matmul per Arrow batch (bit-identical to an
+    # integer-dot expression, the sq_assign_cells discipline) —
+    # never the interpreted per-(vector, query) higher-order
+    # fold, which costs ~100x at corpus scale
+    qrows = sorted(
+        vq.filter(F.col("vec_id") < 10).select("vec_id", "pq").collect(),
+        key=lambda r: r["vec_id"],
+    )
+    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
+    Qp = np.array([r["pq"] for r in qrows], dtype=np.int64)
+    TRAIN_EVENTS.append(("prefix", sf_dir))
+    return vq, q_ids, Qp
 
 
 @register(
@@ -1911,56 +1919,10 @@ def ann_prefix_topk(spark, sf_dir) -> DataFrame:
     a mis-routed bucket."""
     from pyspark.sql import Window
 
-    from scribedb_spark.functions.vector import quantize_int8
-
     import numpy as np
     import pandas as pd
 
-    def build_index():
-        # the prefix-code index is a stored artifact at scale; the
-        # checkpoint materializes it once (per session, via the same
-        # cache discipline as the trained quantizers) so the
-        # shortlist, the query table and the rerank all read the
-        # index, not the parquet (without it this plan scanned
-        # embeddings 8x)
-        e = table(spark, "embeddings", sf_dir)
-        max_abs = F.array_max(F.transform(F.col("e"), F.abs))
-        vq_ = (
-            e.select("vec_id", to_double_array("embedding").alias("e"))
-            .select(
-                "vec_id",
-                "e",
-                F.slice(
-                    F.transform(
-                        quantize_int8(F.col("e"), max_abs),
-                        lambda x: x.cast("long"),
-                    ),
-                    1,
-                    _PREFIX_DIMS,
-                ).alias("pq"),
-            )
-            .localCheckpoint()
-        )
-        # 10 bounded query rows collect once; scoring is ONE int64
-        # numpy matmul per Arrow batch (bit-identical to an
-        # integer-dot expression, the sq_assign_cells discipline) —
-        # never the interpreted per-(vector, query) higher-order
-        # fold, which costs ~100x at corpus scale
-        qrows = sorted(
-            vq_.filter(F.col("vec_id") < 10).select("vec_id", "pq").collect(),
-            key=lambda r: r["vec_id"],
-        )
-        q_ids_ = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-        Qp_ = np.array([r["pq"] for r in qrows], dtype=np.int64)
-        TRAIN_EVENTS.append(("prefix", sf_dir))
-        return vq_, q_ids_, Qp_
-
-    vq, q_ids, Qp = session_cache(
-        spark,
-        ("prefix", sf_dir, _PREFIX_DIMS),
-        build_index,
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
+    vq, q_ids, Qp = _prefix_index(spark, sf_dir)
     bc_q = spark.sparkContext.broadcast((q_ids, Qp))
 
     def prefix_score(batches):
@@ -2366,8 +2328,7 @@ def _ivf_scored(spark, sf_dir) -> DataFrame:
     cell occupancy, never the corpus square)."""
     import numpy as np
 
-    vq = _ivf_vq(spark, sf_dir)
-    srows, books, assigned = _ivf_trained(spark, sf_dir, vq)
+    srows, books, assigned = _ivf_trained(spark, sf_dir)
     # queries sit inside the vec_id-sorted sample: derive their probe
     # cells driver-side with the same integer metric (no second scan)
     qs = [(r["vec_id"], r["q"], r["e"]) for r in srows if r["vec_id"] < 10]
@@ -2862,26 +2823,17 @@ def _mips_codes_and_assignment(spark, sf_dir):
     return d8, cent, asn
 
 
+@served("mips_state", corpus_deps("embeddings"))
 def _mips_state(spark, sf_dir) -> dict:
     """Session-cached {'cent', 'asn'} checkpoints of
     :func:`_mips_codes_and_assignment` — built once per (session,
     embeddings fingerprint) and served to the topk key, the recall
-    report and the warehouse artifact builders. deps= ties the entry
-    to the embeddings file (gate-honesty rule: an in-session rewrite
-    forces re-assignment)."""
-    def build():
-        _d8, cent, asn = _mips_codes_and_assignment(spark, sf_dir)
-        return {
-            "cent": cent.localCheckpoint(),
-            "asn": asn.localCheckpoint(),
-        }
-
-    return session_cache(
-        spark,
-        ("mips_state", sf_dir),
-        build,
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
+    report and the warehouse artifact builders."""
+    _d8, cent, asn = _mips_codes_and_assignment(spark, sf_dir)
+    return {
+        "cent": cent.localCheckpoint(),
+        "asn": asn.localCheckpoint(),
+    }
 
 
 def _mips_ann_frame(spark, sf_dir) -> DataFrame:
@@ -2915,7 +2867,7 @@ def _mips_recall_compute(spark, sf_dir) -> DataFrame:
         spark,
         sf_dir,
         _mips_ann_frame_compute(spark, sf_dir).select("q_id", "c_id"),
-        exact=_mips_exact_topk_compute(spark, sf_dir),
+        exact=_mips_exact_topk.build(spark, sf_dir),
     )
 
 
@@ -3042,21 +2994,11 @@ def ann_mips_recall_report(spark, sf_dir) -> DataFrame:
     )
 
 
+@served("mips_exact", corpus_deps("embeddings"))
 def _mips_exact_topk(spark, sf_dir) -> DataFrame:
-    """Session-cached exact inner-product top-{5} (q_id, c_id) per
-    fixture query — the baseline side of every MIPS recall audit.
-    deps= ties the entry to the embeddings file."""
-    return session_cache(
-        spark,
-        ("mips_exact", sf_dir),
-        lambda: _mips_exact_topk_compute(spark, sf_dir).localCheckpoint(),
-        deps=[f"{sf_dir}/embeddings.parquet"],
-    )
-
-
-def _mips_exact_topk_compute(spark, sf_dir) -> DataFrame:
-    """The exact-baseline BUILD plan (bounded: 10 queries x corpus
-    map-only scoring + one top-k window)."""
+    """Exact inner-product top-{5} (q_id, c_id) per fixture query —
+    the baseline side of every MIPS recall audit (bounded: 10 queries
+    x corpus map-only scoring + one top-k window)."""
     from pyspark.sql import Window
 
     e = table(spark, "embeddings", sf_dir)

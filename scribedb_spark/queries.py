@@ -61,6 +61,7 @@ windows avoided except where the operator *is* a global order).
 from __future__ import annotations
 
 import functools
+import inspect
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -89,6 +90,47 @@ class QueryDef:
 REGISTRY: dict[str, QueryDef] = {}
 
 
+def served(tag: str, deps: DepsFn):
+    """Serve ``body(spark, sf_dir, *args)`` as a per-session shared
+    artifact: built on first use, then read from ``cache.session_cache``
+    under (tag, sf_dir, *args with defaults applied).
+
+    ``deps(sf_dir)`` lists the source files the artifact is a pure
+    function of; their stat fingerprint is stored with the entry, so an
+    in-session rewrite of a source evicts and rebuilds the artifact
+    instead of serving pre-mutation state (the honesty rule
+    ``cache.gate_decision`` holds transitively through every artifact a
+    gate's measurement reads). A ``DataFrame`` result is pinned with
+    ``localCheckpoint``; a dict or tuple is stored as returned, its body
+    pinning the members it needs. ``.build`` is the uncached body — the
+    plan tests' capture target.
+    """
+
+    def deco(body):
+        sig = inspect.signature(body)
+
+        @functools.wraps(body)
+        def fn(spark, sf_dir, *args, **kwargs):
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+
+            def build():
+                value = body(*bound.args, **bound.kwargs)
+                if isinstance(value, DataFrame):
+                    return value.localCheckpoint()
+                return value
+
+            rest = tuple(bound.arguments.values())[2:]
+            return session_cache(
+                spark, (tag, sf_dir, *rest), build, deps=deps(sf_dir)
+            )
+
+        fn.build = body
+        return fn
+
+    return deco
+
+
 def register(
     key: str,
     oracle: str | None = None,
@@ -100,28 +142,18 @@ def register(
 ):
     """Register the decorated body under ``key``.
 
-    ``serve=deps_fn`` makes the registered fn serve the body's frame
-    as a session-cached localCheckpoint keyed by (key, sf_dir,
-    fingerprint of ``deps_fn(sf_dir)``); ``gate=deps_fn`` serves the
-    body's decision rows through ``cache.gate_decision``. Either way
-    the decorator returns the served callable, so direct callers get
-    the cache too. ``build`` is the BUILD plan body for keys whose fn
-    reads shared family state (default: the decorated body).
+    ``serve=deps_fn`` makes the registered fn ``served(key, deps_fn)``
+    of the body; ``gate=deps_fn`` serves the body's decision rows
+    through ``cache.gate_decision``. Either way the decorator returns
+    the served callable, so direct callers get the cache too.
+    ``build`` is the BUILD plan body for keys whose fn reads shared
+    family state (default: the decorated body).
     """
 
     def deco(body):
         fn = body
         if serve is not None:
-
-            @functools.wraps(body)
-            def fn(spark, sf_dir):
-                return session_cache(
-                    spark,
-                    (key, sf_dir),
-                    lambda: body(spark, sf_dir).localCheckpoint(),
-                    deps=serve(sf_dir),
-                )
-
+            fn = served(key, serve)(body)
         elif gate is not None:
 
             @functools.wraps(body)
@@ -142,8 +174,8 @@ def register(
 
 
 def corpus_deps(*tables: str) -> DepsFn:
-    """``serve=``/``gate=`` deps for a key that is a pure function of
-    the snapshot's ``<table>.parquet`` files."""
+    """``served``/``serve=``/``gate=`` deps for an artifact that is a
+    pure function of the snapshot's ``<table>.parquet`` files."""
     return lambda sf_dir: [
         os.path.join(sf_dir, f"{t}.parquet") for t in tables
     ]
@@ -2557,7 +2589,22 @@ def q13_custdist(spark, sf_dir):
 _MERKLE_COLS = ["o_orderkey", "o_orderstatus", "o_orderpriority"]
 
 
-def _merkle_levels_cached(spark, sf_dir, side, df_fn):
+def _merkle_side(spark, sf_dir, side):
+    """The orders frame of one merkle ``side``: the snapshot ("src")
+    or compare_merkle_drill's mutated target ("tgt")."""
+    src = table(spark, "orders", sf_dir).select(*_MERKLE_COLS)
+    if side == "src":
+        return src
+    return src.withColumn(
+        "o_orderstatus",
+        F.when(F.col("o_orderkey") % 4000 == 0, F.lit("X")).otherwise(
+            F.col("o_orderstatus")
+        ),
+    )
+
+
+@served("merkle", corpus_deps("orders"))
+def _merkle_levels_cached(spark, sf_dir, side):
     """Built merkle trees keyed by (sf_dir, side) — the in-session
     analog of persisting the levels next to a snapshot (merkle_levels'
     documented usage): the chunk-level checkpoint is built ONCE and
@@ -2566,11 +2613,8 @@ def _merkle_levels_cached(spark, sf_dir, side, df_fn):
     swing run to run on localCheckpoint I/O noise)."""
     from scribedb_spark.compare import merkle_levels
 
-    return session_cache(
-        spark,
-        ("merkle", sf_dir, side),
-        lambda: merkle_levels(df_fn(), _MERKLE_COLS, ["o_orderkey"]),
-        deps=[f"{sf_dir}/orders.parquet"],
+    return merkle_levels(
+        _merkle_side(spark, sf_dir, side), _MERKLE_COLS, ["o_orderkey"]
     )
 
 
@@ -2626,9 +2670,7 @@ def fp_merkle(spark, sf_dir):
     16x. The tree build shuffles only (node_id, hash) pairs —
     building the whole tree costs a fraction of level 0, and level 0
     is one pass (see fp_chunk_hashes)."""
-    l0, l1, l2 = _merkle_levels_cached(
-        spark, sf_dir, "src", lambda: table(spark, "orders", sf_dir)
-    )
+    l0, l1, l2 = _merkle_levels_cached(spark, sf_dir, "src")
     lvl = lambda df, i: df.select(  # noqa: E731
         F.lit(i).alias("level"), "node_id", "h"
     )
@@ -2704,21 +2746,13 @@ def compare_merkle_drill(spark, sf_dir):
     persisted tree would be probed by file path at 100 TB."""
     from scribedb_spark.compare import merkle_drill
 
-    cols = _MERKLE_COLS
-    src = table(spark, "orders", sf_dir).select(*cols)
-    tgt = src.withColumn(
-        "o_orderstatus",
-        F.when(F.col("o_orderkey") % 4000 == 0, F.lit("X")).otherwise(
-            F.col("o_orderstatus")
-        ),
-    )
     # both trees resolve from the session cache (src's is shared with
     # fp_merkle) — the probe pattern a persisted tree would have
     return merkle_drill(
-        src,
-        tgt,
-        cols,
+        _merkle_side(spark, sf_dir, "src"),
+        _merkle_side(spark, sf_dir, "tgt"),
+        _MERKLE_COLS,
         ["o_orderkey"],
-        src_levels=_merkle_levels_cached(spark, sf_dir, "src", lambda: src),
-        tgt_levels=_merkle_levels_cached(spark, sf_dir, "tgt", lambda: tgt),
+        src_levels=_merkle_levels_cached(spark, sf_dir, "src"),
+        tgt_levels=_merkle_levels_cached(spark, sf_dir, "tgt"),
     )

@@ -82,18 +82,19 @@ def _refold(state, patch: DataFrame, keys: list, *aggs) -> DataFrame:
 def _reject_seen(seen, rows: DataFrame, who: str, what: str) -> DataFrame:
     """LOUD replay guard for states that are exact only under
     at-most-once ingestion of disjoint doc_ids: raise if any doc_id of
-    ``rows`` was already ingested (fail the query, never corrupt the
-    state), else return the ``seen`` doc_ids grown by the batch's."""
+    ``rows`` was already ingested or occurs twice in ``rows`` (fail
+    the query, never corrupt the state), else return the ``seen``
+    doc_ids grown by the batch's."""
     ids = rows.select("doc_id")
-    if seen is not None:
-        dup = ids.join(seen, "doc_id").take(1)
-        if dup:
-            raise ValueError(
-                f"{who}: batch replays already-ingested doc_id "
-                f"{dup[0]['doc_id']} — {what}"
-            )
-    # disjoint from ``seen`` now, so a plain union stays a set of ids
-    return (ids if seen is None else seen.unionByName(ids)).localCheckpoint()
+    grown = ids if seen is None else seen.unionByName(ids)
+    dup = grown.groupBy("doc_id").count().filter("count > 1").take(1)
+    if dup:
+        raise ValueError(
+            f"{who}: batch replays already-ingested doc_id "
+            f"{dup[0]['doc_id']} — {what}"
+        )
+    # every id once, so a plain union stays a set of ids
+    return grown.localCheckpoint()
 
 
 def stream_compare(

@@ -116,11 +116,7 @@ def _containment_pairs(mode):
         elif mode == "salted":
             kw["salt"] = _CONTAIN_SALT
         return containment_best(
-            d,
-            spark=spark,
-            cache_key=("documents", sfd),
-            return_candidates=True,
-            **kw,
+            d, sf_dir=sfd, return_candidates=True, **kw
         ).count()
 
     return probe

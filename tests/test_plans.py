@@ -1335,13 +1335,13 @@ def test_text_bm25_topk_served_from_cached_scores(qmod, spark, sf_dir):
     BUILD plan's one forced broadcast is the <= 8-row query-term
     table (bounded by a constant, the legitimate case) and its
     scoring aggregations are map-side partial."""
-    from scribedb_spark.operators.curation import _bm25_scores_build
+    from scribedb_spark.operators.curation import bm25_scores
 
     p = plan(qmod, spark, sf_dir, "text_bm25_topk")
     assert "documents.parquet" not in p  # served from the score index
     assert "Scan ExistingRDD" in p
     assert "TakeOrdered" in p
-    build = _bm25_scores_build(spark, sf_dir, 42, 8)
+    build = bm25_scores.build(spark, sf_dir, 42, 8)
     logical = build._jdf.queryExecution().logical().toString()
     assert logical.count("ResolvedHint") <= 1  # the bounded query table
     bp = build._jdf.queryExecution().explainString(
@@ -1877,3 +1877,30 @@ def test_plan_shape_invariant_across_scale(qmod, spark, key):
     assert shapes["sf0.001"] == shapes["sf0.1"], (
         f"{key}: plan shape changed with data size: {shapes}"
     )
+
+
+def test_gate_decision_serves_an_arrow_local_frame(qmod, spark, sf_dir):
+    """A served gate decision is an Arrow-built LocalTableScan (no
+    Python-worker task) whose rows and dtypes equal the measured
+    frame's; an empty decision frame round-trips with its schema."""
+    from scribedb_spark import cache
+
+    key = "rollup_source_freshness"
+    cache.clear_gate_decisions()
+    served = qmod.REGISTRY[key].fn(spark, sf_dir)
+    measured = qmod.REGISTRY[key].build(spark, sf_dir)
+    executed = served._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in executed
+    assert "ExistingRDD" not in executed
+    assert served.dtypes == measured.dtypes
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
+    assert rows(served) == rows(measured)
+
+    try:
+        empty = cache.gate_decision(
+            spark, "probe_empty_gate", sf_dir, [], lambda: measured.limit(0)
+        )
+        assert empty.dtypes == measured.dtypes
+        assert empty.collect() == []
+    finally:
+        cache.evict({"probe_empty_gate"})

@@ -6,8 +6,10 @@ one cache store through a stub session."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
+from pyspark.sql import DataFrame
 
 from scribedb_spark import cache
 
@@ -67,13 +69,23 @@ class _StubSession:
         return ("local", tuple(rows), schema)
 
 
-class _StubFrame:
+class _StubFrame(DataFrame):
+    """A JVM-free DataFrame that records whether it was pinned."""
+
     schema = "decision string"
+    pinned = False
+
+    def __new__(cls):
+        return object.__new__(cls)
 
     def collect(self):
         return [("serve",)]
 
+    def toArrow(self):
+        return self.collect()
+
     def localCheckpoint(self):
+        self.pinned = True
         return self
 
 
@@ -90,35 +102,65 @@ def test_gate_keys_are_the_panel_gates_plus_the_panel(registry):
     assert got == {k for _l, k in _GATE_PANEL_KEYS} | {"rollup_gate_panel"}
 
 
-def test_serve_key_builds_once_per_deps_fingerprint(registry, store, tmp_path):
-    from scribedb_spark.queries import register
+@pytest.mark.parametrize("kind", ["register", "served"])
+def test_serve_key_builds_once_per_deps_fingerprint(
+    registry, store, tmp_path, kind
+):
+    """``register(serve=)`` and a bare ``served`` function share one
+    mechanism: one build per deps fingerprint, every bound argument in
+    the key, a frame pinned, a dict stored as the body returned it,
+    and ``.build`` the uncached body."""
+    from scribedb_spark.queries import register, served
 
     src = tmp_path / "t.parquet"
     src.write_text("v1")
+    deps = lambda sf: [str(src)]  # noqa: E731
     bodies = []
+    sf = str(tmp_path)
 
-    def body(spark, sf_dir):
-        bodies.append(sf_dir)
-        return _StubFrame()
+    if kind == "register":
 
-    fn = register("probe_served", serve=lambda sf: [str(src)])(body)
+        def body(spark, sf_dir):
+            bodies.append(sf_dir)
+            return _StubFrame()
+
+        fn = register("probe_served", serve=deps)(body)
+        args, tail = (), ()
+    else:
+
+        def body(spark, sf_dir, extra, scale=2):
+            bodies.append(sf_dir)
+            return {"frame": _StubFrame(), "n": extra * scale}
+
+        fn = served("probe_served", deps)(body)
+        args, tail = (3,), (3, 2)
     try:
-        assert registry["probe_served"].build is body
+        assert fn.build is body
         assert fn.__name__ == "body"
+        if kind == "register":
+            assert registry["probe_served"].build is body
         spark = _StubSession()
-        first = fn(spark, str(tmp_path))
-        assert fn(spark, str(tmp_path)) is first
-        assert bodies == [str(tmp_path)]  # the warm call served the cache
+        first = fn(spark, sf, *args)
+        assert fn(spark, sf, *args) is first
+        assert bodies == [sf]  # the warm call served the cache
         assert store.BUILD_EVENTS == ["probe_served"]
-        assert [k[1:] for k in store._STORE] == [
-            ("probe_served", str(tmp_path))
-        ]
+        assert [k[1:] for k in store._STORE] == [("probe_served", sf) + tail]
+        if kind == "register":
+            assert first.pinned
+        else:
+            assert first["n"] == 6 and not first["frame"].pinned
+            fn(spark, sf, 4)  # another argument is another entry
+            assert store.BUILD_EVENTS == ["probe_served"] * 2
+            assert len(store._STORE) == 2
+            store.evict({"probe_served"})
+            fn(spark, sf, *args)
         os.utime(src, ns=(1, 1))  # new stat fingerprint
-        fn(spark, str(tmp_path))
-        assert store.BUILD_EVENTS == ["probe_served"] * 2
+        fn(spark, sf, *args)
+        builds = store.BUILD_EVENTS.count("probe_served")
+        assert builds == (2 if kind == "register" else 4)
         assert len(store._STORE) == 1  # the stale entry was replaced
     finally:
-        registry.pop("probe_served")
+        registry.pop("probe_served", None)
 
 
 def test_clear_gate_decisions_keeps_frames_and_family_state(
@@ -142,3 +184,40 @@ def test_clear_gate_decisions_keeps_frames_and_family_state(
     store.gate_decision(spark, "lm_drift_gate", sf, [], _StubFrame)
     assert store.BUILD_EVENTS.count("lm_drift_gate") == 2  # re-measured
     assert store.BUILD_EVENTS.count("graph_pagerank") == 1
+
+
+#: the library's direct ``session_cache`` callers besides ``cache.py``
+#: and ``queries.served``: closures over a frame the caller built,
+#: which the (spark, sf_dir, *args) rule cannot key
+_SESSION_CACHE_EXCEPTIONS = {
+    ("operators/dedup.py", "containment_best"): 2,
+    ("analytics.py", "compare_cell_incremental"): 1,
+}
+
+
+def test_session_cache_is_called_only_by_served_and_named_exceptions():
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scribedb_spark",
+    )
+    calls: dict = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            func = None
+            with open(path) as fh:
+                for line in fh:
+                    m = re.match(r"def (\w+)", line)
+                    if m:
+                        func = m.group(1)
+                    if "session_cache(" in line:
+                        calls[(rel, func)] = calls.get((rel, func), 0) + 1
+    assert calls == {
+        ("cache.py", "session_cache"): 1,  # the definition
+        ("cache.py", "gate_decision"): 1,
+        ("queries.py", "served"): 1,
+        **_SESSION_CACHE_EXCEPTIONS,
+    }

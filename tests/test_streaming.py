@@ -716,6 +716,26 @@ def test_stream_search_eval_maintain_matches_batch_twin(
     assert got == want
 
 
+def _replay_streams(spark, docs, tmp_path_factory):
+    """Two one-file-per-batch streams that each replay ``docs``'
+    doc_ids: the slice written twice (the second batch replays the
+    first's docs) and the slice doubled inside one file (one batch
+    carries every doc_id twice)."""
+    across = tmp_path_factory.mktemp("replay_across")
+    docs.coalesce(1).write.mode("overwrite").parquet(str(across))
+    docs.coalesce(1).write.mode("append").parquet(str(across))
+    within = tmp_path_factory.mktemp("replay_within")
+    docs.unionByName(docs).coalesce(1).write.mode("overwrite").parquet(
+        str(within)
+    )
+    return [
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d))
+        for d in (across, within)
+    ]
+
+
 def test_stream_components_maintain_rejects_replayed_batch(
     spark, sf_dir, tmp_path_factory
 ):
@@ -735,21 +755,14 @@ def test_stream_components_maintain_rejects_replayed_batch(
         .limit(60)
         .localCheckpoint()
     )
-    sdir = tmp_path_factory.mktemp("components_replay")
-    # the same slice twice: the second file REPLAYS the first's docs
-    docs.coalesce(1).write.mode("overwrite").parquet(str(sdir))
-    docs.coalesce(1).write.mode("append").parquet(str(sdir))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir))
-    )
-    q, holder = stream_components_maintain(
-        stream, query_name="components_replay"
-    )
-    with pytest.raises(StreamingQueryException, match="replays"):
-        q.awaitTermination(180)
-        raise AssertionError("replayed batch was ingested silently")
+    streams = _replay_streams(spark, docs, tmp_path_factory)
+    for i, stream in enumerate(streams):
+        q, holder = stream_components_maintain(
+            stream, query_name=f"components_replay{i}"
+        )
+        with pytest.raises(StreamingQueryException, match="replays"):
+            q.awaitTermination(180)
+            raise AssertionError("replayed batch was ingested silently")
 
 
 def test_stream_search_eval_maintain_rejects_replayed_batch(
@@ -773,21 +786,14 @@ def test_stream_search_eval_maintain_rejects_replayed_batch(
     delta = docs.filter(
         F.col("doc_id") % _LM_DELTA_MOD == _LM_DELTA_REM
     ).localCheckpoint()
-    sdir = tmp_path_factory.mktemp("search_eval_replay")
-    # the same delta twice: the second file REPLAYS the first's docs
-    delta.coalesce(1).write.mode("overwrite").parquet(str(sdir))
-    delta.coalesce(1).write.mode("append").parquet(str(sdir))
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir))
-    )
-    q, holder = stream_search_eval_maintain(
-        stream, base, query_name="search_eval_replay"
-    )
-    with pytest.raises(StreamingQueryException, match="replays"):
-        q.awaitTermination(180)
-        raise AssertionError("replayed batch was ingested silently")
+    streams = _replay_streams(spark, delta, tmp_path_factory)
+    for i, stream in enumerate(streams):
+        q, holder = stream_search_eval_maintain(
+            stream, base, query_name=f"search_eval_replay{i}"
+        )
+        with pytest.raises(StreamingQueryException, match="replays"):
+            q.awaitTermination(180)
+            raise AssertionError("replayed batch was ingested silently")
 
 
 def test_stream_gate_panel_maintain_matches_batch_panel(
@@ -938,20 +944,14 @@ def test_stream_decontaminate_maintain_rejects_replayed_batch(
         .localCheckpoint()
     )
     bench = docs.limit(5)
-    sdir = tmp_path_factory.mktemp("decon_replay")
-    docs.coalesce(1).write.mode("overwrite").parquet(str(sdir))
-    docs.coalesce(1).write.mode("append").parquet(str(sdir))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir))
-    )
-    q, holder = stream_decontaminate_maintain(
-        stream, bench, query_name="decon_replay"
-    )
-    with pytest.raises(StreamingQueryException, match="replays"):
-        q.awaitTermination(180)
-        raise AssertionError("replayed batch was ingested silently")
+    streams = _replay_streams(spark, docs, tmp_path_factory)
+    for i, stream in enumerate(streams):
+        q, holder = stream_decontaminate_maintain(
+            stream, bench, query_name=f"decon_replay{i}"
+        )
+        with pytest.raises(StreamingQueryException, match="replays"):
+            q.awaitTermination(180)
+            raise AssertionError("replayed batch was ingested silently")
 
 
 def _snap(*frames):
